@@ -118,6 +118,39 @@ object Bench {
     case c => c.toString
   }
 
+  /** Writes the bench detail JSON to `detailPath` and returns what the
+    * summary line says of it: the path, or a WRITE FAILED note when the
+    * write failed (the detail then goes to stderr, kept out of the parsed
+    * stdout tail, so a failed write cannot lose the run).
+    *
+    * It also writes a per-core-count copy beside it (`_c<cpus>.json`):
+    * the bench runs at two core counts and both runs default to the same
+    * detail path, so without it the second run's detail overwrites the
+    * first and per-query core-scaling evidence is lost. The copy is
+    * additive, so its own failure only goes to stderr and never changes
+    * what the summary says of the primary file.
+    */
+  private[graft] def writeDetail(detailJson: String, detailPath: String, cpus: String): String = {
+    def write(path: String): Unit = {
+      val p = java.nio.file.Paths.get(path)
+      Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.write(p, (detailJson + "\n").getBytes("UTF-8"))
+    }
+    val note =
+      try { write(detailPath); detailPath }
+      catch { case t: Throwable =>
+        System.err.println(s"[bench] detail write to $detailPath failed: ${t.getMessage}")
+        System.err.println(detailJson)
+        s"WRITE FAILED ($detailPath): detail on stderr"
+      }
+    val perCore = detailPath.replaceAll("\\.json$", "") + s"_c$cpus.json"
+    try write(perCore)
+    catch { case t: Throwable =>
+      System.err.println(s"[bench] per-core detail copy to $perCore failed: ${t.getMessage}")
+    }
+    note
+  }
+
   /** Wait (bounded) for the 1-min loadavg to decay below `target` so the
     * next section's per-query `load` fields start from a clean machine;
     * returns seconds waited. Bounded: 1-min load decays ~e^(-t/60), so
@@ -269,27 +302,7 @@ object Bench {
       s"""{"metric":"total","value":${f(total)},"unit":"sec","batch_total":${f(batchTotal)},"streaming_total":${f(harnessTotal)},"branch_gate_total":${f(branchGateTotal)},"branch_gates":$branchGatesJson,"settle_sec":${f(settleSec)},"queries":$qs,"errors":$errs,"sf":"${jstr(sfDir)}","load_start":${f(loadStart)},"load_end":${f(loadEnd)},"wall_sec":${f(wall)},"detail":$repsJson}"""
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "evidence/BENCH_detail_last.json")
-    val detailNote =
-      try {
-        val p = java.nio.file.Paths.get(detailPath)
-        Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-        java.nio.file.Files.write(p, (detailJson + "\n").getBytes("UTF-8"))
-        // ALSO write a per-core-count copy (r13 verdict item 1): the
-        // driver benches at two core counts and both runs default to the
-        // same detail path, so the 8-core detail OVERWRITES the 32-core
-        // one and per-query core-scaling evidence is lost. The _c$cpus
-        // copy is additive — the legacy path keeps its meaning.
-        val pc = java.nio.file.Paths.get(
-          detailPath.replaceAll("\\.json$", "") + s"_c$cpus.json")
-        java.nio.file.Files.write(pc, (detailJson + "\n").getBytes("UTF-8"))
-        detailPath
-      } catch { case t: Throwable =>
-        // a failed file write must not lose the run: dump the detail to
-        // stderr (kept out of the parsed stdout tail) and say so
-        System.err.println(s"[bench] detail write to $detailPath failed: ${t.getMessage}")
-        System.err.println(detailJson)
-        s"WRITE FAILED ($detailPath): detail on stderr"
-      }
+    val detailNote = writeDetail(detailJson, detailPath, cpus)
     // Full driver-contract line (metric/value/unit/queries/sf), printed
     // BEFORE the compact summary (r13 verdict item 1: PERF is per-query
     // blind). It cannot REPLACE the summary: the driver parses a 2000-char

@@ -51,17 +51,45 @@ object Similarity {
           (col("size_a") + col("size_b") - col("intersection"))).as("jaccard"))
   }
 
-  /** (id, shingle) distinct pairs for a documents frame.
+  /** (id, shingles) one row per document: its distinct word n-grams as an
+    * array (empty for a document shorter than n words).
     *
     * The words array is materialized in its own projection first: the
     * shingle construction references it n+1 times, and CollapseProject
     * keeps non-cheap multi-referenced aliases in their own stage, so
     * `split` runs once per row instead of once per slice.
     */
-  def shingleSets(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+  def shingleArrays(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     docs.select(col(idCol).as("id"), TextFns.words(col(textCol)).as("__w"))
-      .select(col("id"),
-        explode(array_distinct(TextFns.shinglesOfWords(col("__w"), n))).as("shingle"))
+      .select(col("id"), array_distinct(TextFns.shinglesOfWords(col("__w"), n)).as("shingles"))
+
+  /** (id, shingle) distinct pairs: the exploded [[shingleArrays]]. */
+  def shingleSets(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    explodeShingles(shingleArrays(docs, idCol, textCol, n))
+
+  private def explodeShingles(arrays: DataFrame): DataFrame =
+    arrays.select(col("id"), explode(col("shingles")).as("shingle"))
+
+  /** Exact Jaccard of candidate pairs (id_a, id_b) over `sets`, one
+    * (id, shingles) row per document with its distinct shingles as an
+    * array: each pair joins `sets` once per side and intersects the two
+    * arrays, so the work scales with the candidates. A side with no
+    * shingles drops the pair. Output: id_a, id_b, size_a, size_b,
+    * intersection, jaccard.
+    */
+  private def verifyCandidates(cands: DataFrame, sets: DataFrame): DataFrame = {
+    val s = sets.where(size(col("shingles")) > 0)
+    cands
+      .join(s.as("sa"), col("id_a") === col("sa.id"))
+      .join(s.as("sb"), col("id_b") === col("sb.id"))
+      .select(col("id_a"), col("id_b"),
+        size(col("sa.shingles")).cast("long").as("size_a"),
+        size(col("sb.shingles")).cast("long").as("size_b"),
+        size(array_intersect(col("sa.shingles"), col("sb.shingles"))).cast("long")
+          .as("intersection"))
+      .withColumn("jaccard", Portable.q6(col("intersection") * lit(1.0) /
+        (col("size_a") + col("size_b") - col("intersection"))))
+  }
 
   /** MinHash signatures: one row per (id, seed) with the min 32-bit hash
     * over the id's shingle set, for seeds 0..numSeeds-1.
@@ -106,13 +134,12 @@ object Similarity {
       .select(col("id"),
         posexplode(array((0 until numSeeds).map(s => col(s"__m$s")): _*)).as(Seq("seed", "minh")))
 
-  /** (id, band, band_key) rows computed DIRECTLY from the wide per-id
-    * aggregate — one shuffle, where `bandKeys(minHashSignatures(...))`
+  /** (id, band, band_key) rows sliced DIRECTLY from the wide per-id
+    * aggregate — one aggregation, where `bandKeys(minHashSignatures(...))`
     * pays two (the signature groupBy, then the band re-groupBy of the
-    * exploded rows). The banding is a pure column slice of the wide row,
-    * so re-grouping what one aggregation already produced was machinery,
-    * not work (guide §2.4: remove shuffles outright). Output is
-    * bit-identical to the two-step form: same band numbering
+    * exploded rows). Both shuffle once: the re-groupBy runs on rows already
+    * hash-partitioned by id, so it costs an aggregate, not an Exchange.
+    * Output is bit-identical to the two-step form: same band numbering
     * (seed div rowsPerBand) and the same '_'-joined minima in seed order
     * (spec-pinned in OperatorsSpec).
     */
@@ -153,15 +180,17 @@ object Similarity {
   }
 
   /** Full MinHash-LSH near-dup pipeline: candidates + exact shingle-set
-    * Jaccard verification of each candidate pair.
+    * Jaccard verification of each candidate pair on per-document shingle
+    * arrays (see [[verifyCandidates]]).
     *
     * `maxShingleDF` caps shingle document frequency (a shingle present in
     * every doc of the corpus contributes nothing to similarity but
-    * dominates the intersection shuffle); applied BEFORE signatures so
+    * multiplies the candidate pairs); applied BEFORE signatures so
     * candidates and verification see the same shingle space — the output
     * is the exact MinHash-LSH result over the capped sets. Default: no cap.
     *
-    * `persist` materializes the two multiply-consumed intermediates;
+    * `persist` materializes the multiply-consumed intermediates (the
+    * shingle arrays, or the capped shingle rows, and the band keys);
     * `_.cache()` (default) for interactive / memory-resident runs,
     * `_.checkpoint()` or `_.localCheckpoint()` at production scale where
     * recomputing a 100 TB shingle explosion on executor loss is worse
@@ -171,39 +200,28 @@ object Similarity {
                       shingleN: Int, numSeeds: Int, rowsPerBand: Int,
                       maxShingleDF: Int = Int.MaxValue,
                       persist: DataFrame => DataFrame = _.cache()): DataFrame = {
-    // sh feeds three consumers (signatures, intersection, sizes) and cands
-    // two — both are persisted via the caller-chosen strategy.
-    val sh0 = shingleSets(docs, idCol, textCol, shingleN)
-    val capped =
-      if (maxShingleDF == Int.MaxValue) sh0
-      else sh0.join(
-        sh0.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
-          .where(col("__df") <= maxShingleDF).select(col("shingle")),
-        Seq("shingle"), "left_semi")
-    val sh = persist(capped)
-    // fused banding (minHashBandKeys): one aggregation instead of
-    // signature groupBy + band re-groupBy — same candidates (r14)
+    val arrays = shingleArrays(docs, idCol, textCol, shingleN)
+    // uncapped, the arrays feed signatures (exploded) and verification;
+    // capped, the capped rows do (regrouped into arrays for verification)
+    val (sh, sets) =
+      if (maxShingleDF == Int.MaxValue) {
+        val sets = persist(arrays)
+        (explodeShingles(sets), sets)
+      } else {
+        val sh0 = explodeShingles(arrays)
+        val sh = persist(sh0.join(
+          sh0.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
+            .where(col("__df") <= maxShingleDF).select(col("shingle")),
+          Seq("shingle"), "left_semi"))
+        (sh, sh.groupBy(col("id")).agg(collect_list(col("shingle")).as("shingles")))
+      }
     val banded = persist(minHashBandKeys(sh, numSeeds, rowsPerBand))
-    val cands = persist(banded.as("a").join(banded.as("b"),
+    val cands = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct())
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    // intersection join runs on 64-bit shingle hashes: an 8-byte shuffle
-    // key instead of the raw n-gram string (collisions ~2^-64 per pair)
-    val shh = sh.select(col("id"), xxhash64(col("shingle")).as("sh64"))
-    val inter = cands
-      .join(shh.as("sa"), col("id_a") === col("sa.id"))
-      .join(shh.as("sb"), col("id_b") === col("sb.id") && col("sa.sh64") === col("sb.sh64"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("intersection"))
-    cands.join(inter, Seq("id_a", "id_b"), "left")
-      .na.fill(0L, Seq("intersection"))
-      .join(sizes.withColumnRenamed("sz", "size_a").withColumnRenamed("id", "__ia"), col("id_a") === col("__ia"))
-      .join(sizes.withColumnRenamed("sz", "size_b").withColumnRenamed("id", "__ib"), col("id_b") === col("__ib"))
-      .select(col("id_a"), col("id_b"), col("size_a"), col("size_b"), col("intersection"),
-        Portable.q6(col("intersection") * lit(1.0) /
-          (col("size_a") + col("size_b") - col("intersection"))).as("jaccard"))
+      .distinct()
+    verifyCandidates(cands, sets)
   }
 
   /** Incremental MinHash-LSH near-dup for daily ingestion: find all pairs
@@ -214,28 +232,26 @@ object Similarity {
     * signed; the base corpus contributes through `baseSignatures` (the
     * persisted output of [[minHashSignatures]] — numSeeds small rows per
     * doc, no text). Base TEXT is touched only for docs that appear in a
-    * candidate pair (semi-join before shingling), so verification cost
-    * scales with candidates, not corpus. With `baseSignatures = None` the
-    * base signatures are computed inline (first run / backfill). Pass
-    * `baseBands` (persisted [[bandKeys]] output) to skip even the
-    * corpus-wide band aggregation — with stored bands the base side is a
-    * pure scan, which is what makes the per-day cost truly independent of
-    * corpus age (the contract [[graft.streaming.StreamOps.nearDupSink]]
-    * relies on).
+    * candidate pair (semi-join before shingling into one array row per
+    * doc), so verification cost scales with candidates, not corpus. With
+    * `baseSignatures = None` the base signatures are computed inline
+    * (first run / backfill). Pass `baseBands` (persisted [[bandKeys]]
+    * output) to skip even the corpus-wide band aggregation — with stored
+    * bands the base side is a pure scan, which is what makes the per-day
+    * cost truly independent of corpus age (the contract
+    * [[graft.streaming.StreamOps.nearDupSink]] relies on).
     *
     * Output: same schema and semantics as [[minHashNearDups]], restricted
     * to pairs with >= 1 incoming member; pairs are (id_a < id_b)
     * normalized regardless of which side is incoming.
     *
-    * `incomingShingles` / `incomingBands` (r14): a caller that ALSO
-    * stores the incoming side's shingles or band keys (nearDupSink
-    * persists bands per batch) can pass the frames it already built so
-    * the shingle/signature/banding passes are planned ONCE and shared
-    * between the pair search and the caller's store write — instead of
-    * relying on cache-plan matching between two independently-built
-    * plans. Must be exactly [[shingleSets]](incoming)/[[bandKeys]] output
-    * for the same parameters, and already persisted by the caller (they
-    * are multi-consumer here). Results are identical by construction.
+    * `incomingShingles` / `incomingBands`: a caller that ALSO stores the
+    * incoming side's shingles or band keys (nearDupSink stores bands per
+    * batch) can pass the frames it already built so the banding is
+    * planned ONCE and shared with the caller's store write. Must be
+    * exactly [[shingleSets]](incoming)/[[bandKeys]] output for the same
+    * parameters, already persisted by the caller. Only the banding reads
+    * them; verification shingles the candidates' text.
     */
   def minHashNearDupsIncremental(base: DataFrame, incoming: DataFrame,
                                  idCol: String, textCol: String,
@@ -245,11 +261,10 @@ object Similarity {
                                  persist: DataFrame => DataFrame = _.cache(),
                                  incomingShingles: Option[DataFrame] = None,
                                  incomingBands: Option[DataFrame] = None): DataFrame = {
-    val incSh = incomingShingles.getOrElse(
-      persist(shingleSets(incoming, idCol, textCol, shingleN)))
-    // fused banding where the signatures aren't needed separately (r14)
-    val incBands = incomingBands.getOrElse(
-      persist(minHashBandKeys(incSh, numSeeds, rowsPerBand)))
+    // fused banding where the signatures aren't needed separately
+    val incBands = incomingBands.getOrElse(persist(minHashBandKeys(
+      incomingShingles.getOrElse(shingleSets(incoming, idCol, textCol, shingleN)),
+      numSeeds, rowsPerBand)))
     val bBands = baseBands.getOrElse(baseSignatures match {
       case Some(sig) => bandKeys(sig, rowsPerBand)
       case None =>
@@ -262,38 +277,22 @@ object Similarity {
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
       .distinct())
-    // verification shingles: only docs that appear in a candidate pair.
+    // verification shingles: one array row per doc in a candidate pair.
     // A doc id present in BOTH base and incoming (re-ingest) must
-    // contribute exactly one version's shingles — otherwise the union
-    // doubles its (id, shingle) rows, inflating sizes and intersections
-    // into corrupt jaccards. The incoming text wins (it is the current
-    // version), so base rows for incoming ids are anti-joined away.
-    // no distinct() on either id list: both feed ONLY semi/anti joins,
-    // which are set-membership tests — the joins build their hash sets
-    // regardless, so the pre-aggregation was an extra exchange+aggregate
-    // per batch for the same result (guide §2.4) — r14
+    // contribute exactly one version — the incoming text wins (it is the
+    // current version), so base rows for incoming ids are anti-joined away.
+    // No distinct() on either id list: both feed ONLY semi/anti joins,
+    // which are set-membership tests.
     val candIds = cands.select(col("id_a").as("id"))
       .union(cands.select(col("id_b").as("id")))
     val incIds = incoming.select(col(idCol).as("id"))
     val touchedBase = base
       .join(candIds, base(idCol) === candIds("id"), "left_semi")
       .join(incIds, col(idCol) === incIds("id"), "left_anti")
-    val vSh = persist(
-      shingleSets(touchedBase, idCol, textCol, shingleN)
-        .union(incSh.join(candIds, Seq("id"), "left_semi")))
-    val sizes = vSh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val shh = vSh.select(col("id"), xxhash64(col("shingle")).as("sh64"))
-    val inter = cands
-      .join(shh.as("sa"), col("id_a") === col("sa.id"))
-      .join(shh.as("sb"), col("id_b") === col("sb.id") && col("sa.sh64") === col("sb.sh64"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("intersection"))
-    cands.join(inter, Seq("id_a", "id_b"), "left")
-      .na.fill(0L, Seq("intersection"))
-      .join(sizes.withColumnRenamed("sz", "size_a").withColumnRenamed("id", "__ia"), col("id_a") === col("__ia"))
-      .join(sizes.withColumnRenamed("sz", "size_b").withColumnRenamed("id", "__ib"), col("id_b") === col("__ib"))
-      .select(col("id_a"), col("id_b"), col("size_a"), col("size_b"), col("intersection"),
-        Portable.q6(col("intersection") * lit(1.0) /
-          (col("size_a") + col("size_b") - col("intersection"))).as("jaccard"))
+    val touchedInc = incoming.join(candIds, incoming(idCol) === candIds("id"), "left_semi")
+    val sets = persist(shingleArrays(touchedBase, idCol, textCol, shingleN)
+      .union(shingleArrays(touchedInc, idCol, textCol, shingleN)))
+    verifyCandidates(cands, sets)
   }
 
   /** Word n-gram Jaccard near-dups scoped to a blocking column (e.g.

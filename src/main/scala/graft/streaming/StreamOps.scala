@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Structured Streaming surface: the streaming analogs of the batch
   * incremental loads the reference runs daily (terminal-timestamp
@@ -255,6 +256,10 @@ object StreamOps {
     *            stored, not recomputed from signatures, so per-batch cost
     *            is independent of corpus age)
     *   pairs/ — near-dup pairs involving each batch's arrivals
+    * Each pair is verified on one shingle-array row per candidate
+    * document (the incoming text, or the stored text of base docs that
+    * land in a candidate pair), so per-batch work scales with the
+    * candidates, not with an exploded (id, shingle) frame.
     * Replay safety: store reads filter to `batch_id < current` — a
     * replayed batch that already wrote its partitions before the
     * checkpoint commit failed must not see its own docs as "base"
@@ -299,60 +304,37 @@ object StreamOps {
         val cacheAqePrev = spark.conf.get(cacheAqeKey, "false")
         spark.conf.set(cacheAqeKey, "true")
         try {
-          val (docsPath, bandsPath, pairsPath) =
-            (s"$storeDir/docs", s"$storeDir/bands", s"$storeDir/pairs")
-          val b = batch.select(col(idCol), col(textCol)).cache()
-          val hPath = new org.apache.hadoop.fs.Path(docsPath)
-          val haveBase =
-            hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)
-          val base =
-            if (haveBase) spark.read.parquet(docsPath)
-              .where(col("batch_id") < batchId).select(col(idCol), col(textCol))
-            else b.limit(0)
-          val baseBands =
-            if (haveBase) Some(spark.read.parquet(bandsPath)
-              .where(col("batch_id") < batchId))
-            else None
-          // Incoming shingles and band keys are planned ONCE and shared
-          // between the pair search and the bands-store write (before
-          // r14 the store write re-built the same plan and relied on
-          // cache-plan matching to dodge recomputation).
-          val sh = Similarity.shingleSets(b, idCol, textCol, shingleN).cache()
-          val bands = Similarity.minHashBandKeys(sh, numSeeds, rowsPerBand).cache()
-          val pairs = Similarity.minHashNearDupsIncremental(base, b, idCol, textCol,
-            shingleN, numSeeds, rowsPerBand, baseBands = baseBands,
-            incomingShingles = Some(sh), incomingBands = Some(bands))
-          // The three store writes are independent of EACH OTHER (each
-          // dynamically overwrites only its own batch_id partition, and
-          // every read in this closure is pruned to batch_id < current,
-          // so no write's output is any concurrent job's input) — overlap
-          // them from a small pool (guide §2.6) instead of serializing
-          // three jobs whose tails leave the executors idle. Replay
-          // idempotence is per-write and order-free: a replayed batch
-          // rewrites exactly its own three partitions whichever order
-          // the originals landed in.
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val writes = Seq(
-            ("pairs", () => Formats.writePartitioned(
-              pairs.withColumn("batch_id", lit(batchId)), pairsPath, Seq("batch_id"))),
-            ("bands", () => Formats.writePartitioned(
-              bands.withColumn("batch_id", lit(batchId)), bandsPath, Seq("batch_id"))),
-            ("docs", () => Formats.writePartitioned(
-              b.withColumn("batch_id", lit(batchId)), docsPath, Seq("batch_id")))
-          ).map { case (which, w) =>
-            scala.concurrent.Future {
-              // job descriptions are thread-local: label each write
-              spark.sparkContext.setJobDescription(s"neardup sink b=$batchId: $which")
-              w()
-            }
+          // every frame cached for this batch, released after the writes
+          val held = scala.collection.mutable.Buffer.empty[DataFrame]
+          def hold(df: DataFrame): DataFrame = { held += df; df.cache() }
+          val b = hold(batch.select(col(idCol), col(textCol)))
+          // Incoming band keys are planned ONCE and shared between the
+          // pair search and the bands-store write.
+          val bands = hold(Similarity.minHashBandKeys(
+            Similarity.shingleSets(b, idCol, textCol, shingleN), numSeeds, rowsPerBand))
+          val stored = nearDupBase(spark, storeDir, batchId, b.schema, bands.schema)
+          val pairs = Similarity.minHashNearDupsIncremental(
+            stored.map(_._1).getOrElse(b.limit(0)), b, idCol, textCol,
+            shingleN, numSeeds, rowsPerBand, baseBands = stored.map(_._2),
+            persist = hold, incomingBands = Some(bands))
+          // The three store writes run one after another, pairs first.
+          // Each overwrites only its own batch_id partition and every read
+          // here is pruned to batch_id < current, so replay idempotence
+          // holds in any order. Run concurrently, they raced to build the
+          // shared b/bands caches, and the pairs plan's AQE choices (and
+          // its job count) depended on which write won; pairs first always
+          // builds them itself, so every batch runs the same jobs, at the
+          // pass CPU the concurrent form measured.
+          val sc = spark.sparkContext
+          val desc = sc.getLocalProperty("spark.job.description")
+          try Seq(("pairs", pairs), ("bands", bands), ("docs", b)).foreach { case (store, df) =>
+            sc.setJobDescription(s"neardup sink b=$batchId: $store")
+            Formats.writePartitioned(df.withColumn("batch_id", lit(batchId)),
+              s"$storeDir/$store", Seq("batch_id"))
+          } finally {
+            sc.setJobDescription(desc)
+            held.foreach(_.unpersist())
           }
-          try scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(writes),
-            scala.concurrent.duration.Duration.Inf)
-          finally pool.shutdown()
-          sh.unpersist(); bands.unpersist(); b.unpersist()
         } finally {
           spark.conf.set(aqeKey, aqePrev)
           spark.conf.set(cacheAqeKey, cacheAqePrev)
@@ -360,6 +342,25 @@ object StreamOps {
         ()
       }
       .start()
+
+  /** The stored base of near-dup batch `batchId`: the sink's docs/ and
+    * bands/ stores restricted to earlier batches, or None before the
+    * first batch wrote them. Both are read with the schema of the frames
+    * the sink writes there (`docsSchema`, `bandsSchema`) plus `batch_id`
+    * as a long, so building them runs no schema-inference job.
+    */
+  private[streaming] def nearDupBase(spark: SparkSession, storeDir: String, batchId: Long,
+                                     docsSchema: StructType, bandsSchema: StructType)
+      : Option[(DataFrame, DataFrame)] = {
+    val docsPath = new org.apache.hadoop.fs.Path(s"$storeDir/docs")
+    if (!docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(docsPath)) None
+    else {
+      def read(store: String, schema: StructType): DataFrame =
+        spark.read.schema(schema.add("batch_id", LongType)).parquet(s"$storeDir/$store")
+          .where(col("batch_id") < batchId)
+      Some((read("docs", docsSchema).drop("batch_id"), read("bands", bandsSchema)))
+    }
+  }
 
   /** Streaming upsert sink: each micro-batch SCD1-merges into a parquet
     * snapshot via [[graft.operators.Merge.coalesceMerge]] — the streaming

@@ -31,6 +31,21 @@ class EntrySpec extends AnyFunSuite {
       s"non-contiguous query numbers: ${(1 to nums.max).diff(nums.sorted)} missing")
   }
 
+  test("bench detail: a failed per-core copy does not misreport the written primary file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bench-detail")
+    val primary = dir.resolve("detail.json").toString
+    // a directory where the per-core copy should go makes that write fail
+    java.nio.file.Files.createDirectory(dir.resolve("detail_c4.json"))
+    assert(Bench.writeDetail("{}", primary, cpus = "4") == primary)
+    assert(new String(java.nio.file.Files.readAllBytes(dir.resolve("detail.json")), "UTF-8") == "{}\n")
+    // both files are written when nothing is in the way
+    assert(Bench.writeDetail("{}", primary, cpus = "8") == primary)
+    assert(java.nio.file.Files.isRegularFile(dir.resolve("detail_c8.json")))
+    // a failed primary write is reported as such
+    assert(Bench.writeDetail("{}", dir.resolve("detail_c4.json").toString, cpus = "2")
+      .startsWith("WRITE FAILED"))
+  }
+
   test("bench summary escaping survives a hostile env-derived path (r11 verdict item 4)") {
     // SPARK_GRAFT_SF_DIR / SPARK_GRAFT_BENCH_OUT are interpolated into
     // the bench's final stdout JSON line; quotes, backslashes, and

@@ -7,6 +7,22 @@ class GateQueriesSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  test("q74/q100: the near-dup sink's pairs store equals the plain-Scala MinHash reference") {
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text").where("doc_id < 2000").as[(Long, String)].collect().toSeq
+    // each pair lands at the batch of its later member (doc_id mod 3)
+    val want = graft.NearDupReference.pairs(docs)
+      .map(p => (p, math.max(p._1 % 3, p._2 % 3)))
+    assert(want.nonEmpty)
+    for (q <- Seq("q74_stream_neardup", "q100_neardup_recovery")) {
+      val got = GateQueries.queries(q)(spark, sf)
+        .as[(Long, Long, Long, Long, Long, Double, Long)].collect()
+        .map(r => ((r._1, r._2, r._3, r._4, r._5, r._6), r._7))
+      assert(got.length == want.size && got.toSet == want, q)
+    }
+  }
+
   test("q67: every sketch estimate lands inside its documented bound") {
     val rows = GateQueries.queries("q67_sketch_accuracy")(spark, sf)
       .collect()

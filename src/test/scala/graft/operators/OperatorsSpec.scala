@@ -2,7 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import graft.SparkSpec
+import graft.{NearDupReference, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -189,6 +189,57 @@ class IncrementalNearDupSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     sh.unpersist(); bands.unpersist()
     assert(shared == own && shared.nonEmpty)
+  }
+
+  // a corpus covering the verification edge cases: near-dup families over
+  // a shared tail (the DF cap's target), repeated shingles, and documents
+  // with no shingles at all
+  private val tail = "common tail words here"
+  private val corpus: Seq[(Long, String)] =
+    (1L to 12L).map(i => (i, s"w$i x$i y$i z$i v$i $tail")) ++ Seq(
+      (21L, "w3 x3 y3 z3 v3 common tail words there"), // near-dup of 3
+      (22L, s"w5 x5 y5 z5 q5 $tail"),                   // near-dup of 5
+      (23L, s"w9 x9 y9 z9 v9 $tail"),                   // copy of 9
+      (30L, "a b c a b c a b c a b c"),                 // 3 distinct shingles
+      (31L, "a b c a b c a b c"),                       // the same set
+      (32L, "b c a b c a b c a b d"),
+      (40L, ""),
+      (41L, "two words"))
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[NearDupReference.Pair] =
+    df.select("id_a", "id_b", "size_a", "size_b", "intersection", "jaccard")
+      .as[NearDupReference.Pair].collect().toSet
+
+  test("minHashNearDups equals a plain-Scala exact Jaccard, with and without a binding DF cap") {
+    val docs = corpus.toDF("doc_id", "text")
+    val want = NearDupReference.pairs(corpus)
+    assert(want.exists(p => p._1 == 9L && p._2 == 23L && p._6 == 1.0))
+    assert(want.exists(p => p._1 == 30L && p._2 == 31L && p._3 == 3L && p._6 == 1.0))
+    assert(pairSet(Similarity.minHashNearDups(docs, "doc_id", "text", 3, 12, 3)) == want)
+    // the tail shingles sit in 14 documents: a cap of 3 drops them
+    val capped = NearDupReference.pairs(corpus, maxShingleDF = 3)
+    assert(capped.nonEmpty && capped != want)
+    assert(pairSet(Similarity.minHashNearDups(docs, "doc_id", "text", 3, 12, 3,
+      maxShingleDF = 3)) == capped)
+  }
+
+  test("minHashNearDupsIncremental equals a plain-Scala exact Jaccard (re-ingest, empty text)") {
+    val base = corpus.filter(d => d._1 <= 12L || d._1 == 30L)
+    val incoming = Seq(
+      (2L, "w7 x7 y7 z7 v7 common tail words there"), // re-ingested: now near-dups 7
+      (4L, ""),                                       // re-ingested with no shingles
+      (50L, "w2 x2 y2 z2 v2 common tail words here"), // copy of 2's OLD text
+      (51L, s"w4 x4 y4 z4 v4 $tail"),                 // copy of 4's OLD text
+      (52L, s"w9 x9 y9 z9 v9 $tail"),                 // copy of base 9
+      (31L, "a b c a b c a b c"),                     // same set as base 30
+      (40L, ""))
+    val want = NearDupReference.incrementalPairs(base, incoming)
+    assert(want.exists(p => p._1 == 9L && p._2 == 52L && p._6 == 1.0))
+    assert(want.exists(p => p._1 == 30L && p._2 == 31L && p._6 == 1.0))
+    assert(!want.exists(p => p._1 == 4L || p._2 == 4L))
+    val got = Similarity.minHashNearDupsIncremental(base.toDF("doc_id", "text"),
+      incoming.toDF("doc_id", "text"), "doc_id", "text", 3, 12, 3)
+    assert(pairSet(got) == want)
   }
 }
 

@@ -222,6 +222,66 @@ class StreamOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("nearDupSink builds its stored base with the written schema: no Spark job") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft-neardup-base").toString
+    val input = MemoryStream[(Long, String)]
+    val docs = input.toDF().toDF("doc_id", "text")
+    val rounds = Seq(
+      Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"), (2L, "one two three")),
+      Seq((3L, "alpha beta gamma delta epsilon zeta eta theta"), (4L, "")))
+    val q = StreamOps.nearDupSink(docs, "doc_id", "text",
+      shingleN = 3, numSeeds = 12, rowsPerBand = 3,
+      storeDir = s"$dir/store", checkpointDir = s"$dir/ckpt")
+    try rounds.foreach { r => input.addData(r: _*); q.processAllAvailable() }
+    finally q.stop()
+    // the schemas of the frames the sink writes, from a static twin
+    val batch = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val bandsSchema = graft.operators.Similarity.minHashBandKeys(
+      graft.operators.Similarity.shingleSets(batch, "doc_id", "text", 3), 12, 3).schema
+
+    // jobs submitted from this thread under a job group, counted once a
+    // later fence job has reached the (asynchronous) listener
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    def jobsIn(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(s"$group-fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(s"$group-fence"), "fence job never reached the listener")
+      groups.toArray.count(_ == group)
+    }
+    sc.addSparkListener(listener)
+    try {
+      var stored: Option[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = None
+      assert(jobsIn("neardup-base") {
+        stored = StreamOps.nearDupBase(spark, s"$dir/store", 1L, batch.schema, bandsSchema)
+      } == 0)
+      // the listener does see the job an inferring read runs
+      assert(jobsIn("neardup-infer")(spark.read.parquet(s"$dir/store/docs")) > 0)
+      val (base, bands) = stored.get
+      assert(base.columns.toSeq == Seq("doc_id", "text"))
+      assert(bands.schema("batch_id").dataType == org.apache.spark.sql.types.LongType)
+      // batch 1's base is batch 0 only
+      assert(base.as[(Long, String)].collect().toMap == rounds.head.toMap)
+      assert(bands.select("id").distinct().as[Long].collect().toSet == Set(1L, 2L))
+    } finally sc.removeSparkListener(listener)
+    assert(StreamOps.nearDupBase(spark, s"$dir/none", 0L, batch.schema, bandsSchema).isEmpty)
+    val pairs = spark.read.parquet(s"$dir/store/pairs")
+      .select("id_a", "id_b", "size_a", "size_b", "intersection", "jaccard")
+      .as[graft.NearDupReference.Pair].collect().toSet
+    assert(pairs == graft.NearDupReference.pairs(rounds.flatten) && pairs.nonEmpty)
+  }
+
   test("left-outer interval join: null row only after the watermark proves no match") {
     implicit val sqlCtx = spark.sqlContext
     val vIn = MemoryStream[(Long, Long, Timestamp)]
