@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * `.explain("formatted")` on a gate's returned batch read-back can
   * never show). Usage: runMain graft.StreamPlanProbe <parts> <outDir>.
   * The r13 artifacts pair <parts>=32 (pre-change session width) with
-  * <parts>=4 (the SPARK_GRAFT_STREAM_PARTS default).
+  * <parts>=4 (the r13 streaming-gate default width).
   */
 object StreamPlanProbe {
   def main(args: Array[String]): Unit = {

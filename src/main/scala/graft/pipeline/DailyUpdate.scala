@@ -62,6 +62,9 @@ object DailyUpdate {
     "funnel" -> ExtendedQueries.queries("q59_funnel")
   )
 
+  /** Threads that submit the derived stages of one [[run]]. */
+  private val StagePoolThreads = 8
+
   /** Run the full chain; write each derived table under `outDir`; return
     * table → row count. `fact_events_clean` is written date-partitioned
     * (the production layout); the rest are snapshot overwrites like the
@@ -113,10 +116,8 @@ object DailyUpdate {
     // so each table's content is byte-identical to the sequential form.
     // Pool size: enough in-flight jobs to fill the tail, few enough not
     // to thrash the scheduler (the guide's "2-3 is plenty" scaled to the
-    // many-tiny-stages shape); SPARK_GRAFT_PIPELINE_THREADS overrides.
-    val poolN = math.max(1, math.min(
-      sys.env.getOrElse("SPARK_GRAFT_PIPELINE_THREADS", "8").toInt,
-      math.max(1, deriveStages.size)))
+    // many-tiny-stages shape), and never more threads than stages.
+    val poolN = math.max(1, math.min(StagePoolThreads, deriveStages.size))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(poolN)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)

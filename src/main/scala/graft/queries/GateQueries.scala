@@ -1,11 +1,19 @@
 package graft.queries
 
+import java.nio.file.{Files => JFiles, Path, Paths, StandardCopyOption}
+
+import scala.reflect.ClassTag
+
 import graft.functions.TextFns
 import graft.operators.{Multimodal, Packing, Similarity, Sketches}
 import graft.sources.Tables
-import org.apache.spark.sql.DataFrame
+import graft.streaming.StreamOps
+import graft.streaming.StreamOps.{Event, FunnelEvent}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Round-4/5 surface: driver-gated audits of the approximate scale paths,
   * the remaining reference maintenance shapes, and (round 5) the
@@ -51,6 +59,81 @@ object GateQueries {
     t
   }
 
+  /** Scratch root for every gate fixture in this JVM: created under
+    * `java.io.tmpdir` on first use and deleted, with everything the gates
+    * wrote under it, by one shutdown hook. Gates return frames that read
+    * their fixture output lazily, so no gate directory can go earlier.
+    */
+  private[graft] lazy val scratchRoot: Path = {
+    val root = JFiles.createTempDirectory("graft-gates")
+    sys.addShutdownHook(deleteRecursively(root))
+    root
+  }
+
+  /** Deletes `root` and everything under it. Symbolic links are removed,
+    * never followed: the daily fixtures link to the source tables.
+    */
+  private[graft] def deleteRecursively(root: Path): Unit = {
+    val walk = JFiles.walk(root)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => JFiles.deleteIfExists(p): Unit)
+    finally walk.close()
+  }
+
+  /** A fresh, empty directory for one gate run under [[scratchRoot]]. */
+  private[graft] def gateDir(name: String): Path =
+    JFiles.createTempDirectory(scratchRoot, s"$name-")
+
+  /** Starts `ds` as an append-mode parquet stream into `dir/<out>`, with
+    * its checkpoint at `dir/ckpt`.
+    */
+  private[graft] def appendParquet(ds: Dataset[_], dir: Path, out: String): StreamingQuery =
+    ds.writeStream
+      .option("checkpointLocation", s"$dir/ckpt")
+      .outputMode(OutputMode.Append)
+      .format("parquet").option("path", s"$dir/$out")
+      .start()
+
+  /** Runs `feed` against a started query and always stops the query,
+    * also when the feed throws.
+    */
+  private[graft] def runStream(q: StreamingQuery)(feed: StreamingQuery => Unit): Unit =
+    try feed(q) finally q.stop()
+
+  /** A fixture split into three consecutive chunks (fewer below three
+    * rows): the gates' micro-batch boundaries.
+    */
+  private def thirds[T](rows: Array[T]): Seq[Array[T]] =
+    rows.grouped(math.max(1, (rows.length + 2) / 3)).toSeq
+
+  /** Feeds both sides of a stream-stream join their [[thirds]] in
+    * lockstep, one micro-batch per pair of chunks.
+    */
+  private def feedPaired[T: ClassTag](q: StreamingQuery, lIn: MemoryStream[T],
+                                      rIn: MemoryStream[T], l: Array[T], r: Array[T]): Unit =
+    thirds(l).zipAll(thirds(r), Array.empty[T], Array.empty[T]).foreach { case (lc, rc) =>
+      if (lc.nonEmpty) lIn.addData(lc: _*)
+      if (rc.nonEmpty) rIn.addData(rc: _*)
+      q.processAllAvailable()
+    }
+
+  /** Lands wave `k` in the watched `root/landing` directory: `write`
+    * stages the wave under `root/stage<k>`, then its `.<ext>` part files
+    * move in as `wave<k>-part<i>.<ext>` — a daemon's "files appear" shape.
+    */
+  private def landWave(root: Path, k: Int, ext: String)(write: String => Unit): Unit = {
+    val stage = root.resolve(s"stage$k")
+    write(stage.toString)
+    val parts = JFiles.list(stage)
+    try parts.toArray.map(_.asInstanceOf[Path])
+      .filter(_.getFileName.toString.endsWith(s".$ext")).zipWithIndex
+      .foreach { case (f, i) =>
+        JFiles.move(f, root.resolve("landing").resolve(s"wave$k-part$i.$ext"),
+          StandardCopyOption.ATOMIC_MOVE)
+      }
+    finally parts.close()
+  }
+
   /** Shared fixture for the daily-pipeline gates (q86, q92): build the
     * capped two-day incremental layout (day 1 = events up to the midpoint
     * timestamp, day 2 = the full capped log; dims capped/symlinked) and
@@ -61,9 +144,8 @@ object GateQueries {
     */
   private def dailyPipelineFixtureRun(s: org.apache.spark.sql.SparkSession,
                                       d: String): String = {
-    import java.nio.file.{Files => JFiles}
     val t = Tables(s, d)
-    val root = JFiles.createTempDirectory("graft-daily")
+    val root = gateDir("daily")
     val (day1, day2) = (root.resolve("day1"), root.resolve("day2"))
     JFiles.createDirectories(day1); JFiles.createDirectories(day2)
     val out = root.resolve("out").toString
@@ -112,7 +194,7 @@ object GateQueries {
     Seq("region", "nation", "supplier", "part", "embeddings").foreach { n =>
       // absolute source: a relative sf dir would resolve the symlink
       // TARGET relative to the day dirs and dangle
-      val src = java.nio.file.Paths.get(d).toAbsolutePath.resolve(s"$n.parquet")
+      val src = Paths.get(d).toAbsolutePath.resolve(s"$n.parquet")
       JFiles.createSymbolicLink(day1.resolve(s"$n.parquet"), src)
       JFiles.createSymbolicLink(day2.resolve(s"$n.parquet"), src)
     }
@@ -308,7 +390,6 @@ object GateQueries {
       // attribution), while per-batch scaling is q46/ScaleProbe territory
       // — an uncapped MemoryStream gate would just re-measure minhash.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val docs = Tables(s, d).documents.select(col("doc_id"), col("text"))
         .where(col("doc_id") < 2000)
         // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
@@ -318,19 +399,17 @@ object GateQueries {
       // batch — an empty residue class would silently shift batch ids
       require((0 until 3).forall(b => docs.exists(_._1 % 3 == b)),
         "q74 fixture must populate all three residue classes")
-      val dir = java.nio.file.Files.createTempDirectory("graft-q74").toString
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+      val dir = gateDir("q74")
+      val input = MemoryStream[(Long, String)](s)
       val stream = input.toDF().toDF("doc_id", "text")
-      val q = graft.streaming.StreamOps.nearDupSink(stream, "doc_id", "text",
-        shingleN = 3, numSeeds = 12, rowsPerBand = 3,
-        storeDir = s"$dir/store", checkpointDir = s"$dir/ckpt")
-      try {
+      runStream(StreamOps.nearDupSink(stream, "doc_id", "text",
+          shingleN = 3, numSeeds = 12, rowsPerBand = 3,
+          storeDir = s"$dir/store", checkpointDir = s"$dir/ckpt")) { q =>
         (0 until 3).foreach { b =>
           input.addData(docs.filter(_._1 % 3 == b).toSeq: _*)
           q.processAllAvailable()
         }
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/store/pairs")
         .select(col("id_a"), col("id_b"), col("size_a"), col("size_b"),
           col("intersection"), col("jaccard"),
@@ -407,19 +486,16 @@ object GateQueries {
       // directly. Fixture capped to a fixed user set, so cost is
       // constant at every SF.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
         // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
         .as[(Long, java.sql.Timestamp, Long, Double)].collect()
-      val dir = java.nio.file.Files.createTempDirectory("graft-q78").toString
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Double)]
+      val dir = gateDir("q78")
+      val input = MemoryStream[(Long, Double)](s)
       val updates = input.toDF().toDF("uid", "worth")
-      val q = graft.streaming.StreamOps.upsertSink(updates, s"$dir/snapshot",
-        "uid", Map("worth" -> "worth"), s"$dir/ckpt")
-      try {
+      runStream(StreamOps.upsertSink(updates, s"$dir/snapshot",
+          "uid", Map("worth" -> "worth"), s"$dir/ckpt")) { q =>
         (0 until 3).foreach { b =>
           val batch = ev.filter(_._1 % 3 == b)
             .groupBy(_._3).map { case (uid, rows) =>
@@ -429,7 +505,7 @@ object GateQueries {
           input.addData(batch: _*)
           q.processAllAvailable()
         }
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/snapshot")
         .select(col("id").as("user_id"), col("worth"))
     },
@@ -443,31 +519,21 @@ object GateQueries {
       // oracle is the batch sequential-min construction emitted as hit
       // rows. Fixture capped to a fixed user set (constant cost per SF).
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("user_id"), col("ts"), col("event_type"))
         // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
         .as[(Long, java.sql.Timestamp, String)].collect()
         .sortBy(r => (us(r._2), r._1, r._3))
-      val chunks = ev.grouped(math.max(1, (ev.length + 2) / 3)).toSeq
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.StreamOps.FunnelEvent]
-      val out = graft.streaming.StreamOps.funnelStream(
-        input.toDS(), Seq("view", "click", "purchase"))
-      val dir = java.nio.file.Files.createTempDirectory("graft-q79").toString
-      val q = out.writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/hits")
-        .start()
-      try {
-        chunks.foreach { c =>
-          input.addData(c.map(r =>
-            graft.streaming.StreamOps.FunnelEvent(r._1, r._2, r._3)): _*)
+      val input = MemoryStream[FunnelEvent](s)
+      val out = StreamOps.funnelStream(input.toDS(), Seq("view", "click", "purchase"))
+      val dir = gateDir("q79")
+      runStream(appendParquet(out, dir, "hits")) { q =>
+        thirds(ev).foreach { c =>
+          input.addData(c.map(r => FunnelEvent(r._1, r._2, r._3)): _*)
           q.processAllAvailable()
         }
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/hits")
         .select(col("user_id"), col("funnel_stage"), col("stage_order"), col("ts"))
     },
@@ -483,7 +549,6 @@ object GateQueries {
       // emitted sessions must equal the batch gap-split exactly — q19's
       // oracle construction, restricted to the fixture users.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("user_id"), col("ts"), col("value"))
@@ -491,30 +556,22 @@ object GateQueries {
         .as[(Long, java.sql.Timestamp, Double)].collect()
         .sortBy(r => (us(r._2), r._1))
       val maxUs = ev.map(r => us(r._2)).max
-      val chunks = ev.grouped(math.max(1, (ev.length + 2) / 3)).toSeq
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.StreamOps.Event]
-      val out = graft.streaming.StreamOps.sessionize(input.toDS(),
+      val input = MemoryStream[Event](s)
+      val out = StreamOps.sessionize(input.toDS(),
         gapSeconds = 1800, watermarkDelay = "10 seconds")
-      val dir = java.nio.file.Files.createTempDirectory("graft-q80").toString
-      val q = out.toDF().writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/sessions")
-        .start()
-      try {
-        chunks.foreach { c =>
-          input.addData(c.map(r =>
-            graft.streaming.StreamOps.Event(r._1, r._2, r._3)): _*)
+      val dir = gateDir("q80")
+      runStream(appendParquet(out, dir, "sessions")) { q =>
+        thirds(ev).foreach { c =>
+          input.addData(c.map(r => Event(r._1, r._2, r._3)): _*)
           q.processAllAvailable()
         }
         // sentinel flush: gap + delay + margin past the last real event
         Seq(0L, 1000000L).foreach { offUs =>
-          input.addData(graft.streaming.StreamOps.Event(-1L,
+          input.addData(Event(-1L,
             microTs(maxUs + 3600L * 1000000L + 60000000L + offUs), 0.0))
           q.processAllAvailable()
         }
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/sessions")
         .where(col("user_id") >= 0)
         .select(col("user_id"), col("session_start"), col("session_end"),
@@ -530,7 +587,6 @@ object GateQueries {
       // batch date_trunc rollup (Spark's '1 hour' windows are
       // epoch-aligned, i.e. exactly date_trunc).
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("ts"), col("event_type"), col("value"))
@@ -538,26 +594,19 @@ object GateQueries {
         .as[(java.sql.Timestamp, String, Double)].collect()
         .sortBy(r => (us(r._1), r._2))
       val maxUs = ev.map(r => us(r._1)).max
-      val chunks = ev.grouped(math.max(1, (ev.length + 2) / 3)).toSeq
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, String, Double)]
-      val out = graft.streaming.StreamOps.windowedRollup(
+      val input = MemoryStream[(java.sql.Timestamp, String, Double)](s)
+      val out = StreamOps.windowedRollup(
         input.toDF().toDF("ts", "event_type", "value"),
         "ts", "event_type", "value", "1 hour", "10 seconds")
-      val dir = java.nio.file.Files.createTempDirectory("graft-q81").toString
-      val q = out.writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/rollup")
-        .start()
-      try {
-        chunks.foreach { c => input.addData(c: _*); q.processAllAvailable() }
+      val dir = gateDir("q81")
+      runStream(appendParquet(out, dir, "rollup")) { q =>
+        thirds(ev).foreach { c => input.addData(c: _*); q.processAllAvailable() }
         Seq(0L, 1000000L).foreach { offUs =>
           input.addData((microTs(maxUs + 7200000000L + offUs),
             "__sentinel", 0.0))
           q.processAllAvailable()
         }
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/rollup")
         .where(col("event_type") =!= "__sentinel")
         .select(col("window_start"), col("window_end"), col("event_type"),
@@ -573,31 +622,23 @@ object GateQueries {
       // filter, not an aggregation: rows emit immediately, no sentinel
       // flush needed.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
         // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
         .as[(Long, java.sql.Timestamp, Long, Double)].collect()
         .sortBy(r => (us(r._2), r._1))
-      val chunks = ev.grouped(math.max(1, (ev.length + 2) / 3)).toSeq
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long, Double)]
-      val out = graft.streaming.StreamOps.dedupByIdWithinWatermark(
+      val input = MemoryStream[(Long, java.sql.Timestamp, Long, Double)](s)
+      val out = StreamOps.dedupByIdWithinWatermark(
         input.toDF().toDF("event_id", "ts", "user_id", "value"),
         "ts", "event_id", "1 hour")
-      val dir = java.nio.file.Files.createTempDirectory("graft-q82").toString
-      val q = out.writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/deduped")
-        .start()
-      try {
-        chunks.foreach { c =>
+      val dir = gateDir("q82")
+      runStream(appendParquet(out, dir, "deduped")) { q =>
+        thirds(ev).foreach { c =>
           input.addData(c: _*); q.processAllAvailable() // first delivery
           input.addData(c: _*); q.processAllAvailable() // exact re-delivery
         }
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/deduped")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
     },
@@ -609,28 +650,20 @@ object GateQueries {
       // batch, broadcast when it fits). Join output emits immediately, so
       // the full fed stream must equal the batch left join.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val t = Tables(s, d)
       val ev = t.events
         .where(col("user_id") < 150 && col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("value"))
         // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
         .as[(Long, Long, Double)].collect().sortBy(_._1)
-      val chunks = ev.grouped(math.max(1, (ev.length + 2) / 3)).toSeq
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Double)]
-      val out = graft.streaming.StreamOps.enrichStream(
+      val input = MemoryStream[(Long, Long, Double)](s)
+      val out = StreamOps.enrichStream(
         input.toDF().toDF("event_id", "user_id", "value"),
         t.customer, "user_id", "c_custkey", Seq("c_mktsegment", "c_acctbal"))
-      val dir = java.nio.file.Files.createTempDirectory("graft-q83").toString
-      val q = out.writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/enriched")
-        .start()
-      try {
-        chunks.foreach { c => input.addData(c: _*); q.processAllAvailable() }
-      } finally q.stop()
+      val dir = gateDir("q83")
+      runStream(appendParquet(out, dir, "enriched")) { q =>
+        thirds(ev).foreach { c => input.addData(c: _*); q.processAllAvailable() }
+      }
       s.read.parquet(s"$dir/enriched")
         .select(col("event_id"), col("user_id"), col("value"),
           col("c_mktsegment"), col("c_acctbal"))
@@ -646,7 +679,6 @@ object GateQueries {
       // view is evicted only once the watermark passes view_ts + horizon,
       // by which point every qualifying click has already arrived.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       def side(tpe: String) = Tables(s, d).events
         .where(col("user_id") < 150 && col("event_type") === tpe)
         .select(col("event_id"), col("user_id"), col("ts"))
@@ -654,33 +686,19 @@ object GateQueries {
         .as[(Long, Long, java.sql.Timestamp)].collect()
         .sortBy(r => (us(r._3), r._1))
       val (views, clicks) = (side("view"), side("click"))
-      def chunk3[T](a: Array[T]) = a.grouped(math.max(1, (a.length + 2) / 3)).toSeq
-      val vIn = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val cIn = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val joined = graft.streaming.StreamOps.intervalJoinStream(
+      val vIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
+      val cIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
+      val joined = StreamOps.intervalJoinStream(
         vIn.toDF().toDF("event_id", "user_id", "ts"),
         cIn.toDF().toDF("event_id", "user_id", "ts"),
         "user_id", "ts", horizonSeconds = 1800, watermarkDelay = "10 seconds")
         .select(col("l.event_id").as("view_id"), col("l.user_id").as("user_id"),
           col("l.ts").as("view_ts"), col("r.event_id").as("click_id"),
           col("r.ts").as("click_ts"))
-      val dir = java.nio.file.Files.createTempDirectory("graft-q84").toString
-      val q = joined.writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/matches")
-        .start()
-      try {
-        chunk3(views).zipAll(chunk3(clicks), Array.empty[(Long, Long, java.sql.Timestamp)],
-            Array.empty[(Long, Long, java.sql.Timestamp)])
-          .foreach { case (vc, cc) =>
-            if (vc.nonEmpty) vIn.addData(vc: _*)
-            if (cc.nonEmpty) cIn.addData(cc: _*)
-            q.processAllAvailable()
-          }
-      } finally q.stop()
+      val dir = gateDir("q84")
+      runStream(appendParquet(joined, dir, "matches")) { q =>
+        feedPaired(q, vIn, cIn, views, clicks)
+      }
       s.read.parquet(s"$dir/matches")
         .select(col("view_id"), col("user_id"), col("view_ts"),
           col("click_id"), col("click_ts"))
@@ -761,7 +779,6 @@ object GateQueries {
       // timestamps; LateDataRuleSpec pins it with a crafted ms-aligned
       // fixture: dropped at exact equality.)
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
@@ -770,20 +787,13 @@ object GateQueries {
       val (delayed, onTime) = ev.partition(_._1 % 7 == 0)
       val ordered = onTime.sortBy(r => (us(r._2), r._1))
       val maxUs = ev.map(r => us(r._2)).max
-      val chunks = ordered.grouped(math.max(1, (ordered.length + 2) / 3)).toSeq
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, String, Double)]
-      val out = graft.streaming.StreamOps.windowedRollup(
+      val input = MemoryStream[(java.sql.Timestamp, String, Double)](s)
+      val out = StreamOps.windowedRollup(
         input.toDF().toDF("ts", "event_type", "value"),
         "ts", "event_type", "value", "1 hour", "10 seconds")
-      val dir = java.nio.file.Files.createTempDirectory("graft-q87").toString
-      val q = out.writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/rollup")
-        .start()
-      try {
-        chunks.foreach { c =>
+      val dir = gateDir("q87")
+      runStream(appendParquet(out, dir, "rollup")) { q =>
+        thirds(ordered).foreach { c =>
           input.addData(c.map(r => (r._2, r._3, r._4)): _*)
           q.processAllAvailable()
         }
@@ -799,7 +809,7 @@ object GateQueries {
             "__sentinel", 0.0))
           q.processAllAvailable()
         }
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/rollup")
         .where(col("event_type") =!= "__sentinel")
         .select(col("window_start"), col("window_end"), col("event_type"),
@@ -821,7 +831,6 @@ object GateQueries {
       // user and the emit-once semantics stay equal to batch. The oracle
       // is the batch sessionization over exactly the non-dropped set.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
@@ -844,34 +853,26 @@ object GateQueries {
         "q93 fixture must drop at least one late row")
       require(delayed.exists(r => us(r._2) > wmUs),
         "q93 fixture must accept at least one late row")
-      val chunks = ordered.grouped(math.max(1, (ordered.length + 2) / 3)).toSeq
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.StreamOps.Event]
-      val out = graft.streaming.StreamOps.sessionize(input.toDS(),
+      val input = MemoryStream[Event](s)
+      val out = StreamOps.sessionize(input.toDS(),
         gapSeconds = 1800, watermarkDelay = "1 hour")
-      val dir = java.nio.file.Files.createTempDirectory("graft-q93").toString
-      val q = out.toDF().writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/sessions")
-        .start()
-      try {
-        chunks.foreach { c =>
-          input.addData(c.map(r =>
-            graft.streaming.StreamOps.Event(r._3, r._2, r._4)): _*)
+      val dir = gateDir("q93")
+      runStream(appendParquet(out, dir, "sessions")) { q =>
+        thirds(ordered).foreach { c =>
+          input.addData(c.map(r => Event(r._3, r._2, r._4)): _*)
           q.processAllAvailable()
         }
         // the straggler batch: every withheld last event at once
         input.addData(delayed.sortBy(r => (us(r._2), r._1)).map(r =>
-          graft.streaming.StreamOps.Event(r._3, r._2, r._4)): _*)
+          Event(r._3, r._2, r._4)): _*)
         q.processAllAvailable()
         // sentinel flush: gap + delay + margin past the last event
         Seq(0L, 1000000L).foreach { offUs =>
-          input.addData(graft.streaming.StreamOps.Event(-1L,
+          input.addData(Event(-1L,
             microTs(maxAllUs + 1800L * 1000000L + 3600L * 1000000L + 60000000L + offUs), 0.0))
           q.processAllAvailable()
         }
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/sessions")
         .where(col("user_id") >= 0)
         .select(col("user_id"), col("session_start"), col("session_end"),
@@ -892,30 +893,28 @@ object GateQueries {
       // run — q78's oracle verbatim. Proves checkpoint replay + swap
       // recovery compose, not just each half in isolation.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
         // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
         .as[(Long, java.sql.Timestamp, Long, Double)].collect()
-      val dir = java.nio.file.Files.createTempDirectory("graft-q89").toString
+      val dir = gateDir("q89")
       val target = s"$dir/snapshot"
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Double)]
+      val input = MemoryStream[(Long, Double)](s)
       val updates = input.toDF().toDF("uid", "worth")
       def batch(b: Int) = ev.filter(_._1 % 3 == b)
         .groupBy(_._3).map { case (uid, rows) =>
           val latest = rows.maxBy(r => (us(r._2), r._1))
           (uid, latest._4)
         }.toSeq.sortBy(_._1)
-      val q1 = graft.streaming.StreamOps.upsertSink(updates, target,
+      def startSink() = StreamOps.upsertSink(updates, target,
         "uid", Map("worth" -> "worth"), s"$dir/ckpt")
-      try {
+      runStream(startSink()) { q =>
         (0 until 2).foreach { b =>
           input.addData(batch(b): _*)
-          q1.processAllAvailable()
+          q.processAllAvailable()
         }
-      } finally q1.stop()
+      }
       // the crash window: target promoted away but tmp never landed
       val fs = new org.apache.hadoop.fs.Path(target)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -924,12 +923,10 @@ object GateQueries {
         "q89 fixture: failed to strand the snapshot at .old")
       // restart from the SAME checkpoint; MemoryStream retains its data,
       // so the new query resumes from the last committed offset
-      val q2 = graft.streaming.StreamOps.upsertSink(updates, target,
-        "uid", Map("worth" -> "worth"), s"$dir/ckpt")
-      try {
+      runStream(startSink()) { q =>
         input.addData(batch(2): _*)
-        q2.processAllAvailable()
-      } finally q2.stop()
+        q.processAllAvailable()
+      }
       require(!fs.exists(new org.apache.hadoop.fs.Path(target + ".old")),
         "q89: stranded .old snapshot must be cleaned up after recovery")
       s.read.parquet(target)
@@ -948,7 +945,6 @@ object GateQueries {
       // the oracle is q80's batch gap-split verbatim, so the interrupted
       // run must be indistinguishable from an uninterrupted one.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("user_id"), col("ts"), col("value"))
@@ -956,42 +952,32 @@ object GateQueries {
         .as[(Long, java.sql.Timestamp, Double)].collect()
         .sortBy(r => (us(r._2), r._1))
       val maxUs = ev.map(r => us(r._2)).max
-      val chunks = ev.grouped(math.max(1, (ev.length + 2) / 3)).toSeq
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.StreamOps.Event]
-      val dir = java.nio.file.Files.createTempDirectory("graft-q94").toString
-      def start() = graft.streaming.StreamOps.sessionize(input.toDS(),
-          gapSeconds = 1800, watermarkDelay = "10 seconds")
-        .toDF().writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/sessions")
-        .start()
-      val q1 = start()
-      try {
+      val chunks = thirds(ev)
+      val input = MemoryStream[Event](s)
+      val dir = gateDir("q94")
+      def start() = appendParquet(StreamOps.sessionize(input.toDS(),
+        gapSeconds = 1800, watermarkDelay = "10 seconds"), dir, "sessions")
+      runStream(start()) { q =>
         chunks.take(2).foreach { c =>
-          input.addData(c.map(r =>
-            graft.streaming.StreamOps.Event(r._1, r._2, r._3)): _*)
-          q1.processAllAvailable()
+          input.addData(c.map(r => Event(r._1, r._2, r._3)): _*)
+          q.processAllAvailable()
         }
-      } finally q1.stop()
+      }
       // the kill point must land mid-stream: some sessions already
       // emitted, the rest still open in the state store
       val nMid = s.read.parquet(s"$dir/sessions").count()
       require(nMid > 0, "q94: first query must emit some sessions before the kill")
-      val q2 = start()
-      try {
+      runStream(start()) { q =>
         chunks.drop(2).foreach { c =>
-          input.addData(c.map(r =>
-            graft.streaming.StreamOps.Event(r._1, r._2, r._3)): _*)
-          q2.processAllAvailable()
+          input.addData(c.map(r => Event(r._1, r._2, r._3)): _*)
+          q.processAllAvailable()
         }
         Seq(0L, 1000000L).foreach { offUs =>
-          input.addData(graft.streaming.StreamOps.Event(-1L,
+          input.addData(Event(-1L,
             microTs(maxUs + 3600L * 1000000L + 60000000L + offUs), 0.0))
-          q2.processAllAvailable()
+          q.processAllAvailable()
         }
-      } finally q2.stop()
+      }
       val out = s.read.parquet(s"$dir/sessions").where(col("user_id") >= 0)
       require(out.count() > nMid,
         "q94: the resumed query must emit the sessions restored from state")
@@ -1021,8 +1007,7 @@ object GateQueries {
         .where(dayofmonth(col("d")) % 7 === 3)
         .collect().map(_.getDate(0)).toSet // bounded by calendar days
       require(holes.nonEmpty, "q90 fixture must have at least one hole date")
-      val target = java.nio.file.Files.createTempDirectory("graft-q90")
-        .toString + "/rollup"
+      val target = s"${gateDir("q90")}/rollup"
       graft.sources.Formats.writePartitioned(
         rollup.where(!col("d").isin(holes.toSeq: _*)), target, Seq("d"))
       val filled = graft.pipeline.DailyUpdate.backfillDates(s, rollup, "d", target)
@@ -1047,39 +1032,23 @@ object GateQueries {
       // batch read of the same rows exactly once. Columns are the q91
       // text-safe set: timestamp fidelity through text formats is a
       // formatting option, gated nowhere as a fidelity property.
-      import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
       import org.apache.spark.sql.types._
       val slice = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val root = JFiles.createTempDirectory("graft-q95")
+      val root = gateDir("q95")
       val landing = root.resolve("landing")
       JFiles.createDirectories(landing)
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("user_id", LongType),
         StructField("event_type", StringType), StructField("value", DoubleType)))
-      // stage wave k under its own dir, then move the part files into the
-      // landing dir under unique names — the daemon's "files appear" shape
-      def land(k: Int): Unit = {
-        val stage = root.resolve(s"stage$k").toString
-        graft.sources.Formats.writeJsonl(slice.where(col("event_id") % 3 === k), stage)
-        JFiles.list(Paths.get(stage)).toArray.map(_.asInstanceOf[java.nio.file.Path])
-          .filter(_.getFileName.toString.endsWith(".json")).zipWithIndex
-          .foreach { case (f, i) =>
-            JFiles.move(f, landing.resolve(s"wave$k-part$i.json"),
-              StandardCopyOption.ATOMIC_MOVE)
-          }
-      }
+      def land(k: Int): Unit = landWave(root, k, "json")(
+        graft.sources.Formats.writeJsonl(slice.where(col("event_id") % 3 === k), _))
       val counts = (0 until 3).map(k =>
         slice.where(col("event_id") % 3 === k).count())
       val sink = root.resolve("sink").toString
-      val q = graft.sources.Formats.readJsonlStream(s, landing.toString, schema)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", sink)
-        .start()
-      try {
+      runStream(appendParquet(
+          graft.sources.Formats.readJsonlStream(s, landing.toString, schema), root, "sink")) { q =>
         (0 until 3).foreach { k =>
           land(k)
           q.processAllAvailable()
@@ -1088,7 +1057,7 @@ object GateQueries {
           require(seen == want,
             s"q95: after wave $k the sink must hold exactly $want rows, got $seen")
         }
-      } finally q.stop()
+      }
       s.read.parquet(sink)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     },
@@ -1107,9 +1076,8 @@ object GateQueries {
       // table equals the batch clean build. Derived stages are q86/q92's
       // gated surface; this gate runs the fact loads (deriveStages
       // empty), matching the reference's per-table backfill unit.
-      import java.nio.file.{Files => JFiles}
       val t = Tables(s, d)
-      val root = JFiles.createTempDirectory("graft-q96")
+      val root = gateDir("q96")
       val (dayA, dayB, full) =
         (root.resolve("dayA"), root.resolve("dayB"), root.resolve("full"))
       Seq(dayA, dayB, full).foreach(p => JFiles.createDirectories(p))
@@ -1157,7 +1125,6 @@ object GateQueries {
       // the harness exercises cross-user late interleaving and state
       // continuation across the idle gap.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("user_id"), col("ts"), col("event_type"))
@@ -1170,27 +1137,18 @@ object GateQueries {
       val (delayed, onTime) =
         ev.partition(r => withheldKeys((r._1, us(r._2), r._3)))
       val ordered = onTime.sortBy(r => (us(r._2), r._1, r._3))
-      val chunks = ordered.grouped(math.max(1, (ordered.length + 2) / 3)).toSeq
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.StreamOps.FunnelEvent]
-      val out = graft.streaming.StreamOps.funnelStream(
-        input.toDS(), Seq("view", "click", "purchase"))
-      val dir = java.nio.file.Files.createTempDirectory("graft-q97").toString
-      val q = out.toDF().writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/hits")
-        .start()
-      try {
-        chunks.foreach { c =>
-          input.addData(c.map(r =>
-            graft.streaming.StreamOps.FunnelEvent(r._1, r._2, r._3)): _*)
+      val input = MemoryStream[FunnelEvent](s)
+      val out = StreamOps.funnelStream(input.toDS(), Seq("view", "click", "purchase"))
+      val dir = gateDir("q97")
+      runStream(appendParquet(out, dir, "hits")) { q =>
+        thirds(ordered).foreach { c =>
+          input.addData(c.map(r => FunnelEvent(r._1, r._2, r._3)): _*)
           q.processAllAvailable()
         }
         input.addData(delayed.toSeq.sortBy(r => (us(r._2), r._1, r._3)).map(r =>
-          graft.streaming.StreamOps.FunnelEvent(r._1, r._2, r._3)): _*)
+          FunnelEvent(r._1, r._2, r._3)): _*)
         q.processAllAvailable()
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/hits")
         .select(col("user_id"), col("funnel_stage"), col("stage_order"), col("ts"))
     },
@@ -1206,7 +1164,6 @@ object GateQueries {
       // hour. Ids are unique, so the dedup state itself never suppresses
       // a row: divergence isolates the late filter.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
@@ -1219,23 +1176,16 @@ object GateQueries {
         "q98 fixture must drop at least one late row")
       require(delayed.exists(r => us(r._2) > wmUs),
         "q98 fixture must accept at least one late row")
-      val chunks = ordered.grouped(math.max(1, (ordered.length + 2) / 3)).toSeq
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long, Double)]
-      val out = graft.streaming.StreamOps.dedupByIdWithinWatermark(
+      val input = MemoryStream[(Long, java.sql.Timestamp, Long, Double)](s)
+      val out = StreamOps.dedupByIdWithinWatermark(
         input.toDF().toDF("event_id", "ts", "user_id", "value"),
         "ts", "event_id", "1 hour")
-      val dir = java.nio.file.Files.createTempDirectory("graft-q98").toString
-      val q = out.writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/deduped")
-        .start()
-      try {
-        chunks.foreach { c => input.addData(c: _*); q.processAllAvailable() }
+      val dir = gateDir("q98")
+      runStream(appendParquet(out, dir, "deduped")) { q =>
+        thirds(ordered).foreach { c => input.addData(c: _*); q.processAllAvailable() }
         input.addData(delayed.sortBy(r => (us(r._2), r._1)): _*)
         q.processAllAvailable()
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/deduped")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
     },
@@ -1264,7 +1214,6 @@ object GateQueries {
       // zipped feeding keeps every on-time partner resident exactly as
       // q84's scaladoc argues.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       def side(tpe: String) = Tables(s, d).events
         .where(col("user_id") < 150 && col("event_type") === tpe)
         .select(col("event_id"), col("user_id"), col("ts"))
@@ -1284,36 +1233,21 @@ object GateQueries {
       require(delayed.exists(c => us(c._3) > wmUs && views.exists(v =>
           v._2 == c._2 && us(c._3) > us(v._3) && us(c._3) <= us(v._3) + horizonUs)),
         "q99 fixture must accept at least one late click that forms a pair")
-      def chunk3[T](a: Array[T]) = a.grouped(math.max(1, (a.length + 2) / 3)).toSeq
-      val vIn = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val cIn = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val joined = graft.streaming.StreamOps.intervalJoinStream(
+      val vIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
+      val cIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
+      val joined = StreamOps.intervalJoinStream(
         vIn.toDF().toDF("event_id", "user_id", "ts"),
         cIn.toDF().toDF("event_id", "user_id", "ts"),
         "user_id", "ts", horizonSeconds = 86400, watermarkDelay = "10 seconds")
         .select(col("l.event_id").as("view_id"), col("l.user_id").as("user_id"),
           col("l.ts").as("view_ts"), col("r.event_id").as("click_id"),
           col("r.ts").as("click_ts"))
-      val dir = java.nio.file.Files.createTempDirectory("graft-q99").toString
-      val q = joined.writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/matches")
-        .start()
-      try {
-        chunk3(views).zipAll(chunk3(onTime),
-            Array.empty[(Long, Long, java.sql.Timestamp)],
-            Array.empty[(Long, Long, java.sql.Timestamp)])
-          .foreach { case (vc, cc) =>
-            if (vc.nonEmpty) vIn.addData(vc: _*)
-            if (cc.nonEmpty) cIn.addData(cc: _*)
-            q.processAllAvailable()
-          }
+      val dir = gateDir("q99")
+      runStream(appendParquet(joined, dir, "matches")) { q =>
+        feedPaired(q, vIn, cIn, views, onTime)
         cIn.addData(delayed: _*)
         q.processAllAvailable()
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/matches")
         .select(col("view_id"), col("user_id"), col("view_ts"),
           col("click_id"), col("click_ts"))
@@ -1337,27 +1271,24 @@ object GateQueries {
       // counts around the replay and the oracle is q74's batch SQL —
       // the interrupted-and-replayed run must be indistinguishable.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val docs = Tables(s, d).documents.select(col("doc_id"), col("text"))
         .where(col("doc_id") < 2000)
         // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
         .as[(Long, String)].collect()
       require((0 until 3).forall(b => docs.exists(_._1 % 3 == b)),
         "q100 fixture must populate all three residue classes")
-      val dir = java.nio.file.Files.createTempDirectory("graft-q100").toString
-      val input =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      def startSink() = graft.streaming.StreamOps.nearDupSink(
+      val dir = gateDir("q100")
+      val input = MemoryStream[(Long, String)](s)
+      def startSink() = StreamOps.nearDupSink(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text",
         shingleN = 3, numSeeds = 12, rowsPerBand = 3,
         storeDir = s"$dir/store", checkpointDir = s"$dir/ckpt")
-      val q1 = startSink()
-      try {
+      runStream(startSink()) { q =>
         (0 until 2).foreach { b =>
           input.addData(docs.filter(_._1 % 3 == b).toSeq: _*)
-          q1.processAllAvailable()
+          q.processAllAvailable()
         }
-      } finally q1.stop()
+      }
       // the crash window: batch 1's writes are on disk, its commit isn't.
       // The local checkpoint FS is checksummed, so the commit record is
       // (1, .1.crc) — both must go or the replay's rename of the fresh
@@ -1371,11 +1302,10 @@ object GateQueries {
       val afterKill = docsInStore()
       require(afterKill == docs.count(_._1 % 3 < 2),
         s"q100: store must hold exactly batches 0+1 before recovery, got $afterKill")
-      val q2 = startSink()
-      try {
+      runStream(startSink()) { q =>
         input.addData(docs.filter(_._1 % 3 == 2).toSeq: _*)
-        q2.processAllAvailable()
-      } finally q2.stop()
+        q.processAllAvailable()
+      }
       require(docsInStore() == docs.length.toLong,
         "q100: the replayed batch must overwrite its partitions, not append")
       s.read.parquet(s"$dir/store/pairs")
@@ -1394,40 +1324,25 @@ object GateQueries {
       // exclude timestamps as a TEXT-format formatting concern, parquet
       // carries them in binary — so this gate INCLUDES `ts` and pins µs
       // timestamp fidelity through the landing path end to end.
-      import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
       import org.apache.spark.sql.types._
       val slice = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts"))
-      val root = JFiles.createTempDirectory("graft-q101")
+      val root = gateDir("q101")
       val landing = root.resolve("landing")
       JFiles.createDirectories(landing)
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("user_id", LongType),
         StructField("event_type", StringType), StructField("value", DoubleType),
         StructField("ts", TimestampType)))
-      def land(k: Int): Unit = {
-        val stage = root.resolve(s"stage$k").toString
-        slice.where(col("event_id") % 3 === k)
-          .write.mode("overwrite").parquet(stage)
-        JFiles.list(Paths.get(stage)).toArray.map(_.asInstanceOf[java.nio.file.Path])
-          .filter(_.getFileName.toString.endsWith(".parquet")).zipWithIndex
-          .foreach { case (f, i) =>
-            JFiles.move(f, landing.resolve(s"wave$k-part$i.parquet"),
-              StandardCopyOption.ATOMIC_MOVE)
-          }
-      }
+      def land(k: Int): Unit = landWave(root, k, "parquet")(
+        slice.where(col("event_id") % 3 === k).write.mode("overwrite").parquet(_))
       val counts = (0 until 3).map(k =>
         slice.where(col("event_id") % 3 === k).count())
       val sink = root.resolve("sink").toString
-      val q = graft.sources.Formats.readParquetStream(s, landing.toString, schema)
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", sink)
-        .start()
-      try {
+      runStream(appendParquet(
+          graft.sources.Formats.readParquetStream(s, landing.toString, schema), root, "sink")) { q =>
         (0 until 3).foreach { k =>
           land(k)
           q.processAllAvailable()
@@ -1436,7 +1351,7 @@ object GateQueries {
           require(seen == want,
             s"q101: after wave $k the sink must hold exactly $want rows, got $seen")
         }
-      } finally q.stop()
+      }
       s.read.parquet(sink)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts"))
@@ -1459,8 +1374,7 @@ object GateQueries {
         .groupBy(col("user_id"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("n_events"),
           graft.functions.Portable.q4(sum(col("value"))).as("total_value"))
-      val target = java.nio.file.Files.createTempDirectory("graft-q102")
-        .toString + "/rollup"
+      val target = s"${gateDir("q102")}/rollup"
       rollup.repartition(6).write.partitionBy("d").parquet(target)
       val before = graft.operators.Compaction.partitionFileCounts(s, target, "d")
       require(before.values.max > 1, "q102 fixture must be fragmented")
@@ -1495,8 +1409,7 @@ object GateQueries {
         .where(col("user_id") < 150)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts"))
-      val dir = java.nio.file.Files.createTempDirectory("graft-q103")
-        .toString + "/clustered"
+      val dir = s"${gateDir("q103")}/clustered"
       graft.sources.Formats.writeRangeClustered(slice, dir, "user_id", numFiles = 8)
       val back = s.read.parquet(dir)
       val ranges = back.groupBy(input_file_name().as("f"))
@@ -1533,8 +1446,7 @@ object GateQueries {
       val slice = Tables(s, d).events
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts"))
-      val dir = java.nio.file.Files.createTempDirectory("graft-q106")
-        .toString + "/zordered"
+      val dir = s"${gateDir("q106")}/zordered"
       graft.sources.Formats.writeZOrdered(slice, dir, "user_id", "event_id",
         numFiles = 16)
       val back = s.read.parquet(dir)
@@ -1668,7 +1580,7 @@ object GateQueries {
       val slice = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val root = java.nio.file.Files.createTempDirectory("graft-q91").toString
+      val root = gateDir("q91")
       graft.sources.Formats.writeCsv(slice, s"$root/csv")
       graft.sources.Formats.writeJsonl(slice, s"$root/jsonl")
       graft.sources.Formats.writeOrc(slice, s"$root/orc")
@@ -1729,7 +1641,7 @@ object GateQueries {
       // is a footer-only pass (no data read) and the epoch split is the
       // partition layout the daily pipeline (q86) already writes.
       val base = Tables(s, d).events.where(col("user_id") < 150)
-      val root = java.nio.file.Files.createTempDirectory("graft-q113").toString
+      val root = gateDir("q113").toString
       base.where(col("event_id") % 2 === 0)
         .select(col("event_id"), col("user_id"), col("value"))
         .write.parquet(s"$root/epoch=legacy")
@@ -1829,7 +1741,6 @@ object GateQueries {
       // DailyUpdateSpec pins the branch genuinely runs (a planted
       // state-only row SURVIVES day 2 — a rebuild would erase it) and
       // IncrementalSpec pins the equality boundary-ties included.
-      import java.nio.file.{Files => JFiles}
       val ev = Tables(s, d).events
       // the split lands ONE µs BELOW the latest first-touch (max over
       // keys of min ts), NOT at the q86 midpoint: a midpoint split goes
@@ -1841,7 +1752,7 @@ object GateQueries {
       val lastFirst = ev.groupBy(col("user_id"), col("event_type"))
         .agg(min(col("ts")).as("f")).agg(max(col("f"))).collect()(0).getTimestamp(0)
       val split = microTs(us(lastFirst) - 1L)
-      val root = JFiles.createTempDirectory("graft-incfirst")
+      val root = gateDir("q144")
       val (day1, day2) = (root.resolve("day1"), root.resolve("day2"))
       JFiles.createDirectories(day1); JFiles.createDirectories(day2)
       ev.where(col("ts") <= lit(split)).write.parquet(s"$day1/events.parquet")
@@ -1877,7 +1788,6 @@ object GateQueries {
       // on both match and eviction), or a premature null all
       // hash-mismatch. Fixture capped as q84; constant cost at every SF.
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       def side(tpe: String) = Tables(s, d).events
         .where(col("user_id") < 150 && col("event_type") === tpe)
         .select(col("event_id"), col("user_id"), col("ts"))
@@ -1885,33 +1795,19 @@ object GateQueries {
         .as[(Long, Long, java.sql.Timestamp)].collect()
         .sortBy(r => (us(r._3), r._1))
       val (views, clicks) = (side("view"), side("click"))
-      def chunk3[T](a: Array[T]) = a.grouped(math.max(1, (a.length + 2) / 3)).toSeq
-      val vIn = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val cIn = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, java.sql.Timestamp)]
+      val vIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
+      val cIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
       val horizonSeconds = 1800L
-      val joined = graft.streaming.StreamOps.intervalJoinStreamLeftOuter(
+      val joined = StreamOps.intervalJoinStreamLeftOuter(
         vIn.toDF().toDF("event_id", "user_id", "ts"),
         cIn.toDF().toDF("event_id", "user_id", "ts"),
         "user_id", "ts", horizonSeconds, watermarkDelay = "10 seconds")
         .select(col("l.event_id").as("view_id"), col("l.user_id").as("user_id"),
           col("l.ts").as("view_ts"), col("r.event_id").as("click_id"),
           col("r.ts").as("click_ts"))
-      val dir = java.nio.file.Files.createTempDirectory("graft-q115").toString
-      val q = joined.writeStream
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("parquet").option("path", s"$dir/matches")
-        .start()
-      try {
-        chunk3(views).zipAll(chunk3(clicks), Array.empty[(Long, Long, java.sql.Timestamp)],
-            Array.empty[(Long, Long, java.sql.Timestamp)])
-          .foreach { case (vc, cc) =>
-            if (vc.nonEmpty) vIn.addData(vc: _*)
-            if (cc.nonEmpty) cIn.addData(cc: _*)
-            q.processAllAvailable()
-          }
+      val dir = gateDir("q115")
+      runStream(appendParquet(joined, dir, "matches")) { q =>
+        feedPaired(q, vIn, cIn, views, clicks)
         // sentinel pair 1: push the global watermark past every view's
         // horizon; sentinel pair 2: run the eviction batch that emits
         // the null rows (watermark updates take effect NEXT batch)
@@ -1923,7 +1819,7 @@ object GateQueries {
           cIn.addData((-i, -1L, sentinelTs))
           q.processAllAvailable()
         }
-      } finally q.stop()
+      }
       s.read.parquet(s"$dir/matches")
         .where(col("user_id") >= 0)
         .select(col("view_id"), col("user_id"), col("view_ts"),
@@ -1942,30 +1838,20 @@ object GateQueries {
       // provably invisible to run 1 — and run 2 resumes from the SAME
       // checkpoint, picking up exactly the new files. Oracle = the
       // batch read of all three waves (q91's text-safe column set).
-      import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
       import org.apache.spark.sql.types._
       val slice = Tables(s, d).events
         .where(col("user_id") < 150)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val root = JFiles.createTempDirectory("graft-q117")
+      val root = gateDir("q117")
       val landing = root.resolve("landing")
       JFiles.createDirectories(landing)
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("user_id", LongType),
         StructField("event_type", StringType), StructField("value", DoubleType)))
-      def land(k: Int): Unit = {
-        val stage = root.resolve(s"stage$k").toString
-        // two files per wave so the run-1 backlog (4 files) genuinely
-        // exercises the 1-file-per-trigger rate limit
-        graft.sources.Formats.writeJsonl(
-          slice.where(col("event_id") % 3 === k).repartition(2), stage)
-        JFiles.list(Paths.get(stage)).toArray.map(_.asInstanceOf[java.nio.file.Path])
-          .filter(_.getFileName.toString.endsWith(".json")).zipWithIndex
-          .foreach { case (f, i) =>
-            JFiles.move(f, landing.resolve(s"wave$k-part$i.json"),
-              StandardCopyOption.ATOMIC_MOVE)
-          }
-      }
+      // two files per wave so the run-1 backlog (4 files) genuinely
+      // exercises the 1-file-per-trigger rate limit
+      def land(k: Int): Unit = landWave(root, k, "json")(graft.sources.Formats.writeJsonl(
+        slice.where(col("event_id") % 3 === k).repartition(2), _))
       val counts = (0 until 3).map(k =>
         slice.where(col("event_id") % 3 === k).count())
       val sink = root.resolve("sink").toString
@@ -2085,8 +1971,8 @@ object GateQueries {
     * ≤ ~10k rows × ~128 B ≈ ≤ 2 MB per batch, which the derivation's
     * 64 MB/partition target floors at width 2. A deployment feeding real
     * volume passes its sustained per-batch bytes through the same
-    * derivation — or overrides directly with `SPARK_GRAFT_STREAM_PARTS` —
-    * so there is no fixture-tuned constant to forget (r13 verdict item 5).
+    * derivation, so there is no fixture-tuned constant to forget (r13
+    * verdict item 5).
     * Results are unchanged: the stateful ops process each key's rows in
     * explicitly sorted order, joins/aggregations are order-free sets, and
     * the dedup fixtures re-deliver exact copies / unique ids (q82/q98
@@ -2100,10 +1986,9 @@ object GateQueries {
       else name -> { (s: org.apache.spark.sql.SparkSession, d: String) =>
         val key = "spark.sql.shuffle.partitions"
         val prev = s.conf.get(key)
-        val width = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt)
-          .getOrElse(graft.streaming.StreamOps.statefulShuffleWidth(
-            perBatchBytes = gatePerBatchBytes,
-            sessionWidth = scala.util.Try(prev.toInt).getOrElse(200)))
+        val width = StreamOps.statefulShuffleWidth(
+          perBatchBytes = gatePerBatchBytes,
+          sessionWidth = scala.util.Try(prev.toInt).getOrElse(200))
         s.conf.set(key, width.toString)
         try f(s, d) finally s.conf.set(key, prev)
       }

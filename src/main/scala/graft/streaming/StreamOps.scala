@@ -33,10 +33,13 @@ object StreamOps {
     */
   def statefulShuffleWidth(perBatchBytes: Long, sessionWidth: Int,
                            targetPartitionBytes: Long = 64L << 20): Int = {
+    require(perBatchBytes >= 0, "perBatchBytes must not be negative")
     require(targetPartitionBytes > 0, "targetPartitionBytes must be positive")
-    val fromVolume =
-      ((perBatchBytes + targetPartitionBytes - 1) / targetPartitionBytes).toInt
-    math.max(2, math.min(math.max(2, fromVolume), math.max(2, sessionWidth)))
+    // a ceiling division that cannot overflow, clamped in Long so a huge
+    // quotient never wraps on the way to Int
+    val fromVolume = perBatchBytes / targetPartitionBytes +
+      (if (perBatchBytes % targetPartitionBytes == 0) 0 else 1)
+    math.max(2L, math.min(fromVolume, math.max(2, sessionWidth).toLong)).toInt
   }
 
   /** Tumbling-window per-key counts/sums with a watermark bounding state:

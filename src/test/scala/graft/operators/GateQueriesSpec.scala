@@ -23,6 +23,59 @@ class GateQueriesSpec extends SparkSpec {
     }
   }
 
+  test("runStream stops the query when the feed throws, and the failure propagates") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val input = MemoryStream[Long](spark)
+    val q = GateQueries.appendParquet(input.toDF(), GateQueries.gateDir("spec-feed"), "out")
+    val err = intercept[IllegalStateException] {
+      GateQueries.runStream(q) { q =>
+        input.addData(1L, 2L)
+        q.processAllAvailable()
+        throw new IllegalStateException("feed failed")
+      }
+    }
+    assert(err.getMessage == "feed failed")
+    assert(!q.isActive && spark.streams.active.isEmpty)
+  }
+
+  test("gates write only under the one scratch root, and its cleanup removes a whole tree") {
+    import java.nio.file.{Files, Paths}
+    val root = GateQueries.scratchRoot
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def tmpEntries() = {
+      val ls = Files.list(tmp)
+      try ls.toArray.map(_.toString).toSet finally ls.close()
+    }
+    // writeStream, foreachBatch plus restart, and a batch-only fixture
+    val gates = Seq("q82_stream_dedup", "q89_stream_recovery", "q90_backfill")
+    def runGates(): Unit = gates.foreach { q =>
+      val out = GateQueries.queries(q)(spark, sf)
+      assert(out.count() > 0, q)
+      assert(out.inputFiles.nonEmpty && out.inputFiles.forall(_.contains(root.toString)),
+        s"$q read outside $root: ${out.inputFiles.toSeq}")
+    }
+    // the first pass also pays the JVM's one-time extractions under
+    // tmpdir (native codec libraries, the session's artifact dir)
+    runGates()
+    val before = tmpEntries()
+    runGates()
+    assert(tmpEntries() -- before == Set.empty[String])
+
+    // the shutdown hook's routine, on a tree this test owns: nested dirs,
+    // files and a symlink whose target outside the tree must survive
+    val owned = GateQueries.gateDir("spec-cleanup")
+    val tree = Files.createDirectories(owned.resolve("tree/a/b"))
+    Files.writeString(tree.resolve("part-0.parquet"), "x")
+    val outside = Files.writeString(owned.resolve("outside.txt"), "keep")
+    Files.createSymbolicLink(owned.resolve("tree/a/link"), outside)
+    GateQueries.deleteRecursively(owned.resolve("tree"))
+    assert(!Files.exists(owned.resolve("tree")))
+    assert(Files.readString(outside) == "keep")
+    GateQueries.deleteRecursively(owned)
+    assert(!Files.exists(owned))
+  }
+
   test("q67: every sketch estimate lands inside its documented bound") {
     val rows = GateQueries.queries("q67_sketch_accuracy")(spark, sf)
       .collect()

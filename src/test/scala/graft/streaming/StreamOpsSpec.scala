@@ -328,5 +328,9 @@ class StreamOpsSpec extends SparkSpec {
     assert(StreamOps.statefulShuffleWidth(2L << 20, sessionWidth = 1) == 2)
     // custom target partition size
     assert(StreamOps.statefulShuffleWidth(10L << 20, 32, targetPartitionBytes = 1L << 20) == 10)
+    // no Long overflow or Int wrap at the extreme: the session width, not the floor
+    assert(StreamOps.statefulShuffleWidth(Long.MaxValue, sessionWidth = 32) == 32)
+    assert(StreamOps.statefulShuffleWidth(Long.MaxValue, 32, targetPartitionBytes = 1L) == 32)
+    intercept[IllegalArgumentException](StreamOps.statefulShuffleWidth(-1L, sessionWidth = 32))
   }
 }
