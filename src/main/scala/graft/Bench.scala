@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: per-query wall seconds at the SF dir from
   * SPARK_GRAFT_SF_DIR. Emits TWO artifacts (r09 verdict item 1): the
@@ -104,9 +103,9 @@ object Bench {
     * carrying a quote, backslash, or control char (a newline ALSO breaks
     * the "final stdout line" parse) would otherwise produce an
     * unparseable summary — the exact failure mode the compact summary
-    * exists to fix (ADVICE r10). Same escape set as Verify's oracle_sql
-    * writer. Hoisted out of main (r12) so the hostile-path unit test can
-    * pin it.
+    * exists to fix (ADVICE r10). Verify's oracle_sql writer escapes
+    * with it too. Hoisted out of main (r12) so the hostile-path unit test
+    * can pin it.
     */
   private[graft] def jstr(s: String): String = s.flatMap {
     case '"'  => "\\\""
@@ -166,33 +165,8 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver fixtures carry naive µs timestamps: read as TIMESTAMP, not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // Cap driver status-store retention (guide §5: the driver should do
-      // almost no data work). Defaults keep the last 1000 SQL executions'
-      // PLAN STRINGS and 1000 jobs/stages of metrics in driver old-gen —
-      // and this suite's plans include the ADC literal-LUT projections
-      // (megabyte-scale plan text), so by the harness section the
-      // accumulated status store was GC-taxing exactly the gates that
-      // submit jobs concurrently: q86/q92 measured 18.7/16.4 s late in
-      // the full 152-query suite vs 10.2/10.1 s in a 30-query session
-      // (same code, same load). Nothing reads this state here — the UI
-      // is disabled; the caps are scale-independent session hygiene.
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "10000")
-      // bucketed-table gates (q88) saveAsTable; keep the warehouse out of
-      // the repo and isolated per run
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    val cpus = Sessions.cpus(32)
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Materialize through the noop sink, not count(): count() lets
     // ColumnPruning delete projection-only work (md5/regex/scoring columns
@@ -219,11 +193,10 @@ object Bench {
       spark.catalog.clearCache()
     }
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    val cpusN = cpus.toDouble
     // the warmup pass itself drives 1-min loadavg to ~10+; settle before
     // the first timed rep so early batch queries aren't measured under
     // the bench's own residue (observed 1.3-1.6x wobble on them)
-    settle(target = cpusN / 8, maxWaitSec = 240)
+    settle(target = cpus / 8.0, maxWaitSec = 240)
     val loadStart = loadAvg()
     val t0Wall = System.nanoTime()
     var settleSec = 0.0
@@ -242,7 +215,7 @@ object Bench {
       // gate in a harness-only grouped-bench JVM — r13; the single-query
       // iteration aid stays settle-free)
       if (harnessBound(name) && selected.size > 1)
-        settleSec += settle(target = cpusN / 2, maxWaitSec = 60)
+        settleSec += settle(target = cpus / 2.0, maxWaitSec = 60)
       // stderr marker so engine warnings in the surrounding log (GC, large
       // task binaries, skew) can be attributed to a query after the fact
       System.err.println(s"[bench] start $name")
@@ -302,7 +275,7 @@ object Bench {
       s"""{"metric":"total","value":${f(total)},"unit":"sec","batch_total":${f(batchTotal)},"streaming_total":${f(harnessTotal)},"branch_gate_total":${f(branchGateTotal)},"branch_gates":$branchGatesJson,"settle_sec":${f(settleSec)},"queries":$qs,"errors":$errs,"sf":"${jstr(sfDir)}","load_start":${f(loadStart)},"load_end":${f(loadEnd)},"wall_sec":${f(wall)},"detail":$repsJson}"""
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "evidence/BENCH_detail_last.json")
-    val detailNote = writeDetail(detailJson, detailPath, cpus)
+    val detailNote = writeDetail(detailJson, detailPath, cpus.toString)
     // Full driver-contract line (metric/value/unit/queries/sf), printed
     // BEFORE the compact summary (r13 verdict item 1: PERF is per-query
     // blind). It cannot REPLACE the summary: the driver parses a 2000-char

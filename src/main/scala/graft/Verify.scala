@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,27 +10,7 @@ object Verify {
     val only = args.drop(2).toSet
     require(only.forall(SparkEntry.queries.keySet),
       s"unknown queries: ${only.filterNot(SparkEntry.queries.keySet).mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver fixtures carry naive µs timestamps: read as TIMESTAMP, not NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // cap driver status-store retention across the 152-query session —
-      // same rationale and values as Bench (guide §5; UI disabled,
-      // nothing reads the retained plan strings / job metrics)
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "10000")
-      // bucketed-table gates (q88) saveAsTable; keep the warehouse out of
-      // the repo and isolated per run (two concurrent sbt sessions must
-      // not share ./spark-warehouse)
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -53,18 +32,10 @@ object Verify {
       // whole 85+-query session; Bench already clears per query
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string escape (Bench.jstr: backslash, quote, and ALL control
+    // chars) — a tab or CR in builder-authored SQL would otherwise make
+    // the driver's json.load fail and silently zero the round's correctness.
+    def q(s: String): String = "\"" + Bench.jstr(s) + "\""
     // Defensive keying: the round-1 driver looked up oracles by OUTPUT
     // FILENAME ("qNN_name.parquet") while we keyed by bare query name, so
     // zero comparisons ran. Emit every entry under BOTH key forms, plus a

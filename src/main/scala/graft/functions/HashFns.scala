@@ -20,13 +20,6 @@ object HashFns {
     conv(substring(md5(c), 1, nHex), 16, 10).cast("bigint")
   }
 
-  /** 32-bit salted hash of a string column: md5(col # salt) → first 8 hex. */
-  def saltedHash32(c: Column, salt: Column): Column =
-    md5Long(concat(c, lit("#"), salt.cast("string")), 8)
-
-  /** 16-bit word hash used by SimHash. */
-  def hash16(c: Column): Column = md5Long(c, 4)
-
   /** Hex substring of md5 decoded to long — the portable "decode a hex
     * payload field" primitive (analog of slicing an EVM log topic).
     */

@@ -12,9 +12,6 @@ object TextFns {
   /** Whitespace tokens, in document order. */
   def words(text: Column): Column = split(text, " ")
 
-  /** Distinct word set (for set-based Jaccard / MinHash over unigrams). */
-  def wordSet(text: Column): Column = array_distinct(words(text))
-
   /** Word n-grams in document order; empty array for docs shorter than n.
     *
     * Built from n shifted `slice`s zipped together: linear in document

@@ -29,14 +29,6 @@ object Dedup {
   def firstByKey(df: DataFrame, keys: Seq[String], tsCol: String, idCol: String): DataFrame =
     oneByKey(df, keys, Seq(col(tsCol).asc, col(idCol).asc))
 
-  /** Exact content dedup: one surviving row (min id) per hash of `textCol`,
-    * with the duplicate count. Hash-groupBy: one shuffle, map-side partial
-    * aggregation, no window sort — the cheapest dedup at 100 TB.
-    */
-  def exactByContent(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(md5(col(textCol)).as("text_hash"))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
-
   /** Canonical word-set hash: md5 of the sorted distinct words. The ONE
     * definition of text canonicalization, shared by [[exactByCanonicalWords]]
     * and the q47 corpus pipeline (and mirrored in their oracles).

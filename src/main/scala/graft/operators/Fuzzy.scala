@@ -35,7 +35,8 @@ object Fuzzy {
     //
     // Measured non-change (r14, guide §3.2): a length-band equi-key —
     // band = len div (maxDist+1), side a exploded to band±1 — was
-    // implemented and A/B'd (graft.Q60Probe, sf1 block sizes, min-of-3).
+    // implemented and A/B'd (the Q60Probe main, last in eb05765, sf1
+    // block sizes, min-of-3; evidence/Q60PROBE_r14.json).
     // On THIS workload's entity keys every string is the same length
     // (c_name: {18: 150000} at sf1), so the band prunes nothing while
     // tripling the probe rows: 94.7 s → 115.2 s (+22%). Rejected; the

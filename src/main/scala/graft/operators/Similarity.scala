@@ -163,22 +163,6 @@ object Similarity {
     .agg(concat_ws("_", sort_array(collect_list(struct(col("seed"), col("minh"))))
       .getField("minh").cast("array<string>")).as("band_key"))
 
-  /** LSH banding: group `rowsPerBand` consecutive signature rows into a band
-    * key; ids sharing any band key become candidate pairs. `persist` as in
-    * [[minHashNearDups]] (cache by default, checkpoint at scale).
-    */
-  def lshCandidates(signatures: DataFrame, rowsPerBand: Int,
-                    persist: DataFrame => DataFrame = _.cache()): DataFrame = {
-    // persisted: both sides of the self-join read it (without this the
-    // whole signature pipeline is recomputed per side)
-    val banded = persist(bandKeys(signatures, rowsPerBand))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
-
   /** Full MinHash-LSH near-dup pipeline: candidates + exact shingle-set
     * Jaccard verification of each candidate pair on per-document shingle
     * arrays (see [[verifyCandidates]]).

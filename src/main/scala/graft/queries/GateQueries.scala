@@ -4,6 +4,7 @@ import java.nio.file.{Files => JFiles, Path, Paths, StandardCopyOption}
 
 import scala.reflect.ClassTag
 
+import graft.Sessions
 import graft.functions.TextFns
 import graft.operators.{Multimodal, Packing, Similarity, Sketches}
 import graft.sources.Tables
@@ -59,30 +60,11 @@ object GateQueries {
     t
   }
 
-  /** Scratch root for every gate fixture in this JVM: created under
-    * `java.io.tmpdir` on first use and deleted, with everything the gates
-    * wrote under it, by one shutdown hook. Gates return frames that read
-    * their fixture output lazily, so no gate directory can go earlier.
+  /** A fresh, empty directory for one gate run under
+    * [[Sessions.scratchRoot]], which is deleted at JVM exit.
     */
-  private[graft] lazy val scratchRoot: Path = {
-    val root = JFiles.createTempDirectory("graft-gates")
-    sys.addShutdownHook(deleteRecursively(root))
-    root
-  }
-
-  /** Deletes `root` and everything under it. Symbolic links are removed,
-    * never followed: the daily fixtures link to the source tables.
-    */
-  private[graft] def deleteRecursively(root: Path): Unit = {
-    val walk = JFiles.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(p => JFiles.deleteIfExists(p): Unit)
-    finally walk.close()
-  }
-
-  /** A fresh, empty directory for one gate run under [[scratchRoot]]. */
   private[graft] def gateDir(name: String): Path =
-    JFiles.createTempDirectory(scratchRoot, s"$name-")
+    JFiles.createTempDirectory(Sessions.scratchRoot, s"$name-")
 
   /** Starts `ds` as an append-mode parquet stream into `dir/<out>`, with
     * its checkpoint at `dir/ckpt`.
@@ -387,8 +369,11 @@ object GateQueries {
       // the in-memory source; production sources (Kafka, files) stream
       // partition-wise. The fixture is capped at a FIXED doc count: the
       // gate proves the streaming semantics (batch equivalence, replay
-      // attribution), while per-batch scaling is q46/ScaleProbe territory
-      // — an uncapped MemoryStream gate would just re-measure minhash.
+      // attribution), while per-batch scaling is q46's territory (and the
+      // corpus-growth ScaleProbe main's, last in eb05765:
+      // evidence/SCALEPROBE_r05.jsonl; the sink's jobs per batch come from
+      // `perfbench/run.py --trace 1`) — an uncapped MemoryStream gate would
+      // just re-measure minhash.
       import s.implicits._
       val docs = Tables(s, d).documents.select(col("doc_id"), col("text"))
         .where(col("doc_id") < 2000)

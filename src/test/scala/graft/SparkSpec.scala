@@ -7,18 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite run fast; tests only read tiny in-memory frames).
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    // bucketed-table specs saveAsTable; keep the warehouse out of the repo
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.sql.session.timeZone", "UTC")
-    // driver fixtures carry naive µs timestamps: read as TIMESTAMP, not NTZ
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Cores of the shared session (a fixed 4, not `SPARK_GRAFT_CPUS`). */
+  val cpus = 4
+  lazy val spark: SparkSession = Sessions.local(cpus)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

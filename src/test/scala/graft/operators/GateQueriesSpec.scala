@@ -41,7 +41,7 @@ class GateQueriesSpec extends SparkSpec {
 
   test("gates write only under the one scratch root, and its cleanup removes a whole tree") {
     import java.nio.file.{Files, Paths}
-    val root = GateQueries.scratchRoot
+    val root = graft.Sessions.scratchRoot
     val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
     def tmpEntries() = {
       val ls = Files.list(tmp)
@@ -69,10 +69,10 @@ class GateQueriesSpec extends SparkSpec {
     Files.writeString(tree.resolve("part-0.parquet"), "x")
     val outside = Files.writeString(owned.resolve("outside.txt"), "keep")
     Files.createSymbolicLink(owned.resolve("tree/a/link"), outside)
-    GateQueries.deleteRecursively(owned.resolve("tree"))
+    graft.Sessions.deleteRecursively(owned.resolve("tree"))
     assert(!Files.exists(owned.resolve("tree")))
     assert(Files.readString(outside) == "keep")
-    GateQueries.deleteRecursively(owned)
+    graft.Sessions.deleteRecursively(owned)
     assert(!Files.exists(owned))
   }
 
