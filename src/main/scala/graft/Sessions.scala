@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.{Files => JFiles, Path}
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 
 import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession builder for the mains (Bench, Verify,
-  * GenData) and the specs, and the one scratch root under which they keep
-  * their temporary files.
+  * GenData) and the specs, the one scratch root under which they keep
+  * their temporary files, and the one pool that runs Spark work side by
+  * side.
   */
 object Sessions {
 
@@ -75,4 +77,31 @@ object Sessions {
     .config("spark.sql.warehouse.dir",
       JFiles.createTempDirectory(scratchRoot, "warehouse-").toString)
     .getOrCreate()
+
+  /** Runs `tasks` on `width` threads (never more than there are tasks) and
+    * returns their results in order. Every Spark job a task submits
+    * carries one job tag. On the first failure the siblings' jobs are
+    * cancelled through that tag, queued tasks are dropped and running ones
+    * interrupted (`shutdownNow`); the call returns only once every task
+    * has ended, and rethrows that first failure.
+    */
+  def inParallel[A](spark: SparkSession, width: Int)(tasks: Seq[() => A]): Seq[A] = {
+    val sc = spark.sparkContext
+    val tag = s"graft-parallel-${java.util.UUID.randomUUID}"
+    val pool = Executors.newFixedThreadPool(math.max(1, math.min(width, tasks.size)))
+    val done = new ExecutorCompletionService[A](pool)
+    val futures = tasks.map(t =>
+      done.submit(() => { sc.addJobTag(tag); try t() finally sc.removeJobTag(tag) }))
+    try {
+      futures.foreach(_ => done.take().get())
+      futures.map(_.get())
+    } catch {
+      case e: ExecutionException =>
+        pool.shutdownNow()
+        while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS)) sc.cancelJobsWithTag(tag)
+        // every task has ended, so every job one submitted is cancelled now
+        sc.cancelJobsWithTag(tag)
+        throw e.getCause
+    } finally pool.shutdown()
+  }
 }

@@ -27,9 +27,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators that persist() internally (e.g. symDeleteLevenshtein's
-      // pre-grouping) would otherwise accumulate cached frames across the
-      // whole 85+-query session; Bench already clears per query
+      // frames held outside a Caches scope (e.g. symDeleteLevenshtein's
+      // pre-grouping) would otherwise accumulate across the whole
+      // 85+-query session; Bench already clears per query
       spark.catalog.clearCache()
     }
     // JSON string escape (Bench.jstr: backslash, quote, and ALL control

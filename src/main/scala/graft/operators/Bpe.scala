@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -48,17 +49,14 @@ object Bpe {
 
   /** Train `nMerges` BPE merges over a (word, freq) vocabulary. Returns
     * the learned rules in rank order plus the final segmentation
-    * (word, freq, tokens, n_tokens). The vocabulary is persisted for the
+    * (word, freq, tokens, n_tokens). The vocabulary is held for the
     * duration of training (each iteration's pair count re-reads it) AND
-    * past return — the returned segmentation's lazy plan reads it; the
-    * [[Similarity]]/[[Fuzzy]] caller contract applies (clearCache between
-    * queries, or pass `persist = identity` to recompute the vocabulary
-    * scan per iteration instead).
+    * past return — the returned segmentation's lazy plan reads it;
+    * lifetimes follow [[graft.Caches]].
     */
-  def train(vocab: DataFrame, nMerges: Int,
-            persist: DataFrame => DataFrame = _.cache()): (Seq[MergeRule], DataFrame) = {
+  def train(vocab: DataFrame, nMerges: Int): (Seq[MergeRule], DataFrame) = {
     require(nMerges >= 1, "nMerges must be >= 1")
-    val v = persist(vocab)
+    val v = Caches.hold(vocab)
     var seg = v.select(col("word"), col("freq"), charSeg(col("word")).as("tokens"))
     val rules = Seq.newBuilder[MergeRule]
     for (r <- 1 to nMerges) {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import graft.functions.Portable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -126,26 +127,33 @@ object Classifier {
     require(nBuckets >= 2 && iters >= 1 && lr > 0, "need nBuckets>=2, iters>=1, lr>0")
     val base = docs.select(col(idCol).as("__id"), label.cast("int").as("__y"),
       split(col(textCol), " ").as("__w"))
-    val labels = base.select(col("__id"), col("__y")).persist()
-    val feat = base
+    // the caches exist for the training loop's `iters` actions and are
+    // released when it ends, so callers don't accumulate cached frames
+    // across invocations (ADVICE r07). `scored` stays valid — it simply
+    // recomputes the feature build (one corpus pass) when materialized.
+    Caches.scoped {
+      val (labels, feat) = features(base, "__y", nBuckets, salt)
+      val n = labels.count() // bounded scalar; also materializes the caches
+
+      val (weights, finalMargins) = fit(feat, labels, nBuckets, iters, lr, n)
+      TrainedLogistic(weights, finalMargins
+        .select(col("__id").as(idCol), col("__y").as("label"),
+          col("__p").as("score"), (col("__p") >= 0.5).as("predicted")))
+    }
+  }
+
+  /** The held (id, `labelCol`) frame and the held hashed bag-of-words
+    * counts (id, bucket, count) of `base`, the bias as bucket −1.
+    */
+  private def features(base: DataFrame, labelCol: String, nBuckets: Int,
+                       salt: String): (DataFrame, DataFrame) = {
+    val labels = Caches.hold(base.select(col("__id"), col(labelCol)))
+    val feat = Caches.hold(base
       .select(col("__id"), explode(col("__w")).as("__tok"))
       .select(col("__id"), bucketOf(col("__tok"), nBuckets, salt).as("__b"))
       .groupBy(col("__id"), col("__b")).agg(count(lit(1)).as("__cnt"))
-      .unionByName(labels.select(col("__id"), lit(-1).as("__b"), lit(1L).as("__cnt")))
-      .persist()
-    val n = labels.count() // bounded scalar; also materializes the caches
-
-    val (weights, finalMargins) = fit(feat, labels, nBuckets, iters, lr, n)
-    val scored = finalMargins
-      .select(col("__id").as(idCol), col("__y").as("label"),
-        col("__p").as("score"), (col("__p") >= 0.5).as("predicted"))
-    // the caches exist for the training loop's `iters` actions; release
-    // them before returning so callers don't accumulate cached frames
-    // across invocations (ADVICE r07). `scored` stays valid — it simply
-    // recomputes the feature build (one corpus pass) when materialized.
-    labels.unpersist()
-    feat.unpersist()
-    TrainedLogistic(weights, scored)
+      .unionByName(labels.select(col("__id"), lit(-1).as("__b"), lit(1L).as("__cnt"))))
+    (labels, feat)
   }
 
   /** One-vs-rest multi-class logistic regression — the CCNet/fastText
@@ -181,15 +189,11 @@ object Classifier {
     * the null-stratum convention belongs to [[Sampling.temperatureMix]],
     * where a null stratum has sampling semantics).
     *
-    * Cache lifetime (the [[Graph.pageRank]] convention, NOT the binary
-    * form's release-before-return): the RETURNED plan reads the cached
-    * feature frame once per class (K margin aggregates), so releasing
-    * the caches here would make every downstream action pay K
-    * corpus-sized feature rebuilds. The labels/features handles
-    * therefore stay live until the session drops them — callers
-    * running many queries in one session should
-    * `spark.catalog.clearCache()` between queries (Verify and Bench
-    * both do).
+    * Unlike the binary form, the labels/features frames stay held in
+    * the caller's scope ([[graft.Caches]]): the RETURNED plan reads the
+    * cached feature frame once per class (K margin aggregates), so
+    * releasing the caches here would make every downstream action pay K
+    * corpus-sized feature rebuilds.
     */
   def logisticTrainOneVsRest(docs: DataFrame, idCol: String, textCol: String,
                              classCol: String, nBuckets: Int, iters: Int,
@@ -199,13 +203,7 @@ object Classifier {
     val base = docs.select(col(idCol).as("__id"),
       col(classCol).cast("string").as("__cls"),
       tokens(col(textCol)).as("__w"))
-    val labels = base.select(col("__id"), col("__cls")).persist()
-    val feat = base
-      .select(col("__id"), explode(col("__w")).as("__tok"))
-      .select(col("__id"), bucketOf(col("__tok"), nBuckets, salt).as("__b"))
-      .groupBy(col("__id"), col("__b")).agg(count(lit(1)).as("__cnt"))
-      .unionByName(labels.select(col("__id"), lit(-1).as("__b"), lit(1L).as("__cnt")))
-      .persist()
+    val (labels, feat) = features(base, "__cls", nBuckets, salt)
     val n = labels.count() // bounded scalar; also materializes the caches
     // bounded collect: one row per class (a model constant, never data);
     // null-check BEFORE sorting — Array[String].sorted NPEs on null, so
@@ -269,8 +267,8 @@ object Classifier {
     val best = array_max(array(classes.zipWithIndex.map { case (c, i) =>
       struct(col(s"__p_$i").as("p"), lit(-i).as("negi"), lit(c).as("cls"))
     }: _*))
-    // the caches stay live: the returned plan's single margin aggregate
-    // reads `feat` — see the cache-lifetime note in the scaladoc
+    // the caches stay held: the returned plan's single margin aggregate
+    // reads `feat` (see the scaladoc)
     marginsAll(weights)
       .withColumn("__best", best)
       .select(col("__id").as(idCol) +: col("__cls").as(classCol) +:

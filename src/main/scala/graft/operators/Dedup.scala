@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -156,45 +157,28 @@ object Dedup {
     * pointer-jumping term halves label-chain height per round, giving
     * O(log n) rounds on any topology (the Hash-to-Min bound). Each round
     * is two hash joins + one groupBy-min over (node, lbl) pairs — state
-    * is one row per distinct node, never driver-resident. `persist`
-    * truncates the per-round lineage (default eager `localCheckpoint`;
-    * pass `_.checkpoint()` at production scale for executor-loss
-    * resilience). Deterministic: min over an unordered set.
+    * is one row per distinct node, never driver-resident. Each round's
+    * labels are checkpointed (`Caches.checkpoint`), which truncates the
+    * per-round lineage. Deterministic: min over an unordered set.
     *
-    * Output: (node, component) for every node appearing in `pairs`.
+    * Output: (node, component) for every node appearing in `pairs`. Cache
+    * lifetimes follow [[graft.Caches]]: the returned frame reads the last
+    * round's checkpoint, held in the caller's scope.
     */
-  /** Release a frame materialized by [[connectedComponents]]'s `persist`:
-    * `Dataset.unpersist` only drops cache-manager entries (`.cache()`),
-    * while a `localCheckpoint()`/`checkpoint()` frame stores its rows as
-    * RDD blocks behind a `LogicalRDD` leaf that the cache manager never
-    * sees — without this, per-round label frames accumulate for the life
-    * of the session (O(rounds × nodes), not the documented O(2 × nodes)).
-    */
-  private def release(df: DataFrame): Unit = {
-    df.unpersist()
-    df.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-  }
-
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIters: Int = 30,
-                          persist: DataFrame => DataFrame = _.localCheckpoint())
-      : DataFrame = {
+                          maxIters: Int = 30): DataFrame = {
     // the projected pair list is read twice by the symmetrizing union —
     // cache it so an expensive upstream (a full near-dup pipeline) does
     // not run once per direction
-    val p = pairs.select(col(aCol).as("pa"), col(bCol).as("pb")).cache()
-    val sym = p.select(col("pa").as("u"), col("pb").as("v"))
+    val p = Caches.hold(pairs.select(col(aCol).as("pa"), col(bCol).as("pb")))
+    val sym = Caches.hold(p.select(col("pa").as("u"), col("pb").as("v"))
       .union(p.select(col("pb").as("u"), col("pa").as("v")))
-      .distinct().cache()
+      .distinct())
     // seed with min(node, min neighbor) rather than node: for the typical
     // near-dup topology (pairs and stars around a low-id survivor) the
     // seed already IS the fixpoint, so the loop pays one confirming round
     // instead of propagate + confirm
-    var labels = persist(
+    var labels = Caches.checkpoint(
       sym.groupBy(col("u").as("node")).agg(min(least(col("u"), col("v"))).as("lbl")))
     // convergence probe: labels only ever decrease (min over a set that
     // includes the current label), so sum(lbl) is strictly decreasing
@@ -210,36 +194,31 @@ object Dedup {
       val viaPointer = labels.as("x")
         .join(labels.as("y"), col("x.lbl") === col("y.node"))
         .select(col("x.node").as("node"), col("y.lbl").as("lbl"))
-      val next = persist(labels.union(viaNeighbor).union(viaPointer)
+      val next = Caches.checkpoint(labels.union(viaNeighbor).union(viaPointer)
         .groupBy(col("node")).agg(min(col("lbl")).as("lbl")))
       val nextSum = labelSum(next)
       done = nextSum == prevSum
       prevSum = nextSum
       // release the previous round's materialization: peak storage stays
       // O(2 × nodes), not O(rounds × nodes)
-      release(labels)
+      Caches.release(labels)
       labels = next
       iters += 1
     }
-    sym.unpersist(); p.unpersist()
+    Caches.release(sym); Caches.release(p)
     // a silent non-fixpoint would emit multiple keep-survivors inside one
     // duplicate cluster downstream — refuse rather than return wrong labels
     // (releasing the last round's blocks first: nothing is returned, so
     // nothing may stay materialized)
     if (!done) {
-      release(labels)
+      Caches.release(labels)
       throw new IllegalStateException(
         s"connectedComponents did not converge within maxIters=$maxIters rounds; " +
           "pointer jumping needs ~log2(longest chain) — raise maxIters")
     }
-    // CALLER CONTRACT: the returned frame is backed by the final round's
-    // `persist` materialization (localCheckpoint RDD blocks by default) —
-    // that is the point (O(nodes) result, lineage truncated after O(log n)
-    // self-referential rounds). Note `clearCache()` does NOT free these
-    // blocks (see `release` above — the cache manager never sees them);
-    // they are reclaimed by the ContextCleaner once the returned frame
-    // becomes unreachable, so long-lived sessions should write the result
-    // out and drop the reference when done with it.
+    // the returned frame reads the final round's checkpoint blocks (an
+    // O(nodes) result, lineage truncated after O(log n) self-referential
+    // rounds); they stay in the caller's scope
     labels.select(col("node"), col("lbl").as("component"))
   }
 }

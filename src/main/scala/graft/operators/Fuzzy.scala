@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -113,16 +114,11 @@ object Fuzzy {
     else symDeleteLevenshtein(df, idCol, strCol, blockCol, maxDist)
   }
 
-  /** Cache lifetime: the default `persist` caches the pre-grouped
-    * representatives for the duration of the returned plan's (repeated)
-    * use, and the handle lives until the session drops it — a caller
-    * running many queries in one session (Verify, Bench) should
-    * `spark.catalog.clearCache()` between queries (both do), or pass
-    * `persist = identity` to trade the reuse for zero cache residency.
+  /** The pre-grouped representatives are held for the returned plan's
+    * (repeated) use; lifetimes follow [[graft.Caches]].
     */
   def symDeleteLevenshtein(df: DataFrame, idCol: String, strCol: String,
-                           blockCol: String, maxDist: Int,
-                           persist: DataFrame => DataFrame = _.cache()): DataFrame = {
+                           blockCol: String, maxDist: Int): DataFrame = {
     require(maxDist >= 1 && maxDist <= 2,
       "deletion-neighborhood blocking is implemented for maxDist in 1..2; " +
         "larger radii need blockedLevenshtein with genuinely bounded blocks")
@@ -134,7 +130,7 @@ object Fuzzy {
         col(strCol).as("str"))
       .where(col("block").isNotNull && col("str").isNotNull)
     // one representative per (block, string); members kept for expansion
-    val groups = persist(e.groupBy(col("block"), col("str"))
+    val groups = Caches.hold(e.groupBy(col("block"), col("str"))
       .agg(sort_array(collect_list(col("id"))).as("ids"),
         min(col("id")).as("rid")))
     // exact-duplicate pairs: distance 0, no levenshtein, no join — the

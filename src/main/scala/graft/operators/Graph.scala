@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import graft.functions.Portable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -81,55 +82,20 @@ object Graph {
     * grid-accurate hub mass — class doc's ACCURACY TRADE; the oracle
     * mirrors the constant). Returns (node, rank, n_iters).
     *
-    * Cache lifetime (the [[Similarity]] / [[Fuzzy]] convention): the
-    * default `persist` caches the edge projection `e` (read by both
-    * derived caches' fills — uncached it would pay the caller's edge
-    * subtree twice), `nodes` and `shares` (plus, when redistributing,
-    * the dangling-node set AND each iteration's node-sized rank frame:
-    * every frame is read twice by the next iteration — its
-    * dangling-mass scalar and its contribution join — so left lazy the
-    * lineage replays 2^iters-fold, the same blowup the oracle's
-    * MATERIALIZED pins guard against; `persist = identity` therefore
-    * reintroduces that replay on the redistributing path). On the
-    * REDISTRIBUTING path `releaseSpentCaches = true` bounds residency
-    * at ONE node-sized frame (r12, closing r11 verdict item 6 +
-    * ADVICE): the final frame is already persisted, so one internal
-    * action pipelines every cache fill in a single job and every other
-    * handle — `e`, `nodes`, `shares`, `dangling`, each spent iteration
-    * frame — is released before the function returns, instead of
-    * iters+5 frames accumulating until session cache-clear; the
-    * returned frame is eager on that path, actions on it node-sized
-    * cache scans. It is OPT-IN because the fill-now job is NOT free —
-    * measured at the q140 bench shape (sf0.1 trade graph, settled
-    * min-of-3 A/B): q140 6.9→8.6 s single-job form, and 15.9→24.4 s
-    * across all three pageRank rows for the per-frame-fill variant
-    * (PERFPROBE_pagerank_r12_{before,after}.json) — so single-shot
-    * callers that clear caches per session (Verify, Bench, the gates)
-    * keep the lazy default, and sessions running MANY pageRanks
-    * without cache-clears opt in. The LEAKY default stays fully lazy
-    * either way (it persists no final frame, so a release would need
-    * the regressing eager fills): it returns holding `e` + `nodes` +
-    * `shares`, three FIXED handles read by the returned lazy plan
-    * (`e` only until the derived caches fill on the first action; a
-    * caller may unpersist it then). A caller running many queries in
-    * one session should `spark.catalog.clearCache()` between queries,
-    * or pass `persist = identity` to trade the cross-iteration reuse
-    * for zero cache residency. Releasing the lineage trades
-    * executor-loss resilience for memory: recomputing a lost partition
-    * of the surviving frame re-derives the caller's edge subtree — at
-    * production scale pass `_.checkpoint()`, which is immune (and skips
-    * the release sweep: a checkpointed frame holds no cache entry; same
-    * trade as [[Dedup.connectedComponents]]) — NOTE a checkpoint persist
-    * pays a THIRD full materialization of `e`, so callers on that path
-    * who already hold a materialized edge table should pass it directly
-    * rather than an unmaterialized derivation (ADVICE r10).
+    * Cache lifetimes follow [[graft.Caches]]: `e`, `nodes`, `shares`
+    * (plus, when redistributing, the dangling-node set and each
+    * iteration's rank frame) are read by the returned lazy plan, so they
+    * stay held in the caller's scope. Every redistributing frame is read
+    * twice by the next iteration (its dangling-mass scalar and its
+    * contribution join), so left lazy the lineage would replay
+    * 2^iters-fold, the same blowup the oracle's MATERIALIZED pins guard
+    * against. Releasing the spent frames inside the call would need an
+    * eager fill job first, which cost q140 6.9→8.6 s at sf0.1 (r12).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                weight: Column, iters: Int, damping: Double = 0.85,
-               persist: DataFrame => DataFrame = _.cache(),
                gridScale: Double = 1e6,
-               danglingRedistribute: Boolean = false,
-               releaseSpentCaches: Boolean = false): DataFrame = {
+               danglingRedistribute: Boolean = false): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     // the in-mass accumulation grid (class doc's ACCURACY TRADE): 1e6
     // matches the q6 output grid; 1e12 for grid-accurate hub mass. The
@@ -144,17 +110,16 @@ object Graph {
     // subtree twice — measured 25.3→15.9 s for the 3-iteration q109
     // pipeline on the sf1 trade graph (5.9M edges whose
     // lineitem⋈orders build alone costs ~10 s; PrProbe-style A/B)
-    val e = persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+    val e = Caches.hold(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       weight.as("w")))
-    val nodes = persist(e.select(col("src").as("node"))
+    val nodes = Caches.hold(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct())
     // out-weight per source, folded onto the edges once: each edge
     // carries its share of the source's outbound mass
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
     // nodes and shares feed every iteration: materialize once instead of
-    // re-deriving the edge scan per hop (callers at production scale
-    // should checkpoint instead — same trade as connectedComponents)
-    val shares = persist(e.join(outW, "src")
+    // re-deriving the edge scan per hop
+    val shares = Caches.hold(e.join(outW, "src")
       .select(col("src"), col("dst"), (col("w") / col("outw")).as("share")))
     val n = nodes.agg(count(lit(1)).as("n_nodes"))
     // dangling node set (no out-edges): only customers in a trade graph,
@@ -162,28 +127,23 @@ object Graph {
     // iteration when redistributing, so it persists like nodes/shares
     val dangling =
       if (danglingRedistribute)
-        Some(persist(nodes.join(e.select(col("src")).distinct(),
+        Some(Caches.hold(nodes.join(e.select(col("src")).distinct(),
           nodes("node") === col("src"), "left_anti")))
       else None
     // With redistribution every iteration's frame is read TWICE by the
     // next (its dmass scalar AND its contribs join); left lazy, the
     // lineage would replay 2^iters-fold — the exact blowup the oracle's
     // MATERIALIZED pins fixed on the DuckDB side, here fixed by
-    // persisting each iteration's node-sized rank frame (iters+1 cached
-    // frames of N rows; callers clear or checkpoint per the cache note).
+    // holding each iteration's node-sized rank frame (iters+1 cached
+    // frames of N rows).
     // Measured: the 3-iteration sf0.1 trade-graph pipeline 16.6→8.4 s
     // once the double-reads hit cache instead of replaying. The leaky
     // path reads each frame once (a linear chain) and stays lazy.
     def perIter(df: DataFrame): DataFrame =
-      if (danglingRedistribute) persist(df) else df
+      if (danglingRedistribute) Caches.hold(df) else df
     var ranks = perIter(nodes.crossJoin(broadcast(n))
       .select(col("node"), (lit(1.0) / col("n_nodes")).as("rank")))
-    // every frame the redistributing path persists EXCEPT the final one —
-    // all dead weight once the final frame's cache fills (each is read
-    // only by its immediate successor), released by the opt-in sweep below
-    val spent = scala.collection.mutable.ListBuffer.empty[DataFrame]
     for (_ <- 1 to iters) {
-      if (danglingRedistribute) spent += ranks
       val contribs = ranks.join(shares, ranks("node") === shares("src"))
         .select(col("dst"), (col("rank") * col("share")).as("c"))
       // exact-integer-grid mergeable sum: quantize each contribution to
@@ -216,37 +176,6 @@ object Graph {
                 lit(damping) * (coalesce(col("in_mass"), lit(0.0)) +
                   col("__dm") / col("n_nodes"))).as("rank"))
       })
-    }
-    // OPT-IN residency bound for the redistributing path (r11 verdict
-    // item 6 + ADVICE): its final frame is already persisted (perIter),
-    // so ONE internal action pipelines EVERY cache fill — e, nodes,
-    // shares, dangling, each iteration frame — in a single job, exactly
-    // the work the caller's first action would have done; afterwards the
-    // RETURNED plan reads only the final frame, so everything else is
-    // dead weight and is released in one sweep: 1 node-sized cache
-    // survives instead of iters+5 frames accumulating until session
-    // cache-clear. OPT-IN because both eager-fill shapes were probed and
-    // COST WALL TIME at the q140 bench shape (sf0.1 trade graph,
-    // PERFPROBE_pagerank_r12): per-frame fills regressed the three
-    // pageRank rows 15.9→24.4 s (per-job scheduling + exchange setup),
-    // and even this single-job form measured q140 min-of-3 6.9→8.6 s in
-    // a settled A/B — so gated/benched callers keep the lazy default and
-    // clear caches per session, while many-calls-per-session callers opt
-    // in. (The LEAKY path has no final persisted frame, so a release
-    // would need those regressing eager fills; its residency is 3 FIXED
-    // node/edge-sized handles, not growing — see the cache-lifetime
-    // note.) Executor-loss trade: recomputing a lost partition of the
-    // surviving frame re-derives the caller's edge subtree;
-    // `_.checkpoint()` callers are immune and skip this block (a
-    // checkpointed frame holds no cache entry — storageLevel NONE).
-    if (danglingRedistribute && releaseSpentCaches &&
-        ranks.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-      ranks.count()
-      e.unpersist()
-      nodes.unpersist()
-      shares.unpersist()
-      dangling.foreach(_.unpersist())
-      spent.foreach(_.unpersist())
     }
     ranks.withColumn("n_iters", lit(iters))
   }

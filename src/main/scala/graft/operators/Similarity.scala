@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import graft.functions.{HashFns, Portable, TextFns, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -173,33 +174,29 @@ object Similarity {
     * candidates and verification see the same shingle space — the output
     * is the exact MinHash-LSH result over the capped sets. Default: no cap.
     *
-    * `persist` materializes the multiply-consumed intermediates (the
-    * shingle arrays, or the capped shingle rows, and the band keys);
-    * `_.cache()` (default) for interactive / memory-resident runs,
-    * `_.checkpoint()` or `_.localCheckpoint()` at production scale where
-    * recomputing a 100 TB shingle explosion on executor loss is worse
-    * than the disk write.
+    * The multiply-consumed intermediates (the shingle arrays, or the
+    * capped shingle rows, and the band keys) are held; lifetimes follow
+    * [[graft.Caches]].
     */
   def minHashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       shingleN: Int, numSeeds: Int, rowsPerBand: Int,
-                      maxShingleDF: Int = Int.MaxValue,
-                      persist: DataFrame => DataFrame = _.cache()): DataFrame = {
+                      maxShingleDF: Int = Int.MaxValue): DataFrame = {
     val arrays = shingleArrays(docs, idCol, textCol, shingleN)
     // uncapped, the arrays feed signatures (exploded) and verification;
     // capped, the capped rows do (regrouped into arrays for verification)
     val (sh, sets) =
       if (maxShingleDF == Int.MaxValue) {
-        val sets = persist(arrays)
+        val sets = Caches.hold(arrays)
         (explodeShingles(sets), sets)
       } else {
         val sh0 = explodeShingles(arrays)
-        val sh = persist(sh0.join(
+        val sh = Caches.hold(sh0.join(
           sh0.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
             .where(col("__df") <= maxShingleDF).select(col("shingle")),
           Seq("shingle"), "left_semi"))
         (sh, sh.groupBy(col("id")).agg(collect_list(col("shingle")).as("shingles")))
       }
-    val banded = persist(minHashBandKeys(sh, numSeeds, rowsPerBand))
+    val banded = Caches.hold(minHashBandKeys(sh, numSeeds, rowsPerBand))
     val cands = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
           col("a.id") < col("b.id"))
@@ -234,19 +231,19 @@ object Similarity {
     * batch) can pass the frames it already built so the banding is
     * planned ONCE and shared with the caller's store write. Must be
     * exactly [[shingleSets]](incoming)/[[bandKeys]] output for the same
-    * parameters, already persisted by the caller. Only the banding reads
-    * them; verification shingles the candidates' text.
+    * parameters, already held by the caller. Only the banding reads
+    * them; verification shingles the candidates' text. Lifetimes of the
+    * frames held here follow [[graft.Caches]].
     */
   def minHashNearDupsIncremental(base: DataFrame, incoming: DataFrame,
                                  idCol: String, textCol: String,
                                  shingleN: Int, numSeeds: Int, rowsPerBand: Int,
                                  baseSignatures: Option[DataFrame] = None,
                                  baseBands: Option[DataFrame] = None,
-                                 persist: DataFrame => DataFrame = _.cache(),
                                  incomingShingles: Option[DataFrame] = None,
                                  incomingBands: Option[DataFrame] = None): DataFrame = {
     // fused banding where the signatures aren't needed separately
-    val incBands = incomingBands.getOrElse(persist(minHashBandKeys(
+    val incBands = incomingBands.getOrElse(Caches.hold(minHashBandKeys(
       incomingShingles.getOrElse(shingleSets(incoming, idCol, textCol, shingleN)),
       numSeeds, rowsPerBand)))
     val bBands = baseBands.getOrElse(baseSignatures match {
@@ -255,7 +252,7 @@ object Similarity {
         minHashBandKeys(shingleSets(base, idCol, textCol, shingleN), numSeeds, rowsPerBand)
     })
     val allBands = bBands.select(col("id"), col("band"), col("band_key")).union(incBands)
-    val cands = persist(incBands.as("a").join(allBands.as("b"),
+    val cands = Caches.hold(incBands.as("a").join(allBands.as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
           col("a.id") =!= col("b.id"))
       .select(least(col("a.id"), col("b.id")).as("id_a"),
@@ -274,7 +271,7 @@ object Similarity {
       .join(candIds, base(idCol) === candIds("id"), "left_semi")
       .join(incIds, col(idCol) === incIds("id"), "left_anti")
     val touchedInc = incoming.join(candIds, incoming(idCol) === candIds("id"), "left_semi")
-    val sets = persist(shingleArrays(touchedBase, idCol, textCol, shingleN)
+    val sets = Caches.hold(shingleArrays(touchedBase, idCol, textCol, shingleN)
       .union(shingleArrays(touchedInc, idCol, textCol, shingleN)))
     verifyCandidates(cands, sets)
   }
@@ -290,16 +287,13 @@ object Similarity {
     * of the filtered shingle space (recall contract as in
     * [[jaccardPairs]]). Default: no cap.
     *
-    * `persist` materializes the shingle set, which is consumed three times
-    * (both self-join sides + sizes) — without it the scan+split+explode+
-    * hash lineage recomputes per consumer. `_.cache()` default;
-    * `_.checkpoint()` at production scale (contract as in
-    * [[minHashNearDups]]).
+    * The shingle set is held: it is consumed three times (both self-join
+    * sides + sizes), and without it the scan+split+explode+hash lineage
+    * recomputes per consumer. Lifetimes follow [[graft.Caches]].
     */
   def ngramNearDups(docs: DataFrame, idCol: String, textCol: String,
                     blockCol: String, n: Int, minJaccard: Double,
-                    maxShingleDF: Int = Int.MaxValue,
-                    persist: DataFrame => DataFrame = _.cache()): DataFrame = {
+                    maxShingleDF: Int = Int.MaxValue): DataFrame = {
     // 64-bit shingle hash as the join key: 8-byte shuffle rows instead of
     // n-gram strings (collisions ~2^-64 per pair); words materialized
     // once (see shingleSets)
@@ -308,7 +302,7 @@ object Similarity {
       .select(col("id"), col("block"),
         explode(array_distinct(TextFns.shinglesOfWords(col("__w"), n))).as("__shingle"))
       .select(col("id"), col("block"), xxhash64(col("__shingle")).as("shingle"))
-    val sh = persist(
+    val sh = Caches.hold(
       if (maxShingleDF == Int.MaxValue) sh0
       else sh0.join(
         sh0.groupBy(col("block"), col("shingle")).agg(count(lit(1)).as("__df"))
@@ -378,17 +372,14 @@ object Similarity {
     * (16-bit chunks, 65 536 values/chunk): use [[simHashNearDups64]].
     */
   def simHashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      nBits: Int, maxHamming: Int,
-                      persist: DataFrame => DataFrame = _.cache()): DataFrame = {
+                      nBits: Int, maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "4-chunk pigeonhole blocking is exact only for maxHamming <= 3")
     require(nBits % 4 == 0, "nBits must be divisible into 4 chunks")
     val chunkBits = nBits / 4
     val mask = (1 << chunkBits) - 1
-    // persisted: both sides of the bucket self-join read the signatures —
-    // the handle outlives this call because the RETURNED lazy plan reads
-    // it; same caller contract as `nearDupPairs` (clearCache between
-    // queries, or pass identity to recompute the signature scan per side)
-    val chunked = persist(simHash(docs, idCol, textCol, nBits)
+    // held: both sides of the bucket self-join read the signatures, and
+    // the RETURNED lazy plan reads it (lifetimes: [[graft.Caches]])
+    val chunked = Caches.hold(simHash(docs, idCol, textCol, nBits)
       .select(col("id"), col("simhash"), explode(sequence(lit(0), lit(3))).as("c"))
       .withColumn("cv", expr(s"shiftright(simhash, c * $chunkBits) & $mask")))
     chunked.as("a").join(chunked.as("b"),

@@ -62,9 +62,6 @@ object DailyUpdate {
     "funnel" -> ExtendedQueries.queries("q59_funnel")
   )
 
-  /** Threads that submit the derived stages of one [[run]]. */
-  private val StagePoolThreads = 8
-
   /** Run the full chain; write each derived table under `outDir`; return
     * table → row count. `fact_events_clean` is written date-partitioned
     * (the production layout); the rest are snapshot overwrites like the
@@ -114,15 +111,12 @@ object DailyUpdate {
     // current stage's tail instead of the driver serializing ~25 small
     // jobs; per-stage plans, writes and Observation counts are unchanged,
     // so each table's content is byte-identical to the sequential form.
-    // Pool size: enough in-flight jobs to fill the tail, few enough not
+    // Pool size 8: enough in-flight jobs to fill the tail, few enough not
     // to thrash the scheduler (the guide's "2-3 is plenty" scaled to the
-    // many-tiny-stages shape), and never more threads than stages.
-    val poolN = math.max(1, math.min(StagePoolThreads, deriveStages.size))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolN)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val stageFutures = deriveStages.map { case (name, build) =>
-      scala.concurrent.Future {
+    // many-tiny-stages shape), and never more threads than stages. The
+    // first failing stage cancels the others' jobs and is rethrown.
+    val counts = graft.Sessions.inParallel(spark, 8)(deriveStages.map {
+      case (name, build) => () => {
         spark.sparkContext.setJobDescription(s"daily_update: $name")
         val obs = org.apache.spark.sql.Observation()
         val plan = observedPlan(spark, sfDir, name, build, existing.isDefined,
@@ -135,12 +129,7 @@ object DailyUpdate {
         else plan.write.mode("overwrite").parquet(s"$outDir/$name")
         name -> obs.get("n").asInstanceOf[Long]
       }
-    }
-    val counts =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(stageFutures),
-        scala.concurrent.duration.Duration.Inf).toMap
-      finally pool.shutdown()
+    }).toMap
 
     counts + ("fact_events_clean" -> Formats.readParquet(spark, factPath).count()) +
       ("date_gaps_found" -> gaps)

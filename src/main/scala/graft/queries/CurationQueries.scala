@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Caches
 import graft.functions.Portable
 import graft.operators.{Classifier, Cleaning, Drift, Quantize, Sampling}
 import graft.sources.Tables
@@ -95,10 +96,9 @@ object CurationQueries {
       // and the returned frame; unpersisted, each re-ran encode + the
       // full ADC code scan (bounded frame: nQueries × k rows; the
       // contract mains clear caches per query)
-      val out = Quantize.adcTopK(codes, "vec_id", "codes",
+      val out = Caches.hold(Quantize.adcTopK(codes, "vec_id", "codes",
         emb.where(col("vec_id").between(16, 19)), "vec_id", "embedding",
-        cb, nSub = 8, nCodes = 16, k = 5, excludeSelf = true)
-        .persist()
+        cb, nSub = 8, nCodes = 16, k = 5, excludeSelf = true))
       // bounded: <= nQueries rows (one count per probe)
       val perQ = out.groupBy(col("query_id")).count().collect()
       require(perQ.length == 4 && perQ.forall(_.getLong(1) == 5),
@@ -192,8 +192,7 @@ object CurationQueries {
       // persisted so the tightening pin below doesn't re-run the
       // trained encode when the gate materializes the frame;
       // corpus-row-sized, and the contract mains clear caches per query
-      val out = Quantize.pqEncode(emb, "vec_id", "embedding", nSub = 8, cbT)
-        .persist()
+      val out = Caches.hold(Quantize.pqEncode(emb, "vec_id", "embedding", nSub = 8, cbT))
       // bounded: two 1-row recon-error scalars
       val trained = out.agg(sum(col("recon_err"))).collect()(0).getDouble(0)
       val seeded = Quantize.pqEncode(emb, "vec_id", "embedding", nSub = 8,
@@ -225,21 +224,19 @@ object CurationQueries {
       // the occupied-lists pin) — unpersisted, each re-ran the corpus ×
       // centroids assignment pass (corpus-row-sized; the contract mains
       // clear caches per query)
-      val lists = Similarity.assignToCentroids(emb, "vec_id", "embedding", cents)
-        .persist()
+      val lists = Caches.hold(Similarity.assignToCentroids(emb, "vec_id", "embedding", cents))
       val res = Quantize.residuals(emb, "vec_id", "embedding",
         lists, "centroid_id", cents)
       // persisted: the trainer makes 2×2 passes and the encode one more
       // over the residual frame (corpus-row-sized; the contract mains
       // clear caches per query)
-      res.persist()
+      Caches.hold(res)
       val cbRes = Quantize.trainCodebook(res, "vec_id", "rvec",
         nSub = 8, nCodes = 16, iters = 2)
       // encoded ONCE and persisted (the q149 move, r13): the index join
       // below and the tightening pin both read this frame — unpersisted,
       // the pin re-ran the full trained encode over the residual corpus
-      val enc = Quantize.pqEncode(res, "vec_id", "rvec", nSub = 8, cbRes)
-        .persist()
+      val enc = Caches.hold(Quantize.pqEncode(res, "vec_id", "rvec", nSub = 8, cbRes))
       val index = enc.join(lists, Seq("vec_id"))
       val out = Quantize.ivfAdcResidualTopK(index, "vec_id", "codes",
         "centroid_id", emb.where(col("vec_id").between(16, 19)),
@@ -283,7 +280,7 @@ object CurationQueries {
       val codes = Quantize.pqEncode(emb, "vec_id", "embedding", nSub = 8, cb)
       // persisted: both searches scan the same stored codes
       // (corpus-row-sized; the contract mains clear caches per query)
-      codes.persist()
+      Caches.hold(codes)
       val probes = emb.where(col("vec_id").between(16, 47))
       val adc = Quantize.adcTopK(codes, "vec_id", "codes", probes,
         "vec_id", "embedding", cb, nSub = 8, nCodes = 16, k = 10,
@@ -335,16 +332,15 @@ object CurationQueries {
       // persisted: the refine shortlist scan and the liveness pin's raw
       // ADC scan read the same stored codes (corpus-row-sized; the
       // contract mains clear caches per query)
-      codes.persist()
+      Caches.hold(codes)
       val probes = emb.where(col("vec_id").between(16, 47))
       // persisted: two consumers (the liveness pin's except() and the
       // returned frame) — unpersisted, the pin re-ran the whole
       // shortlist+refine cascade (bounded frame: panel × 10 rows; the
       // contract mains clear caches per query)
-      val out = Quantize.adcRefineTopK(codes, "vec_id", "codes", probes,
+      val out = Caches.hold(Quantize.adcRefineTopK(codes, "vec_id", "codes", probes,
         "vec_id", "embedding", emb, "embedding", cb, nSub = 8, nCodes = 16,
-        kShort = 50, k = 10, excludeSelf = true)
-        .persist()
+        kShort = 50, k = 10, excludeSelf = true))
       // liveness: refinement must genuinely reorder on the gated
       // fixture — at least one refined top-10 pick is NOT in the raw
       // ADC top-10 (otherwise the row gates nothing q145 doesn't).
@@ -401,20 +397,21 @@ object CurationQueries {
       import s.implicits._
       val docs = Tables(s, d).documents
       val toks = docs.select(explode(split(col("text"), " ")).as("word"))
-      // one distinct pass feeds both the sketch's candidate reads and
-      // the vocabulary census the require needs
-      val vocabDf = toks.distinct().persist()
-      val vocab = vocabDf.count()
-      // the <=18-row candidate set is DRIVER STATE (the k-centroid /
-      // codebook convention): collect it once so the gated plan reads a
-      // LocalTableScan instead of re-running the corpus-sized CMS build
-      // on every materialization (the build already ran for this
-      // collect; un-collected it would run again per bench rep)
-      val candWords = graft.operators.Sketches
-        .cmsTopK(toks, "word", candidates = vocabDf, k = 12 + 6)
-        // bounded: the <= k+slack = 18-row sketch candidate set
-        .select(col("word")).as[String].collect()
-      vocabDf.unpersist()
+      val (vocab, candWords) = Caches.scoped {
+        // one distinct pass feeds both the sketch's candidate reads and
+        // the vocabulary census the require needs
+        val vocabDf = Caches.hold(toks.distinct())
+        val vocab = vocabDf.count()
+        // the <=18-row candidate set is DRIVER STATE (the k-centroid /
+        // codebook convention): collect it once so the gated plan reads a
+        // LocalTableScan instead of re-running the corpus-sized CMS build
+        // on every materialization (the build already ran for this
+        // collect; un-collected it would run again per bench rep)
+        (vocab, graft.operators.Sketches
+          .cmsTopK(toks, "word", candidates = vocabDf, k = 12 + 6)
+          // bounded: the <= k+slack = 18-row sketch candidate set
+          .select(col("word")).as[String].collect())
+      }
       require(candWords.length < vocab,
         s"q139: the sketch must genuinely select (|cand|=${candWords.length}, vocab=$vocab)")
       Drift.jsDivergence(docs, "source", "text", topV = Some(12),
@@ -479,8 +476,8 @@ object CurationQueries {
       // persisted so the branch-liveness pins below don't re-run the
       // BM25 pass; candidate-pool-sized (≤ probes × 20 rows), and the
       // contract mains clear the cache per query
-      val scored = graft.operators.Retrieval.cosineScores(cands,
-        "query_id", "doc_id", t.embeddings, "vec_id", "embedding").persist()
+      val scored = Caches.hold(graft.operators.Retrieval.cosineScores(cands,
+        "query_id", "doc_id", t.embeddings, "vec_id", "embedding"))
       // bounded: one scalar census row over the candidate pool
       val st = scored.agg(
         sum(when(col("cosine") >= 0.2, 1L).otherwise(0L)).as("pos"),
@@ -589,11 +586,10 @@ object CurationQueries {
       // the returned frame; unpersisted, each re-ran the full 5-class
       // 2-iteration training (bounded frame: one row per doc; the
       // contract mains clear caches per query)
-      val out = Classifier.logisticTrainOneVsRest(docs, "doc_id", "text", "lang",
+      val out = Caches.hold(Classifier.logisticTrainOneVsRest(docs, "doc_id", "text", "lang",
         nBuckets = 64, iters = 2, lr = 0.5, salt = "lid141",
         tokens = t => Classifier.charNgrams(
-          array_join(slice(split(t, " "), 1, 6), " "), 3))
-        .persist()
+          array_join(slice(split(t, " "), 1, 6), " "), 3)))
       // liveness pin: the scores must occupy the sigmoid's interior —
       // a saturated fixture (every score exactly 0/1) would gate only
       // the priors, not the margin arithmetic. Bounded scalar.
@@ -640,9 +636,8 @@ object CurationQueries {
       // the returned frame; unpersisted, each re-ran the corpus ×
       // centroids assignment + cap (bounded frame: <= 12 rows per
       // cluster; the contract mains clear caches per query)
-      val out = Sampling.capPerStratum(asgn, "centroid_id", "vec_id",
-        maxN = 12, salt = "div133")
-        .persist()
+      val out = Caches.hold(Sampling.capPerStratum(asgn, "centroid_id", "vec_id",
+        maxN = 12, salt = "div133"))
       val kept = out.count(); val total = emb.count()
       require(kept < total, s"q133: cap must bite ($kept of $total kept)")
       out

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Caches
 import graft.functions.{Portable, TextFns}
 import graft.operators.{Decontaminate, Funnel, Fuzzy, Graph, Rankings, Retrieval, Sampling, Similarity, Temporal}
 import graft.sources.Tables
@@ -346,10 +347,9 @@ object ExtendedQueries {
       // returned frame; unpersisted, each re-ran the corpus scan + count
       // aggregation (bounded frame: one row per kept doc; the contract
       // mains clear caches per query)
-      val out = Sampling.temperatureMix(Tables(s, d).documents, "lang",
+      val out = Caches.hold(Sampling.temperatureMix(Tables(s, d).documents, "lang",
           "doc_id", scale = 0.45, salt = "tmix")
-        .select(col("doc_id"), col("lang"), col("mix_rate"))
-        .persist()
+        .select(col("doc_id"), col("lang"), col("mix_rate")))
       // bounded collect: one rate per language (5)
       val rates = out.select(col("mix_rate")).distinct().collect()
         .map(_.getDouble(0))

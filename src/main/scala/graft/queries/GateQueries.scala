@@ -4,7 +4,7 @@ import java.nio.file.{Files => JFiles, Path, Paths, StandardCopyOption}
 
 import scala.reflect.ClassTag
 
-import graft.Sessions
+import graft.{Caches, Sessions}
 import graft.functions.TextFns
 import graft.operators.{Multimodal, Packing, Similarity, Sketches}
 import graft.sources.Tables
@@ -150,25 +150,17 @@ object GateQueries {
     // the six fixture writes are independent of each other — submit them
     // from a small pool (guide §2.6, the DailyUpdate.run stage move) so
     // the capped-table scans overlap instead of serializing six small jobs
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val writes = Seq[() => Unit](
-        () => ev.where(col("ts") <= lit(split)).write.parquet(s"$day1/events.parquet"),
-        () => ev.write.parquet(s"$day2/events.parquet"),
-        () => t.customer.where(col("c_custkey") < 150)
-          .write.parquet(s"$shared/customer.parquet"),
-        () => ords.write.parquet(s"$shared/orders.parquet"),
-        () => t.lineitem.join(ords.select(col("o_orderkey")),
-            col("l_orderkey") === col("o_orderkey"), "left_semi")
-          .write.parquet(s"$shared/lineitem.parquet"),
-        () => t.documents.where(col("doc_id") < 500)
-          .write.parquet(s"$shared/documents.parquet"))
-      try Await.result(Future.sequence(writes.map(w => Future(w()))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
+    Sessions.inParallel(s, 4)(Seq[() => Unit](
+      () => ev.where(col("ts") <= lit(split)).write.parquet(s"$day1/events.parquet"),
+      () => ev.write.parquet(s"$day2/events.parquet"),
+      () => t.customer.where(col("c_custkey") < 150)
+        .write.parquet(s"$shared/customer.parquet"),
+      () => ords.write.parquet(s"$shared/orders.parquet"),
+      () => t.lineitem.join(ords.select(col("o_orderkey")),
+          col("l_orderkey") === col("o_orderkey"), "left_semi")
+        .write.parquet(s"$shared/lineitem.parquet"),
+      () => t.documents.where(col("doc_id") < 500)
+        .write.parquet(s"$shared/documents.parquet")))
     Seq("customer", "orders", "lineitem", "documents").foreach { n =>
       JFiles.createSymbolicLink(day1.resolve(s"$n.parquet"), shared.resolve(s"$n.parquet"))
       JFiles.createSymbolicLink(day2.resolve(s"$n.parquet"), shared.resolve(s"$n.parquet"))
@@ -1499,10 +1491,9 @@ object GateQueries {
       // and the returned frame; unpersisted, each re-ran the full
       // two-sided reconcile aggregation (bounded frame: one row per day;
       // the contract mains clear caches per query)
-      val out = graft.operators.Reconcile.diff(ev, right, "day", rowKey)
+      val out = Caches.hold(graft.operators.Reconcile.diff(ev, right, "day", rowKey)
         .select(col("day").cast("timestamp").as("day"),
-          col("l_n_rows"), col("r_n_rows"), col("status"))
-        .persist()
+          col("l_n_rows"), col("r_n_rows"), col("status")))
       val statuses = out.select(col("status")).distinct()
         // bounded: distinct status labels (<= 4 classes)
         .collect().map(_.getString(0)).toSet
@@ -1536,10 +1527,8 @@ object GateQueries {
       // `result` feeds the exact-count pin AND the returned frame.
       // Gate-pin residency only — the Pruning operator itself persists
       // nothing; the contract mains clear caches per query.
-      val pre = graft.operators.Pruning.bloomPrefilter(fact, "user_id", bloom)
-        .persist()
-      val result = pre.join(keys, pre("user_id") === col("c_custkey"), "left_semi")
-        .persist()
+      val pre = Caches.hold(graft.operators.Pruning.bloomPrefilter(fact, "user_id", bloom))
+      val result = Caches.hold(pre.join(keys, pre("user_id") === col("c_custkey"), "left_semi"))
       val (total, kept, exact) = (fact.count(), pre.count(), result.count())
       require(kept >= exact,
         s"q105: bloom prefilter must be a superset of the semi-join ($kept < $exact)")

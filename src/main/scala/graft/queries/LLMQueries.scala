@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Caches
 import graft.functions.{HashFns, Portable, TextFns}
 import graft.operators.{Dedup, Multimodal, Sampling, Similarity}
 import graft.sources.Tables
@@ -318,14 +319,13 @@ object LLMQueries {
       // duplicates before the shuffle and there is no per-partition sort.
       // Cached: consumed twice (the near-dup edge pipeline and the final
       // survivor join).
-      val keepExact = gated
+      val keepExact = Caches.hold(gated
         .groupBy(Dedup.canonicalWordsHash(col("text")).as("__canon"))
         .agg(min_by(
           struct(col("doc_id"), col("source"), col("quality_score"), col("text")),
           col("doc_id")).as("__r"))
         .select(col("__r.doc_id").as("doc_id"), col("__r.source").as("source"),
-          col("__r.quality_score").as("quality_score"), col("__r.text").as("text"))
-        .cache()
+          col("__r.quality_score").as("quality_score"), col("__r.text").as("text")))
       // near-dup clustering among exact survivors; keep cluster minima
       val edges = Similarity.minHashNearDups(keepExact, "doc_id", "text",
         ShingleN, NumSeeds, RowsPerBand).where(col("jaccard") >= 0.5)
@@ -431,10 +431,9 @@ object LLMQueries {
       // returned frame; unpersisted, each re-ran the corpus tokenize +
       // per-language aggregation (bounded frame: one row per target
       // language; the contract mains clear caches per query)
-      val out = Sampling.tokenBudgetPlan(toks, "doc_id", "lang", "n_tokens",
+      val out = Caches.hold(Sampling.tokenBudgetPlan(toks, "doc_id", "lang", "n_tokens",
         Map("en" -> 0.3, "de" -> 0.1, "es" -> 0.1, "fr" -> 0.1, "zh" -> 0.4),
-        budgetTokens = total / 2, salt = "mix121")
-        .persist()
+        budgetTokens = total / 2, salt = "mix121"))
       // bounded: one row per target language (the plan frame is per-group)
       val rates = out.select(col("rate")).collect().map(_.getDouble(0))
       require(rates.exists(_ == 1.0) && rates.exists(_ < 1.0),

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.Caches
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -306,20 +307,18 @@ object StreamOps {
         val cacheAqeKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
         val cacheAqePrev = spark.conf.get(cacheAqeKey, "false")
         spark.conf.set(cacheAqeKey, "true")
-        try {
-          // every frame cached for this batch, released after the writes
-          val held = scala.collection.mutable.Buffer.empty[DataFrame]
-          def hold(df: DataFrame): DataFrame = { held += df; df.cache() }
-          val b = hold(batch.select(col(idCol), col(textCol)))
+        // every frame cached for this batch is released after the writes
+        try Caches.scoped {
+          val b = Caches.hold(batch.select(col(idCol), col(textCol)))
           // Incoming band keys are planned ONCE and shared between the
           // pair search and the bands-store write.
-          val bands = hold(Similarity.minHashBandKeys(
+          val bands = Caches.hold(Similarity.minHashBandKeys(
             Similarity.shingleSets(b, idCol, textCol, shingleN), numSeeds, rowsPerBand))
           val stored = nearDupBase(spark, storeDir, batchId, b.schema, bands.schema)
           val pairs = Similarity.minHashNearDupsIncremental(
             stored.map(_._1).getOrElse(b.limit(0)), b, idCol, textCol,
             shingleN, numSeeds, rowsPerBand, baseBands = stored.map(_._2),
-            persist = hold, incomingBands = Some(bands))
+            incomingBands = Some(bands))
           // The three store writes run one after another, pairs first.
           // Each overwrites only its own batch_id partition and every read
           // here is pruned to batch_id < current, so replay idempotence
@@ -334,10 +333,7 @@ object StreamOps {
             sc.setJobDescription(s"neardup sink b=$batchId: $store")
             Formats.writePartitioned(df.withColumn("batch_id", lit(batchId)),
               s"$storeDir/$store", Seq("batch_id"))
-          } finally {
-            sc.setJobDescription(desc)
-            held.foreach(_.unpersist())
-          }
+          } finally sc.setJobDescription(desc)
         } finally {
           spark.conf.set(aqeKey, aqePrev)
           spark.conf.set(cacheAqeKey, cacheAqePrev)

@@ -32,7 +32,7 @@ class EntrySpec extends AnyFunSuite {
   }
 
   test("bench detail: a failed per-core copy does not misreport the written primary file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bench-detail")
+    val dir = java.nio.file.Files.createTempDirectory(Sessions.scratchRoot, "graft-bench-detail")
     val primary = dir.resolve("detail.json").toString
     // a directory where the per-core copy should go makes that write fail
     java.nio.file.Files.createDirectory(dir.resolve("detail_c4.json"))

@@ -15,4 +15,17 @@ object SparkTestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   spark.sparkContext.setLogLevel("ERROR")
+
+  /** Drops every cache-manager entry and every persisted RDD of the
+    * shared session, so a spec can assert that nothing is left behind.
+    */
+  protected def dropAllCaches(): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
+  /** True when the session holds no cache-manager entry and no persisted RDD. */
+  protected def nothingCached: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty && spark.sparkContext.getPersistentRDDs.isEmpty
 }

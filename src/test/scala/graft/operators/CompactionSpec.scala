@@ -20,7 +20,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
+    java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-compact").toString + "/t"
 
   private def contents(path: String): Set[(Long, String, Double)] =
     spark.read.parquet(path).select($"id", $"d".cast("string"), $"v")

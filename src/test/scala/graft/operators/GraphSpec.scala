@@ -115,33 +115,28 @@ class GraphSpec extends graft.SparkSpec {
     assert(a == b, "dangling-redistributed ranks drifted under repartition")
   }
 
-  test("pageRank releaseSpentCaches bounds the redistributing path's residency at one frame (r12)") {
-    // the default persist leaves e + nodes + shares + dangling +
-    // (iters+1) rank frames cached until session cache-clear; with
-    // releaseSpentCaches the redistributing path fills everything in
-    // one internal job and returns holding ONLY the final node-sized
-    // rank frame — constant in iters. Opt-in by measured design: the
-    // fill-now job costs wall at the gated bench shape
-    // (PERFPROBE_pagerank_r12), so single-shot callers stay lazy.
-    spark.catalog.clearCache()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "dirty cache at test start")
+  test("pageRank: a Caches scope releases every frame it cached") {
+    // a dangling pageRank holds e, nodes, shares, the dangling set and
+    // every iteration's rank frame for its returned plan; collected inside
+    // a scope, all of them go when the scope closes, and the scope does
+    // not change the ranks
+    dropAllCaches()
     val edges = (0L until 200L).map(i => (s"n${i % 20}", s"n${(i * 7) % 20}", 1L + i % 3))
       .toDF("src", "dst", "w")
-    val out = Graph.pageRank(edges, "src", "dst", $"w", iters = 5,
-      danglingRedistribute = true, releaseSpentCaches = true)
-    val resident = spark.sparkContext.getPersistentRDDs.size
-    assert(resident <= 1,
-      s"$resident cached RDDs right after a 5-iteration dangling pageRank — " +
-        "the release sweep regressed (expected ≤ 1: the final rank frame)")
-    // ...and the released lineage did not change the result's liveness
-    // or values: it must match the default-path run bit-for-bit
-    val kept = Graph.pageRank(edges, "src", "dst", $"w", iters = 5,
-        danglingRedistribute = true)
+    def ranks(): Set[(String, Double)] = Graph.pageRank(edges, "src", "dst", $"w",
+        iters = 5, danglingRedistribute = true)
       .collect().map(x => (x.getString(0), x.getDouble(1))).toSet
-    val released = out.collect().map(x => (x.getString(0), x.getDouble(1))).toSet
-    assert(released == kept, "release sweep changed the ranks")
-    assert(released.size == 20)
-    spark.catalog.clearCache()
+    val unscoped = ranks()
+    dropAllCaches()
+    val scoped = graft.Caches.scoped {
+      val r = ranks()
+      assert(spark.sparkContext.getPersistentRDDs.nonEmpty, "the scoped run cached nothing")
+      r
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"${spark.sparkContext.getPersistentRDDs.size} cached RDDs survived the scope")
+    assert(scoped == unscoped, "the scope changed the ranks")
+    assert(scoped.size == 20)
   }
 
   test("pageRank rejects an un-oracle-mirrored grid constant") {

@@ -36,7 +36,7 @@ class PruningSpec extends graft.SparkSpec {
   test("the bloom probe plans as a native filter at the scan (no UDF, no exchange)") {
     // parquet-backed, not a local relation: ConvertToLocalRelation would
     // otherwise evaluate the filter at optimize time and hide the plan
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-bloom").toString
     fact.write.mode("overwrite").parquet(dir)
     val bloom = Pruning.buildBloom(keys, "key", expectedItems = 1024L, fpp = 0.01)
     val pruned = Pruning.bloomPrefilter(spark.read.parquet(dir), "k", bloom)

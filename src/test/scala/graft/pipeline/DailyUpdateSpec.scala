@@ -3,11 +3,12 @@ package graft.pipeline
 import java.nio.file.Files
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 class DailyUpdateSpec extends SparkSpec {
 
   test("full daily chain runs end-to-end and is idempotent") {
-    val out = Files.createTempDirectory("graft-daily").toString
+    val out = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-daily").toString
     val counts = DailyUpdate.run(spark, "/root/testdata/sf0.001", out)
     val expectNonEmpty = DailyUpdate.stages.map(_._1).toSet
     expectNonEmpty.foreach { t =>
@@ -33,7 +34,7 @@ class DailyUpdateSpec extends SparkSpec {
     val mm = ev.agg(min(col("ts")), max(col("ts"))).collect()(0)
     val split = new java.sql.Timestamp(
       (mm.getTimestamp(0).getTime + mm.getTimestamp(1).getTime) / 2)
-    val root = Files.createTempDirectory("graft-incpin")
+    val root = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-incpin")
     ev.where(col("ts") <= lit(split)).write.parquet(s"$root/day1/events.parquet")
     ev.write.parquet(s"$root/day2/events.parquet")
     val out = s"$root/out"
@@ -60,10 +61,37 @@ class DailyUpdateSpec extends SparkSpec {
     assert(r2("first_acquisition") == rebuilt.size + 1L) // rebuild + sentinel
   }
 
+  test("a failing stage cancels its siblings' jobs before run rethrows") {
+    import org.apache.spark.sql.functions._
+    val boom = new IllegalStateException("injected stage failure")
+    // 4 tasks of 200 rows × 25 ms: about 5 s if nothing cancels it
+    val nap = udf((x: Long) => { Thread.sleep(25); x })
+    val stages = Seq[(String, (SparkSession, String) => DataFrame)](
+      "failing" -> { (_, _) => Thread.sleep(1000); throw boom },
+      "slow" -> { (s, _) => s.range(0, 800, 1, 4).select(nap(col("id")).as("x")) })
+    val out = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-cancel")
+    val thrown = intercept[IllegalStateException] {
+      DailyUpdate.run(spark, "/root/testdata/sf0.001", out.toString, stages)
+    }
+    val thrownAt = System.nanoTime()
+    assert(thrown eq boom)
+    // cancellation reaches the status store asynchronously: allow it 2 s,
+    // well inside the slow stage's 5 s
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 2000000000L
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(tracker.getActiveJobIds.isEmpty, "a sibling stage's job outlived run")
+    // the slow stage was about 1 s in when run threw: uncancelled, it
+    // would commit about 4 s later
+    Thread.sleep(math.max(0L, 6000L - (System.nanoTime() - thrownAt) / 1000000L))
+    assert(!Files.exists(out.resolve("slow").resolve("_SUCCESS")),
+      "the slow stage kept writing after run threw")
+  }
+
   test("backfillDates recomputes only missing partitions, never present ones") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val target = Files.createTempDirectory("graft-backfill").toString + "/t"
+    val target = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-backfill").toString + "/t"
     def frame(v: String) = Seq(
       ("2024-01-01", 1L), ("2024-01-02", 2L), ("2024-01-03", 3L), ("2024-01-05", 5L)
     ).toDF("ds", "x").select(to_date($"ds").as("d"), $"x", lit(v).as("tag"))

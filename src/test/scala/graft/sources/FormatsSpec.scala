@@ -14,7 +14,7 @@ class FormatsSpec extends SparkSpec {
     StructField("score", DoubleType)))
 
   test("CSV round-trip preserves rows under explicit schema") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-csv").toString
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "score")
     Formats.writeCsv(df, s"$dir/out")
     val back = Formats.readCsv(spark, s"$dir/out", schema)
@@ -23,7 +23,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("JSONL round-trip preserves rows") {
-    val dir = Files.createTempDirectory("graft-json").toString
+    val dir = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-json").toString
     val df = Seq((1L, "x", 0.25)).toDF("id", "name", "score")
     Formats.writeJsonl(df, s"$dir/out")
     val back = Formats.readJsonl(spark, s"$dir/out", schema)
@@ -32,7 +32,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves rows and prunes columns") {
-    val dir = Files.createTempDirectory("graft-orc").toString
+    val dir = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-orc").toString
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "score")
     Formats.writeOrc(df, s"$dir/out")
     val back = Formats.readOrc(spark, s"$dir/out")
@@ -46,7 +46,7 @@ class FormatsSpec extends SparkSpec {
   test("readJsonlStream picks up JSON documents landing in the directory") {
     import org.apache.spark.sql.streaming.OutputMode
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-landing").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-jsonl-landing").toString
     val sch = StructType(Seq(StructField("id", LongType), StructField("v", DoubleType)))
     Seq((1L, 1.0)).toDF("id", "v").coalesce(1).write.mode("append").json(dir)
     val q = Formats.readJsonlStream(spark, dir, sch)
@@ -63,7 +63,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("partitioned write prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-part").toString
     val df = Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0))
       .toDF("id", "day", "v")
     Formats.writePartitioned(df, s"$dir/t", Seq("day"))
@@ -95,7 +95,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("range-clustered layout: disjoint per-file key ranges, content preserved") {
-    val dir = Files.createTempDirectory("graft-rc").toString + "/t"
+    val dir = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-rc").toString + "/t"
     val df = (0 until 400).map(i => ((i * 7919) % 400L, i.toDouble))
       .toDF("k", "v")
     Formats.writeRangeClustered(df, dir, "k", numFiles = 4)
@@ -112,7 +112,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("range clustering lets a pushed range predicate skip row groups at read time") {
-    val root = Files.createTempDirectory("graft-rc-skip").toString
+    val root = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-rc-skip").toString
     val df = (0 until 4000).map(i => ((i * 7919) % 4000L, i.toDouble))
       .toDF("k", "v")
     Formats.writeRangeClustered(df, s"$root/clustered", "k", numFiles = 8)
@@ -157,7 +157,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("z-order lets range predicates on BOTH columns skip at read time") {
-    val root = Files.createTempDirectory("graft-zo-skip").toString
+    val root = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-zo-skip").toString
     // independent permutations on both keys: no correlation a single-key
     // sort could exploit for the second column
     val df = (0 until 4096).map(i => ((i * 7919) % 4096L, (i * 104729) % 4096L))
@@ -189,7 +189,7 @@ class ParquetStreamSpec extends graft.SparkSpec {
   test("readParquetStream picks up files landing in the directory") {
     import org.apache.spark.sql.streaming.OutputMode
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-landing").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-landing").toString
     val schema = StructType(Seq(StructField("id", LongType), StructField("v", DoubleType)))
     Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v").coalesce(1).write.mode("append").parquet(dir)
     val q = Formats.readParquetStream(spark, dir, schema)

@@ -25,7 +25,7 @@ class LateDataRuleSpec extends SparkSpec {
     val out = StreamOps.windowedRollup(
       input.toDF().toDF("ts", "event_type", "value"),
       "ts", "event_type", "value", "1 hour", "10 seconds")
-    val dir = java.nio.file.Files.createTempDirectory("graft-laterule").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-laterule").toString
     val q = out.writeStream
       .option("checkpointLocation", s"$dir/ckpt")
       .outputMode(OutputMode.Append)
@@ -72,7 +72,7 @@ class LateDataRuleSpec extends SparkSpec {
     val out = StreamOps.windowedRollup(
       input.toDF().toDF("ts", "event_type", "value"),
       "ts", "event_type", "value", "1 hour", "10 seconds")
-    val dir = java.nio.file.Files.createTempDirectory("graft-lateeq").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-lateeq").toString
     val q = out.writeStream
       .option("checkpointLocation", s"$dir/ckpt")
       .outputMode(OutputMode.Append)
@@ -115,7 +115,7 @@ class LateDataRuleSpec extends SparkSpec {
     val input = MemoryStream[StreamOps.Event]
     val out = StreamOps.sessionize(input.toDS(), gapSeconds = 60,
       watermarkDelay = "10 seconds")
-    val dir = java.nio.file.Files.createTempDirectory("graft-latefmgws").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-latefmgws").toString
     val q = out.toDF().writeStream
       .option("checkpointLocation", s"$dir/ckpt")
       .outputMode(OutputMode.Append)
@@ -158,7 +158,7 @@ class LateDataRuleSpec extends SparkSpec {
     val input = MemoryStream[(Long, Timestamp, Double)]
     val out = StreamOps.dedupByIdWithinWatermark(
       input.toDF().toDF("event_id", "ts", "value"), "ts", "event_id", "1 hour")
-    val dir = java.nio.file.Files.createTempDirectory("graft-latededup").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-latededup").toString
     val q = out.writeStream
       .option("checkpointLocation", s"$dir/ckpt")
       .outputMode(OutputMode.Append)
@@ -197,7 +197,7 @@ class LateDataRuleSpec extends SparkSpec {
       cIn.toDF().toDF("event_id", "user_id", "ts"),
       "user_id", "ts", horizonSeconds = 1800, watermarkDelay = "10 seconds")
       .select(org.apache.spark.sql.functions.col("r.event_id").as("click_id"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-latejoin").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-latejoin").toString
     val q = out.writeStream
       .option("checkpointLocation", s"$dir/ckpt")
       .outputMode(OutputMode.Append)
@@ -237,7 +237,7 @@ class LateDataRuleSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[StreamOps.FunnelEvent]
     val out = StreamOps.funnelStream(input.toDS(), Seq("view", "click", "purchase"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-latefunnel").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-latefunnel").toString
     val q = out.toDF().writeStream
       .option("checkpointLocation", s"$dir/ckpt")
       .outputMode(OutputMode.Append)

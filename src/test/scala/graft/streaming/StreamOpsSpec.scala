@@ -147,7 +147,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("upsertSink merges micro-batches into a parquet snapshot") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-upsert").toString
     val target = s"$dir/snapshot"
     val input = MemoryStream[(Long, Double)]
     val updates = input.toDF().toDF("uid", "worth")
@@ -166,7 +166,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("upsertSink recovers a snapshot stranded at .old by a mid-swap crash") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert-crash").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-upsert-crash").toString
     val target = s"$dir/snapshot"
     val input = MemoryStream[(Long, Double)]
     val updates = input.toDF().toDF("uid", "worth")
@@ -193,7 +193,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("nearDupSink dedups each micro-batch against the accumulated corpus") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-neardup").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-neardup").toString
     val input = MemoryStream[(Long, String)]
     val docs = input.toDF().toDF("doc_id", "text")
     val q = StreamOps.nearDupSink(docs, "doc_id", "text",
@@ -225,7 +225,7 @@ class StreamOpsSpec extends SparkSpec {
   test("nearDupSink builds its stored base with the written schema: no Spark job") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val dir = java.nio.file.Files.createTempDirectory("graft-neardup-base").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-neardup-base").toString
     val input = MemoryStream[(Long, String)]
     val docs = input.toDF().toDF("doc_id", "text")
     val rounds = Seq(
