@@ -163,8 +163,24 @@ object Bench {
     }
     (System.nanoTime() - t0) / 1e9
   }
+
+  /** Checks the values of `SPARK_GRAFT_SF_DIR` (must name an existing
+    * directory) and `SPARK_GRAFT_BENCH_OUT` (must not be blank). A bad
+    * value fails here, naming the variable, before a session starts,
+    * instead of after the whole timed run.
+    */
+  private[graft] def checkPaths(sfDir: String, detailPath: String): Unit = {
+    require(new java.io.File(sfDir).isDirectory,
+      s"SPARK_GRAFT_SF_DIR must name an existing directory, got '$sfDir'")
+    require(detailPath.trim.nonEmpty,
+      s"SPARK_GRAFT_BENCH_OUT must not be blank, got '$detailPath'")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      "evidence/BENCH_detail_last.json")
+    checkPaths(sfDir, detailPath)
     val cpus = Sessions.cpus(32)
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
@@ -273,8 +289,6 @@ object Bench {
     // totals plus a pointer to the detail file.
     val detailJson =
       s"""{"metric":"total","value":${f(total)},"unit":"sec","batch_total":${f(batchTotal)},"streaming_total":${f(harnessTotal)},"branch_gate_total":${f(branchGateTotal)},"branch_gates":$branchGatesJson,"settle_sec":${f(settleSec)},"queries":$qs,"errors":$errs,"sf":"${jstr(sfDir)}","load_start":${f(loadStart)},"load_end":${f(loadEnd)},"wall_sec":${f(wall)},"detail":$repsJson}"""
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "evidence/BENCH_detail_last.json")
     val detailNote = writeDetail(detailJson, detailPath, cpus.toString)
     // Full driver-contract line (metric/value/unit/queries/sf), printed
     // BEFORE the compact summary (r13 verdict item 1: PERF is per-query

@@ -72,17 +72,7 @@ object GenData {
       .withColumn("l_partkey", col("l_partkey") + off)
       .withColumn("l_suppkey", col("l_suppkey") + off))
 
-    // events: older driver fixtures store TIMESTAMP(NANOS) (read as long
-    // under nanosAsLong, truncated to µs exactly as Tables.events does);
-    // current fixtures store naive µs TIMESTAMP and pass through (the
-    // session pins inferTimestampNTZ=false, so they read as TIMESTAMP)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val evSrc = read("events")
-    val evMicro =
-      if (evSrc.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        evSrc.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else evSrc
-    write("events", replicate(evMicro)
+    write("events", replicate(read("events"))
       .withColumn("event_id", col("event_id") + off)
       .withColumn("user_id", col("user_id") + off))
 

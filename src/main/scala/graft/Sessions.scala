@@ -1,7 +1,12 @@
 package graft
 
-import java.nio.file.{Files => JFiles, Path}
+import java.io.IOException
+import java.nio.file.{Files => JFiles, LinkOption, Path, SimpleFileVisitor}
+import java.nio.file.FileVisitResult.CONTINUE
+import java.nio.file.attribute.BasicFileAttributes
 import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+
+import scala.annotation.tailrec
 
 import org.apache.spark.sql.SparkSession
 
@@ -24,14 +29,40 @@ object Sessions {
     root
   }
 
-  /** Deletes `root` and everything under it. Symbolic links are removed,
-    * never followed: the daily fixtures link to the source tables.
+  /** Deletes `root` and everything under it, and prints to stderr
+    * whatever could not be deleted instead of throwing: it runs in the
+    * shutdown hook, possibly while Spark tasks still write under the root.
     */
-  private[graft] def deleteRecursively(root: Path): Unit = {
-    val walk = JFiles.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(p => JFiles.deleteIfExists(p): Unit)
-    finally walk.close()
+  private[graft] def deleteRecursively(root: Path): Unit =
+    deleteRecursively(root, p => JFiles.deleteIfExists(p): Unit)
+      .foreach(p => System.err.println(s"[graft] could not delete $p"))
+
+  /** Deletes `root` and everything under it with `delete`, children
+    * before their directory, and returns what is left. An entry that fails
+    * (a directory a task wrote into after it was listed) does not stop
+    * the others; the tree is listed again and the rest, its parents
+    * included, retried until a pass leaves no fewer entries than the one
+    * before. Symbolic links are removed, never followed: the daily
+    * fixtures link to the source tables.
+    */
+  private[graft] def deleteRecursively(root: Path, delete: Path => Unit): Seq[Path] = {
+    def listing(): Seq[Path] = {
+      val found = Seq.newBuilder[Path]
+      if (JFiles.exists(root, LinkOption.NOFOLLOW_LINKS))
+        JFiles.walkFileTree(root, new SimpleFileVisitor[Path] {
+          override def visitFile(p: Path, a: BasicFileAttributes) = { found += p; CONTINUE }
+          override def visitFileFailed(p: Path, e: IOException) = { found += p; CONTINUE }
+          override def postVisitDirectory(p: Path, e: IOException) = { found += p; CONTINUE }
+        })
+      found.result()
+    }
+    @tailrec def pass(entries: Seq[Path], before: Int): Seq[Path] =
+      if (entries.isEmpty || entries.size >= before) entries
+      else {
+        entries.foreach(p => try delete(p) catch { case _: IOException => () })
+        pass(listing(), entries.size)
+      }
+    pass(listing(), Int.MaxValue)
   }
 
   /** Core count from `SPARK_GRAFT_CPUS`, or `default` when it is unset. */

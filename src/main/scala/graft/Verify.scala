@@ -1,5 +1,9 @@
 package graft
+
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,23 +19,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      // repartition(1), NOT coalesce(1): coalesce folds the ENTIRE plan
-      // into the single output task (no exchange), so a compute-heavy
-      // query runs on one core — at sf1 q60's 450M-pair levenshtein took
-      // >10 min single-threaded. repartition adds one tiny exchange and
-      // keeps the computation at the session's parallelism; only the
-      // parquet encode is single-task (the driver compare wants one file).
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // frames held outside a Caches scope (e.g. symDeleteLevenshtein's
-      // pre-grouping) would otherwise accumulate across the whole
-      // 85+-query session; Bench already clears per query
-      spark.catalog.clearCache()
-    }
+      .foreach { case (name, build) => dump(spark, name, build, sfDir, outDir) }
     // JSON string escape (Bench.jstr: backslash, quote, and ALL control
     // chars) — a tab or CR in builder-authored SQL would otherwise make
     // the driver's json.load fail and silently zero the round's correctness.
@@ -51,5 +39,28 @@ object Verify {
       Files.writeString(Paths.get(s"$outDir/$k.parquet.sql"), v)
     }
     spark.stop()
+  }
+
+  /** Writes query `name`'s result to `<outDir>/<name>.parquet`. A failure
+    * is reported on stderr and the dump goes on. The query runs inside one
+    * [[Caches.scoped]] block, so whatever it cached or checkpointed is
+    * released even when it fails (`clearCache` does not free checkpoint
+    * blocks); `clearCache` then drops what it held outside a scope.
+    */
+  private[graft] def dump(spark: SparkSession, name: String,
+                          build: (SparkSession, String) => DataFrame,
+                          sfDir: String, outDir: String): Unit = {
+    // repartition(1), NOT coalesce(1): coalesce folds the ENTIRE plan
+    // into the single output task (no exchange), so a compute-heavy
+    // query runs on one core — at sf1 q60's 450M-pair levenshtein took
+    // >10 min single-threaded. repartition adds one tiny exchange and
+    // keeps the computation at the session's parallelism; only the
+    // parquet encode is single-task (the oracle compare wants one file).
+    try Caches.scoped(build(spark, sfDir).repartition(1).write.mode("overwrite")
+      .parquet(s"$outDir/$name.parquet"))
+    catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    }
+    spark.catalog.clearCache()
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Formats
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -42,9 +43,6 @@ import org.apache.spark.sql.functions.col
   */
 object Compaction {
 
-  private def fileSystem(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-
   /** Data files in a directory: parquet parts, not checksums/markers. */
   private def dataFiles(fs: FileSystem, dir: Path): Array[Path] =
     fs.listStatus(dir).filter(_.isFile).map(_.getPath)
@@ -58,7 +56,7 @@ object Compaction {
     */
   def partitionFileCounts(spark: SparkSession, path: String,
                           partitionCol: String): Map[String, Int] = {
-    val fs = fileSystem(spark, path)
+    val fs = Formats.fileSystem(spark, path)
     val prefix = partitionCol + "="
     fs.listStatus(new Path(path))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
@@ -76,7 +74,7 @@ object Compaction {
     * work from scratch. Returns the restored partition directory names.
     */
   def recover(spark: SparkSession, path: String): Seq[String] = {
-    val fs = fileSystem(spark, path)
+    val fs = Formats.fileSystem(spark, path)
     val staging = new Path(path, "_compacting")
     if (!fs.exists(staging)) return Nil
     val oldRoot = new Path(staging, "old")
@@ -109,7 +107,7 @@ object Compaction {
       .filter(_._2 > maxFiles).keys.toSeq.sorted
     if (oversplit.isEmpty) return Nil
 
-    val fs = fileSystem(spark, path)
+    val fs = Formats.fileSystem(spark, path)
     val staging = new Path(path, "_compacting")
     val newRoot = new Path(staging, "new")
     val oldRoot = new Path(staging, "old")

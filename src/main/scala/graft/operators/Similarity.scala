@@ -226,26 +226,23 @@ object Similarity {
     * to pairs with >= 1 incoming member; pairs are (id_a < id_b)
     * normalized regardless of which side is incoming.
     *
-    * `incomingShingles` / `incomingBands`: a caller that ALSO stores the
-    * incoming side's shingles or band keys (nearDupSink stores bands per
-    * batch) can pass the frames it already built so the banding is
-    * planned ONCE and shared with the caller's store write. Must be
-    * exactly [[shingleSets]](incoming)/[[bandKeys]] output for the same
-    * parameters, already held by the caller. Only the banding reads
-    * them; verification shingles the candidates' text. Lifetimes of the
-    * frames held here follow [[graft.Caches]].
+    * `incomingBands`: a caller that ALSO stores the incoming side's band
+    * keys (nearDupSink stores bands per batch) can pass the frame it
+    * already built so the banding is planned ONCE and shared with the
+    * caller's store write. Must be exactly [[bandKeys]] output of the
+    * incoming side for the same parameters, already held by the caller.
+    * Only the banding reads it; verification shingles the candidates'
+    * text. Lifetimes of the frames held here follow [[graft.Caches]].
     */
   def minHashNearDupsIncremental(base: DataFrame, incoming: DataFrame,
                                  idCol: String, textCol: String,
                                  shingleN: Int, numSeeds: Int, rowsPerBand: Int,
                                  baseSignatures: Option[DataFrame] = None,
                                  baseBands: Option[DataFrame] = None,
-                                 incomingShingles: Option[DataFrame] = None,
                                  incomingBands: Option[DataFrame] = None): DataFrame = {
     // fused banding where the signatures aren't needed separately
     val incBands = incomingBands.getOrElse(Caches.hold(minHashBandKeys(
-      incomingShingles.getOrElse(shingleSets(incoming, idCol, textCol, shingleN)),
-      numSeeds, rowsPerBand)))
+      shingleSets(incoming, idCol, textCol, shingleN), numSeeds, rowsPerBand)))
     val bBands = baseBands.getOrElse(baseSignatures match {
       case Some(sig) => bandKeys(sig, rowsPerBand)
       case None =>

@@ -86,7 +86,7 @@ object DailyUpdate {
     // 2. incremental fact load with partitioned layout
     val factPath = s"$outDir/fact_events_clean"
     val clean = stages.head._2(spark, sfDir).withColumn("d", to_date(col("ts")))
-    val existing = try Some(Formats.readParquet(spark, factPath)) catch { case _: Throwable => None }
+    val existing = Formats.readTable(spark, factPath)
     // the prior facts' terminal ts, read ONCE before the append (one
     // bounded scalar action): it cuts the fact delta below AND the
     // raw-event delta the incremental first_acquisition stage consumes —
@@ -122,16 +122,14 @@ object DailyUpdate {
         val plan = observedPlan(spark, sfDir, name, build, existing.isDefined,
           prevTerminal, s"$outDir/$name").observe(obs, count(lit(1)).as("n"))
         if (name == "first_acquisition")
-          // the incremental plan READS the live state table — write-then-
-          // swap (the upsertSink contract) so the snapshot is never
-          // truncated before its replacement is fully materialized
-          writeSwap(plan, s"$outDir/$name")
+          // the incremental plan READS the live state table
+          Formats.replaceTable(plan, s"$outDir/$name")
         else plan.write.mode("overwrite").parquet(s"$outDir/$name")
         name -> obs.get("n").asInstanceOf[Long]
       }
     }).toMap
 
-    counts + ("fact_events_clean" -> Formats.readParquet(spark, factPath).count()) +
+    counts + ("fact_events_clean" -> spark.read.parquet(factPath).count()) +
       ("date_gaps_found" -> gaps)
   }
 
@@ -148,7 +146,9 @@ object DailyUpdate {
     * absent key's entire history is inside the delta). Gated
     * cross-engine as q144 (oracle = q04's rebuild SQL verbatim); the
     * equality is spec-pinned boundary ties included. Fresh out dirs
-    * (day 1) and every other stage fall through to the full rebuild.
+    * (day 1), a lost state table and every other stage fall through to
+    * the full rebuild; a state table a crash stranded mid-replace is
+    * restored first, and an unreadable one fails the run.
     */
   private def observedPlan(spark: SparkSession, sfDir: String, name: String,
                            build: (SparkSession, String) => DataFrame,
@@ -156,44 +156,16 @@ object DailyUpdate {
                            prevTerminal: Option[java.sql.Timestamp],
                            target: String): DataFrame =
     if (name != "first_acquisition" || !factsExisted) build(spark, sfDir)
-    else {
-      val state = try Some(Formats.readParquet(spark, target)) catch { case _: Throwable => None }
-      state match {
-        case None => build(spark, sfDir) // state lost/corrupt → rebuild
-        case Some(st) =>
-          val deltaFirsts = graft.operators.Dedup.firstByKey(
-              Incremental.deltaAfter(Tables(spark, sfDir).events, "ts", prevTerminal),
-              Seq("user_id", "event_type"), "ts", "event_id")
-            .select(col("user_id"), col("event_type"),
-              col("event_id").as("first_event_id"), col("ts").as("first_ts"))
-          Incremental.firstTouchInsert(st, deltaFirsts, Seq("user_id", "event_type"))
-      }
+    else Formats.readTable(spark, target) match {
+      case None => build(spark, sfDir) // state lost → rebuild
+      case Some(st) =>
+        val deltaFirsts = graft.operators.Dedup.firstByKey(
+            Incremental.deltaAfter(Tables(spark, sfDir).events, "ts", prevTerminal),
+            Seq("user_id", "event_type"), "ts", "event_id")
+          .select(col("user_id"), col("event_type"),
+            col("event_id").as("first_event_id"), col("ts").as("first_ts"))
+        Incremental.firstTouchInsert(st, deltaFirsts, Seq("user_id", "event_type"))
     }
-
-  /** Write-then-swap (the streaming `upsertSink` contract, batch form):
-    * materialize the replacement fully at `target.tmp`, stage the live
-    * snapshot to `target.old`, promote — a crash between the renames
-    * leaves a complete `.old` the next run restores. Required for any
-    * stage whose plan READS its own live table (the incremental
-    * first_acquisition); harmless (one extra rename) elsewhere.
-    */
-  private def writeSwap(df: DataFrame, targetPath: String): Unit = {
-    val spark = df.sparkSession
-    val target = new org.apache.hadoop.fs.Path(targetPath)
-    val tmp = new org.apache.hadoop.fs.Path(targetPath + ".tmp")
-    val old = new org.apache.hadoop.fs.Path(targetPath + ".old")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash recovery: a prior run died mid-swap (target staged to .old,
-    // tmp never promoted) — restore the full snapshot first
-    if (!fs.exists(target) && fs.exists(old))
-      require(fs.rename(old, target), s"failed to restore $old to $target")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(old, true)
-    if (fs.exists(target))
-      require(fs.rename(target, old), s"failed to stage $target to $old")
-    require(fs.rename(tmp, target), s"failed to promote $tmp to $target")
-    fs.delete(old, true)
-  }
 
   /** Gap-driven backfill — the reference's `backfill.py`, which loops
     * `check_table_for_date_gaps` → per-date delete+reload. Spark form:
@@ -209,18 +181,12 @@ object DailyUpdate {
     // null dates can't name a partition: isin(null) never matches, so they
     // would be "missing" forever — drop them rather than NPE in the sort
     val expected = full.select(col(dateCol)).where(col(dateCol).isNotNull).distinct()
-    // ONLY path-not-found means "empty target". Any other read failure
-    // (corrupt footer, transient FS error) must abort: treating it as
-    // empty would dynamic-overwrite EVERY partition — exactly the rewrite
-    // of history this function promises never to do.
-    val present =
-      try spark.read.parquet(targetPath).select(col(dateCol)).distinct()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.toLowerCase.contains("path does not exist") =>
-          expected.limit(0)
-      }
+    // ONLY an absent target is empty. Any other read failure (corrupt
+    // footer, transient FS error) aborts: treating it as empty would
+    // dynamic-overwrite EVERY partition — exactly the rewrite of history
+    // this function promises never to do.
+    val present = Formats.readTable(spark, targetPath)
+      .fold(expected.limit(0))(_.select(col(dateCol)).distinct())
     // bounded: calendar days in the backfill horizon
     val missing = expected.except(present).collect().map(_.getDate(0)).toSeq.sortBy(_.getTime)
     if (missing.nonEmpty)

@@ -7,7 +7,7 @@ import scala.reflect.ClassTag
 import graft.{Caches, Sessions}
 import graft.functions.TextFns
 import graft.operators.{Multimodal, Packing, Similarity, Sketches}
-import graft.sources.Tables
+import graft.sources.{Formats, Tables}
 import graft.streaming.StreamOps
 import graft.streaming.StreamOps.{Event, FunnelEvent}
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -859,11 +859,12 @@ object GateQueries {
 
     "q89_stream_recovery" -> { (s, d) =>
       // Crash-recovery, end to end from the checkpoint (StreamOpsSpec
-      // covers the .old restore within ONE query; this gate kills the
-      // QUERY itself): q78's fixture runs two of its three batches
-      // through upsertSink, the query is STOPPED, the mid-swap crash
-      // state is simulated (live snapshot renamed away to .old — exactly
-      // what a death between the two swap renames leaves), and a NEW
+      // covers the stranded-snapshot restore within ONE query; this gate
+      // kills the QUERY itself): q78's fixture runs two of its three
+      // batches through upsertSink, the query is STOPPED, the mid-swap
+      // crash state is simulated (live snapshot renamed away to
+      // `Formats.oldPath` — exactly what a death between the two swap
+      // renames leaves), and a NEW
       // query starts from the same checkpoint to process batch 3. The
       // restarted sink must first restore the stranded snapshot, then
       // merge the final batch; the result must equal the uninterrupted
@@ -893,19 +894,18 @@ object GateQueries {
         }
       }
       // the crash window: target promoted away but tmp never landed
-      val fs = new org.apache.hadoop.fs.Path(target)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      require(fs.rename(new org.apache.hadoop.fs.Path(target),
-        new org.apache.hadoop.fs.Path(target + ".old")),
-        "q89 fixture: failed to strand the snapshot at .old")
+      val fs = Formats.fileSystem(s, target)
+      val stranded = new org.apache.hadoop.fs.Path(Formats.oldPath(target))
+      require(fs.rename(new org.apache.hadoop.fs.Path(target), stranded),
+        s"q89 fixture: failed to strand the snapshot at $stranded")
       // restart from the SAME checkpoint; MemoryStream retains its data,
       // so the new query resumes from the last committed offset
       runStream(startSink()) { q =>
         input.addData(batch(2): _*)
         q.processAllAvailable()
       }
-      require(!fs.exists(new org.apache.hadoop.fs.Path(target + ".old")),
-        "q89: stranded .old snapshot must be cleaned up after recovery")
+      require(!fs.exists(stranded),
+        "q89: the stranded snapshot must be cleaned up after recovery")
       s.read.parquet(target)
         .select(col("id").as("user_id"), col("worth"))
     },

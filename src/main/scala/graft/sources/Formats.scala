@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -11,8 +12,62 @@ import org.apache.spark.sql.types.StructType
   * Readers always take an explicit schema: schema inference reads the data
   * twice and can silently drift between runs — never acceptable in a
   * pipeline at scale.
+  *
+  * It is also the one owner of tables that may not exist yet: every
+  * existence probe and rename in the engine goes through [[fileSystem]],
+  * a table the engine both reads and rewrites is read with [[readTable]]
+  * and replaced with [[replaceTable]].
   */
 object Formats {
+
+  /** The Hadoop `FileSystem` that serves `path` under the session's
+    * Hadoop configuration, so probes and renames work unchanged on
+    * hdfs:/s3a: paths, not just local disk.
+    */
+  def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Whether anything exists at `path`. */
+  def exists(spark: SparkSession, path: String): Boolean =
+    fileSystem(spark, path).exists(new Path(path))
+
+  /** Where [[replaceTable]] stages the live table while it promotes the
+    * replacement; a crash between its two renames leaves the complete
+    * previous table here and nothing at `path`.
+    */
+  def oldPath(path: String): String = s"$path.old"
+
+  /** The parquet table at `path`, or None when there is none. A table a
+    * crash left stranded at [[oldPath]] is first restored. A table that is
+    * present but unreadable fails with Spark's error, which names the
+    * path: treating it as absent would rebuild (or overwrite) it from
+    * scratch.
+    */
+  def readTable(spark: SparkSession, path: String): Option[DataFrame] = {
+    val fs = fileSystem(spark, path)
+    val (live, old) = (new Path(path), new Path(oldPath(path)))
+    if (!fs.exists(live) && fs.exists(old))
+      require(fs.rename(old, live), s"failed to restore $old to $live")
+    if (fs.exists(live)) Some(spark.read.parquet(path)) else None
+  }
+
+  /** Replaces the parquet table at `path` with `df`, also when `df` reads
+    * that table: `df` is written in full to `<path>.tmp`, the live table
+    * is moved to [[oldPath]], the replacement is promoted and the old
+    * table deleted. The live table is never truncated before its
+    * replacement is complete, and a crash between the renames leaves the
+    * whole previous table for [[readTable]] to restore.
+    */
+  def replaceTable(df: DataFrame, path: String): Unit = {
+    val fs = fileSystem(df.sparkSession, path)
+    val (live, tmp, old) = (new Path(path), new Path(s"$path.tmp"), new Path(oldPath(path)))
+    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    fs.delete(old, true)
+    if (fs.exists(live))
+      require(fs.rename(live, old), s"failed to stage $live to $old")
+    require(fs.rename(tmp, live), s"failed to promote $tmp to $live")
+    fs.delete(old, true)
+  }
 
   def readCsv(spark: SparkSession, path: String, schema: StructType,
               header: Boolean = true): DataFrame =
@@ -40,9 +95,6 @@ object Formats {
     df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*).parquet(path)
-
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Bucketed parquet table — the co-located-join layout for repeated big
     * joins on the same key (e.g. events⋈events, trades⋈ownership). Both

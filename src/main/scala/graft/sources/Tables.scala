@@ -10,19 +10,14 @@ import org.apache.spark.sql.functions._
   */
 final case class Tables(spark: SparkSession, dir: String) {
   /** The driver's fixtures carry NAIVE microsecond timestamps
-    * (isAdjustedToUTC=false). Spark 4 infers those as TIMESTAMP_NTZ by
-    * default, which poisons every downstream java.sql.Timestamp encoder
-    * and read-back (LocalDateTime where Timestamp is expected); with
-    * inference off they read as plain µs TIMESTAMP whose UTC instant
-    * equals the stored wall-clock — exactly how the DuckDB oracle reads
-    * the same files (every graft session pins session.timeZone=UTC).
-    * Set here like `nanosAsLong` below so the loader is correct in any
-    * caller-built session, not just the graft entry points.
+    * (isAdjustedToUTC=false). They read as plain µs TIMESTAMP whose UTC
+    * instant equals the stored wall-clock — exactly how the DuckDB oracle
+    * reads the same files — only in a session with
+    * `spark.sql.parquet.inferTimestampNTZ.enabled=false` and UTC session
+    * time, as `graft.Sessions.local` builds it; Spark 4's default would
+    * infer TIMESTAMP_NTZ and break every java.sql.Timestamp encoder.
     */
-  def table(name: String): DataFrame = {
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.read.parquet(s"$dir/$name.parquet")
-  }
+  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
 
   def region: DataFrame = table("region")
   def nation: DataFrame = table("nation")
@@ -31,19 +26,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   def part: DataFrame = table("part")
   def orders: DataFrame = table("orders")
   def lineitem: DataFrame = table("lineitem")
-  /** Older driver fixtures stored events.ts as TIMESTAMP(NANOS), which
-    * Spark's parquet reader rejects by default: read nanos as long and
-    * truncate to microseconds — the exact conversion other µs-native
-    * engines (DuckDB) apply. Current fixtures carry a microsecond
-    * TIMESTAMP (naive; see `table` above) and pass through unchanged.
-    */
-  def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val t = table("events")
-    if (t.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      t.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else t
-  }
+  def events: DataFrame = table("events")
   def documents: DataFrame = table("documents")
   def embeddings: DataFrame = table("embeddings")
 

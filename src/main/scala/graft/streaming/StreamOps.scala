@@ -3,7 +3,8 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.Caches
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import graft.sources.Formats
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -280,7 +281,6 @@ object StreamOps {
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import graft.operators.Similarity
-        import graft.sources.Formats
         val spark = batch.sparkSession
         // The closure's work is ordinary BATCH queries, but they run on
         // the stream's CLONED session, where ResolveWriteToStream turned
@@ -351,8 +351,7 @@ object StreamOps {
   private[streaming] def nearDupBase(spark: SparkSession, storeDir: String, batchId: Long,
                                      docsSchema: StructType, bandsSchema: StructType)
       : Option[(DataFrame, DataFrame)] = {
-    val docsPath = new org.apache.hadoop.fs.Path(s"$storeDir/docs")
-    if (!docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(docsPath)) None
+    if (!Formats.exists(spark, s"$storeDir/docs")) None
     else {
       def read(store: String, schema: StructType): DataFrame =
         spark.read.schema(schema.add("batch_id", LongType)).parquet(s"$storeDir/$store")
@@ -374,17 +373,11 @@ object StreamOps {
     * `address_metadata`); fact-sized targets belong in
     * `Formats.writePartitioned` appends instead.
     *
-    * Filesystem contract: all probes/renames go through the Hadoop
-    * `FileSystem` resolved from `targetPath` (as `nearDupSink` does), so
-    * the sink works unchanged on hdfs:/s3a: paths, not just local disk.
-    *
-    * Crash safety of the swap: the swap sequence is
-    * `write tmp → (target → .old) → (tmp → target) → delete .old`. A
-    * crash between the two renames leaves no `target` but a complete
-    * `.old`; on the next batch the sink RESTORES `.old` to `target`
-    * before merging, so the replayed batch merges into the full prior
-    * snapshot rather than rebuilding from one batch (and `.old` is only
-    * deleted after `tmp → target` has succeeded).
+    * Each batch reads the snapshot with [[Formats.readTable]] and writes
+    * the merge back with [[Formats.replaceTable]]: a crash between the
+    * swap's two renames leaves the full prior snapshot, which the next
+    * batch restores before merging, so the replayed batch never rebuilds
+    * the snapshot from itself alone.
     */
   def upsertSink(updates: DataFrame, targetPath: String, updateKey: String,
                  setCols: Map[String, String],
@@ -402,31 +395,14 @@ object StreamOps {
         val aqePrev = spark.conf.get(aqeKey, "true")
         spark.conf.set(aqeKey, "true")
         try {
-        val target = new org.apache.hadoop.fs.Path(targetPath)
-        val tmp = new org.apache.hadoop.fs.Path(targetPath + ".tmp")
-        val old = new org.apache.hadoop.fs.Path(targetPath + ".old")
-        val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // crash recovery: a prior run died mid-swap (target moved to .old,
-        // tmp not yet promoted) — restore the full snapshot first
-        if (!fs.exists(target) && fs.exists(old)) {
-          require(fs.rename(old, target), s"failed to restore $old to $target")
-        }
-        val merged =
-          if (!fs.exists(target))
-            batch.select(col(updateKey).as("id") +:
+          val merged = Formats.readTable(spark, targetPath) match {
+            case None => batch.select(col(updateKey).as("id") +:
               setCols.toSeq.sortBy(_._1).map { case (t, s) => col(s).as(t) }: _*)
-          else graft.operators.Merge.coalesceMerge(
-              spark.read.parquet(targetPath), batch, "id", updateKey, setCols)
-            .drop("is_new", "updated")
-        // write-then-swap: the live snapshot is never truncated before the
-        // replacement is fully materialized
-        merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        fs.delete(old, true)
-        if (fs.exists(target)) {
-          require(fs.rename(target, old), s"failed to stage $target to $old")
-        }
-        require(fs.rename(tmp, target), s"failed to promote $tmp to $target")
-        fs.delete(old, true)
+            case Some(live) => graft.operators.Merge.coalesceMerge(
+                live, batch, "id", updateKey, setCols)
+              .drop("is_new", "updated")
+          }
+          Formats.replaceTable(merged, targetPath)
         } finally spark.conf.set(aqeKey, aqePrev)
         ()
       }

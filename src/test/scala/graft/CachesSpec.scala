@@ -72,4 +72,14 @@ class CachesSpec extends SparkSpec {
     assert(user.count() == 2L)
     userRdd.unpersist(blocking = true)
   }
+
+  test("Verify's per-query step releases what a failing query checkpointed") {
+    dropAllCaches()
+    val out = java.nio.file.Files.createTempDirectory(Sessions.scratchRoot, "graft-verify-dump")
+    Verify.dump(spark, "q0_failing", { (s, _) =>
+      Caches.checkpoint(s.range(0, 100, 1, 2).toDF())
+      throw new IllegalStateException("injected query failure")
+    }, "unused", out.toString)
+    assert(nothingCached, s"left ${spark.sparkContext.getPersistentRDDs.size} persisted RDDs")
+  }
 }

@@ -31,6 +31,22 @@ class EntrySpec extends AnyFunSuite {
       s"non-contiguous query numbers: ${(1 to nums.max).diff(nums.sorted)} missing")
   }
 
+  test("SPARK_GRAFT_SF_DIR must name a directory and SPARK_GRAFT_BENCH_OUT must not be blank") {
+    val dir = java.nio.file.Files.createTempDirectory(Sessions.scratchRoot, "graft-bench-env")
+    val sf = dir.toString
+    Bench.checkPaths(sf, "out.json")
+    val file = java.nio.file.Files.writeString(dir.resolve("f"), "x").toString
+    for (bad <- Seq(s"$sf/missing", file, "")) {
+      val err = intercept[IllegalArgumentException](Bench.checkPaths(bad, "out.json"))
+      assert(err.getMessage.contains("SPARK_GRAFT_SF_DIR") && err.getMessage.contains(s"'$bad'"),
+        err.getMessage)
+    }
+    for (bad <- Seq("", "  ")) {
+      val err = intercept[IllegalArgumentException](Bench.checkPaths(sf, bad))
+      assert(err.getMessage.contains("SPARK_GRAFT_BENCH_OUT"), err.getMessage)
+    }
+  }
+
   test("bench detail: a failed per-core copy does not misreport the written primary file") {
     val dir = java.nio.file.Files.createTempDirectory(Sessions.scratchRoot, "graft-bench-detail")
     val primary = dir.resolve("detail.json").toString

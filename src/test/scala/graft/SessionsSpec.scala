@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Paths
+import java.nio.file.{AccessDeniedException, Files, Paths}
 
 class SessionsSpec extends SparkSpec {
 
@@ -23,5 +23,36 @@ class SessionsSpec extends SparkSpec {
     val cpus = SparkTestSession.cpus
     assert(spark.sparkContext.master == s"local[$cpus]")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == cpus.toString)
+  }
+
+  test("deleteRecursively deletes past a directory that is not empty when its delete runs") {
+    val root = Files.createTempDirectory(Sessions.scratchRoot, "graft-delete-late")
+    val late = Files.createDirectories(root.resolve("a/b"))
+    Files.writeString(late.resolve("part-0"), "x")
+    Files.writeString(root.resolve("a/sibling"), "y")
+    var injected = false
+    val left = Sessions.deleteRecursively(root, { p =>
+      // a task writes into b after the tree was listed
+      if (p == late && !injected) {
+        injected = true
+        Files.writeString(late.resolve("part-1"), "z")
+      }
+      Files.deleteIfExists(p): Unit
+    })
+    assert(injected)
+    assert(left.isEmpty && !Files.exists(root), left)
+  }
+
+  test("deleteRecursively deletes everything it can and returns the rest") {
+    val root = Files.createTempDirectory(Sessions.scratchRoot, "graft-delete-stuck")
+    val stuck = Files.writeString(Files.createDirectories(root.resolve("a")).resolve("stuck"), "x")
+    Files.writeString(root.resolve("a/gone"), "y")
+    Files.writeString(Files.createDirectories(root.resolve("b")).resolve("gone"), "z")
+    val left = Sessions.deleteRecursively(root, { p =>
+      if (p == stuck) throw new AccessDeniedException(p.toString)
+      Files.deleteIfExists(p): Unit
+    })
+    assert(left.toSet == Set(stuck, root.resolve("a"), root))
+    assert(!Files.exists(root.resolve("a/gone")) && !Files.exists(root.resolve("b")))
   }
 }

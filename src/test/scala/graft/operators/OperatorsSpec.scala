@@ -171,9 +171,9 @@ class IncrementalNearDupSpec extends SparkSpec {
     }
   }
 
-  test("caller-supplied incomingShingles/incomingBands change nothing (r14 sink sharing)") {
-    // the sink passes the exact shingleSets/bandKeys frames it stores; the
-    // result must be bit-identical to letting the operator build them
+  test("caller-supplied incomingBands change nothing (sink sharing)") {
+    // the sink passes the exact bandKeys frame it stores; the result must
+    // be bit-identical to letting the operator build it
     val docs = (
       (1L until 30L).map(i => (i, s"w$i x$i y$i z$i common tail words here now then")) :+
         (101L, "w7 x7 y7 z7 common tail words here now then")
@@ -185,7 +185,7 @@ class IncrementalNearDupSpec extends SparkSpec {
     val sh = Similarity.shingleSets(incoming, "doc_id", "text", 3).cache()
     val bands = Similarity.bandKeys(Similarity.minHashSignatures(sh, 12), 3).cache()
     val shared = Similarity.minHashNearDupsIncremental(base, incoming, "doc_id", "text",
-      3, 12, 3, incomingShingles = Some(sh), incomingBands = Some(bands))
+      3, 12, 3, incomingBands = Some(bands))
       .collect().map(_.toSeq).toSet
     sh.unpersist(); bands.unpersist()
     assert(shared == own && shared.nonEmpty)

@@ -1,11 +1,13 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
+import graft.sources.Formats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 class DailyUpdateSpec extends SparkSpec {
+  private val sf = "/root/testdata/sf0.001"
 
   test("full daily chain runs end-to-end and is idempotent") {
     val out = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-daily").toString
@@ -59,6 +61,51 @@ class DailyUpdateSpec extends SparkSpec {
       .as[(Long, String, Long, java.sql.Timestamp)].collect().toSet
     assert(got == rebuilt, "incremental output diverged from the rebuild")
     assert(r2("first_acquisition") == rebuilt.size + 1L) // rebuild + sentinel
+  }
+
+  test("a first_acquisition state stranded mid-replace is restored before day 2 reads it") {
+    // the q144 planted-row fixture, then a crash between replaceTable's
+    // two renames: the live state is gone, the whole of it sits at the
+    // old path. Read as absent, day 2 would rebuild and erase the row.
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val ev = graft.sources.Tables(spark, sf).events
+    val mm = ev.agg(min(col("ts")), max(col("ts"))).collect()(0)
+    val split = new java.sql.Timestamp(
+      (mm.getTimestamp(0).getTime + mm.getTimestamp(1).getTime) / 2)
+    val root = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-stranded")
+    ev.where(col("ts") <= lit(split)).write.parquet(s"$root/day1/events.parquet")
+    ev.write.parquet(s"$root/day2/events.parquet")
+    val out = s"$root/out"
+    val state = s"$out/first_acquisition"
+    val stage = DailyUpdate.stages.filter(_._1 == "first_acquisition")
+    DailyUpdate.run(spark, s"$root/day1", out, stage)
+    Seq((-999L, "__planted", -1L, split))
+      .toDF("user_id", "event_type", "first_event_id", "first_ts")
+      .write.mode("append").parquet(state)
+    val stranded = Paths.get(Formats.oldPath(state))
+    Files.move(Paths.get(state), stranded)
+    DailyUpdate.run(spark, s"$root/day2", out, stage)
+    assert(spark.read.parquet(state).where(col("user_id") === -999L).count() == 1L,
+      "planted state row erased — day 2 did not restore the stranded state")
+    assert(!Files.exists(stranded))
+  }
+
+  test("an unreadable fact table fails the run with an error naming its path") {
+    val out = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-corrupt").toString
+    val stage = DailyUpdate.stages.filter(_._1 == "first_acquisition")
+    DailyUpdate.run(spark, sf, out, stage)
+    // a non-parquet file named to sort first, so it is the file the
+    // read's schema inference opens
+    val facts = Paths.get(s"$out/fact_events_clean")
+    val firstDay = {
+      val days = Files.list(facts)
+      try days.filter(_.getFileName.toString.startsWith("d=")).sorted.findFirst.get
+      finally days.close()
+    }
+    Files.writeString(firstDay.resolve("0-not-parquet.parquet"), "not parquet")
+    val err = intercept[Exception](DailyUpdate.run(spark, sf, out, stage))
+    assert(err.getMessage.contains(facts.toString), err.getMessage)
   }
 
   test("a failing stage cancels its siblings' jobs before run rethrows") {

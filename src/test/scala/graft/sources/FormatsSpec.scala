@@ -62,16 +62,30 @@ class FormatsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("readTable restores a stranded table; replaceTable rewrites a table from its own read") {
+    val t = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-table").toString + "/t"
+    def ids = Formats.readTable(spark, t).get.as[Long].collect().sorted.toSeq
+    assert(Formats.readTable(spark, t).isEmpty)
+    Formats.replaceTable(Seq(1L, 2L).toDF("id"), t)
+    Formats.replaceTable(Formats.readTable(spark, t).get.select((col("id") * 10).as("id")), t)
+    assert(ids == Seq(10L, 20L))
+    // a crash between the swap's renames leaves the whole table at oldPath
+    val stranded = java.nio.file.Paths.get(Formats.oldPath(t))
+    Files.move(java.nio.file.Paths.get(t), stranded)
+    assert(ids == Seq(10L, 20L))
+    assert(!Files.exists(stranded))
+  }
+
   test("partitioned write prunes partitions on read") {
     val dir = Files.createTempDirectory(graft.Sessions.scratchRoot, "graft-part").toString
     val df = Seq((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0))
       .toDF("id", "day", "v")
     Formats.writePartitioned(df, s"$dir/t", Seq("day"))
-    val pruned = Formats.readParquet(spark, s"$dir/t").where(col("day") === "2024-01-01")
+    val pruned = Formats.readTable(spark, s"$dir/t").get.where(col("day") === "2024-01-01")
     assert(pruned.select("id").as[Long].collect().toSeq == Seq(1L))
     // dynamic overwrite replaces only the touched partition
     Formats.writePartitioned(Seq((3L, "2024-01-02", 9.0)).toDF("id", "day", "v"), s"$dir/t", Seq("day"))
-    val all = Formats.readParquet(spark, s"$dir/t").select("id").as[Long].collect().sorted
+    val all = Formats.readTable(spark, s"$dir/t").get.select("id").as[Long].collect().sorted
     assert(all.toSeq == Seq(1L, 3L))
   }
 

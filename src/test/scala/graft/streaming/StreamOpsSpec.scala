@@ -175,19 +175,18 @@ class StreamOpsSpec extends SparkSpec {
     try {
       input.addData((1L, 10.0), (2L, 20.0))
       q.processAllAvailable()
-      // simulate a crash between `target → .old` and `tmp → target`: the
-      // live snapshot is gone, the full prior state is stranded at .old
-      val fs = new org.apache.hadoop.fs.Path(target)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(fs.rename(new org.apache.hadoop.fs.Path(target),
-        new org.apache.hadoop.fs.Path(target + ".old")))
+      // simulate a crash between the swap's two renames: the live
+      // snapshot is gone, the full prior state is stranded at .old
+      val fs = graft.sources.Formats.fileSystem(spark, target)
+      val stranded = new org.apache.hadoop.fs.Path(graft.sources.Formats.oldPath(target))
+      assert(fs.rename(new org.apache.hadoop.fs.Path(target), stranded))
       input.addData((3L, 30.0))
       q.processAllAvailable()
       // without recovery the batch would rebuild from itself: only row 3
       val rows = spark.read.parquet(target).select("id", "worth")
         .as[(Long, Double)].collect().toSet
       assert(rows == Set((1L, 10.0), (2L, 20.0), (3L, 30.0)))
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(target + ".old")))
+      assert(!fs.exists(stranded))
     } finally q.stop()
   }
 
