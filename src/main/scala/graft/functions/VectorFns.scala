@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ArrayMath
 
@@ -27,11 +27,36 @@ object VectorFns {
 
   def norm2(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity; computed as dot/(|a|*|b|) in double, matching the
-    * DuckDB `list_cosine_similarity` formula.
+  /** Cosine similarity of `a` and `b` from their precomputed norms `an`
+    * and `bn`, rounded to 6 decimals: dot/(|a|*|b|) in double (the DuckDB
+    * `list_cosine_similarity` formula). Every cosine the embedding family
+    * ranks on is this one, so ties and thresholds replay in any engine.
+    * Callers compute the norms once per vector, before any pair join.
     */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm2(a) * norm2(b))
+  def cosine(a: Column, an: Column, b: Column, bn: Column): Column =
+    Portable.q6(dot(a, b) / (an * bn))
+
+  /** Squared L2 distance rounded to 6 decimals: the ordered left-to-right
+    * fold of squared component deltas (the PQ `dist2` contract), so any
+    * engine replays it bit-for-bit.
+    */
+  def dist2(u: Column, v: Column): Column =
+    Portable.q6(aggregate(zip_with(u, v, (a, b) => (a - b) * (a - b)),
+      lit(0.0), (acc, y) => acc + y))
+
+  /** The (shortest, longest) vector length in `vecCol`: one bounded 1-row
+    * aggregate. A frame with no (non-null) vectors reads (0, 0). When
+    * vectors exist and every one is empty, fails naming `op`: an empty
+    * vector has no cosine, projection or subspace.
+    */
+  def dims(emb: DataFrame, vecCol: String, op: String): (Int, Int) = {
+    val r = emb.agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
+    if (r.isNullAt(1)) (0, 0)
+    else {
+      require(r.getInt(1) >= 1, s"$op needs non-empty vectors (every $vecCol is empty)")
+      (r.getInt(0), r.getInt(1))
+    }
+  }
 
   /** Driver-side mirror of `HashFns.md5Long(s, 1) % 2 == 0` — the first
     * md5 hex char's parity, as a ±1.0 sign. Must stay value-identical to
@@ -61,7 +86,7 @@ object VectorFns {
     * strict `proj > 0` bit rule and index-ordered fold — are unchanged.
     * `dim` must be ≥ every row's vector length (shorter rows slice the
     * sign row; a LONGER row would zip against null signs and poison the
-    * fold, hence derived as max(size) by callers — the Quantize contract).
+    * fold, hence derived by callers as the longest length from [[dims]]).
     */
   def srpBucket(v: Column, nBits: Int, seed: String, dim: Int): Column = {
     require(dim >= 1, s"srpBucket needs dim >= 1, got $dim")

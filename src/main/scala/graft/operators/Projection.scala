@@ -43,17 +43,16 @@ object Projection {
 
   /** Project every vector to `outDim` components; output exploded as
     * (idCol, out_pos, component) with component quantized to 6 decimals.
-    * All vectors must share one dimension (checked).
+    * All vectors must share one non-zero dimension (checked); a frame
+    * with no rows projects to no rows.
     */
   def randomProject(emb: DataFrame, idCol: String, vecCol: String,
                     outDim: Int, salt: String): DataFrame = {
     require(outDim >= 1, "outDim must be >= 1")
     // bounded scalar collect (dim check + matrix sizing), never row data
-    val d = emb.agg(max(size(col(vecCol))).as("mx"), min(size(col(vecCol))).as("mn"))
-      .collect()(0)
-    val inDim = d.getAs[Int]("mx")
-    require(inDim == d.getAs[Int]("mn"),
-      s"vectors must share one dimension (saw ${d.getAs[Int]("mn")}..$inDim)")
+    val (shortest, inDim) = VectorFns.dims(emb, vecCol, "randomProject")
+    require(inDim == shortest,
+      s"randomProject: vectors must share one dimension (saw $shortest..$inDim)")
     val signs = typedLit(signMatrix(outDim, inDim, salt))
     emb.select(col(idCol), VectorFns.asDouble(col(vecCol)).as("__v"))
       .select(col(idCol), posexplode(transform(signs, (row: Column) =>

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.{Portable, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al. 2011) — the embedding-compression
@@ -41,23 +40,25 @@ object Quantize {
     */
   def seededCodebook(emb: DataFrame, idCol: String, vecCol: String,
                      nSub: Int, nCodes: Int): DataFrame =
-    subVectors(emb.where(col(idCol) < nCodes), idCol, vecCol, nSub)
+    slices(emb.where(col(idCol) < nCodes), idCol, vecCol, nSub, "seededCodebook")
       .select(col("sub"), col(idCol).cast("int").as("code"),
         col("subvec").as("cent"))
 
   /** (idCol, sub, subvec) rows: each vector split into `nSub` equal
     * slices (dimension must divide evenly — checked via one bounded
-    * scalar aggregate, the [[Projection]] contract).
+    * scalar aggregate, [[VectorFns.dims]]).
     */
   def subVectors(emb: DataFrame, idCol: String, vecCol: String,
-                 nSub: Int): DataFrame = {
+                 nSub: Int): DataFrame =
+    slices(emb, idCol, vecCol, nSub, "subVectors")
+
+  /** [[subVectors]], failing in the name of the operator `op` that asked. */
+  private def slices(emb: DataFrame, idCol: String, vecCol: String,
+                    nSub: Int, op: String): DataFrame = {
     require(nSub >= 1, "nSub must be >= 1")
-    val d = emb.agg(max(size(col(vecCol))).as("mx"), min(size(col(vecCol))).as("mn"))
-      // bounded: 1-row min/max-dimension scalar
-      .collect()(0)
-    val inDim = d.getAs[Int]("mx")
-    require(inDim == d.getAs[Int]("mn") && inDim % nSub == 0,
-      s"vectors must share one dimension divisible by $nSub (saw ${d.getAs[Int]("mn")}..$inDim)")
+    val (shortest, inDim) = VectorFns.dims(emb, vecCol, op)
+    require(inDim == shortest && inDim % nSub == 0,
+      s"$op: vectors must share one dimension divisible by $nSub (saw $shortest..$inDim)")
     val subDim = inDim / nSub
     emb.select(col(idCol), VectorFns.asDouble(col(vecCol)).as("__v"))
       .select(col(idCol), posexplode(transform(sequence(lit(0), lit(nSub - 1)),
@@ -65,12 +66,6 @@ object Quantize {
       .select(col(idCol), col("pos").cast("int").as("sub"), col("col").as("subvec"))
   }
 
-  /** Encode every vector against `codebook` (sub, code, cent): output
-    * (idCol, codes — "_"-joined code string in subspace order,
-    * recon_err — q6 exact-integer-grid sum of the chosen subspace
-    * distances; each dist2 is already q6-grid-valued, so the long sum
-    * is EXACT, not merely deterministic).
-    */
   /** ADC (asymmetric distance computation) top-k over stored PQ codes —
     * the SEARCH half of IVF-PQ serving ([[pqEncode]] is the build half):
     * each query precomputes one q6 subspace distance to every codebook
@@ -112,30 +107,76 @@ object Quantize {
               codebook: DataFrame, nSub: Int, nCodes: Int, k: Int,
               excludeSelf: Boolean = false): DataFrame = {
     require(nCodes >= 1 && k >= 1, "adcTopK needs nCodes >= 1 and k >= 1")
-    val lut = adcLut(queries, qidCol, qvecCol, codebook, nSub, nCodes)
-    val codeArr = col("__codes")
-    val perQuery = lut.map { case (q, arr) =>
-      val lutLit = array(arr.toSeq.map(lit): _*)
-      // each cell is q6-grid-valued, so the long sum is exact (class doc)
-      val gridSum = aggregate(
-        sequence(lit(0), lit(nSub - 1)),
-        lit(0L),
-        (acc: Column, j: Column) => acc +
-          floor(element_at(lutLit, j * nCodes + element_at(codeArr, j + 1) + 1)
-            * lit(1000000.0) + lit(0.5)).cast("long"))
-      struct(lit(q).as("query_id"),
-        Portable.q6(gridSum.cast("double") / lit(1000000.0)).as("adc_dist"))
+    val perQuery = adcLut(queries, qidCol, qvecCol, codebook, nSub, nCodes).map {
+      case (q, arr) =>
+        val lutLit = array(arr.toSeq.map(lit): _*)
+        struct(lit(q).as("query_id"),
+          adcDist(nSub, nCodes, cell => element_at(lutLit, cell + 1)).as("adc_dist"))
     }
     val scored = codes
       .select(col(idCol).cast("long").as("neighbor_id"),
         checkedCodes(codesCol, nSub, nCodes).as("__codes"))
       .select(col("neighbor_id"), explode(array(perQuery: _*)).as("s"))
       .select(col("s.query_id"), col("neighbor_id"), col("s.adc_dist"))
+    adcRank(scored, excludeSelf, k)
+  }
+
+  /** The ADC distance of a row whose parsed codes are in `__codes`: the
+    * exact integer-grid sum over subspaces j of the LUT cell
+    * `cell(j * nCodes + code_j)` (a 0-based index into one query's
+    * nSub × nCodes table). Each cell is q6-grid-valued, so the long sum
+    * is EXACT in any order (class doc).
+    */
+  private def adcDist(nSub: Int, nCodes: Int, cell: Column => Column): Column = {
+    val gridSum = aggregate(
+      sequence(lit(0), lit(nSub - 1)),
+      lit(0L),
+      (acc: Column, j: Column) => acc +
+        floor(cell(j * nCodes + element_at(col("__codes"), j + 1))
+          * lit(1000000.0) + lit(0.5)).cast("long"))
+    Portable.q6(gridSum.cast("double") / lit(1000000.0))
+  }
+
+  /** The tail every ADC search shares: drop self-pairs if asked, drop
+    * null distances (defense in depth — corruption already raises in
+    * [[checkedCodes]], and a NULLS FIRST null would rank 1), and keep
+    * each query's top `k` by (adc_dist asc, neighbor_id asc).
+    */
+  private def adcRank(scored: DataFrame, excludeSelf: Boolean, k: Int): DataFrame = {
     val candidates =
       if (excludeSelf) scored.where(col("neighbor_id") =!= col("query_id"))
       else scored
     Rankings.topKPerGroup(candidates.where(col("adc_dist").isNotNull),
       Seq("query_id"), Seq(col("adc_dist").asc, col("neighbor_id").asc), k)
+  }
+
+  /** ADC over the codes of probed lists — the scoring half of
+    * [[ivfAdcTopK]] and [[ivfAdcResidualTopK]]. `probes` maps each
+    * list (`listCol`) to its (query_id, `lutKey`) rows; `lut` holds one
+    * table per `lutKey` value. The candidate cut is ONE broadcast join
+    * of the code table against `probes`, so rows of unprobed lists are
+    * dropped before any scoring; scoring reads the tables through one
+    * literal map keyed by lutKey × cells + cell (map-shaped because the
+    * key is a COLUMN after the probe join), still a codegen'd
+    * projection.
+    */
+  private def routedAdc(codes: DataFrame, idCol: String, codesCol: String,
+                        listCol: String, probes: DataFrame, lutKey: String,
+                        lut: Seq[(Long, Array[Double])], nSub: Int, nCodes: Int,
+                        k: Int, excludeSelf: Boolean): DataFrame = {
+    val cells = nSub * nCodes
+    val lutMap = map_from_arrays(
+      array(lut.flatMap { case (key, arr) =>
+        arr.indices.map(i => lit(key * cells + i)) }: _*),
+      array(lut.flatMap(_._2.toSeq).map(lit): _*))
+    val scored = codes
+      .select(col(idCol).cast("long").as("neighbor_id"), col(listCol),
+        checkedCodes(codesCol, nSub, nCodes).as("__codes"))
+      .join(broadcast(probes), Seq(listCol))
+      .select(col("query_id"), col("neighbor_id"),
+        adcDist(nSub, nCodes, cell => element_at(lutMap, col(lutKey) * cells + cell))
+          .as("adc_dist"))
+    adcRank(scored, excludeSelf, k)
   }
 
   /** Hard cap on literal-LUT cells (nQueries × nSub × nCodes): the LUT
@@ -153,28 +194,21 @@ object Quantize {
 
   /** Coarse probe routing shared by [[ivfAdcTopK]] and
     * [[ivfAdcResidualTopK]] (and gated by both of their driver rows):
-    * rank the broadcast centroid table by q6 cosine per query, keep the
-    * `nProbe` nearest. Emits (query_id, centroid_id, __qv, centv) so
+    * each query's `nProbe` nearest centroids
+    * ([[Similarity.nearestCentroids]]). Emits (query_id, centroid_id, __qv, centv) so
     * the raw-code caller can project the list keys and the residual
     * caller can subtract centv from __qv — the two routed searches
     * share routing code exactly the way their oracles share
     * IvfRouteCte.
     */
   private def probeRoutes(queries: DataFrame, qidCol: String, qvecCol: String,
-                          centroids: DataFrame, nProbe: Int): DataFrame = {
-    val cents = centroids.select(col("centroid_id"), col("centv"))
-      .withColumn("__cn", VectorFns.norm2(col("centv")))
-    queries.select(col(qidCol).cast("long").as("query_id"),
-        VectorFns.asDouble(col(qvecCol)).as("__qv"))
-      .withColumn("__qn", VectorFns.norm2(col("__qv")))
-      .crossJoin(broadcast(cents))
-      .withColumn("__sim", Portable.q6(
-        VectorFns.dot(col("__qv"), col("centv")) / (col("__qn") * col("__cn"))))
-      .withColumn("__pr", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("__sim").desc, col("centroid_id").asc)))
-      .where(col("__pr") <= nProbe)
+                          centroids: DataFrame, nProbe: Int): DataFrame =
+    Similarity.nearestCentroids(
+        queries.select(col(qidCol).cast("long").as("query_id"),
+            VectorFns.asDouble(col(qvecCol)).as("__qv"))
+          .withColumn("__qn", VectorFns.norm2(col("__qv"))),
+        "query_id", "__qv", "__qn", centroids, nProbe)
       .select(col("query_id"), col("centroid_id"), col("__qv"), col("centv"))
-  }
 
   /** The per-query ADC lookup table ([[adcTopK]] / [[ivfAdcTopK]]'s
     * shared precompute): one q6 ordered-fold distance per (query,
@@ -193,14 +227,11 @@ object Quantize {
         s"($nQ queries × $nSub × $nCodes > $MaxLutCells) — the literal-LUT " +
         "plan would bloat codegen; chunk the probe panel or score through " +
         "a broadcast-joined LUT table instead")
-    val qd = Portable.q6(aggregate(
-      zip_with(col("subvec"), col("cent"), (a: Column, b: Column) => (a - b) * (a - b)),
-      lit(0.0), (acc: Column, y: Column) => acc + y))
     // bounded: nQueries × nSub × nCodes rows, capped above — the fixed
     // LUT ADC exists to precompute
     val lutRows = subVectors(queries, qidCol, qvecCol, nSub)
       .join(broadcast(codebook), Seq("sub"))
-      .select(col(qidCol).cast("long").as("qid"), col("sub"), col("code"), qd.as("qd"))
+      .select(col(qidCol).cast("long").as("qid"), col("sub"), col("code"), VectorFns.dist2(col("subvec"), col("cent")).as("qd"))
       .collect()
     require(lutRows.nonEmpty, "ADC: empty query set")
     // a dim-mismatched codebook makes zip_with pad the short side with
@@ -274,11 +305,9 @@ object Quantize {
     * the candidate cut is ONE broadcast semi-cross join of the code
     * table against the (nQueries × nProbe)-row probe frame, so corpus
     * rows in unprobed lists are dropped before any scoring; scoring
-    * reads a literal (query, cell)-keyed LUT map (the [[adcTopK]]
-    * contract, map-shaped because query_id is a COLUMN after the
-    * probe join), still a codegen'd projection with an exact
-    * integer-grid sum. The only data-sized shuffle is the final
-    * per-query top-k.
+    * reads a literal (query, cell)-keyed LUT map ([[routedAdc]]),
+    * still a codegen'd projection with an exact integer-grid sum. The
+    * only data-sized shuffle is the final per-query top-k.
     */
   def ivfAdcTopK(codes: DataFrame, idCol: String, codesCol: String,
                  listCol: String, queries: DataFrame, qidCol: String,
@@ -288,35 +317,10 @@ object Quantize {
     require(nProbe >= 1 && nCodes >= 1 && k >= 1,
       "ivfAdcTopK needs nProbe >= 1, nCodes >= 1 and k >= 1")
     val lut = adcLut(queries, qidCol, qvecCol, codebook, nSub, nCodes)
-    val cellsPerQ = nSub * nCodes
-    val lutMap = map_from_arrays(
-      array(lut.flatMap { case (q, arr) =>
-        arr.indices.map(i => lit(q * cellsPerQ + i)) }: _*),
-      array(lut.flatMap(_._2.toSeq).map(lit): _*))
     val probes = probeRoutes(queries, qidCol, qvecCol, centroids, nProbe)
       .select(col("query_id"), col("centroid_id").as(listCol))
-    val codeArr = col("__codes")
-    // each LUT cell is q6-grid-valued, so the long sum is exact
-    val gridSum = aggregate(
-      sequence(lit(0), lit(nSub - 1)),
-      lit(0L),
-      (acc: Column, j: Column) => acc +
-        floor(element_at(lutMap,
-            col("query_id") * cellsPerQ + j * nCodes + element_at(codeArr, j + 1))
-          * lit(1000000.0) + lit(0.5)).cast("long"))
-    val scored = codes
-      .select(col(idCol).cast("long").as("neighbor_id"), col(listCol),
-        checkedCodes(codesCol, nSub, nCodes).as("__codes"))
-      .join(broadcast(probes), Seq(listCol))
-      .select(col("query_id"), col("neighbor_id"),
-        Portable.q6(gridSum.cast("double") / lit(1000000.0)).as("adc_dist"))
-    val candidates =
-      if (excludeSelf) scored.where(col("neighbor_id") =!= col("query_id"))
-      else scored
-    // corruption raises in checkedCodes before scoring; the null-drop
-    // stays as defense in depth against a NULLS FIRST rank-1 garbage row
-    Rankings.topKPerGroup(candidates.where(col("adc_dist").isNotNull),
-      Seq("query_id"), Seq(col("adc_dist").asc, col("neighbor_id").asc), k)
+    routedAdc(codes, idCol, codesCol, listCol, probes, "query_id", lut,
+      nSub, nCodes, k, excludeSelf)
   }
 
   /** Residual frame for IVF-PQ residual encoding (Jégou et al. 2011
@@ -395,33 +399,8 @@ object Quantize {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.DoubleType)))))
     val lut = adcLut(qres, "__ql", "__rqv", resCodebook, nSub, nCodes)
-    val cellsPerQl = nSub * nCodes
-    val lutMap = map_from_arrays(
-      array(lut.flatMap { case (ql, arr) =>
-        arr.indices.map(i => lit(ql * cellsPerQl + i)) }: _*),
-      array(lut.flatMap(_._2.toSeq).map(lit): _*))
-    val codeArr = col("__codes")
-    // each LUT cell is q6-grid-valued, so the long sum is exact
-    val gridSum = aggregate(
-      sequence(lit(0), lit(nSub - 1)),
-      lit(0L),
-      (acc: Column, j: Column) => acc +
-        floor(element_at(lutMap,
-            col("__ql") * cellsPerQl + j * nCodes + element_at(codeArr, j + 1))
-          * lit(1000000.0) + lit(0.5)).cast("long"))
-    val scored = codes
-      .select(col(idCol).cast("long").as("neighbor_id"), col(listCol),
-        checkedCodes(codesCol, nSub, nCodes).as("__codes"))
-      .join(broadcast(probeIdx), Seq(listCol))
-      .select(col("query_id"), col("neighbor_id"),
-        Portable.q6(gridSum.cast("double") / lit(1000000.0)).as("adc_dist"))
-    val candidates =
-      if (excludeSelf) scored.where(col("neighbor_id") =!= col("query_id"))
-      else scored
-    // corruption raises in checkedCodes before scoring (adcTopK doc);
-    // the null-drop stays as defense in depth
-    Rankings.topKPerGroup(candidates.where(col("adc_dist").isNotNull),
-      Seq("query_id"), Seq(col("adc_dist").asc, col("neighbor_id").asc), k)
+    routedAdc(codes, idCol, codesCol, listCol, probeIdx, "__ql", lut,
+      nSub, nCodes, k, excludeSelf)
   }
 
   /** ADC-shortlist + EXACT-refine top-k — the serving cascade's last
@@ -458,12 +437,10 @@ object Quantize {
       VectorFns.asDouble(col(qvecCol)).as("__qv"))
     val c = emb.select(col(idCol).cast("long").as("neighbor_id"),
       VectorFns.asDouble(col(evecCol)).as("__cv"))
-    val d2 = Portable.q6(aggregate(
-      zip_with(col("__qv"), col("__cv"), (a: Column, b: Column) => (a - b) * (a - b)),
-      lit(0.0), (acc: Column, y: Column) => acc + y))
     val refined = c.join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), d2.as("l2_dist"))
+      .select(col("query_id"), col("neighbor_id"),
+        VectorFns.dist2(col("__qv"), col("__cv")).as("l2_dist"))
     Rankings.topKPerGroup(refined, Seq("query_id"),
       Seq(col("l2_dist").asc, col("neighbor_id").asc), k)
   }
@@ -487,50 +464,35 @@ object Quantize {
   def trainCodebook(emb: DataFrame, idCol: String, vecCol: String,
                     nSub: Int, nCodes: Int, iters: Int): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    val spark = emb.sparkSession
-    val sv = subVectors(emb, idCol, vecCol, nSub)
+    val sv = slices(emb, idCol, vecCol, nSub, "trainCodebook")
     var cb = seededCodebook(emb, idCol, vecCol, nSub, nCodes)
-    val dist2 = Portable.q6(aggregate(
-      zip_with(col("subvec"), col("cent"), (a: Column, b: Column) => (a - b) * (a - b)),
-      lit(0.0), (acc: Column, y: Column) => acc + y))
-    for (_ <- 0 until iters) {
-      val w = Window.partitionBy(col(idCol), col("sub"))
-        .orderBy(col("dist2").asc, col("code").asc)
-      val best = sv.join(broadcast(cb), Seq("sub"))
-        .withColumn("dist2", dist2)
-        .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-      val means = best
-        .select(col("sub"), col("code"), posexplode(col("subvec")).as(Seq("pos", "x")))
-        // 1e-6-rounded means: the kMeansCentroids replay contract
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(Portable.q6(avg(col("x"))).as("m"))
-        .groupBy(col("sub"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          e => e.getField("m")).as("cent"))
-      val updated = cb.alias("c0").join(means.alias("m"), Seq("sub", "code"), "left")
-        .select(col("sub"), col("code"),
-          coalesce(col("m.cent"), col("c0.cent")).as("cent"))
-      // bounded: the nSub × nCodes codebook table (driver literal, the
-      // kMeansCentroids contract — keeps per-iteration lineage flat)
-      val rows = updated.collect()
-      import scala.jdk.CollectionConverters._
-      cb = spark.createDataFrame(rows.toSeq.asJava, updated.schema)
-    }
+    for (_ <- 0 until iters)
+      cb = Similarity.lloydStep(cb, nearestCodes(sv, idCol, cb),
+        Seq("sub", "code"), "subvec", "cent")
     cb
   }
 
+  /** Each (idCol, sub) subvector of `sv` ([[subVectors]] rows) with its
+    * nearest `codebook` cell (sub, code, cent) and that cell's q6
+    * squared-L2 distance `dist2`, ties to the lower code: the one encode
+    * rule [[pqEncode]] stores and [[trainCodebook]] trains by.
+    */
+  private def nearestCodes(sv: DataFrame, idCol: String, codebook: DataFrame): DataFrame =
+    Dedup.oneByKey(
+      sv.join(broadcast(codebook), Seq("sub"))
+        .withColumn("dist2", VectorFns.dist2(col("subvec"), col("cent"))),
+      Seq(idCol, "sub"), Seq(col("dist2").asc, col("code").asc))
+
+  /** Encode every vector against `codebook` (sub, code, cent): output
+    * (idCol, codes — "_"-joined code string in subspace order,
+    * recon_err — q6 exact-integer-grid sum of the chosen subspace
+    * distances; each dist2 is already q6-grid-valued, so the long sum
+    * is EXACT, not merely deterministic).
+    */
   def pqEncode(emb: DataFrame, idCol: String, vecCol: String, nSub: Int,
-               codebook: DataFrame): DataFrame = {
-    val dist2 = Portable.q6(aggregate(
-      zip_with(col("subvec"), col("cent"), (a: Column, b: Column) => (a - b) * (a - b)),
-      lit(0.0), (acc: Column, y: Column) => acc + y))
-    val w = Window.partitionBy(col(idCol), col("sub"))
-      .orderBy(col("dist2").asc, col("code").asc)
-    val best = subVectors(emb, idCol, vecCol, nSub)
-      .join(broadcast(codebook), Seq("sub"))
-      .withColumn("dist2", dist2)
-      .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-    best.groupBy(col(idCol))
+               codebook: DataFrame): DataFrame =
+    nearestCodes(slices(emb, idCol, vecCol, nSub, "pqEncode"), idCol, codebook)
+      .groupBy(col(idCol))
       .agg(
         // the code STRING is a sequence — subspace order is its
         // semantics, so this (nSub-bounded) gather cannot be a sum
@@ -542,5 +504,4 @@ object Quantize {
         array_join(transform(col("__picks"),
           (x: Column) => x.getField("code").cast("string")), "_").as("codes"),
         Portable.q6(col("__qerr").cast("double") / lit(1000000.0)).as("recon_err"))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{Portable, TextFns}
+import graft.functions.{Portable, TextFns, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -162,8 +162,8 @@ object Retrieval {
     */
   def cosineScores(cands: DataFrame, queryIdCol: String, docIdCol: String,
                    emb: DataFrame, embIdCol: String, vecCol: String): DataFrame = {
-    val e = emb.select(col(embIdCol), graft.functions.VectorFns.asDouble(col(vecCol)).as("__v"))
-      .withColumn("__n", graft.functions.VectorFns.norm2(col("__v")))
+    val e = emb.select(col(embIdCol), VectorFns.asDouble(col(vecCol)).as("__v"))
+      .withColumn("__n", VectorFns.norm2(col("__v")))
     val ce = e.select(col(embIdCol).as(docIdCol), col("__v").as("__cv"), col("__n").as("__cn"))
     val qe = e.join(cands.select(col(queryIdCol).as(embIdCol)).distinct(),
         Seq(embIdCol), "left_semi")
@@ -171,9 +171,8 @@ object Retrieval {
     cands.where(col(docIdCol) =!= col(queryIdCol))
       .join(ce, Seq(docIdCol))
       .join(broadcast(qe), Seq(queryIdCol))
-      .withColumn("cosine", Portable.q6(
-        graft.functions.VectorFns.dot(col("__qv"), col("__cv")) /
-          (col("__qn") * col("__cn"))))
+      .withColumn("cosine",
+        VectorFns.cosine(col("__qv"), col("__qn"), col("__cv"), col("__cn")))
       .drop("__qv", "__qn", "__cv", "__cn")
   }
 

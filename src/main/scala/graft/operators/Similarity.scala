@@ -413,7 +413,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        Portable.q6(VectorFns.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
+        VectorFns.cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("cosine"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
@@ -424,10 +424,10 @@ object Similarity {
     * auditing ADC against cosine truth would conflate metric mismatch
     * with quantization loss). Same scale shape as [[cosineTopK]]: the
     * probe panel broadcasts, per-pair work is one fused fold, the
-    * per-query top-k plans as WindowGroupLimit. The distance is the q6
-    * ORDERED fold of squared component deltas (the [[Quantize]] dist2
-    * contract over the full vector) with an id tiebreak, so any engine
-    * replays the ranking bit-for-bit; self-pairs are excluded.
+    * per-query top-k plans as WindowGroupLimit. The distance is
+    * [[VectorFns.dist2]] (the [[Quantize]] dist2 contract over the full
+    * vector) with an id tiebreak, so any engine replays the ranking
+    * bit-for-bit; self-pairs are excluded.
     */
   def l2TopK(queries: DataFrame, corpus: DataFrame, idCol: String,
              vecCol: String, k: Int): DataFrame = {
@@ -435,41 +435,114 @@ object Similarity {
       VectorFns.asDouble(col(vecCol)).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"),
       VectorFns.asDouble(col(vecCol)).as("cv"))
-    val d2 = Portable.q6(aggregate(
-      zip_with(col("qv"), col("cv"), (a: Column, b: Column) => (a - b) * (a - b)),
-      lit(0.0), (acc: Column, y: Column) => acc + y))
     val scored = c.crossJoin(broadcast(q))
       .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), d2.as("l2_dist"))
+      .select(col("query_id"), col("neighbor_id"),
+        VectorFns.dist2(col("qv"), col("cv")).as("l2_dist"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("l2_dist").asc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 
+  /** `df` as (extra…, id, v: array<double>, vn = |v|): the shape the
+    * pair search and the centroid steps below read.
+    */
+  private def normed(df: DataFrame, idCol: String, vecCol: String,
+                     extra: Column*): DataFrame =
+    df.select(extra :+ col(idCol).as("id") :+ VectorFns.asDouble(col(vecCol)).as("v"): _*)
+      .withColumn("vn", VectorFns.norm2(col("v")))
+
+  /** Every pair (a, b) with a.id < b.id that agrees on all of `blocks`,
+    * with its rounded cosine: the within-block pair search of the
+    * embedding near-dup family. `vecs` is a [[normed]] frame carrying the
+    * block columns; output is the block columns, id_a, id_b, cosine. Pair
+    * work is Σ bᵢ² over block sizes, never the corpus square.
+    */
+  private def pairsWithin(vecs: DataFrame, blocks: Seq[String]): DataFrame =
+    vecs.as("a").join(vecs.as("b"),
+        blocks.map(b => col(s"a.$b") === col(s"b.$b")).reduce(_ && _) &&
+          col("a.id") < col("b.id"))
+      .select(blocks.map(b => col(s"a.$b").as(b)) ++ Seq(
+        col("a.id").as("id_a"), col("b.id").as("id_b"),
+        VectorFns.cosine(col("a.v"), col("a.vn"), col("b.v"), col("b.vn")).as("cosine")): _*)
+
   /** Embedding near-dup pairs within a blocking key (exact within block). */
   def nearDupWithin(emb: DataFrame, idCol: String, vecCol: String,
-                    blockCol: String, minCosine: Double): DataFrame = {
-    val e = emb.select(col(blockCol).as("block"), col(idCol).as("id"),
-        VectorFns.asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", VectorFns.norm2(col("v")))
-    e.as("a").join(e.as("b"), col("a.block") === col("b.block") && col("a.id") < col("b.id"))
-      .select(col("a.block").as("block"), col("a.id").as("id_a"), col("b.id").as("id_b"),
-        Portable.q6(VectorFns.dot(col("a.v"), col("b.v")) /
-          (col("a.nrm") * col("b.nrm"))).as("cosine"))
+                    blockCol: String, minCosine: Double): DataFrame =
+    pairsWithin(normed(emb, idCol, vecCol, col(blockCol).as("block")), Seq("block"))
       .where(col("cosine") >= minCosine)
+
+  /** The `k` lowest-id vectors as a centroid table (centroid_id, centv:
+    * array<double>): the deterministic seeds of IVF routing and k-means.
+    * centroid_id stays the id at its ORIGINAL width: a cast("int") would
+    * wrap ids above 2^31 (or fail under ANSI mode) and wrapped ids can
+    * collide, silently merging distinct seed centroids.
+    */
+  private[graft] def seedCentroids(emb: DataFrame, idCol: String, vecCol: String,
+                                   k: Int): DataFrame =
+    emb.select(col(idCol).as("centroid_id"), VectorFns.asDouble(col(vecCol)).as("centv"))
+      .orderBy(col("centroid_id").asc).limit(k)
+
+  /** Every row of `vecs` with its `n` nearest `centroids` (centroid_id,
+    * centv): rounded cosine desc, then centroid_id asc — the one routing
+    * rule of IVF assignment and probing, k-means and SemDeDup (the
+    * oracles' KMeansAsgnCte / IvfRouteCte). `vecs` holds a vector in `v`
+    * and its norm in `vn`; output is `vecs`' columns plus centroid_id and
+    * centv, `n` rows per `key`. One broadcast of the centroid table; the
+    * per-key cut plans as a WindowGroupLimit.
+    */
+  private[operators] def nearestCentroids(vecs: DataFrame, key: String, v: String,
+                                          vn: String, centroids: DataFrame,
+                                          n: Int): DataFrame = {
+    val cents = centroids.select(col("centroid_id"), col("centv"))
+      .withColumn("__cn", VectorFns.norm2(col("centv")))
+    Rankings.topKPerGroup(
+        vecs.crossJoin(broadcast(cents))
+          .withColumn("__sim", VectorFns.cosine(col(v), col(vn), col("centv"), col("__cn"))),
+        Seq(key), Seq(col("__sim").desc, col("centroid_id").asc), n)
+      .drop("__cn", "__sim", "rnk")
+  }
+
+  /** One Lloyd update, shared by [[kMeansCentroids]] and
+    * [[Quantize.trainCodebook]]: each cell of `table` (keyed by `keys`,
+    * its vector in `centCol`) becomes the element-wise mean of the
+    * `vecCol` vectors `assigned` to it. Means are ROUNDED (1e-6): a raw
+    * double avg depends on summation order, so two engines (or two
+    * partitionings) could diverge by an ulp and flip a knife-edge
+    * assignment; rounding makes a trained trajectory replay
+    * value-for-value (q75's and q149's oracles unroll the same
+    * iterations in DuckDB). A cell with no members keeps its previous
+    * vector. The next table — cells × dim doubles, bounded — is pulled
+    * to the driver and re-planned as a literal, which keeps the
+    * per-iteration lineage flat instead of iteration-deep.
+    */
+  private[operators] def lloydStep(table: DataFrame, assigned: DataFrame,
+                                   keys: Seq[String], vecCol: String,
+                                   centCol: String): DataFrame = {
+    val means = assigned
+      .select(keys.map(col) :+ posexplode(col(vecCol)).as(Seq("pos", "x")): _*)
+      .groupBy((keys :+ "pos").map(col): _*).agg(Portable.q6(avg(col("x"))).as("m"))
+      .groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+        e => e.getField("m")).as(centCol))
+    val updated = table.alias("c0").join(means.alias("m"), keys, "left")
+      .select(keys.map(col) :+
+        coalesce(col(s"m.$centCol"), col(s"c0.$centCol")).as(centCol): _*)
+    // bounded: the cells × dim table
+    val rows = updated.collect()
+    import scala.jdk.CollectionConverters._
+    table.sparkSession.createDataFrame(rows.toSeq.asJava, updated.schema)
   }
 
   /** IVF (inverted-file) approximate top-k with deterministic seed
-    * centroids (the `numCentroids` lowest-id corpus vectors). For trained
-    * centroids, pass [[kMeansCentroids]] output to [[ivfTopKWith]].
+    * centroids ([[seedCentroids]]: the `numCentroids` lowest-id corpus
+    * vectors). For trained centroids, pass [[kMeansCentroids]] output to
+    * [[ivfTopKWith]].
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-              k: Int, numCentroids: Int, nProbe: Int): DataFrame = {
-    val seeds = corpus
-      .select(col(idCol).as("centroid_id"), VectorFns.asDouble(col(vecCol)).as("centv"))
-      .orderBy(col("centroid_id").asc).limit(numCentroids)
-    ivfTopKWith(queries, corpus, idCol, vecCol, k, nProbe, seeds)
-  }
+              k: Int, numCentroids: Int, nProbe: Int): DataFrame =
+    ivfTopKWith(queries, corpus, idCol, vecCol, k, nProbe,
+      seedCentroids(corpus, idCol, vecCol, numCentroids))
 
   /** IVF approximate top-k against a caller-supplied centroid table
     * (centroid_id, centv: array<double>): corpus vectors are
@@ -479,91 +552,60 @@ object Similarity {
     * sides; the only shuffle is the final per-query top-k window. Recall
     * < 1 by construction. All similarity comparisons (assignment argmax,
     * probe ranking, final top-k) rank on ROUNDED cosine with id
-    * tiebreaks, so the result is reproducible across engines.
+    * tiebreaks ([[nearestCentroids]]), so the result is reproducible
+    * across engines.
     */
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
                   k: Int, nProbe: Int, centroids: DataFrame): DataFrame = {
-    val cents = centroids.select(col("centroid_id"), col("centv"))
-      .withColumn("centn", VectorFns.norm2(col("centv")))
     val c = corpus.select(col(idCol).as("neighbor_id"), VectorFns.asDouble(col(vecCol)).as("cv"))
       .withColumn("cn", VectorFns.norm2(col("cv")))
     // corpus → nearest centroid (inverted lists)
-    val assigned = Dedup.oneByKey(
-      c.crossJoin(broadcast(cents))
-        .withColumn("sim",
-          Portable.q6(VectorFns.dot(col("cv"), col("centv")) / (col("cn") * col("centn")))),
-      Seq("neighbor_id"), Seq(col("sim").desc, col("centroid_id").asc))
-      .select(col("neighbor_id"), col("cv"), col("cn"), col("centroid_id"))
+    val assigned = nearestCentroids(c, "neighbor_id", "cv", "cn", centroids, 1)
+      .drop("centv")
     // query → nProbe nearest centroids
     val q = queries.select(col(idCol).as("query_id"), VectorFns.asDouble(col(vecCol)).as("qv"))
       .withColumn("qn", VectorFns.norm2(col("qv")))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("sim",
-        Portable.q6(VectorFns.dot(col("qv"), col("centv")) / (col("qn") * col("centn"))))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("centroid_id").asc)))
-      .where(col("__pr") <= nProbe)
-      .select(col("query_id"), col("qv"), col("qn"), col("centroid_id"))
+    val probes = nearestCentroids(q, "query_id", "qv", "qn", centroids, nProbe)
+      .drop("centv")
     val scored = probes.join(assigned, "centroid_id")
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        Portable.q6(VectorFns.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
+        VectorFns.cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("cosine"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 
   /** Deterministic Lloyd's k-means (cosine assignment, element-wise mean
-    * update) for IVF centroid training. Seeds are the k lowest-id vectors;
-    * each iteration assigns every vector to its nearest centroid (rounded
-    * cosine, centroid-id tiebreak — fully deterministic) and recomputes
-    * element-wise means. Per iteration the k × dim centroid table is
-    * pulled to the driver and re-broadcast (bounded driver state — same
-    * contract as the Incremental terminal-ts scalar), so the corpus is
-    * scanned `iters` times and never shuffled by more than a k-row
-    * aggregate. Returns (centroid_id, centv: array<double>).
+    * update) for IVF centroid training. Seeds are the k lowest-id vectors
+    * ([[seedCentroids]]); each iteration assigns every vector to its
+    * nearest centroid ([[nearestCentroids]]: rounded cosine, centroid-id
+    * tiebreak — fully deterministic) and takes one [[lloydStep]], which
+    * pulls the k × dim centroid table to the driver and re-broadcasts it
+    * (bounded driver state — same contract as the Incremental
+    * terminal-ts scalar), so the corpus is scanned `iters` times and
+    * never shuffled by more than a k-row aggregate. Returns (centroid_id,
+    * centv: array<double>).
     */
   def kMeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                       k: Int, iters: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    val c = corpus.select(col(idCol).as("vid"), VectorFns.asDouble(col(vecCol)).as("v"))
-      .withColumn("vn", VectorFns.norm2(col("v")))
-    // centroid_id stays the seed vector's id at its ORIGINAL width: a
-    // cast("int") would wrap ids above 2^31 (or fail under ANSI mode) and
-    // wrapped ids can collide, silently merging distinct seed centroids
-    var cents = c.orderBy(col("vid").asc).limit(k)
-      .select(col("vid").as("centroid_id"), col("v").as("centv"))
-    for (_ <- 0 until iters) {
-      val withN = cents.withColumn("centn", VectorFns.norm2(col("centv")))
-      val assigned = Dedup.oneByKey(
-        c.crossJoin(broadcast(withN))
-          .withColumn("sim",
-            Portable.q6(VectorFns.dot(col("v"), col("centv")) / (col("vn") * col("centn")))),
-        Seq("vid"), Seq(col("sim").desc, col("centroid_id").asc))
-      val means = assigned
-        .select(col("centroid_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        // means are ROUNDED (1e-6) before becoming the next iteration's
-        // centroids: raw double avg depends on summation order, so two
-        // engines (or two partitionings) could diverge by an ulp and flip
-        // a knife-edge assignment. Rounding makes the whole trained
-        // pipeline replayable value-for-value — q75's oracle re-runs the
-        // identical unrolled iterations in DuckDB.
-        .groupBy(col("centroid_id"), col("pos")).agg(Portable.q6(avg(col("x"))).as("m"))
-        .groupBy(col("centroid_id"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          e => e.getField("m")).as("centv"))
-      // empty clusters keep their previous centroid (means has no row)
-      val updated = cents.alias("c0").join(means.alias("m"), Seq("centroid_id"), "left")
-        .select(col("centroid_id"),
-          coalesce(col("m.centv"), col("c0.centv")).as("centv"))
-      // k × dim doubles to the driver, re-planned as a literal table: keeps
-      // the per-iteration lineage flat instead of k-deep
-      // bounded: the k × dim centroid table
-      val rows = updated.collect()
-      import scala.jdk.CollectionConverters._
-      cents = spark.createDataFrame(rows.toSeq.asJava, updated.schema)
-    }
-    cents.select(col("centroid_id"), col("centv"))
+    val c = normed(corpus, idCol, vecCol)
+    var cents = seedCentroids(corpus, idCol, vecCol, k)
+    for (_ <- 0 until iters)
+      cents = lloydStep(cents, nearestCentroids(c, "id", "v", "vn", cents, 1),
+        Seq("centroid_id"), "v", "centv")
+    cents
   }
+
+  /** Assign every vector to its nearest centroid ([[nearestCentroids]]:
+    * rounded cosine, centroid-id tiebreak) — the step [[semDedupWith]] /
+    * [[ivfTopKWith]] share, exposed for cluster-scoped compositions
+    * (cluster-balanced sampling, per-cluster audits). One broadcast of
+    * the k×dim table; output (idCol, centroid_id).
+    */
+  def assignToCentroids(emb: DataFrame, idCol: String, vecCol: String,
+                        centroids: DataFrame): DataFrame =
+    nearestCentroids(normed(emb, idCol, vecCol), "id", "v", "vn", centroids, 1)
+      .select(col("id").as(idCol), col("centroid_id"))
 
   /** SemDeDup-style semantic deduplication: cluster the embedding space
     * with the trained k-means ([[kMeansCentroids]]), then search for
@@ -588,26 +630,6 @@ object Similarity {
     *
     * Output: (idCol, centroid_id, kept).
     */
-  /** Assign every vector to its nearest centroid (rounded cosine,
-    * centroid-id tiebreak) — the shared first step of [[semDedupWith]] /
-    * [[ivfTopKWith]], exposed for cluster-scoped compositions
-    * (cluster-balanced sampling, per-cluster audits). One broadcast of
-    * the k×dim table; output (idCol, centroid_id).
-    */
-  def assignToCentroids(emb: DataFrame, idCol: String, vecCol: String,
-                        centroids: DataFrame): DataFrame = {
-    val c = emb.select(col(idCol), VectorFns.asDouble(col(vecCol)).as("__v"))
-      .withColumn("__vn", VectorFns.norm2(col("__v")))
-    val withN = centroids.withColumn("__cn", VectorFns.norm2(col("centv")))
-    Dedup.oneByKey(
-        c.crossJoin(broadcast(withN))
-          .withColumn("__sim",
-            Portable.q6(VectorFns.dot(col("__v"), col("centv")) /
-              (col("__vn") * col("__cn")))),
-        Seq(idCol), Seq(col("__sim").desc, col("centroid_id").asc))
-      .select(col(idCol), col("centroid_id"))
-  }
-
   def semDedup(emb: DataFrame, idCol: String, vecCol: String,
                k: Int, iters: Int, minCosine: Double): DataFrame =
     semDedupWith(emb, idCol, vecCol,
@@ -615,23 +637,23 @@ object Similarity {
 
   /** [[semDedup]] against pre-trained centroids (centroid_id, centv). */
   def semDedupWith(emb: DataFrame, idCol: String, vecCol: String,
-                   centroids: DataFrame, minCosine: Double): DataFrame = {
-    val c = emb.select(col(idCol).as("vid"), VectorFns.asDouble(col(vecCol)).as("v"))
-      .withColumn("vn", VectorFns.norm2(col("v")))
-    val withN = centroids.withColumn("centn", VectorFns.norm2(col("centv")))
-    val assigned = Dedup.oneByKey(
-        c.crossJoin(broadcast(withN))
-          .withColumn("sim",
-            Portable.q6(VectorFns.dot(col("v"), col("centv")) / (col("vn") * col("centn")))),
-        Seq("vid"), Seq(col("sim").desc, col("centroid_id").asc))
-      .select(col("vid"), col("v"), col("vn"), col("centroid_id"))
-    val dropped = assigned.as("a").join(assigned.as("b"),
-        col("a.centroid_id") === col("b.centroid_id") && col("a.vid") < col("b.vid"))
-      .where(Portable.q6(VectorFns.dot(col("a.v"), col("b.v")) /
-        (col("a.vn") * col("b.vn"))) >= minCosine)
-      .select(col("b.vid").as("vid")).distinct()
-    assigned.join(dropped.withColumn("__dup", lit(true)), Seq("vid"), "left")
-      .select(col("vid").as(idCol), col("centroid_id"),
+                   centroids: DataFrame, minCosine: Double): DataFrame =
+    semDedupIn(normed(emb, idCol, vecCol), idCol, centroids, Seq.empty, minCosine)
+
+  /** The SemDeDup verdict over a [[normed]] frame: each vector joins its
+    * nearest centroid, pairs are searched within (centroid_id +:
+    * `subBlocks`) blocks, and a vector is dropped iff a lower-id vector
+    * of its block reaches `minCosine`. Output (idCol, centroid_id, kept),
+    * one row per input vector.
+    */
+  private def semDedupIn(vecs: DataFrame, idCol: String, centroids: DataFrame,
+                         subBlocks: Seq[String], minCosine: Double): DataFrame = {
+    val assigned = nearestCentroids(vecs, "id", "v", "vn", centroids, 1).drop("centv")
+    val dropped = pairsWithin(assigned, "centroid_id" +: subBlocks)
+      .where(col("cosine") >= minCosine)
+      .select(col("id_b").as("id")).distinct()
+    assigned.join(dropped.withColumn("__dup", lit(true)), Seq("id"), "left")
+      .select(col("id").as(idCol), col("centroid_id"),
         not(coalesce(col("__dup"), lit(false))).as("kept"))
   }
 
@@ -655,33 +677,14 @@ object Similarity {
   def semDedupSRP(emb: DataFrame, idCol: String, vecCol: String,
                   centroids: DataFrame, minCosine: Double,
                   srpBits: Int): DataFrame = {
-    // bounded: 1-row (min, max) dimension scalar — max sizes the
-    // driver-literal srp sign matrix, min rejects empty vectors (null
-    // aggregate = empty input, folded into the same require)
-    val dims = emb.agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
-    val minDim = Option(dims.get(0)).map(_.asInstanceOf[Int]).getOrElse(0)
-    val dim = Option(dims.get(1)).map(_.asInstanceOf[Int]).getOrElse(0)
-    require(minDim >= 1 && dim >= 1,
+    // the longest length sizes the driver-literal srp sign matrix; the
+    // shortest rejects empty vectors (an empty frame reads 0 and fails)
+    val (shortest, dim) = VectorFns.dims(emb, vecCol, "semDedupSRP")
+    require(shortest >= 1,
       "semDedupSRP needs non-empty vectors (an empty vector has no cosine)")
-    val c = emb.select(col(idCol).as("vid"), VectorFns.asDouble(col(vecCol)).as("v"))
-      .withColumn("vn", VectorFns.norm2(col("v")))
-      .withColumn("bucket", VectorFns.srpBucket(col("v"), srpBits, "srp-v1", dim))
-    val withN = centroids.withColumn("centn", VectorFns.norm2(col("centv")))
-    val assigned = Dedup.oneByKey(
-        c.crossJoin(broadcast(withN))
-          .withColumn("sim",
-            Portable.q6(VectorFns.dot(col("v"), col("centv")) / (col("vn") * col("centn")))),
-        Seq("vid"), Seq(col("sim").desc, col("centroid_id").asc))
-      .select(col("vid"), col("v"), col("vn"), col("centroid_id"), col("bucket"))
-    val dropped = assigned.as("a").join(assigned.as("b"),
-        col("a.centroid_id") === col("b.centroid_id") &&
-          col("a.bucket") === col("b.bucket") && col("a.vid") < col("b.vid"))
-      .where(Portable.q6(VectorFns.dot(col("a.v"), col("b.v")) /
-        (col("a.vn") * col("b.vn"))) >= minCosine)
-      .select(col("b.vid").as("vid")).distinct()
-    assigned.join(dropped.withColumn("__dup", lit(true)), Seq("vid"), "left")
-      .select(col("vid").as(idCol), col("centroid_id"),
-        not(coalesce(col("__dup"), lit(false))).as("kept"))
+    semDedupIn(normed(emb, idCol, vecCol)
+        .withColumn("bucket", VectorFns.srpBucket(col("v"), srpBits, "srp-v1", dim)),
+      idCol, centroids, Seq("bucket"), minCosine)
   }
 
   /** Scale path for near-dup: SRP-bucket first (candidates only within the
@@ -690,13 +693,9 @@ object Similarity {
     */
   def nearDupSRP(emb: DataFrame, idCol: String, vecCol: String, blockCol: String,
                  minCosine: Double, srpBits: Int): DataFrame = {
-    // bounded: 1-row max-dimension scalar (the Quantize contract) — sizes
-    // the driver-literal srp sign matrix so no row zips past it. Read
-    // null-safely: on empty input (or all-null vectors) max() is NULL and
-    // a bare getInt would NPE before the contract message fired (ADVICE
-    // r11) — fold the null into the require instead.
-    val dim = Option(emb.agg(max(size(col(vecCol)))).head().get(0))
-      .map(_.asInstanceOf[Int]).getOrElse(0)
+    // the longest length sizes the driver-literal srp sign matrix so no
+    // row zips past it; an empty frame reads 0 and fails the require
+    val (_, dim) = VectorFns.dims(emb, vecCol, "nearDupSRP")
     require(dim >= 1, "nearDupSRP needs non-empty vectors")
     // zero-length vectors are EXCLUDED, mirroring the oracle exactly: its
     // terms CTE has no row for an empty v, so the vector never reaches
@@ -705,17 +704,11 @@ object Similarity {
     // would PASS `>= minCosine` (Spark orders NaN above all doubles).
     // A pair with an empty side has no defined cosine; dropping it is the
     // only cross-engine-stable semantics (ADVICE r11).
-    val e = emb.where(size(col(vecCol)) >= 1)
-      .select(col(blockCol).as("block"), col(idCol).as("id"),
-        VectorFns.asDouble(col(vecCol)).as("v"))
+    val e = normed(emb.where(size(col(vecCol)) >= 1), idCol, vecCol,
+        col(blockCol).as("block"))
       .withColumn("bucket", VectorFns.srpBucket(col("v"), srpBits, "srp-v1", dim))
-      .withColumn("nrm", VectorFns.norm2(col("v")))
-    e.as("a").join(e.as("b"),
-        col("a.block") === col("b.block") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.block").as("block"), col("a.id").as("id_a"), col("b.id").as("id_b"),
-        Portable.q6(VectorFns.dot(col("a.v"), col("b.v")) /
-          (col("a.nrm") * col("b.nrm"))).as("cosine"))
+    pairsWithin(e, Seq("block", "bucket"))
       .where(col("cosine") >= minCosine)
+      .drop("bucket")
   }
 }

@@ -120,9 +120,7 @@ object CurationQueries {
       // PqCodesCte/lut scaffold.
       val emb = Tables(s, d).embeddings
       val cb = Quantize.seededCodebook(emb, "vec_id", "embedding", nSub = 8, nCodes = 16)
-      val cents = emb.select(col("vec_id").as("centroid_id"),
-          graft.functions.VectorFns.asDouble(col("embedding")).as("centv"))
-        .orderBy(col("centroid_id").asc).limit(8)
+      val cents = graft.operators.Similarity.seedCentroids(emb, "vec_id", "embedding", 8)
       val lists = graft.operators.Similarity.assignToCentroids(
         emb, "vec_id", "embedding", cents)
       val index = Quantize.pqEncode(emb, "vec_id", "embedding", nSub = 8, cb)
@@ -153,9 +151,7 @@ object CurationQueries {
       // shape on the residual base (shared pqEncodeCteOn), same
       // probe panel and k.
       val emb = Tables(s, d).embeddings
-      val cents = emb.select(col("vec_id").as("centroid_id"),
-          graft.functions.VectorFns.asDouble(col("embedding")).as("centv"))
-        .orderBy(col("centroid_id").asc).limit(8)
+      val cents = graft.operators.Similarity.seedCentroids(emb, "vec_id", "embedding", 8)
       val lists = graft.operators.Similarity.assignToCentroids(
         emb, "vec_id", "embedding", cents)
       val res = Quantize.residuals(emb, "vec_id", "embedding",
@@ -285,9 +281,7 @@ object CurationQueries {
       val adc = Quantize.adcTopK(codes, "vec_id", "codes", probes,
         "vec_id", "embedding", cb, nSub = 8, nCodes = 16, k = 10,
         excludeSelf = true)
-      val cents = emb.select(col("vec_id").as("centroid_id"),
-          graft.functions.VectorFns.asDouble(col("embedding")).as("centv"))
-        .orderBy(col("centroid_id").asc).limit(8)
+      val cents = Similarity.seedCentroids(emb, "vec_id", "embedding", 8)
       val lists = Similarity.assignToCentroids(emb, "vec_id", "embedding", cents)
       val ivf = Quantize.ivfAdcTopK(codes.join(lists, Seq("vec_id")),
         "vec_id", "codes", "centroid_id", probes, "vec_id", "embedding",

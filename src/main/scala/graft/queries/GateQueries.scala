@@ -1673,9 +1673,8 @@ object GateQueries {
       val emb = Tables(s, d).embeddings
       val cents = Similarity.kMeansCentroids(emb, "vec_id", "embedding",
         k = 16, iters = 3)
-      // bounded: 1-row max-dimension scalar (sizes the srp sign matrix)
-      val dim = Option(emb.agg(max(size(col("embedding")))).head().get(0))
-        .map(_.asInstanceOf[Int]).getOrElse(0)
+      // bounded: 1-row dimension scalar (sizes the srp sign matrix)
+      val (_, dim) = graft.functions.VectorFns.dims(emb, "embedding", "q143")
       require(dim >= 1, "q143: embeddings fixture must carry non-empty vectors")
       // bounded: 1-row max-distinct-buckets-per-cluster scalar (≤ 16 srp
       // buckets exist per cluster at 4 bits)

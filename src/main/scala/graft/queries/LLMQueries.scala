@@ -115,11 +115,9 @@ object LLMQueries {
       // The require pins the bucketing genuinely partitions at every
       // gated dir (one occupied bucket would make this row q29 again).
       val emb = Tables(s, d).embeddings
-      // bounded: 1-row max-dimension scalar (the Quantize contract);
-      // null-safe read so an empty fixture fails the require below with
-      // the contract message, not an NPE (ADVICE r11)
-      val dim = Option(emb.agg(max(size(col("embedding")))).head().get(0))
-        .map(_.asInstanceOf[Int]).getOrElse(0)
+      // bounded: 1-row dimension scalar; an empty fixture reads 0 and
+      // fails the require below with the contract message
+      val (_, dim) = graft.functions.VectorFns.dims(emb, "embedding", "q142")
       require(dim >= 1, "q142: embeddings fixture must carry non-empty vectors")
       // bounded: 1-row distinct-count scalar (≤ 2^srpBits buckets exist)
       val nBuckets = emb.select(graft.functions.VectorFns.srpBucket(

@@ -570,6 +570,40 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  test("pqEncode and a trainCodebook step break an exact code tie to the lower code") {
+    // codes 0 = (0, 0) and 1 = (2, 0); vector 2 = (1, 0) is 1.0 from both
+    val vecs = Seq((0L, Array(0f, 0f)), (1L, Array(2f, 0f)), (2L, Array(1f, 0f)))
+      .toDF("vec_id", "embedding")
+    val cb = Quantize.seededCodebook(vecs, "vec_id", "embedding", nSub = 1, nCodes = 2)
+    val codes = Quantize.pqEncode(vecs, "vec_id", "embedding", nSub = 1, cb)
+      .select("vec_id", "codes").as[(Long, String)].collect().toMap
+    assert(codes == Map(0L -> "0", 1L -> "1", 2L -> "0"))
+    // one step: code 0 averages {0, 2} to (0.5, 0); code 1 keeps (2, 0)
+    val trained = Quantize.trainCodebook(vecs, "vec_id", "embedding",
+        nSub = 1, nCodes = 2, iters = 1)
+      .select("code", "cent").as[(Int, Seq[Double])].collect().toMap
+    assert(trained == Map(0 -> Seq(0.5, 0.0), 1 -> Seq(2.0, 0.0)))
+  }
+
+  test("PQ fails naming the operator when every vector is empty; no rows encode to no rows") {
+    val vecs = Seq((0L, Array(1f, 2f)), (1L, Array(3f, 4f))).toDF("vec_id", "embedding")
+    val cb = Quantize.seededCodebook(vecs, "vec_id", "embedding", nSub = 2, nCodes = 2)
+    val empty = Seq((0L, Array.empty[Float]), (1L, Array.empty[Float]))
+      .toDF("vec_id", "embedding")
+    val failures = Seq[(String, () => Any)](
+      "pqEncode" -> (() => Quantize.pqEncode(empty, "vec_id", "embedding", 2, cb)),
+      "seededCodebook" -> (() =>
+        Quantize.seededCodebook(empty, "vec_id", "embedding", 2, 2)),
+      "trainCodebook" -> (() =>
+        Quantize.trainCodebook(empty, "vec_id", "embedding", 2, 2, iters = 1)))
+    failures.foreach { case (op, run) =>
+      val ex = intercept[IllegalArgumentException](run())
+      assert(ex.getMessage.contains(op) && ex.getMessage.contains("non-empty vectors"),
+        ex.getMessage)
+    }
+    assert(Quantize.pqEncode(vecs.limit(0), "vec_id", "embedding", 2, cb).count() == 0)
+  }
+
   // ---- Bpe.encodeCorpus -----------------------------------------------
 
   test("encodeCorpus reassembles per-word segmentations in document order") {
@@ -668,6 +702,32 @@ class CurationSpec extends SparkSpec {
     val out = Similarity.assignToCentroids(emb, "vec_id", "embedding", cents)
       .as[(Long, Long)].collect().toMap
     assert(out == Map(0L -> 0L, 1L -> 1L, 2L -> 0L, 3L -> 1L, 4L -> 0L))
+    // the same tie through every consumer of the routing rule: vector 4
+    // lands in (or probes) centroid 0's list everywhere
+    def verdicts(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "centroid_id").as[(Long, Long)].collect().toMap
+    assert(verdicts(Similarity.semDedupWith(emb, "vec_id", "embedding", cents, 0.99)) == out)
+    assert(verdicts(Similarity.semDedupSRP(emb, "vec_id", "embedding", cents, 0.99,
+      srpBits = 2)) == out)
+    // nProbe = 1: query 4 probes list 0 = {0, 2, 4}; query 2 finds 4 there
+    val q = emb.where(col("vec_id").isin(2L, 4L))
+    val ivf = Similarity.ivfTopKWith(q, emb, "vec_id", "embedding", k = 5,
+        nProbe = 1, centroids = cents)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    assert(ivf == Set(4L -> 0L, 4L -> 2L, 2L -> 0L, 2L -> 4L))
+    // one Lloyd iteration: list 0 = {0, 2, 4} averages to (7/3, 2/3)
+    val trained = Similarity.kMeansCentroids(emb, "vec_id", "embedding", k = 2, iters = 1)
+      .select("centroid_id", "centv").as[(Long, Seq[Double])].collect().toMap
+    assert(trained(0L) == Seq(2.333333, 0.666667) && trained(1L) == Seq(0.25, 2.5))
+    // IVF-PQ at nProbe = 1 routes query 4 to list 0 as well
+    val cb = Quantize.seededCodebook(emb, "vec_id", "embedding", nSub = 1, nCodes = 2)
+    val index = Quantize.pqEncode(emb, "vec_id", "embedding", nSub = 1, cb)
+      .join(Similarity.assignToCentroids(emb, "vec_id", "embedding", cents), Seq("vec_id"))
+    val adc = Quantize.ivfAdcTopK(index, "vec_id", "codes", "centroid_id",
+        emb.where(col("vec_id") === 4L), "vec_id", "embedding", cents, cb,
+        nSub = 1, nCodes = 2, nProbe = 1, k = 5, excludeSelf = true)
+      .select("neighbor_id").as[Long].collect().toSet
+    assert(adc == Set(0L, 2L))
   }
 
   // ---- Privacy.kAnonRelease -------------------------------------------

@@ -33,6 +33,18 @@ class ProjectionSpec extends graft.SparkSpec {
       .sameElements(0 until 6)))
   }
 
+  test("randomProject fails naming itself when every vector is empty; no rows project to no rows") {
+    val empty = Seq((0L, Array.empty[Float]), (1L, Array.empty[Float]))
+      .toDF("vec_id", "embedding")
+    val ex = intercept[IllegalArgumentException] {
+      Projection.randomProject(empty, "vec_id", "embedding", 4, "t")
+    }
+    assert(ex.getMessage.contains("randomProject") &&
+      ex.getMessage.contains("non-empty vectors"), ex.getMessage)
+    assert(Projection.randomProject(fixture.limit(0), "vec_id", "embedding", 4, "t")
+      .count() == 0)
+  }
+
   test("JL: projected squared distances track originals within 3x") {
     // 32 -> 16 dims on gaussian vectors; with n=40 pairs the JL distortion
     // at this ratio stays well inside a 3x band (loose sanity bound).
