@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: per-query wall seconds at the SF dir from
   * SPARK_GRAFT_SF_DIR. Emits TWO artifacts (r09 verdict item 1): the
   * full per-query detail JSON is written to the file named by
@@ -176,6 +178,28 @@ object Bench {
       s"SPARK_GRAFT_BENCH_OUT must not be blank, got '$detailPath'")
   }
 
+  /** Runs `build` at `dir` once through the noop sink, inside one
+    * [[Caches.scoped]] block, and returns its wall seconds with its
+    * failure, if any. The time is taken before the scope closes, so
+    * releasing what the query cached or checkpointed (which
+    * `clearCache` does not free) stays outside the timed interval.
+    *
+    * Materialize through the noop sink, not count(): count() lets
+    * ColumnPruning delete projection-only work (md5/regex/scoring columns
+    * that no downstream op reads), so q16/q17/q25-q28 measured scan+count
+    * instead of the query. The noop sink consumes every output column.
+    */
+  private[graft] def rep(spark: SparkSession, build: (SparkSession, String) => DataFrame,
+                         dir: String): (Double, Option[Throwable]) = {
+    val t0 = System.nanoTime()
+    Caches.scoped {
+      val failure =
+        try { build(spark, dir).write.format("noop").mode("overwrite").save(); None }
+        catch { case e: Throwable => Some(e) }
+      ((System.nanoTime() - t0) / 1e9, failure)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
@@ -184,13 +208,6 @@ object Bench {
     val cpus = Sessions.cpus(32)
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // Materialize through the noop sink, not count(): count() lets
-    // ColumnPruning delete projection-only work (md5/regex/scoring columns
-    // that no downstream op reads), so q16/q17/q25-q28 measured scan+count
-    // instead of the query. The noop sink consumes every output column.
-    def run(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
     // optional args restrict the run to named queries (iteration aid);
     // the driver invokes with no args = full suite. Unknown names abort:
     // a typo must not report a green no-op bench.
@@ -205,7 +222,7 @@ object Bench {
     val names = batch ++ harness
     val warmDir = "/root/testdata/sf0.001"
     names.foreach { name =>
-      try { run(name, warmDir) } catch { case _: Throwable => () }
+      rep(spark, SparkEntry.queries(name), warmDir)
       spark.catalog.clearCache()
     }
     val failed = scala.collection.mutable.ListBuffer.empty[String]
@@ -238,16 +255,14 @@ object Bench {
       val load = loadAvg()
       val nReps = if (harnessBound(name)) 2 else 3
       val reps = (1 to nReps).map { _ =>
-        val t0 = System.nanoTime()
-        try { run(name, sfDir) } catch {
-          case e: Throwable =>
-            // a swallowed failure must not read as a near-zero "win"
-            if (!failed.contains(name)) {
-              failed += name
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            }
+        val (dt, failure) = rep(spark, SparkEntry.queries(name), sfDir)
+        // a swallowed failure must not read as a near-zero "win"
+        failure.foreach { e =>
+          if (!failed.contains(name)) {
+            failed += name
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          }
         }
-        val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
         System.gc()
         dt

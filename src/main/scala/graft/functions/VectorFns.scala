@@ -32,9 +32,12 @@ object VectorFns {
     * `list_cosine_similarity` formula). Every cosine the embedding family
     * ranks on is this one, so ties and thresholds replay in any engine.
     * Callers compute the norms once per vector, before any pair join.
+    * A zero-norm vector has no cosine: the row fails the job with
+    * "`op`: zero-norm vector has no cosine", naming the calling operator.
     */
-  def cosine(a: Column, an: Column, b: Column, bn: Column): Column =
-    Portable.q6(dot(a, b) / (an * bn))
+  def cosine(a: Column, an: Column, b: Column, bn: Column, op: String): Column =
+    when(an * bn === 0, raise_error(lit(s"$op: zero-norm vector has no cosine")))
+      .otherwise(Portable.q6(dot(a, b) / (an * bn)))
 
   /** Squared L2 distance rounded to 6 decimals: the ordered left-to-right
     * fold of squared component deltas (the PQ `dist2` contract), so any

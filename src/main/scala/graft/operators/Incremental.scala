@@ -1,17 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental-load building blocks — the reference's terminal-timestamp
-  * pulls (`get_terminal_ts`, etl_utls.py:328: resume from max loaded ts)
-  * and its current-day delete+reload idiom.
-  *
-  * At scale the "delete+reload" is a dynamic partition overwrite (see
-  * `sources.Formats.writePartitioned`); these helpers produce the frames
-  * to write. The terminal timestamp is a single max() aggregate — Spark
-  * reduces it map-side, so the scan is the only cost, and on a
-  * date-partitioned table the scan prunes to the newest partitions.
+  * pulls (`get_terminal_ts`, etl_utls.py:328: resume from max loaded ts).
+  * Its current-day delete+reload idiom is a dynamic partition overwrite
+  * (`sources.Formats.writePartitioned`), which replaces only the periods
+  * the written frame holds. The terminal timestamp is a single max()
+  * aggregate — Spark reduces it map-side, so the scan is the only cost,
+  * and on a date-partitioned table the scan prunes to the newest
+  * partitions.
   */
 object Incremental {
 
@@ -21,14 +20,15 @@ object Incremental {
     existing.agg(max(col(tsCol))).collect().headOption
       .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[java.sql.Timestamp]))
 
-  /** Rows of `incoming` strictly after a precomputed terminal ts — the
-    * boundary form of [[deltaSince]], for callers that derive SEVERAL
-    * deltas from one boundary (DailyUpdate reads the prior facts'
-    * terminal once, then cuts both the fact delta and the raw-event
-    * delta the incremental first-touch stage consumes — one bounded
-    * scalar action instead of one per delta, and the two cuts cannot
-    * disagree). Pushdown-friendly: the ts predicate reaches the incoming
-    * scan (partition pruning on date-partitioned layouts).
+  /** Rows of `incoming` strictly after a terminal ts ([[terminalTs]] of
+    * the loaded table; all of `incoming` when it is None) — the
+    * incremental delta to append. Callers derive SEVERAL deltas from one
+    * boundary (DailyUpdate reads the prior facts' terminal once, then
+    * cuts both the fact delta and the raw-event delta the incremental
+    * first-touch stage consumes — one bounded scalar action instead of
+    * one per delta, and the two cuts cannot disagree). Pushdown-friendly:
+    * the ts predicate reaches the incoming scan (partition pruning on
+    * date-partitioned layouts).
     */
   def deltaAfter(incoming: DataFrame, tsCol: String,
                  terminal: Option[java.sql.Timestamp]): DataFrame =
@@ -36,12 +36,6 @@ object Incremental {
       case Some(t) => incoming.where(col(tsCol) > lit(t))
       case None    => incoming
     }
-
-  /** Rows of `incoming` strictly after the terminal ts of `existing` —
-    * the incremental delta to append.
-    */
-  def deltaSince(existing: DataFrame, incoming: DataFrame, tsCol: String): DataFrame =
-    deltaAfter(incoming, tsCol, terminalTs(existing, tsCol))
 
   /** Incremental first-touch insert — the reference's ONE incremental
     * DERIVED stage (`first_acquisition`, update_etl.py:412-452: insert
@@ -61,15 +55,4 @@ object Incremental {
   def firstTouchInsert(state: DataFrame, deltaFirsts: DataFrame,
                        keys: Seq[String]): DataFrame =
     state.unionByName(deltaFirsts.join(state, keys, "left_anti"))
-
-  /** Current-period replace: drop `existing` rows in the period and take
-    * `incoming`'s — the delete+reload idiom as a declarative union (write
-    * it back with dynamic partition overwrite to touch only the period).
-    */
-  def replacePeriod(existing: DataFrame, incoming: DataFrame, periodPredicate: Column): DataFrame = {
-    // null-safe: rows where the predicate is NULL are outside the period —
-    // a bare `!p` filter would silently drop them from the existing side
-    val inPeriod = coalesce(periodPredicate, lit(false))
-    existing.where(!inPeriod).unionByName(incoming.where(inPeriod))
-  }
 }

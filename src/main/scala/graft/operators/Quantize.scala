@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.{Portable, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al. 2011) — the embedding-compression
@@ -35,14 +36,18 @@ import org.apache.spark.sql.functions._
   */
 object Quantize {
 
-  /** (sub, code, cent) rows from the `nCodes` lowest-id vectors — each
-    * seed vector's j-th subvector is subspace j's code `id`.
+  /** (sub, code, cent) rows from the `nCodes` lowest-id vectors
+    * ([[Similarity.seedCentroids]]) — the seed of 0-based id rank `r`
+    * gives code `r`, its j-th subvector subspace j's cell.
     */
   def seededCodebook(emb: DataFrame, idCol: String, vecCol: String,
-                     nSub: Int, nCodes: Int): DataFrame =
-    slices(emb.where(col(idCol) < nCodes), idCol, vecCol, nSub, "seededCodebook")
-      .select(col("sub"), col(idCol).cast("int").as("code"),
-        col("subvec").as("cent"))
+                     nSub: Int, nCodes: Int): DataFrame = {
+    val seeds = Similarity.seedCentroids(emb, idCol, vecCol, nCodes)
+      .withColumn("code",
+        (row_number().over(Window.orderBy(col("centroid_id"))) - 1).cast("int"))
+    slices(seeds, "code", "centv", nSub, "seededCodebook")
+      .select(col("sub"), col("code"), col("subvec").as("cent"))
+  }
 
   /** (idCol, sub, subvec) rows: each vector split into `nSub` equal
     * slices (dimension must divide evenly — checked via one bounded

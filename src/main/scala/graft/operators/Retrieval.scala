@@ -172,7 +172,7 @@ object Retrieval {
       .join(ce, Seq(docIdCol))
       .join(broadcast(qe), Seq(queryIdCol))
       .withColumn("cosine",
-        VectorFns.cosine(col("__qv"), col("__qn"), col("__cv"), col("__cn")))
+        VectorFns.cosine(col("__qv"), col("__qn"), col("__cv"), col("__cn"), "cosineScores"))
       .drop("__qv", "__qn", "__cv", "__cn")
   }
 
@@ -191,8 +191,8 @@ object Retrieval {
     * WindowGroupLimit. Ordering is (`bm25RankCol` asc, doc id asc) —
     * the rank column is already unique per query when it comes from
     * [[bm25TopK]], the id tiebreak keeps the contract total for any
-    * caller. NaN cosines (zero-norm vectors) never pass `<` and are
-    * therefore treated as positives and dropped, not ranked.
+    * caller. A zero-norm vector has no cosine: [[cosineScores]] fails
+    * the job on one, so a scored frame from it never carries such a row.
     */
   def hardNegatives(scored: DataFrame, queryIdCol: String, docIdCol: String,
                     bm25RankCol: String, posThreshold: Double,

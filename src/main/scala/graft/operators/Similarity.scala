@@ -413,7 +413,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        VectorFns.cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("cosine"))
+        VectorFns.cosine(col("qv"), col("qn"), col("cv"), col("cn"), "cosineTopK").as("cosine"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
@@ -464,7 +464,8 @@ object Similarity {
           col("a.id") < col("b.id"))
       .select(blocks.map(b => col(s"a.$b").as(b)) ++ Seq(
         col("a.id").as("id_a"), col("b.id").as("id_b"),
-        VectorFns.cosine(col("a.v"), col("a.vn"), col("b.v"), col("b.vn")).as("cosine")): _*)
+        VectorFns.cosine(col("a.v"), col("a.vn"), col("b.v"), col("b.vn"), "pairsWithin")
+          .as("cosine")): _*)
 
   /** Embedding near-dup pairs within a blocking key (exact within block). */
   def nearDupWithin(emb: DataFrame, idCol: String, vecCol: String,
@@ -498,7 +499,8 @@ object Similarity {
       .withColumn("__cn", VectorFns.norm2(col("centv")))
     Rankings.topKPerGroup(
         vecs.crossJoin(broadcast(cents))
-          .withColumn("__sim", VectorFns.cosine(col(v), col(vn), col("centv"), col("__cn"))),
+          .withColumn("__sim", VectorFns.cosine(col(v), col(vn), col("centv"), col("__cn"),
+            "nearestCentroids")),
         Seq(key), Seq(col("__sim").desc, col("centroid_id").asc), n)
       .drop("__cn", "__sim", "rnk")
   }
@@ -570,7 +572,7 @@ object Similarity {
     val scored = probes.join(assigned, "centroid_id")
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        VectorFns.cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("cosine"))
+        VectorFns.cosine(col("qv"), col("qn"), col("cv"), col("cn"), "ivfTopKWith").as("cosine"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
@@ -670,9 +672,10 @@ object Similarity {
     * projections, so a DuckDB oracle replays them verbatim. Output is
     * TOTAL like [[semDedupWith]] — every input id gets a verdict — which
     * is why empty vectors are REJECTED up front rather than filtered:
-    * an empty vector has no cosine to any candidate, and Spark would
-    * otherwise pass its NaN through `>= minCosine` while an oracle's
-    * term expansion omits it (the [[nearDupSRP]] ADVICE-r11 class).
+    * an empty vector has no cosine to any candidate, so it would fail
+    * the pair search mid-job ([[VectorFns.cosine]] on a zero norm) while
+    * an oracle's term expansion omits it (the [[nearDupSRP]] ADVICE-r11
+    * class).
     */
   def semDedupSRP(emb: DataFrame, idCol: String, vecCol: String,
                   centroids: DataFrame, minCosine: Double,
@@ -700,10 +703,10 @@ object Similarity {
     // zero-length vectors are EXCLUDED, mirroring the oracle exactly: its
     // terms CTE has no row for an empty v, so the vector never reaches
     // buck and the inner join drops it — while Spark's srpBucket would
-    // fold the empty zip to proj=0 → bucket 0 and the pair's NaN cosine
-    // would PASS `>= minCosine` (Spark orders NaN above all doubles).
-    // A pair with an empty side has no defined cosine; dropping it is the
-    // only cross-engine-stable semantics (ADVICE r11).
+    // fold the empty zip to proj=0 → bucket 0, pair it, and fail the job
+    // on its zero-norm cosine ([[VectorFns.cosine]]). A pair with an
+    // empty side has no defined cosine; dropping it is the only
+    // cross-engine-stable semantics (ADVICE r11).
     val e = normed(emb.where(size(col(vecCol)) >= 1), idCol, vecCol,
         col(blockCol).as("block"))
       .withColumn("bucket", VectorFns.srpBucket(col("v"), srpBits, "srp-v1", dim))

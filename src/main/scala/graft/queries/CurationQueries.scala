@@ -657,8 +657,9 @@ object CurationQueries {
   def pqEncodeCteOn(base: String): String =
     s"""sv AS (SELECT vec_id, CAST(s AS INT) AS sub, v[s*8+1 : s*8+8] AS sv
       |  FROM $base, (SELECT unnest(range(0, 8)) AS s)),
-      |cb AS (SELECT CAST(vec_id AS INT) AS code, sub, sv AS cent
-      |  FROM sv WHERE vec_id < 16),
+      |cb AS (SELECT CAST(dense_rank() OVER (ORDER BY vec_id) - 1 AS INT) AS code,
+      |    sub, sv AS cent
+      |  FROM sv WHERE vec_id IN (SELECT DISTINCT vec_id FROM sv ORDER BY vec_id LIMIT 16)),
       |d AS (SELECT a.vec_id, a.sub, cb.code,
       |    floor(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
       |        list_transform(range(1, 9),
@@ -769,8 +770,9 @@ object CurationQueries {
     * instantiates it on the raw subvectors, q150 on the residual ones.
     */
   private[queries] def trainedCbChainOn(sv: String, p: String): String =
-    s"""${p}cb0 AS (SELECT CAST(vec_id AS INT) AS code, sub, sv AS cent
-       |  FROM $sv WHERE vec_id < 16),
+    s"""${p}cb0 AS (SELECT CAST(dense_rank() OVER (ORDER BY vec_id) - 1 AS INT) AS code,
+       |    sub, sv AS cent
+       |  FROM $sv WHERE vec_id IN (SELECT DISTINCT vec_id FROM $sv ORDER BY vec_id LIMIT 16)),
        |${tpqIter(1, s"${p}cb0", sv, p)},
        |${tpqIter(2, s"${p}cb1", sv, p)}""".stripMargin
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import java.nio.file.{Files => JFiles, Path, Paths, StandardCopyOption}
+import java.sql.Timestamp
 
 import scala.reflect.ClassTag
 
@@ -10,7 +11,7 @@ import graft.operators.{Multimodal, Packing, Similarity, Sketches}
 import graft.sources.{Formats, Tables}
 import graft.streaming.StreamOps
 import graft.streaming.StreamOps.{Event, FunnelEvent}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,7 +46,7 @@ object GateQueries {
     * them in a different order (the same truncation class StreamOps fixed
     * in round 5).
     */
-  private def us(t: java.sql.Timestamp): Long =
+  private def us(t: Timestamp): Long =
     t.getTime / 1000 * 1000000L + t.getNanos / 1000
 
   /** Inverse of [[us]]: Timestamp from epoch microseconds. The sentinel
@@ -54,8 +55,8 @@ object GateQueries {
     * must not ride on the sentinels' multi-hour margin absorbing a
     * millisecond truncation.
     */
-  private def microTs(epochUs: Long): java.sql.Timestamp = {
-    val t = new java.sql.Timestamp(epochUs / 1000)
+  private def microTs(epochUs: Long): Timestamp = {
+    val t = new Timestamp(epochUs / 1000)
     t.setNanos(((epochUs % 1000000L) * 1000L).toInt)
     t
   }
@@ -88,6 +89,25 @@ object GateQueries {
   private def thirds[T](rows: Array[T]): Seq[Array[T]] =
     rows.grouped(math.max(1, (rows.length + 2) / 3)).toSeq
 
+  /** Adds each of `batches` to `in` and waits for `q` to process it: one
+    * micro-batch per element, in order.
+    */
+  private def feed[T](q: StreamingQuery, in: MemoryStream[T], batches: Seq[Array[T]]): Unit =
+    batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+
+  /** [[feed]]s `rows` as its [[thirds]]. */
+  private def feedThirds[T](q: StreamingQuery, in: MemoryStream[T], rows: Array[T]): Unit =
+    feed(q, in, thirds(rows))
+
+  /** Flushes the event-time state of `q`: two sentinel rows `row(ts)`, at
+    * `firstUs` and 1 s later, each its own micro-batch. The first moves
+    * the watermark past every real row's horizon; the second runs the
+    * timeout pass that emits what the first closed.
+    */
+  private def flushSentinels[T: ClassTag](q: StreamingQuery, in: MemoryStream[T], firstUs: Long)
+                                         (row: Timestamp => T): Unit =
+    feed(q, in, Seq(0L, 1000000L).map(offUs => Array(row(microTs(firstUs + offUs)))))
+
   /** Feeds both sides of a stream-stream join their [[thirds]] in
     * lockstep, one micro-batch per pair of chunks.
     */
@@ -116,6 +136,163 @@ object GateQueries {
     finally parts.close()
   }
 
+  /** A landing gate's scratch root, with its watched `landing` directory
+    * made.
+    */
+  private def landingRoot(name: String): Path = {
+    val root = gateDir(name)
+    JFiles.createDirectories(root.resolve("landing"))
+    root
+  }
+
+  /** Wave `k` of a landing gate's slice: its rows with event_id % 3 == k. */
+  private def wave(slice: DataFrame, k: Int): DataFrame =
+    slice.where(col("event_id") % 3 === k)
+
+  /** The row count of each of the three waves of `slice`. */
+  private def waveCounts(slice: DataFrame): Seq[Long] =
+    (0 until 3).map(k => wave(slice, k).count())
+
+  /** Streams `source`, which watches `root/landing`, into `root/sink`;
+    * lands wave k = 0, 1, 2 with `land`, one micro-batch each, and after
+    * each requires the sink to hold exactly waves 0..k, so a source that
+    * re-reads old files or misses new ones fails. Returns the sink read
+    * back as `slice`'s columns.
+    */
+  private def discoverWaves(s: SparkSession, gate: String, slice: DataFrame, root: Path,
+                            source: => DataFrame)(land: Int => Unit): DataFrame = {
+    val counts = waveCounts(slice)
+    val sink = root.resolve("sink").toString
+    runStream(appendParquet(source, root, "sink")) { q =>
+      (0 until 3).foreach { k =>
+        land(k)
+        q.processAllAvailable()
+        val seen = s.read.parquet(sink).count()
+        val want = counts.take(k + 1).sum
+        require(seen == want,
+          s"$gate: after wave $k the sink must hold exactly $want rows, got $seen")
+      }
+    }
+    s.read.parquet(sink).select(slice.columns.map(col): _*)
+  }
+
+  /** The gates' event log capped to the users below 150, a fixed key set,
+    * so a fixture built on it costs the same at every SF.
+    */
+  private def cappedEvents(s: SparkSession, d: String): DataFrame =
+    Tables(s, d).events.where(col("user_id") < 150)
+
+  /** The rows of a capped fixture on the driver, as `T`. */
+  private def collectCapped[T: Encoder](fixture: DataFrame): Array[T] =
+    // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
+    fixture.as[T].collect()
+
+  /** The capped log rolled up per (user_id, day `d`): n_events and the q4
+    * total_value.
+    */
+  private def dailyRollup(s: SparkSession, d: String): DataFrame =
+    cappedEvents(s, d)
+      .groupBy(col("user_id"), to_date(col("ts")).as("d"))
+      .agg(count(lit(1)).as("n_events"),
+        graft.functions.Portable.q4(sum(col("value"))).as("total_value"))
+
+  /** An (event_id, ts, user_id, value) row of the capped log. */
+  private type Valued = (Long, Timestamp, Long, Double)
+
+  /** Upsert micro-batch `b`: among the rows with event_id % 3 == b, each
+    * user's value at their latest (ts, event_id), in user order — one
+    * update per key, coalesceMerge's contract.
+    */
+  private def upsertBatch(ev: Array[Valued], b: Int): Array[(Long, Double)] =
+    ev.filter(_._1 % 3 == b).groupBy(_._3).map { case (uid, rows) =>
+      (uid, rows.maxBy(r => (us(r._2), r._1))._4)
+    }.toArray.sortBy(_._1)
+
+  /** An (event_id, user_id, ts) row of an interval-join gate's side. */
+  private type Touch = (Long, Long, Timestamp)
+
+  /** The interval-join gates' sides: the capped log's views, then its
+    * clicks, each in (ts, event_id) order.
+    */
+  private def viewsAndClicks(s: SparkSession, d: String): (Array[Touch], Array[Touch]) = {
+    import s.implicits._
+    val Seq(views, clicks) = Seq("view", "click").map { tpe =>
+      collectCapped[Touch](cappedEvents(s, d).where(col("event_type") === tpe)
+          .select(col("event_id"), col("user_id"), col("ts")))
+        .sortBy(r => (us(r._3), r._1))
+    }
+    (views, clicks)
+  }
+
+  /** A view stream, a click stream and `join` of the two (each side as
+    * event_id, user_id, ts, aliased `l` and `r` by the join), projected to
+    * view_id, user_id, view_ts, click_id, click_ts.
+    */
+  private def joinViewsClicks(s: SparkSession)(join: (DataFrame, DataFrame) => DataFrame)
+      : (MemoryStream[Touch], MemoryStream[Touch], DataFrame) = {
+    import s.implicits._
+    val vIn = MemoryStream[Touch](s)
+    val cIn = MemoryStream[Touch](s)
+    val joined = join(vIn.toDF().toDF("event_id", "user_id", "ts"),
+        cIn.toDF().toDF("event_id", "user_id", "ts"))
+      .select(col("l.event_id").as("view_id"), col("l.user_id").as("user_id"),
+        col("l.ts").as("view_ts"), col("r.event_id").as("click_id"),
+        col("r.ts").as("click_ts"))
+    (vIn, cIn, joined)
+  }
+
+  /** The sessionize gates' sessions read back: real users only (the
+    * sentinel is user -1), total_value at q4.
+    */
+  private def readSessions(s: SparkSession, dir: Path): DataFrame =
+    s.read.parquet(s"$dir/sessions")
+      .where(col("user_id") >= 0)
+      .select(col("user_id"), col("session_start"), col("session_end"),
+        col("n_events"),
+        graft.functions.Portable.q4(col("total_value")).as("total_value"))
+
+  /** The rollup gates' windows read back without the sentinel's, total_value
+    * at q4.
+    */
+  private def readRollup(s: SparkSession, dir: Path): DataFrame =
+    s.read.parquet(s"$dir/rollup")
+      .where(col("event_type") =!= "__sentinel")
+      .select(col("window_start"), col("window_end"), col("event_type"),
+        col("n_events"),
+        graft.functions.Portable.q4(col("total_value")).as("total_value"))
+
+  /** The near-dup sink gates' corpus: the documents below id 2000 as
+    * (doc_id, text). Micro-batch b is doc_id % 3 == b, and the oracle
+    * attributes each pair to greatest(id mod 3), which is the micro-batch
+    * id only if every addData round forms a batch — an empty residue
+    * class would silently shift batch ids.
+    */
+  private def nearDupDocs(s: SparkSession, d: String, gate: String): Array[(Long, String)] = {
+    import s.implicits._
+    val docs = collectCapped[(Long, String)](Tables(s, d).documents
+      .select(col("doc_id"), col("text")).where(col("doc_id") < 2000))
+    require((0 until 3).forall(b => docs.exists(_._1 % 3 == b)),
+      s"$gate fixture must populate all three residue classes")
+    docs
+  }
+
+  /** Starts the near-dup sink over `in`'s (doc_id, text) rows, its store
+    * at `dir/store` and its checkpoint at `dir/ckpt`.
+    */
+  private def startNearDupSink(in: MemoryStream[(Long, String)], dir: Path): StreamingQuery =
+    StreamOps.nearDupSink(in.toDF().toDF("doc_id", "text"), "doc_id", "text",
+      shingleN = 3, numSeeds = 12, rowsPerBand = 3,
+      storeDir = s"$dir/store", checkpointDir = s"$dir/ckpt")
+
+  /** The near-dup sink's pairs store, each pair with the micro-batch that
+    * detected it.
+    */
+  private def readPairs(s: SparkSession, dir: Path): DataFrame =
+    s.read.parquet(s"$dir/store/pairs")
+      .select(col("id_a"), col("id_b"), col("size_a"), col("size_b"),
+        col("intersection"), col("jaccard"),
+        col("batch_id").cast("bigint").as("detected_batch"))
+
   /** Shared fixture for the daily-pipeline gates (q86, q92): build the
     * capped two-day incremental layout (day 1 = events up to the midpoint
     * timestamp, day 2 = the full capped log; dims capped/symlinked) and
@@ -132,7 +309,7 @@ object GateQueries {
     JFiles.createDirectories(day1); JFiles.createDirectories(day2)
     val out = root.resolve("out").toString
 
-    val ev = t.events.where(col("user_id") < 150)
+    val ev = cappedEvents(s, d)
     // bounded: 1-row min/max scalar
     val mm = ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).collect()(0)
     // µs midpoint via the us()/microTs pair — the day-1/day-2 split must
@@ -367,30 +544,13 @@ object GateQueries {
       // `perfbench/run.py --trace 1`) — an uncapped MemoryStream gate would
       // just re-measure minhash.
       import s.implicits._
-      val docs = Tables(s, d).documents.select(col("doc_id"), col("text"))
-        .where(col("doc_id") < 2000)
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, String)].collect()
-      // the oracle attributes each pair to greatest(id mod 3), which is
-      // only the micro-batch id if every addData round actually forms a
-      // batch — an empty residue class would silently shift batch ids
-      require((0 until 3).forall(b => docs.exists(_._1 % 3 == b)),
-        "q74 fixture must populate all three residue classes")
+      val docs = nearDupDocs(s, d, "q74")
       val dir = gateDir("q74")
       val input = MemoryStream[(Long, String)](s)
-      val stream = input.toDF().toDF("doc_id", "text")
-      runStream(StreamOps.nearDupSink(stream, "doc_id", "text",
-          shingleN = 3, numSeeds = 12, rowsPerBand = 3,
-          storeDir = s"$dir/store", checkpointDir = s"$dir/ckpt")) { q =>
-        (0 until 3).foreach { b =>
-          input.addData(docs.filter(_._1 % 3 == b).toSeq: _*)
-          q.processAllAvailable()
-        }
+      runStream(startNearDupSink(input, dir)) { q =>
+        feed(q, input, (0 until 3).map(b => docs.filter(_._1 % 3 == b)))
       }
-      s.read.parquet(s"$dir/store/pairs")
-        .select(col("id_a"), col("id_b"), col("size_a"), col("size_b"),
-          col("intersection"), col("jaccard"),
-          col("batch_id").cast("bigint").as("detected_batch"))
+      readPairs(s, dir)
     },
 
     "q75_ivf_recall" -> { (s, d) =>
@@ -463,25 +623,14 @@ object GateQueries {
       // directly. Fixture capped to a fixed user set, so cost is
       // constant at every SF.
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect()
+      val ev = collectCapped[Valued](cappedEvents(s, d)
+        .select(col("event_id"), col("ts"), col("user_id"), col("value")))
       val dir = gateDir("q78")
       val input = MemoryStream[(Long, Double)](s)
       val updates = input.toDF().toDF("uid", "worth")
       runStream(StreamOps.upsertSink(updates, s"$dir/snapshot",
           "uid", Map("worth" -> "worth"), s"$dir/ckpt")) { q =>
-        (0 until 3).foreach { b =>
-          val batch = ev.filter(_._1 % 3 == b)
-            .groupBy(_._3).map { case (uid, rows) =>
-              val latest = rows.maxBy(r => (us(r._2), r._1))
-              (uid, latest._4)
-            }.toSeq.sortBy(_._1)
-          input.addData(batch: _*)
-          q.processAllAvailable()
-        }
+        feed(q, input, (0 until 3).map(upsertBatch(ev, _)))
       }
       s.read.parquet(s"$dir/snapshot")
         .select(col("id").as("user_id"), col("worth"))
@@ -496,20 +645,14 @@ object GateQueries {
       // oracle is the batch sequential-min construction emitted as hit
       // rows. Fixture capped to a fixed user set (constant cost per SF).
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("user_id"), col("ts"), col("event_type"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, java.sql.Timestamp, String)].collect()
+      val ev = collectCapped[(Long, Timestamp, String)](cappedEvents(s, d)
+          .select(col("user_id"), col("ts"), col("event_type")))
         .sortBy(r => (us(r._2), r._1, r._3))
       val input = MemoryStream[FunnelEvent](s)
       val out = StreamOps.funnelStream(input.toDS(), Seq("view", "click", "purchase"))
       val dir = gateDir("q79")
       runStream(appendParquet(out, dir, "hits")) { q =>
-        thirds(ev).foreach { c =>
-          input.addData(c.map(r => FunnelEvent(r._1, r._2, r._3)): _*)
-          q.processAllAvailable()
-        }
+        feedThirds(q, input, ev.map(r => FunnelEvent(r._1, r._2, r._3)))
       }
       s.read.parquet(s"$dir/hits")
         .select(col("user_id"), col("funnel_stage"), col("stage_order"), col("ts"))
@@ -526,11 +669,8 @@ object GateQueries {
       // emitted sessions must equal the batch gap-split exactly — q19's
       // oracle construction, restricted to the fixture users.
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("user_id"), col("ts"), col("value"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, java.sql.Timestamp, Double)].collect()
+      val ev = collectCapped[(Long, Timestamp, Double)](cappedEvents(s, d)
+          .select(col("user_id"), col("ts"), col("value")))
         .sortBy(r => (us(r._2), r._1))
       val maxUs = ev.map(r => us(r._2)).max
       val input = MemoryStream[Event](s)
@@ -538,22 +678,11 @@ object GateQueries {
         gapSeconds = 1800, watermarkDelay = "10 seconds")
       val dir = gateDir("q80")
       runStream(appendParquet(out, dir, "sessions")) { q =>
-        thirds(ev).foreach { c =>
-          input.addData(c.map(r => Event(r._1, r._2, r._3)): _*)
-          q.processAllAvailable()
-        }
-        // sentinel flush: gap + delay + margin past the last real event
-        Seq(0L, 1000000L).foreach { offUs =>
-          input.addData(Event(-1L,
-            microTs(maxUs + 3600L * 1000000L + 60000000L + offUs), 0.0))
-          q.processAllAvailable()
-        }
+        feedThirds(q, input, ev.map(r => Event(r._1, r._2, r._3)))
+        // gap + delay + margin past the last real event
+        flushSentinels(q, input, maxUs + 3600L * 1000000L + 60000000L)(Event(-1L, _, 0.0))
       }
-      s.read.parquet(s"$dir/sessions")
-        .where(col("user_id") >= 0)
-        .select(col("user_id"), col("session_start"), col("session_end"),
-          col("n_events"),
-          graft.functions.Portable.q4(col("total_value")).as("total_value"))
+      readSessions(s, dir)
     },
 
     "q81_stream_rollup" -> { (s, d) =>
@@ -564,31 +693,20 @@ object GateQueries {
       // batch date_trunc rollup (Spark's '1 hour' windows are
       // epoch-aligned, i.e. exactly date_trunc).
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("ts"), col("event_type"), col("value"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(java.sql.Timestamp, String, Double)].collect()
+      val ev = collectCapped[(Timestamp, String, Double)](cappedEvents(s, d)
+          .select(col("ts"), col("event_type"), col("value")))
         .sortBy(r => (us(r._1), r._2))
       val maxUs = ev.map(r => us(r._1)).max
-      val input = MemoryStream[(java.sql.Timestamp, String, Double)](s)
+      val input = MemoryStream[(Timestamp, String, Double)](s)
       val out = StreamOps.windowedRollup(
         input.toDF().toDF("ts", "event_type", "value"),
         "ts", "event_type", "value", "1 hour", "10 seconds")
       val dir = gateDir("q81")
       runStream(appendParquet(out, dir, "rollup")) { q =>
-        thirds(ev).foreach { c => input.addData(c: _*); q.processAllAvailable() }
-        Seq(0L, 1000000L).foreach { offUs =>
-          input.addData((microTs(maxUs + 7200000000L + offUs),
-            "__sentinel", 0.0))
-          q.processAllAvailable()
-        }
+        feedThirds(q, input, ev)
+        flushSentinels(q, input, maxUs + 7200000000L)((_, "__sentinel", 0.0))
       }
-      s.read.parquet(s"$dir/rollup")
-        .where(col("event_type") =!= "__sentinel")
-        .select(col("window_start"), col("window_end"), col("event_type"),
-          col("n_events"),
-          graft.functions.Portable.q4(col("total_value")).as("total_value"))
+      readRollup(s, dir)
     },
 
     "q82_stream_dedup" -> { (s, d) =>
@@ -599,22 +717,17 @@ object GateQueries {
       // filter, not an aggregation: rows emit immediately, no sentinel
       // flush needed.
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect()
+      val ev = collectCapped[Valued](cappedEvents(s, d)
+          .select(col("event_id"), col("ts"), col("user_id"), col("value")))
         .sortBy(r => (us(r._2), r._1))
-      val input = MemoryStream[(Long, java.sql.Timestamp, Long, Double)](s)
+      val input = MemoryStream[Valued](s)
       val out = StreamOps.dedupByIdWithinWatermark(
         input.toDF().toDF("event_id", "ts", "user_id", "value"),
         "ts", "event_id", "1 hour")
       val dir = gateDir("q82")
       runStream(appendParquet(out, dir, "deduped")) { q =>
-        thirds(ev).foreach { c =>
-          input.addData(c: _*); q.processAllAvailable() // first delivery
-          input.addData(c: _*); q.processAllAvailable() // exact re-delivery
-        }
+        // each chunk's first delivery, then its exact re-delivery
+        feed(q, input, thirds(ev).flatMap(c => Seq(c, c)))
       }
       s.read.parquet(s"$dir/deduped")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
@@ -627,19 +740,17 @@ object GateQueries {
       // batch, broadcast when it fits). Join output emits immediately, so
       // the full fed stream must equal the batch left join.
       import s.implicits._
-      val t = Tables(s, d)
-      val ev = t.events
-        .where(col("user_id") < 150 && col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("value"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, Long, Double)].collect().sortBy(_._1)
+      val ev = collectCapped[(Long, Long, Double)](cappedEvents(s, d)
+          .where(col("event_type") === "purchase")
+          .select(col("event_id"), col("user_id"), col("value")))
+        .sortBy(_._1)
       val input = MemoryStream[(Long, Long, Double)](s)
       val out = StreamOps.enrichStream(
         input.toDF().toDF("event_id", "user_id", "value"),
-        t.customer, "user_id", "c_custkey", Seq("c_mktsegment", "c_acctbal"))
+        Tables(s, d).customer, "user_id", "c_custkey", Seq("c_mktsegment", "c_acctbal"))
       val dir = gateDir("q83")
       runStream(appendParquet(out, dir, "enriched")) { q =>
-        thirds(ev).foreach { c => input.addData(c: _*); q.processAllAvailable() }
+        feedThirds(q, input, ev)
       }
       s.read.parquet(s"$dir/enriched")
         .select(col("event_id"), col("user_id"), col("value"),
@@ -655,23 +766,9 @@ object GateQueries {
       // ts-ordered feeds state eviction provably can't drop a pair: a
       // view is evicted only once the watermark passes view_ts + horizon,
       // by which point every qualifying click has already arrived.
-      import s.implicits._
-      def side(tpe: String) = Tables(s, d).events
-        .where(col("user_id") < 150 && col("event_type") === tpe)
-        .select(col("event_id"), col("user_id"), col("ts"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, Long, java.sql.Timestamp)].collect()
-        .sortBy(r => (us(r._3), r._1))
-      val (views, clicks) = (side("view"), side("click"))
-      val vIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
-      val cIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
-      val joined = StreamOps.intervalJoinStream(
-        vIn.toDF().toDF("event_id", "user_id", "ts"),
-        cIn.toDF().toDF("event_id", "user_id", "ts"),
-        "user_id", "ts", horizonSeconds = 1800, watermarkDelay = "10 seconds")
-        .select(col("l.event_id").as("view_id"), col("l.user_id").as("user_id"),
-          col("l.ts").as("view_ts"), col("r.event_id").as("click_id"),
-          col("r.ts").as("click_ts"))
+      val (views, clicks) = viewsAndClicks(s, d)
+      val (vIn, cIn, joined) = joinViewsClicks(s)(StreamOps.intervalJoinStream(_, _,
+        "user_id", "ts", horizonSeconds = 1800, watermarkDelay = "10 seconds"))
       val dir = gateDir("q84")
       runStream(appendParquet(joined, dir, "matches")) { q =>
         feedPaired(q, vIn, cIn, views, clicks)
@@ -756,24 +853,18 @@ object GateQueries {
       // timestamps; LateDataRuleSpec pins it with a crafted ms-aligned
       // fixture: dropped at exact equality.)
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, java.sql.Timestamp, String, Double)].collect()
+      val ev = collectCapped[(Long, Timestamp, String, Double)](cappedEvents(s, d)
+        .select(col("event_id"), col("ts"), col("event_type"), col("value")))
       val (delayed, onTime) = ev.partition(_._1 % 7 == 0)
       val ordered = onTime.sortBy(r => (us(r._2), r._1))
       val maxUs = ev.map(r => us(r._2)).max
-      val input = MemoryStream[(java.sql.Timestamp, String, Double)](s)
+      val input = MemoryStream[(Timestamp, String, Double)](s)
       val out = StreamOps.windowedRollup(
         input.toDF().toDF("ts", "event_type", "value"),
         "ts", "event_type", "value", "1 hour", "10 seconds")
       val dir = gateDir("q87")
       runStream(appendParquet(out, dir, "rollup")) { q =>
-        thirds(ordered).foreach { c =>
-          input.addData(c.map(r => (r._2, r._3, r._4)): _*)
-          q.processAllAvailable()
-        }
+        feedThirds(q, input, ordered.map(r => (r._2, r._3, r._4)))
         // the straggler batch: every withheld event at once, long after
         // its event time — the watermark is already at max(on-time)-10s
         if (delayed.nonEmpty) {
@@ -781,17 +872,9 @@ object GateQueries {
             .map(r => (r._2, r._3, r._4)): _*)
           q.processAllAvailable()
         }
-        Seq(0L, 1000000L).foreach { offUs =>
-          input.addData((microTs(maxUs + 7200000000L + offUs),
-            "__sentinel", 0.0))
-          q.processAllAvailable()
-        }
+        flushSentinels(q, input, maxUs + 7200000000L)((_, "__sentinel", 0.0))
       }
-      s.read.parquet(s"$dir/rollup")
-        .where(col("event_type") =!= "__sentinel")
-        .select(col("window_start"), col("window_end"), col("event_type"),
-          col("n_events"),
-          graft.functions.Portable.q4(col("total_value")).as("total_value"))
+      readRollup(s, dir)
     },
 
     "q93_stream_late_sessionize" -> { (s, d) =>
@@ -808,11 +891,8 @@ object GateQueries {
       // user and the emit-once semantics stay equal to batch. The oracle
       // is the batch sessionization over exactly the non-dropped set.
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect()
+      val ev = collectCapped[Valued](cappedEvents(s, d)
+        .select(col("event_id"), col("ts"), col("user_id"), col("value")))
       val withheldIds = ev.groupBy(_._3).map { case (_, rows) =>
         rows.maxBy(r => (us(r._2), r._1))._1
       }.toSet
@@ -835,26 +915,16 @@ object GateQueries {
         gapSeconds = 1800, watermarkDelay = "1 hour")
       val dir = gateDir("q93")
       runStream(appendParquet(out, dir, "sessions")) { q =>
-        thirds(ordered).foreach { c =>
-          input.addData(c.map(r => Event(r._3, r._2, r._4)): _*)
-          q.processAllAvailable()
-        }
+        feedThirds(q, input, ordered.map(r => Event(r._3, r._2, r._4)))
         // the straggler batch: every withheld last event at once
         input.addData(delayed.sortBy(r => (us(r._2), r._1)).map(r =>
           Event(r._3, r._2, r._4)): _*)
         q.processAllAvailable()
-        // sentinel flush: gap + delay + margin past the last event
-        Seq(0L, 1000000L).foreach { offUs =>
-          input.addData(Event(-1L,
-            microTs(maxAllUs + 1800L * 1000000L + 3600L * 1000000L + 60000000L + offUs), 0.0))
-          q.processAllAvailable()
-        }
+        // gap + delay + margin past the last event
+        flushSentinels(q, input,
+          maxAllUs + 1800L * 1000000L + 3600L * 1000000L + 60000000L)(Event(-1L, _, 0.0))
       }
-      s.read.parquet(s"$dir/sessions")
-        .where(col("user_id") >= 0)
-        .select(col("user_id"), col("session_start"), col("session_end"),
-          col("n_events"),
-          graft.functions.Portable.q4(col("total_value")).as("total_value"))
+      readSessions(s, dir)
     },
 
     "q89_stream_recovery" -> { (s, d) =>
@@ -871,28 +941,15 @@ object GateQueries {
       // run — q78's oracle verbatim. Proves checkpoint replay + swap
       // recovery compose, not just each half in isolation.
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect()
+      val ev = collectCapped[Valued](cappedEvents(s, d)
+        .select(col("event_id"), col("ts"), col("user_id"), col("value")))
       val dir = gateDir("q89")
       val target = s"$dir/snapshot"
       val input = MemoryStream[(Long, Double)](s)
       val updates = input.toDF().toDF("uid", "worth")
-      def batch(b: Int) = ev.filter(_._1 % 3 == b)
-        .groupBy(_._3).map { case (uid, rows) =>
-          val latest = rows.maxBy(r => (us(r._2), r._1))
-          (uid, latest._4)
-        }.toSeq.sortBy(_._1)
       def startSink() = StreamOps.upsertSink(updates, target,
         "uid", Map("worth" -> "worth"), s"$dir/ckpt")
-      runStream(startSink()) { q =>
-        (0 until 2).foreach { b =>
-          input.addData(batch(b): _*)
-          q.processAllAvailable()
-        }
-      }
+      runStream(startSink())(feed(_, input, (0 until 2).map(upsertBatch(ev, _))))
       // the crash window: target promoted away but tmp never landed
       val fs = Formats.fileSystem(s, target)
       val stranded = new org.apache.hadoop.fs.Path(Formats.oldPath(target))
@@ -900,10 +957,7 @@ object GateQueries {
         s"q89 fixture: failed to strand the snapshot at $stranded")
       // restart from the SAME checkpoint; MemoryStream retains its data,
       // so the new query resumes from the last committed offset
-      runStream(startSink()) { q =>
-        input.addData(batch(2): _*)
-        q.processAllAvailable()
-      }
+      runStream(startSink())(feed(_, input, Seq(upsertBatch(ev, 2))))
       require(!fs.exists(stranded),
         "q89: the stranded snapshot must be cleaned up after recovery")
       s.read.parquet(target)
@@ -922,45 +976,28 @@ object GateQueries {
       // the oracle is q80's batch gap-split verbatim, so the interrupted
       // run must be indistinguishable from an uninterrupted one.
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("user_id"), col("ts"), col("value"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, java.sql.Timestamp, Double)].collect()
+      val ev = collectCapped[(Long, Timestamp, Double)](cappedEvents(s, d)
+          .select(col("user_id"), col("ts"), col("value")))
         .sortBy(r => (us(r._2), r._1))
       val maxUs = ev.map(r => us(r._2)).max
-      val chunks = thirds(ev)
+      val chunks = thirds(ev.map(r => Event(r._1, r._2, r._3)))
       val input = MemoryStream[Event](s)
       val dir = gateDir("q94")
       def start() = appendParquet(StreamOps.sessionize(input.toDS(),
         gapSeconds = 1800, watermarkDelay = "10 seconds"), dir, "sessions")
-      runStream(start()) { q =>
-        chunks.take(2).foreach { c =>
-          input.addData(c.map(r => Event(r._1, r._2, r._3)): _*)
-          q.processAllAvailable()
-        }
-      }
+      runStream(start())(feed(_, input, chunks.take(2)))
       // the kill point must land mid-stream: some sessions already
       // emitted, the rest still open in the state store
       val nMid = s.read.parquet(s"$dir/sessions").count()
       require(nMid > 0, "q94: first query must emit some sessions before the kill")
       runStream(start()) { q =>
-        chunks.drop(2).foreach { c =>
-          input.addData(c.map(r => Event(r._1, r._2, r._3)): _*)
-          q.processAllAvailable()
-        }
-        Seq(0L, 1000000L).foreach { offUs =>
-          input.addData(Event(-1L,
-            microTs(maxUs + 3600L * 1000000L + 60000000L + offUs), 0.0))
-          q.processAllAvailable()
-        }
+        feed(q, input, chunks.drop(2))
+        flushSentinels(q, input, maxUs + 3600L * 1000000L + 60000000L)(Event(-1L, _, 0.0))
       }
-      val out = s.read.parquet(s"$dir/sessions").where(col("user_id") >= 0)
+      val out = readSessions(s, dir)
       require(out.count() > nMid,
         "q94: the resumed query must emit the sessions restored from state")
-      out.select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"),
-        graft.functions.Portable.q4(col("total_value")).as("total_value"))
+      out
     },
 
     "q90_backfill" -> { (s, d) =>
@@ -975,11 +1012,7 @@ object GateQueries {
       // nothing); the oracle checks the healed table equals the batch
       // rollup over everything — a backfill that rewrote or skipped a
       // partition diverges. Capped fixture → constant cost at every SF.
-      val rollup = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("n_events"),
-          graft.functions.Portable.q4(sum(col("value"))).as("total_value"))
+      val rollup = dailyRollup(s, d)
       val holes = rollup.select(col("d")).distinct()
         .where(dayofmonth(col("d")) % 7 === 3)
         .collect().map(_.getDate(0)).toSet // bounded by calendar days
@@ -1009,34 +1042,13 @@ object GateQueries {
       // batch read of the same rows exactly once. Columns are the q91
       // text-safe set: timestamp fidelity through text formats is a
       // formatting option, gated nowhere as a fidelity property.
-      import org.apache.spark.sql.types._
-      val slice = Tables(s, d).events
-        .where(col("user_id") < 150)
+      val slice = cappedEvents(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val root = gateDir("q95")
-      val landing = root.resolve("landing")
-      JFiles.createDirectories(landing)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType)))
-      def land(k: Int): Unit = landWave(root, k, "json")(
-        graft.sources.Formats.writeJsonl(slice.where(col("event_id") % 3 === k), _))
-      val counts = (0 until 3).map(k =>
-        slice.where(col("event_id") % 3 === k).count())
-      val sink = root.resolve("sink").toString
-      runStream(appendParquet(
-          graft.sources.Formats.readJsonlStream(s, landing.toString, schema), root, "sink")) { q =>
-        (0 until 3).foreach { k =>
-          land(k)
-          q.processAllAvailable()
-          val seen = s.read.parquet(sink).count()
-          val want = counts.take(k + 1).sum
-          require(seen == want,
-            s"q95: after wave $k the sink must hold exactly $want rows, got $seen")
-        }
+      val root = landingRoot("q95")
+      discoverWaves(s, "q95", slice, root, Formats.readJsonlStream(s,
+          root.resolve("landing").toString, slice.schema)) { k =>
+        landWave(root, k, "json")(Formats.writeJsonl(wave(slice, k), _))
       }
-      s.read.parquet(sink)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     },
 
     "q96_backfill_pipeline" -> { (s, d) =>
@@ -1053,12 +1065,11 @@ object GateQueries {
       // table equals the batch clean build. Derived stages are q86/q92's
       // gated surface; this gate runs the fact loads (deriveStages
       // empty), matching the reference's per-table backfill unit.
-      val t = Tables(s, d)
       val root = gateDir("q96")
       val (dayA, dayB, full) =
         (root.resolve("dayA"), root.resolve("dayB"), root.resolve("full"))
       Seq(dayA, dayB, full).foreach(p => JFiles.createDirectories(p))
-      val ev = t.events.where(col("user_id") < 150)
+      val ev = cappedEvents(s, d)
       ev.write.parquet(s"$full/events.parquet")
       // terciles over the CLEAN calendar (error-only dates can never name
       // a partition, so they belong to no tercile); bounded by calendar
@@ -1102,11 +1113,8 @@ object GateQueries {
       // the harness exercises cross-user late interleaving and state
       // continuation across the idle gap.
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("user_id"), col("ts"), col("event_type"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, java.sql.Timestamp, String)].collect()
+      val ev = collectCapped[(Long, Timestamp, String)](cappedEvents(s, d)
+        .select(col("user_id"), col("ts"), col("event_type")))
       val withheldKeys = ev.groupBy(_._1).map { case (u, rows) =>
         val last = rows.maxBy(r => (us(r._2), r._3))
         (u, us(last._2), last._3)
@@ -1118,10 +1126,7 @@ object GateQueries {
       val out = StreamOps.funnelStream(input.toDS(), Seq("view", "click", "purchase"))
       val dir = gateDir("q97")
       runStream(appendParquet(out, dir, "hits")) { q =>
-        thirds(ordered).foreach { c =>
-          input.addData(c.map(r => FunnelEvent(r._1, r._2, r._3)): _*)
-          q.processAllAvailable()
-        }
+        feedThirds(q, input, ordered.map(r => FunnelEvent(r._1, r._2, r._3)))
         input.addData(delayed.toSeq.sortBy(r => (us(r._2), r._1, r._3)).map(r =>
           FunnelEvent(r._1, r._2, r._3)): _*)
         q.processAllAvailable()
@@ -1141,11 +1146,8 @@ object GateQueries {
       // hour. Ids are unique, so the dedup state itself never suppresses
       // a row: divergence isolates the late filter.
       import s.implicits._
-      val ev = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect()
+      val ev = collectCapped[Valued](cappedEvents(s, d)
+        .select(col("event_id"), col("ts"), col("user_id"), col("value")))
       val (delayed, onTime) = ev.partition(_._1 % 7 == 0)
       val ordered = onTime.sortBy(r => (us(r._2), r._1))
       val wmUs = (ordered.map(r => us(r._2)).max / 1000 - 3600000L) * 1000
@@ -1153,13 +1155,13 @@ object GateQueries {
         "q98 fixture must drop at least one late row")
       require(delayed.exists(r => us(r._2) > wmUs),
         "q98 fixture must accept at least one late row")
-      val input = MemoryStream[(Long, java.sql.Timestamp, Long, Double)](s)
+      val input = MemoryStream[Valued](s)
       val out = StreamOps.dedupByIdWithinWatermark(
         input.toDF().toDF("event_id", "ts", "user_id", "value"),
         "ts", "event_id", "1 hour")
       val dir = gateDir("q98")
       runStream(appendParquet(out, dir, "deduped")) { q =>
-        thirds(ordered).foreach { c => input.addData(c: _*); q.processAllAvailable() }
+        feedThirds(q, input, ordered)
         input.addData(delayed.sortBy(r => (us(r._2), r._1)): _*)
         q.processAllAvailable()
       }
@@ -1190,15 +1192,7 @@ object GateQueries {
       // (the spec's pinned argument, horizon-independent), and in-order
       // zipped feeding keeps every on-time partner resident exactly as
       // q84's scaladoc argues.
-      import s.implicits._
-      def side(tpe: String) = Tables(s, d).events
-        .where(col("user_id") < 150 && col("event_type") === tpe)
-        .select(col("event_id"), col("user_id"), col("ts"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, Long, java.sql.Timestamp)].collect()
-        .sortBy(r => (us(r._3), r._1))
-      val views = side("view")
-      val clicks = side("click")
+      val (views, clicks) = viewsAndClicks(s, d)
       val cutUs = clicks.map(r => us(r._3)).max - 48L * 3600L * 1000000L
       val (delayed, onTime) =
         clicks.partition(r => us(r._3) > cutUs || r._1 % 7 == 0)
@@ -1210,15 +1204,8 @@ object GateQueries {
       require(delayed.exists(c => us(c._3) > wmUs && views.exists(v =>
           v._2 == c._2 && us(c._3) > us(v._3) && us(c._3) <= us(v._3) + horizonUs)),
         "q99 fixture must accept at least one late click that forms a pair")
-      val vIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
-      val cIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
-      val joined = StreamOps.intervalJoinStream(
-        vIn.toDF().toDF("event_id", "user_id", "ts"),
-        cIn.toDF().toDF("event_id", "user_id", "ts"),
-        "user_id", "ts", horizonSeconds = 86400, watermarkDelay = "10 seconds")
-        .select(col("l.event_id").as("view_id"), col("l.user_id").as("user_id"),
-          col("l.ts").as("view_ts"), col("r.event_id").as("click_id"),
-          col("r.ts").as("click_ts"))
+      val (vIn, cIn, joined) = joinViewsClicks(s)(StreamOps.intervalJoinStream(_, _,
+        "user_id", "ts", horizonSeconds = 86400, watermarkDelay = "10 seconds"))
       val dir = gateDir("q99")
       runStream(appendParquet(joined, dir, "matches")) { q =>
         feedPaired(q, vIn, cIn, views, onTime)
@@ -1248,24 +1235,11 @@ object GateQueries {
       // counts around the replay and the oracle is q74's batch SQL —
       // the interrupted-and-replayed run must be indistinguishable.
       import s.implicits._
-      val docs = Tables(s, d).documents.select(col("doc_id"), col("text"))
-        .where(col("doc_id") < 2000)
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, String)].collect()
-      require((0 until 3).forall(b => docs.exists(_._1 % 3 == b)),
-        "q100 fixture must populate all three residue classes")
+      val docs = nearDupDocs(s, d, "q100")
       val dir = gateDir("q100")
       val input = MemoryStream[(Long, String)](s)
-      def startSink() = StreamOps.nearDupSink(
-        input.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        shingleN = 3, numSeeds = 12, rowsPerBand = 3,
-        storeDir = s"$dir/store", checkpointDir = s"$dir/ckpt")
-      runStream(startSink()) { q =>
-        (0 until 2).foreach { b =>
-          input.addData(docs.filter(_._1 % 3 == b).toSeq: _*)
-          q.processAllAvailable()
-        }
-      }
+      runStream(startNearDupSink(input, dir))(
+        feed(_, input, (0 until 2).map(b => docs.filter(_._1 % 3 == b))))
       // the crash window: batch 1's writes are on disk, its commit isn't.
       // The local checkpoint FS is checksummed, so the commit record is
       // (1, .1.crc) — both must go or the replay's rename of the fresh
@@ -1279,16 +1253,11 @@ object GateQueries {
       val afterKill = docsInStore()
       require(afterKill == docs.count(_._1 % 3 < 2),
         s"q100: store must hold exactly batches 0+1 before recovery, got $afterKill")
-      runStream(startSink()) { q =>
-        input.addData(docs.filter(_._1 % 3 == 2).toSeq: _*)
-        q.processAllAvailable()
-      }
+      runStream(startNearDupSink(input, dir))(
+        feed(_, input, Seq(docs.filter(_._1 % 3 == 2))))
       require(docsInStore() == docs.length.toLong,
         "q100: the replayed batch must overwrite its partitions, not append")
-      s.read.parquet(s"$dir/store/pairs")
-        .select(col("id_a"), col("id_b"), col("size_a"), col("size_b"),
-          col("intersection"), col("jaccard"),
-          col("batch_id").cast("bigint").as("detected_batch"))
+      readPairs(s, dir)
     },
 
     "q101_parquet_landing" -> { (s, d) =>
@@ -1301,37 +1270,14 @@ object GateQueries {
       // exclude timestamps as a TEXT-format formatting concern, parquet
       // carries them in binary — so this gate INCLUDES `ts` and pins µs
       // timestamp fidelity through the landing path end to end.
-      import org.apache.spark.sql.types._
-      val slice = Tables(s, d).events
-        .where(col("user_id") < 150)
+      val slice = cappedEvents(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts"))
-      val root = gateDir("q101")
-      val landing = root.resolve("landing")
-      JFiles.createDirectories(landing)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("ts", TimestampType)))
-      def land(k: Int): Unit = landWave(root, k, "parquet")(
-        slice.where(col("event_id") % 3 === k).write.mode("overwrite").parquet(_))
-      val counts = (0 until 3).map(k =>
-        slice.where(col("event_id") % 3 === k).count())
-      val sink = root.resolve("sink").toString
-      runStream(appendParquet(
-          graft.sources.Formats.readParquetStream(s, landing.toString, schema), root, "sink")) { q =>
-        (0 until 3).foreach { k =>
-          land(k)
-          q.processAllAvailable()
-          val seen = s.read.parquet(sink).count()
-          val want = counts.take(k + 1).sum
-          require(seen == want,
-            s"q101: after wave $k the sink must hold exactly $want rows, got $seen")
-        }
+      val root = landingRoot("q101")
+      discoverWaves(s, "q101", slice, root, Formats.readParquetStream(s,
+          root.resolve("landing").toString, slice.schema)) { k =>
+        landWave(root, k, "parquet")(wave(slice, k).write.mode("overwrite").parquet(_))
       }
-      s.read.parquet(sink)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("ts"))
     },
 
     "q102_compaction" -> { (s, d) =>
@@ -1346,11 +1292,7 @@ object GateQueries {
       // (require-pinned: the rewritten set, the final census with no
       // partition lost, and a no-op second run), and the healed table
       // must hash-equal the batch rollup.
-      val rollup = Tables(s, d).events
-        .where(col("user_id") < 150)
-        .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("n_events"),
-          graft.functions.Portable.q4(sum(col("value"))).as("total_value"))
+      val rollup = dailyRollup(s, d)
       val target = s"${gateDir("q102")}/rollup"
       rollup.repartition(6).write.partitionBy("d").parquet(target)
       val before = graft.operators.Compaction.partitionFileCounts(s, target, "d")
@@ -1382,8 +1324,7 @@ object GateQueries {
       // never overlap — and the oracle checks a range scan over the
       // clustered table against the batch filter, so a layout that
       // dropped, duplicated, or mis-ranged rows diverges.
-      val slice = Tables(s, d).events
-        .where(col("user_id") < 150)
+      val slice = cappedEvents(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts"))
       val dir = s"${gateDir("q103")}/clustered"
@@ -1550,17 +1491,13 @@ object GateQueries {
       // DESIGN: text-format timestamp fidelity is a formatting option,
       // not a fidelity property of the engine (parquet/ORC carry µs
       // natively; the µs columns are gated everywhere else).
-      import org.apache.spark.sql.types._
-      val slice = Tables(s, d).events
-        .where(col("user_id") < 150)
+      val slice = cappedEvents(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val root = gateDir("q91")
       graft.sources.Formats.writeCsv(slice, s"$root/csv")
       graft.sources.Formats.writeJsonl(slice, s"$root/jsonl")
       graft.sources.Formats.writeOrc(slice, s"$root/orc")
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType)))
+      val schema = slice.schema
       graft.sources.Formats.readCsv(s, s"$root/csv", schema)
         .withColumn("fmt", lit("csv"))
         .unionByName(graft.sources.Formats.readJsonl(s, s"$root/jsonl", schema)
@@ -1614,7 +1551,7 @@ object GateQueries {
       // the epoch attribution hash-mismatches. Scale shape: mergeSchema
       // is a footer-only pass (no data read) and the epoch split is the
       // partition layout the daily pipeline (q86) already writes.
-      val base = Tables(s, d).events.where(col("user_id") < 150)
+      val base = cappedEvents(s, d)
       val root = gateDir("q113").toString
       base.where(col("event_id") % 2 === 0)
         .select(col("event_id"), col("user_id"), col("value"))
@@ -1760,24 +1697,10 @@ object GateQueries {
       // missing null row (eviction without emission), a duplicate (emit
       // on both match and eviction), or a premature null all
       // hash-mismatch. Fixture capped as q84; constant cost at every SF.
-      import s.implicits._
-      def side(tpe: String) = Tables(s, d).events
-        .where(col("user_id") < 150 && col("event_type") === tpe)
-        .select(col("event_id"), col("user_id"), col("ts"))
-        // bounded: key-capped fixture — constant rows at every SF (replica ids offset past the cap)
-        .as[(Long, Long, java.sql.Timestamp)].collect()
-        .sortBy(r => (us(r._3), r._1))
-      val (views, clicks) = (side("view"), side("click"))
-      val vIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
-      val cIn = MemoryStream[(Long, Long, java.sql.Timestamp)](s)
+      val (views, clicks) = viewsAndClicks(s, d)
       val horizonSeconds = 1800L
-      val joined = StreamOps.intervalJoinStreamLeftOuter(
-        vIn.toDF().toDF("event_id", "user_id", "ts"),
-        cIn.toDF().toDF("event_id", "user_id", "ts"),
-        "user_id", "ts", horizonSeconds, watermarkDelay = "10 seconds")
-        .select(col("l.event_id").as("view_id"), col("l.user_id").as("user_id"),
-          col("l.ts").as("view_ts"), col("r.event_id").as("click_id"),
-          col("r.ts").as("click_ts"))
+      val (vIn, cIn, joined) = joinViewsClicks(s)(StreamOps.intervalJoinStreamLeftOuter(_, _,
+        "user_id", "ts", horizonSeconds, watermarkDelay = "10 seconds"))
       val dir = gateDir("q115")
       runStream(appendParquet(joined, dir, "matches")) { q =>
         feedPaired(q, vIn, cIn, views, clicks)
@@ -1811,22 +1734,16 @@ object GateQueries {
       // provably invisible to run 1 — and run 2 resumes from the SAME
       // checkpoint, picking up exactly the new files. Oracle = the
       // batch read of all three waves (q91's text-safe column set).
-      import org.apache.spark.sql.types._
-      val slice = Tables(s, d).events
-        .where(col("user_id") < 150)
+      val slice = cappedEvents(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val root = gateDir("q117")
+      val root = landingRoot("q117")
       val landing = root.resolve("landing")
-      JFiles.createDirectories(landing)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType)))
+      val schema = slice.schema
       // two files per wave so the run-1 backlog (4 files) genuinely
       // exercises the 1-file-per-trigger rate limit
-      def land(k: Int): Unit = landWave(root, k, "json")(graft.sources.Formats.writeJsonl(
-        slice.where(col("event_id") % 3 === k).repartition(2), _))
-      val counts = (0 until 3).map(k =>
-        slice.where(col("event_id") % 3 === k).count())
+      def land(k: Int): Unit = landWave(root, k, "json")(
+        graft.sources.Formats.writeJsonl(wave(slice, k).repartition(2), _))
+      val counts = waveCounts(slice)
       val sink = root.resolve("sink").toString
       val ckpt = root.resolve("ckpt").toString
       land(0); land(1)
@@ -1860,7 +1777,7 @@ object GateQueries {
       val t = Tables(s, d)
       val snapshot = t.customer.where(col("c_custkey") < 300)
         .select(col("c_custkey").as("user_id"), col("c_acctbal").as("worth"))
-      val log = t.events.where(col("user_id") < 150)
+      val log = cappedEvents(s, d)
         .select(col("user_id"), col("value").as("worth"),
           when(col("event_type") === "error", "D").otherwise("U").as("op"),
           col("ts"), col("event_id"))

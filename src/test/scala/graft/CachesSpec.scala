@@ -74,12 +74,22 @@ class CachesSpec extends SparkSpec {
   }
 
   test("Verify's per-query step releases what a failing query checkpointed") {
-    dropAllCaches()
-    val out = java.nio.file.Files.createTempDirectory(Sessions.scratchRoot, "graft-verify-dump")
-    Verify.dump(spark, "q0_failing", { (s, _) =>
+    val failing: (org.apache.spark.sql.SparkSession, String) => DataFrame = { (s, _) =>
       Caches.checkpoint(s.range(0, 100, 1, 2).toDF())
       throw new IllegalStateException("injected query failure")
-    }, "unused", out.toString)
-    assert(nothingCached, s"left ${spark.sparkContext.getPersistentRDDs.size} persisted RDDs")
+    }
+    val out = java.nio.file.Files.createTempDirectory(Sessions.scratchRoot, "graft-verify-dump")
+    val steps = Seq[(String, () => Unit)](
+      "Verify.dump" -> (() => Verify.dump(spark, "q0_failing", failing, "unused", out.toString)),
+      "Bench.rep" -> { () =>
+        val (_, failure) = Bench.rep(spark, failing, "unused")
+        assert(failure.exists(_.getMessage == "injected query failure"))
+      })
+    steps.foreach { case (step, run) =>
+      dropAllCaches()
+      run()
+      assert(nothingCached,
+        s"$step left ${spark.sparkContext.getPersistentRDDs.size} persisted RDDs")
+    }
   }
 }

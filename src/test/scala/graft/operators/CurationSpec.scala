@@ -604,6 +604,19 @@ class CurationSpec extends SparkSpec {
     assert(Quantize.pqEncode(vecs.limit(0), "vec_id", "embedding", 2, cb).count() == 0)
   }
 
+  test("seededCodebook codes the nCodes lowest ids by rank, so ids need not start at 0") {
+    val vecs = (1L to 6L).map(i => (i, Array(i.toFloat, (10 - i).toFloat)))
+      .toDF("vec_id", "embedding")
+    val cb = Quantize.seededCodebook(vecs, "vec_id", "embedding", nSub = 1, nCodes = 4)
+    val got = cb.select("code", "cent").as[(Int, Seq[Double])].collect().sortBy(_._1)
+    assert(got.map(_._1).toSeq == Seq(0, 1, 2, 3))
+    assert(got.map(_._2).toSeq == (1 to 4).map(i => Seq(i.toDouble, (10 - i).toDouble)))
+    val codes = Quantize.pqEncode(vecs, "vec_id", "embedding", 1, cb)
+    val out = Quantize.adcTopK(codes, "vec_id", "codes", vecs.where(col("vec_id") === 2L),
+      "vec_id", "embedding", cb, nSub = 1, nCodes = 4, k = 3)
+    assert(out.count() == 3)
+  }
+
   // ---- Bpe.encodeCorpus -----------------------------------------------
 
   test("encodeCorpus reassembles per-word segmentations in document order") {

@@ -23,6 +23,36 @@ class GateQueriesSpec extends SparkSpec {
     }
   }
 
+  test("every other harness-bound gate returns its recorded row count and leaves no stream active") {
+    // row counts the gates return at the fixture scale named; q98 runs at
+    // sf0.01 because its sf0.001 fixture withholds no acceptable late
+    // row (its own require fails), and q103 returns no rows at sf0.001
+    val sf01 = "/root/testdata/sf0.01"
+    val want = Seq(
+      ("q78_stream_upsert", sf, 15L), ("q79_stream_funnel", sf, 45L),
+      ("q80_stream_sessionize", sf, 946L), ("q81_stream_rollup", sf, 868L),
+      ("q83_stream_enrich", sf, 202L), ("q84_stream_interval_join", sf, 2L),
+      ("q86_daily_update", sf, 799L), ("q87_stream_late_data", sf, 755L),
+      ("q91_formats_roundtrip", sf, 3000L), ("q92_daily_derived", sf, 189L),
+      ("q93_stream_late_sessionize", sf, 935L), ("q94_stream_sessionize_recovery", sf, 946L),
+      ("q95_landing_stream", sf, 1000L), ("q96_backfill_pipeline", sf, 799L),
+      ("q97_stream_late_funnel", sf, 45L), ("q98_stream_late_dedup", sf01, 8573L),
+      ("q99_stream_late_interval_join", sf, 78L), ("q101_parquet_landing", sf, 1000L),
+      ("q102_compaction", sf, 397L), ("q103_clustered_layout", sf01, 2654L),
+      ("q106_zorder_layout", sf, 56L), ("q113_schema_evolution", sf, 1000L),
+      ("q115_stream_left_interval_join", sf, 188L),
+      ("q117_available_now_catchup", sf, 1000L), ("q144_incremental_first_touch", sf, 75L))
+    // the five gates the other tests here run
+    val elsewhere = Set("q74_stream_neardup", "q82_stream_dedup", "q89_stream_recovery",
+      "q90_backfill", "q100_neardup_recovery")
+    assert(want.map(_._1).toSet ++ elsewhere == graft.Bench.harnessBound)
+    want.foreach { case (q, dir, n) =>
+      val got = graft.Caches.scoped(GateQueries.queries(q)(spark, dir).count())
+      assert(got == n, s"$q at $dir returned $got rows, want $n")
+      assert(spark.streams.active.isEmpty, s"$q left a stream active")
+    }
+  }
+
   test("runStream stops the query when the feed throws, and the failure propagates") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

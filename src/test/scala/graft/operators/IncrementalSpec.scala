@@ -10,31 +10,22 @@ class IncrementalSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  test("deltaSince returns only rows after the terminal ts") {
+  test("deltaAfter the terminal ts returns only rows after it") {
     val existing = Seq((1L, ts("2024-01-01 00:00:00")), (2L, ts("2024-01-02 00:00:00")))
       .toDF("id", "ts")
     val incoming = Seq((2L, ts("2024-01-02 00:00:00")), (3L, ts("2024-01-03 00:00:00")))
       .toDF("id", "ts")
-    val out = Incremental.deltaSince(existing, incoming, "ts").select("id").as[Long].collect()
+    val out = Incremental.deltaAfter(incoming, "ts", Incremental.terminalTs(existing, "ts"))
+      .select("id").as[Long].collect()
     assert(out.toSeq == Seq(3L))
   }
 
-  test("deltaSince on empty target loads everything") {
+  test("deltaAfter an empty target's terminal ts loads everything") {
     val existing = Seq.empty[(Long, Timestamp)].toDF("id", "ts")
     val incoming = Seq((1L, ts("2024-01-01 00:00:00"))).toDF("id", "ts")
-    assert(Incremental.deltaSince(existing, incoming, "ts").count() == 1)
-  }
-
-  test("deltaAfter is deltaSince's cut for a precomputed boundary (shared-boundary contract)") {
-    val existing = Seq((1L, ts("2024-01-01 00:00:00")), (2L, ts("2024-01-02 00:00:00")))
-      .toDF("id", "ts")
-    val incoming = Seq((2L, ts("2024-01-02 00:00:00")), (3L, ts("2024-01-03 00:00:00")))
-      .toDF("id", "ts")
-    val viaSince = Incremental.deltaSince(existing, incoming, "ts").select("id").as[Long].collect().toSet
-    val viaAfter = Incremental.deltaAfter(incoming, "ts",
-      Incremental.terminalTs(existing, "ts")).select("id").as[Long].collect().toSet
-    assert(viaSince == viaAfter)
-    assert(Incremental.deltaAfter(incoming, "ts", None).count() == 2)
+    assert(Incremental.terminalTs(existing, "ts").isEmpty)
+    assert(Incremental.deltaAfter(incoming, "ts", Incremental.terminalTs(existing, "ts"))
+      .count() == 1)
   }
 
   test("firstTouchInsert equals the full rebuild, boundary ties included (q144 contract)") {
@@ -67,14 +58,6 @@ class IncrementalSpec extends SparkSpec {
     assert(inc == rebuild, s"incremental diverged: ${inc.diff(rebuild)} / ${rebuild.diff(inc)}")
     assert(inc.exists(_._3 == 201L), "delta tie must break on event_id")
     assert(inc.exists(_._3 == 101L) && inc.exists(_._3 == 301L) && inc.exists(_._3 == 401L))
-  }
-
-  test("replacePeriod swaps only the period's rows") {
-    val existing = Seq((1L, "2024-01-01", "old"), (2L, "2024-01-02", "keep")).toDF("id", "day", "v")
-    val incoming = Seq((9L, "2024-01-01", "new"), (8L, "2024-01-02", "ignored")).toDF("id", "day", "v")
-    val out = Incremental.replacePeriod(existing, incoming, col("day") === "2024-01-01")
-      .select("id", "v").as[(Long, String)].collect().sortBy(_._1)
-    assert(out.toSeq == Seq((2L, "keep"), (9L, "new")))
   }
 }
 

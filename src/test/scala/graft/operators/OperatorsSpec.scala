@@ -709,6 +709,35 @@ class SimilaritySpec extends SparkSpec {
     assert(srp.size < exact.size,
       s"bucketing pruned nothing (srp=${srp.size}, exact=${exact.size}) — the scale path is vacuous here")
   }
+
+  test("a zero-norm vector fails each cosine caller naming the operator") {
+    // vector 0 is the zero vector; it is a query, a corpus row and (for
+    // the centroid routes) a routed vector, never a centroid
+    val emb = Seq((0L, Array(0f, 0f)), (1L, Array(1f, 0f)), (2L, Array(0f, 1f)),
+      (3L, Array(1f, 1f))).toDF("vec_id", "embedding").withColumn("block", lit(1))
+    val queries = emb.where(col("vec_id") === 0L)
+    val cents = emb.where(col("vec_id") >= 1L)
+      .select(col("vec_id").as("centroid_id"), col("embedding").cast("array<double>").as("centv"))
+    val cands = Seq((0L, 1L), (0L, 2L)).toDF("query_id", "doc_id")
+    // (caller, the operator its failure names): ivfTopKWith routes every
+    // vector through nearestCentroids before it scores a pair
+    val cases = Seq[(String, String, () => org.apache.spark.sql.DataFrame)](
+      ("cosineTopK", "cosineTopK",
+        () => Similarity.cosineTopK(queries, emb, "vec_id", "embedding", 2)),
+      ("nearDupWithin", "pairsWithin",
+        () => Similarity.nearDupWithin(emb, "vec_id", "embedding", "block", 0.5)),
+      ("assignToCentroids", "nearestCentroids",
+        () => Similarity.assignToCentroids(emb, "vec_id", "embedding", cents)),
+      ("ivfTopKWith", "nearestCentroids",
+        () => Similarity.ivfTopKWith(queries, emb, "vec_id", "embedding", 2, 1, cents)),
+      ("cosineScores", "cosineScores",
+        () => Retrieval.cosineScores(cands, "query_id", "doc_id", emb, "vec_id", "embedding")))
+    cases.foreach { case (caller, op, run) =>
+      val ex = intercept[Exception](run().collect())
+      assert(ex.getMessage.contains(s"$op: zero-norm vector has no cosine"),
+        s"$caller: ${ex.getMessage}")
+    }
+  }
 }
 
 class MultimodalSpec extends SparkSpec {
