@@ -28,6 +28,12 @@ class IncrementalSpec extends SparkSpec {
       .count() == 1)
   }
 
+  test("deltaAfter with no boundary keeps every incoming row") {
+    val incoming = Seq((2L, ts("2024-01-02 00:00:00")), (3L, ts("2024-01-03 00:00:00")))
+      .toDF("id", "ts")
+    assert(Incremental.deltaAfter(incoming, "ts", None).count() == 2)
+  }
+
   test("firstTouchInsert equals the full rebuild, boundary ties included (q144 contract)") {
     // keys in both halves (state wins), keys only in the delta (insert),
     // keys only in the state (pass through), and a SAME-TIMESTAMP tie
