@@ -109,6 +109,20 @@ object Sessions {
       JFiles.createTempDirectory(scratchRoot, "warehouse-").toString)
     .getOrCreate()
 
+  /** Runs `body` with each `key -> value` set on `spark`'s session conf,
+    * then puts every key back as it was before: its prior value, or unset
+    * when it had none. Restores also when `body` throws.
+    */
+  def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Runs `tasks` on `width` threads (never more than there are tasks) and
     * returns their results in order. Every Spark job a task submits
     * carries one job tag. On the first failure the siblings' jobs are

@@ -2,7 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -41,11 +46,14 @@ object Verify {
     spark.stop()
   }
 
-  /** Writes query `name`'s result to `<outDir>/<name>.parquet`. A failure
-    * is reported on stderr and the dump goes on. The query runs inside one
-    * [[Caches.scoped]] block, so whatever it cached or checkpointed is
-    * released even when it fails (`clearCache` does not free checkpoint
-    * blocks); `clearCache` then drops what it held outside a scope.
+  /** Writes query `name`'s result to `<outDir>/<name>.parquet` and the
+    * [[planNodes]] of the written frame's executed plan, one per line, to
+    * `<outDir>/<name>.plan` (planning runs no job). A failure is reported
+    * on stderr, writes no plan, and the dump goes on. The query runs
+    * inside one [[Caches.scoped]] block, so whatever it cached or
+    * checkpointed is released even when it fails (`clearCache` does not
+    * free checkpoint blocks); `clearCache` then drops what it held
+    * outside a scope.
     */
   private[graft] def dump(spark: SparkSession, name: String,
                           build: (SparkSession, String) => DataFrame,
@@ -56,11 +64,23 @@ object Verify {
     // >10 min single-threaded. repartition adds one tiny exchange and
     // keeps the computation at the session's parallelism; only the
     // parquet encode is single-task (the oracle compare wants one file).
-    try Caches.scoped(build(spark, sfDir).repartition(1).write.mode("overwrite")
-      .parquet(s"$outDir/$name.parquet"))
-    catch { case e: Throwable =>
+    try Caches.scoped {
+      val out = build(spark, sfDir).repartition(1)
+      out.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+      Files.write(Paths.get(s"$outDir/$name.plan"),
+        planNodes(out.queryExecution.executedPlan).asJava)
+    } catch { case e: Throwable =>
       System.err.println(s"[verify] $name failed: ${e.getMessage}")
     }
     spark.catalog.clearCache()
   }
+
+  /** The pre-order node names of `plan`, descending into an adaptive
+    * plan's current plan and into the plan behind a cached-table scan.
+    */
+  private[graft] def planNodes(plan: SparkPlan): Seq[String] = plan.nodeName +: (plan match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case m: InMemoryTableScanExec => planNodes(m.relation.cachedPlan)
+    case p => p.children.flatMap(planNodes)
+  })
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Caches
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Keyed deduplication via window row_number — the reference's
@@ -17,10 +16,8 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** Keep exactly one row per key, the first under `order`. */
-  def oneByKey(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
-  }
+  def oneByKey(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
+    Rankings.topKPerGroup(df, keys, order, 1, "__rn").drop("__rn")
 
   /** Latest row per key by (ts desc, id desc). */
   def latestByKey(df: DataFrame, keys: Seq[String], tsCol: String, idCol: String): DataFrame =

@@ -32,8 +32,8 @@ object Packing {
     // DuckDB-replayable as ('0x'||substr(md5(...),1,8))::BIGINT
     val keyed = df.withColumn("__h", Sampling.hashLong(col(idCol), salt))
       .withColumn("shard", pmod(col("__h"), lit(nShards.toLong)).cast("int"))
-    val w = Window.partitionBy(col("shard")).orderBy(col("__h"), col(idCol))
-    keyed.withColumn("pos", row_number().over(w) - 1).drop("__h")
+    Rankings.rankWithin(keyed, Seq("shard"), Seq(col("__h"), col(idCol)), "pos")
+      .withColumn("pos", col("pos") - 1).drop("__h")
   }
 
   /** Pack the shuffled corpus into fixed `budget`-token training sequences

@@ -152,7 +152,7 @@ object Quantize {
       if (excludeSelf) scored.where(col("neighbor_id") =!= col("query_id"))
       else scored
     Rankings.topKPerGroup(candidates.where(col("adc_dist").isNotNull),
-      Seq("query_id"), Seq(col("adc_dist").asc, col("neighbor_id").asc), k)
+      Seq("query_id"), Seq(col("adc_dist").asc, col("neighbor_id").asc), k, "rnk")
   }
 
   /** ADC over the codes of probed lists — the scoring half of
@@ -447,7 +447,7 @@ object Quantize {
       .select(col("query_id"), col("neighbor_id"),
         VectorFns.dist2(col("__qv"), col("__cv")).as("l2_dist"))
     Rankings.topKPerGroup(refined, Seq("query_id"),
-      Seq(col("l2_dist").asc, col("neighbor_id").asc), k)
+      Seq(col("l2_dist").asc, col("neighbor_id").asc), k, "rnk")
   }
 
   /** Deterministic Lloyd training of the per-subspace PQ codebooks —

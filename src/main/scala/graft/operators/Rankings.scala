@@ -74,20 +74,27 @@ object Rankings {
       .drop("__pid", "__pos", "__base", "__off")
   }
 
-  /** Top-k rows PER GROUP — the reference's `row_number() over (partition
-    * by collection_id order by feed_importance_score desc) <= 3` feed-score
-    * shape (update_etl.py:1182-1199). Adds `rnk` (1-based within group).
+  /** Adds `outName`, the 1-based int `row_number()` of each row within its
+    * group: the reference's `row_number() over (partition by groupCols
+    * order by order)` (update_etl.py:412-452 first_acquisition, :480-534
+    * nft_ownership, :537-631 worth rank, :1182-1199 feed top-3). `order`
+    * must be a unique total order within the group (end it with a unique
+    * id), so the rank is deterministic under any partitioning and
+    * rank == row_number == dense_rank.
+    */
+  def rankWithin(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
+                 outName: String): DataFrame =
+    df.withColumn(outName,
+      row_number().over(Window.partitionBy(groupCols.map(col): _*).orderBy(order: _*)))
+
+  /** Top-k rows PER GROUP: [[rankWithin]] cut at `outName <= k`.
     *
     * Scale: the rank-filter-over-window pattern is recognized by Spark's
     * InferWindowGroupLimit rule, which inserts a partial WindowGroupLimit
     * BEFORE the shuffle — each map task keeps only its local top-k per
     * group, so the shuffle carries O(groups × k) rows, not the full input.
-    * `order` must include a unique tiebreak for deterministic boundaries.
     */
   def topKPerGroup(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
-                   k: Int): DataFrame =
-    df.withColumn("rnk",
-        row_number().over(
-          Window.partitionBy(groupCols.map(col): _*).orderBy(order: _*)).cast("int"))
-      .where(col("rnk") <= k)
+                   k: Int, outName: String): DataFrame =
+    rankWithin(df, groupCols, order, outName).where(col(outName) <= k)
 }

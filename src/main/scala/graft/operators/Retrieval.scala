@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.{Portable, TextFns, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Ranked full-text retrieval over the corpus — the "find the training
@@ -110,9 +109,7 @@ object Retrieval {
         Portable.q6(col("__qsum").cast("double") / lit(1000000.0)))
       .drop("__qsum")
 
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, id.asc)
-    folded.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    Rankings.topKPerGroup(folded, Seq(queryIdCol), Seq(col("score").desc, id.asc), k, "rank")
       .select(col(queryIdCol), id, col("score"), col("n_terms"), col("rank"))
   }
 
@@ -146,11 +143,8 @@ object Retrieval {
                   emb: DataFrame, embIdCol: String, vecCol: String,
                   k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine").desc, col(docIdCol).asc)
-    cosineScores(cands, queryIdCol, docIdCol, emb, embIdCol, vecCol)
-      .withColumn("rerank", row_number().over(w))
-      .where(col("rerank") <= k)
+    Rankings.topKPerGroup(cosineScores(cands, queryIdCol, docIdCol, emb, embIdCol, vecCol),
+      Seq(queryIdCol), Seq(col("cosine").desc, col(docIdCol).asc), k, "rerank")
   }
 
   /** The shared dense-scoring step of [[denseRerank]] and
@@ -198,10 +192,7 @@ object Retrieval {
                     bm25RankCol: String, posThreshold: Double,
                     negPerQuery: Int): DataFrame = {
     require(negPerQuery >= 1, "negPerQuery must be >= 1")
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col(bm25RankCol).asc, col(docIdCol).asc)
-    scored.where(col("cosine") < posThreshold)
-      .withColumn("neg_rank", row_number().over(w).cast("int"))
-      .where(col("neg_rank") <= negPerQuery)
+    Rankings.topKPerGroup(scored.where(col("cosine") < posThreshold), Seq(queryIdCol),
+      Seq(col(bm25RankCol).asc, col(docIdCol).asc), negPerQuery, "neg_rank")
   }
 }

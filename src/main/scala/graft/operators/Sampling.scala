@@ -96,13 +96,9 @@ object Sampling {
     * One hash shuffle on the stratum; per-group state is the window.
     */
   def capPerStratum(df: DataFrame, strataCol: String, idCol: String,
-                    maxN: Int, salt: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(strataCol))
-      .orderBy(hashUnit(col(idCol), salt).asc, col(idCol).asc)
-    df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= maxN).drop("__rn")
-  }
+                    maxN: Int, salt: String): DataFrame =
+    Rankings.topKPerGroup(df, Seq(strataCol),
+      Seq(hashUnit(col(idCol), salt).asc, col(idCol).asc), maxN, "__rn").drop("__rn")
 
   /** Mixture resampling toward target per-stratum shares: given
     * `targetShare` (stratum → fraction of the OUTPUT mix) and a total

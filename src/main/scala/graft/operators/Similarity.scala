@@ -3,7 +3,6 @@ package graft.operators
 import graft.Caches
 import graft.functions.{HashFns, Portable, TextFns, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity / near-duplicate family.
@@ -414,8 +413,8 @@ object Similarity {
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         VectorFns.cosine(col("qv"), col("qn"), col("cv"), col("cn"), "cosineTopK").as("cosine"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    Rankings.topKPerGroup(scored, Seq("query_id"),
+      Seq(col("cosine").desc, col("neighbor_id").asc), k, "rank")
   }
 
   /** Brute-force squared-L2 top-k: the exact truth the ADC/PQ search
@@ -439,9 +438,8 @@ object Similarity {
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         VectorFns.dist2(col("qv"), col("cv")).as("l2_dist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("l2_dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    Rankings.topKPerGroup(scored, Seq("query_id"),
+      Seq(col("l2_dist").asc, col("neighbor_id").asc), k, "rank")
   }
 
   /** `df` as (extra…, id, v: array<double>, vn = |v|): the shape the
@@ -501,7 +499,7 @@ object Similarity {
         vecs.crossJoin(broadcast(cents))
           .withColumn("__sim", VectorFns.cosine(col(v), col(vn), col("centv"), col("__cn"),
             "nearestCentroids")),
-        Seq(key), Seq(col("__sim").desc, col("centroid_id").asc), n)
+        Seq(key), Seq(col("__sim").desc, col("centroid_id").asc), n, "rnk")
       .drop("__cn", "__sim", "rnk")
   }
 
@@ -573,8 +571,8 @@ object Similarity {
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         VectorFns.cosine(col("qv"), col("qn"), col("cv"), col("cn"), "ivfTopKWith").as("cosine"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    Rankings.topKPerGroup(scored, Seq("query_id"),
+      Seq(col("cosine").desc, col("neighbor_id").asc), k, "rank")
   }
 
   /** Deterministic Lloyd's k-means (cosine assignment, element-wise mean

@@ -3,7 +3,6 @@ package graft.queries
 import graft.operators._
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import graft.functions.Portable
 import org.apache.spark.sql.functions._
 
@@ -113,10 +112,8 @@ object CoreQueries {
       val tot = Rankings.globalRank(
         base.groupBy(col("user_id")).agg(Portable.q4(sum(col("worth"))).as("total_worth")),
         Seq(col("total_worth").desc, col("user_id")), "user_rank")
-      base.join(tot, "user_id")
-        .withColumn("rnk_in_user",
-          row_number().over(Window.partitionBy(col("user_id"))
-            .orderBy(col("worth").desc, col("event_type"))).cast("int"))
+      Rankings.rankWithin(base.join(tot, "user_id"), Seq("user_id"),
+          Seq(col("worth").desc, col("event_type")), "rnk_in_user")
         .withColumn("pct_of_total", Portable.q6(col("worth") / col("total_worth")))
         .select(col("user_id"), col("event_type"), col("worth"), col("n_events"),
           col("total_worth"), col("user_rank"), col("rnk_in_user"), col("pct_of_total"))

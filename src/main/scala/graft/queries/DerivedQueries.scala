@@ -4,7 +4,6 @@ import graft.operators._
 import graft.sources.Tables
 import graft.functions.Portable
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-2 reference-derived surface (SURVEY.md §2, rows 34-40): the
@@ -36,7 +35,7 @@ object DerivedQueries {
           Portable.q6(pow(lit(0.8), datediff(col("maxd"), col("last_day")) + 1) * 1.2 +
             col("total_value") / col("max_total") * 2).as("score"))
       Rankings.topKPerGroup(insight, Seq("event_type"),
-          Seq(col("score").desc, col("user_id").asc), 3)
+          Seq(col("score").desc, col("user_id").asc), 3, "rnk")
         .groupBy(col("event_type"))
         .agg(Portable.q6(sum(col("score"))).as("feed_importance_score"),
           count(lit(1)).as("n_top_insights"))
@@ -62,10 +61,8 @@ object DerivedQueries {
           count(lit(1)).as("num_tokens"))
       val tot = base.groupBy(col("user_id"))
         .agg(Portable.q4(sum(col("collection_worth"))).as("total_worth"))
-      val holdings = base.join(tot, "user_id")
-        .withColumn("collection_rank_in_portfolio",
-          row_number().over(Window.partitionBy(col("user_id"))
-            .orderBy(col("collection_worth").desc, col("event_type"))).cast("int"))
+      val holdings = Rankings.rankWithin(base.join(tot, "user_id"), Seq("user_id"),
+          Seq(col("collection_worth").desc, col("event_type")), "collection_rank_in_portfolio")
         .withColumn("collection_pct_total",
           Portable.q6(col("collection_worth") / col("total_worth")))
       holdings.join(broadcast(insiders), "user_id")
@@ -85,10 +82,8 @@ object DerivedQueries {
       val daily = ev.crossJoin(broadcast(scal))
         .groupBy(col("user_id"), col("day"), col("maxd"))
         .agg(Portable.q4(sum(col("value"))).as("member_worth"))
-      def snap(cond: org.apache.spark.sql.Column) = daily.where(cond)
-        .withColumn("member_rank",
-          row_number().over(Window.partitionBy(col("day"))
-            .orderBy(col("member_worth").desc, col("user_id"))).cast("int"))
+      def snap(cond: org.apache.spark.sql.Column) = Rankings.rankWithin(daily.where(cond),
+          Seq("day"), Seq(col("member_worth").desc, col("user_id")), "member_rank")
         .select(col("user_id"), col("member_rank"), col("member_worth"),
           col("day").as("created_at"))
       val history = snap(col("day") === date_sub(col("maxd"), 1))
@@ -192,17 +187,15 @@ object DerivedQueries {
       val exits = ev.where(col("event_type") === "view")
         .select(col("user_id"), col("k"), col("ts").as("exit_ts"),
           col("event_id").as("exit_event_id"), col("value").as("exit_value"))
-      val matched = entries.as("e")
+      val pairs = entries.as("e")
         .join(exits.as("x"),
           col("e.user_id") === col("x.user_id") && col("e.k") === col("x.k") &&
             col("x.exit_ts") > col("e.entry_ts"), "left")
         .select(col("e.user_id"), col("e.k"), col("entry_event_id"),
           col("entry_ts"), col("entry_value"),
           col("exit_event_id"), col("exit_ts"), col("exit_value"))
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy(col("entry_event_id"))
-            .orderBy(col("exit_ts").asc_nulls_last, col("exit_event_id").asc_nulls_last)))
-        .where(col("__rn") === 1).drop("__rn")
+      val matched = Dedup.oneByKey(pairs, Seq("entry_event_id"),
+        Seq(col("exit_ts").asc_nulls_last, col("exit_event_id").asc_nulls_last))
       val marks = Dedup.latestByKey(ev.where(col("event_type") === "view"),
           Seq("k"), "ts", "event_id")
         .select(col("k"), col("value").as("mark_value"))

@@ -9,7 +9,12 @@ import graft.{Caches, Sessions}
 import graft.functions.TextFns
 import graft.operators.{Multimodal, Packing, Similarity, Sketches}
 import graft.sources.{Formats, Tables}
-import graft.streaming.StreamOps
+import graft.streaming.{Micros, StreamOps}
+// The streaming fixtures (q78–q84, q87, q89) order, select and split
+// events by epoch MICROSECONDS, never `getTime`: the DuckDB oracles and
+// the µs-precise StreamOps compare full µs timestamps, so two events of
+// one user inside one millisecond must rank here as the oracle ranks them.
+import graft.streaming.Micros.us
 import graft.streaming.StreamOps.{Event, FunnelEvent}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -36,30 +41,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * flag and fails the hash compare.
   */
 object GateQueries {
-
-  /** Epoch MICROSECONDS of a fixture timestamp. The streaming fixtures
-    * (q78–q84, q87, q89) order/select events with this key, NOT
-    * `getTime`: the DuckDB oracles and the µs-precise StreamOps compare
-    * full microsecond timestamps, so two events for one user inside the
-    * same millisecond must be ranked here exactly as the oracle ranks
-    * them — `getTime` alone truncates to ms and could pick or batch-split
-    * them in a different order (the same truncation class StreamOps fixed
-    * in round 5).
-    */
-  private def us(t: Timestamp): Long =
-    t.getTime / 1000 * 1000000L + t.getNanos / 1000
-
-  /** Inverse of [[us]]: Timestamp from epoch microseconds. The sentinel
-    * arithmetic in the streaming fixtures goes through this pair instead
-    * of `getTime` so the whole fixture is uniformly µs-precise — safety
-    * must not ride on the sentinels' multi-hour margin absorbing a
-    * millisecond truncation.
-    */
-  private def microTs(epochUs: Long): Timestamp = {
-    val t = new Timestamp(epochUs / 1000)
-    t.setNanos(((epochUs % 1000000L) * 1000L).toInt)
-    t
-  }
 
   /** A fresh, empty directory for one gate run under
     * [[Sessions.scratchRoot]], which is deleted at JVM exit.
@@ -106,7 +87,7 @@ object GateQueries {
     */
   private def flushSentinels[T: ClassTag](q: StreamingQuery, in: MemoryStream[T], firstUs: Long)
                                          (row: Timestamp => T): Unit =
-    feed(q, in, Seq(0L, 1000000L).map(offUs => Array(row(microTs(firstUs + offUs)))))
+    feed(q, in, Seq(0L, 1000000L).map(offUs => Array(row(Micros.ts(firstUs + offUs)))))
 
   /** Feeds both sides of a stream-stream join their [[thirds]] in
     * lockstep, one micro-batch per pair of chunks.
@@ -312,11 +293,11 @@ object GateQueries {
     val ev = cappedEvents(s, d)
     // bounded: 1-row min/max scalar
     val mm = ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).collect()(0)
-    // µs midpoint via the us()/microTs pair — the day-1/day-2 split must
+    // µs midpoint via the Micros pair — the day-1/day-2 split must
     // not depend on ms-grid alignment of the fixture timestamps (the
     // same truncation class the streaming fixtures fixed in r07)
     val (mnUs, mxUs) = (us(mm.getTimestamp(0)), us(mm.getTimestamp(1)))
-    val split = microTs(mnUs + (mxUs - mnUs) / 2)
+    val split = Micros.ts(mnUs + (mxUs - mnUs) / 2)
 
     // non-event tables are identical on both days: write the capped
     // ones once under shared/ and symlink; small fixed-cardinality
@@ -1661,7 +1642,7 @@ object GateQueries {
       // bounded: 1-row max-of-min-ts scalar
       val lastFirst = ev.groupBy(col("user_id"), col("event_type"))
         .agg(min(col("ts")).as("f")).agg(max(col("f"))).collect()(0).getTimestamp(0)
-      val split = microTs(us(lastFirst) - 1L)
+      val split = Micros.ts(us(lastFirst) - 1L)
       val root = gateDir("q144")
       val (day1, day2) = (root.resolve("day1"), root.resolve("day2"))
       JFiles.createDirectories(day1); JFiles.createDirectories(day2)
@@ -1709,7 +1690,7 @@ object GateQueries {
         // the null rows (watermark updates take effect NEXT batch)
         val maxUs = math.max(views.map(r => us(r._3)).max, clicks.map(r => us(r._3)).max)
         Seq(1L, 2L).foreach { i =>
-          val sentinelTs = microTs(maxUs +
+          val sentinelTs = Micros.ts(maxUs +
             (horizonSeconds + 7200L * i) * 1000000L)
           vIn.addData((-i, -1L, sentinelTs))
           cIn.addData((-i, -1L, sentinelTs))
@@ -1875,12 +1856,10 @@ object GateQueries {
       if (!streamingGates(name)) name -> f
       else name -> { (s: org.apache.spark.sql.SparkSession, d: String) =>
         val key = "spark.sql.shuffle.partitions"
-        val prev = s.conf.get(key)
         val width = StreamOps.statefulShuffleWidth(
           perBatchBytes = gatePerBatchBytes,
-          sessionWidth = scala.util.Try(prev.toInt).getOrElse(200))
-        s.conf.set(key, width.toString)
-        try f(s, d) finally s.conf.set(key, prev)
+          sessionWidth = scala.util.Try(s.conf.get(key).toInt).getOrElse(200))
+        Sessions.withConf(s, key -> width.toString)(f(s, d))
       }
     }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import graft.Caches
+import graft.{Caches, Sessions}
 import graft.sources.Formats
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,17 +63,6 @@ object StreamOps {
   final case class Session(user_id: Long, session_start: Timestamp, session_end: Timestamp,
                            n_events: Long, total_value: Double)
 
-  /** Epoch MICROSECONDS of a Timestamp — `getTime` alone truncates to
-    * milliseconds, which silently coarsens the µs-precision event times
-    * parquet carries (a session boundary or emitted bound would be up to
-    * 999 µs off the batch form's). NOTE: the stateful closures re-define
-    * these locally — referencing object methods from inside an fMGWS
-    * update function drags the whole module into the task closure and
-    * fails serialization.
-    */
-  private[streaming] def tsMicros(t: Timestamp): Long =
-    t.getTime / 1000 * 1000000L + t.getNanos / 1000
-
   /** Stateful gap-based sessionization: the streaming twin of the batch
     * `Sessionize` operator. A session closes when the event-time watermark
     * passes `last event + gapSeconds` — deterministic (no wall-clock
@@ -84,34 +73,27 @@ object StreamOps {
                  watermarkDelay: String = "10 seconds"): Dataset[Session] = {
     val spark = events.sparkSession
     import spark.implicits._
-    // state tracks MICROSECONDS (tsMicros) so session bounds and gap
+    // state tracks MICROSECONDS ([[Micros]]) so session bounds and gap
     // comparisons are bit-identical to the batch operator on µs data
     val gapUs = gapSeconds * 1000000L
 
     def update(userId: Long, rows: Iterator[Event],
                state: GroupState[SessionState]): Iterator[Session] = {
-      // local copies: object-method references don't serialize from here
-      def tsMicros(t: Timestamp): Long = t.getTime / 1000 * 1000000L + t.getNanos / 1000
-      def microTs(us: Long): Timestamp = {
-        val t = new Timestamp(us / 1000)
-        t.setNanos(((us % 1000000L) * 1000L).toInt)
-        t
-      }
       if (state.hasTimedOut) {
         val s = state.get
         state.remove()
-        Iterator(Session(userId, microTs(s.start), microTs(s.last), s.n, s.total))
+        Iterator(Session(userId, Micros.ts(s.start), Micros.ts(s.last), s.n, s.total))
       } else {
-        val sorted = rows.toSeq.sortBy(e => tsMicros(e.ts))
+        val sorted = rows.toSeq.sortBy(e => Micros.us(e.ts))
         var closed = List.empty[Session]
         var cur = state.getOption
         sorted.foreach { e =>
-          val t = tsMicros(e.ts)
+          val t = Micros.us(e.ts)
           cur match {
             case Some(s) if t - s.last <= gapUs =>
               cur = Some(SessionState(s.start, math.max(s.last, t), s.n + 1, s.total + e.value))
             case Some(s) =>
-              closed ::= Session(userId, microTs(s.start), microTs(s.last), s.n, s.total)
+              closed ::= Session(userId, Micros.ts(s.start), Micros.ts(s.last), s.n, s.total)
               cur = Some(SessionState(t, t, 1, e.value))
             case None =>
               cur = Some(SessionState(t, t, 1, e.value))
@@ -227,14 +209,13 @@ object StreamOps {
       // MICROSECOND ordering/comparison (getTime is ms-truncated): a
       // stage event landing <1 ms after the previous stage must count,
       // exactly as the batch form's full-precision `ts >` does
-      def tsMicros(t: Timestamp): Long = t.getTime / 1000 * 1000000L + t.getNanos / 1000
       var reached = state.getOption.map(_.reachedTimes).getOrElse(Nil)
       val hits = scala.collection.mutable.ListBuffer.empty[FunnelHit]
-      rows.toSeq.sortBy(e => (tsMicros(e.ts), e.event_type)).foreach { e =>
+      rows.toSeq.sortBy(e => (Micros.us(e.ts), e.event_type)).foreach { e =>
         val next = reached.length
         if (next < stages.length && e.event_type == stages(next) &&
-            (reached.isEmpty || tsMicros(e.ts) > reached.last)) {
-          reached = reached :+ tsMicros(e.ts)
+            (reached.isEmpty || Micros.us(e.ts) > reached.last)) {
+          reached = reached :+ Micros.us(e.ts)
           hits += FunnelHit(userId, stages(next), next + 1, e.ts)
         }
       }
@@ -294,9 +275,6 @@ object StreamOps {
         // tasks + tiny files). Re-enable AQE for the inner queries so
         // shuffle widths and output file counts track per-batch VOLUME
         // (advisory-size coalescing), at any scale, with no pinned width.
-        val aqeKey = "spark.sql.adaptive.enabled"
-        val aqePrev = spark.conf.get(aqeKey, "true")
-        spark.conf.set(aqeKey, "true")
         // The multi-consumer frames below are cached, and by default AQE
         // is skipped INSIDE cached-plan materialization
         // (canChangeCachedPlanOutputPartitioning=false), so the cached
@@ -304,11 +282,9 @@ object StreamOps {
         // every store file count regardless of the AQE re-enable
         // (measured: bands wrote 32 files per batch partition either
         // way). Scoped to this closure; results are partitioning-free.
-        val cacheAqeKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-        val cacheAqePrev = spark.conf.get(cacheAqeKey, "false")
-        spark.conf.set(cacheAqeKey, "true")
-        // every frame cached for this batch is released after the writes
-        try Caches.scoped {
+        // Every frame cached for this batch is released after the writes.
+        Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "true",
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")(Caches.scoped {
           val b = Caches.hold(batch.select(col(idCol), col(textCol)))
           // Incoming band keys are planned ONCE and shared between the
           // pair search and the bands-store write.
@@ -334,10 +310,7 @@ object StreamOps {
             Formats.writePartitioned(df.withColumn("batch_id", lit(batchId)),
               s"$storeDir/$store", Seq("batch_id"))
           } finally sc.setJobDescription(desc)
-        } finally {
-          spark.conf.set(aqeKey, aqePrev)
-          spark.conf.set(cacheAqeKey, cacheAqePrev)
-        }
+        })
         ()
       }
       .start()
@@ -391,10 +364,7 @@ object StreamOps {
         // cloned session has it forced off; the outer source→foreachBatch
         // plan is structurally exempt either way) so the merge join and
         // snapshot write coalesce to the batch's volume — see nearDupSink
-        val aqeKey = "spark.sql.adaptive.enabled"
-        val aqePrev = spark.conf.get(aqeKey, "true")
-        spark.conf.set(aqeKey, "true")
-        try {
+        Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "true") {
           val merged = Formats.readTable(spark, targetPath) match {
             case None => batch.select(col(updateKey).as("id") +:
               setCols.toSeq.sortBy(_._1).map { case (t, s) => col(s).as(t) }: _*)
@@ -403,7 +373,7 @@ object StreamOps {
               .drop("is_new", "updated")
           }
           Formats.replaceTable(merged, targetPath)
-        } finally spark.conf.set(aqeKey, aqePrev)
+        }
         ()
       }
       .start()

@@ -47,6 +47,22 @@ class EntrySpec extends AnyFunSuite {
     }
   }
 
+  test("bench warm-up names a failed query and warms it again at the bench scale") {
+    val runs = scala.collection.mutable.ListBuffer.empty[(String, String)]
+    val stubs = Map[String, String => Unit](
+      "q_bad" -> { dir => if (dir == "warm") throw new IllegalStateException("too small") },
+      "q_good" -> { _ => () })
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try Bench.warmUp(Seq("q_bad", "q_good"), "warm", "sf") { (name, dir) =>
+      runs += name -> dir
+      scala.util.Try(stubs(name)(dir)).failed.toOption
+    } finally System.setErr(stderr)
+    assert(runs.toSeq == Seq("q_bad" -> "warm", "q_bad" -> "sf", "q_good" -> "warm"))
+    assert(err.toString("UTF-8") == "[bench] warm-up q_bad failed at warm: too small\n")
+  }
+
   test("bench detail: a failed per-core copy does not misreport the written primary file") {
     val dir = java.nio.file.Files.createTempDirectory(Sessions.scratchRoot, "graft-bench-detail")
     val primary = dir.resolve("detail.json").toString

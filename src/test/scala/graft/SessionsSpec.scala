@@ -25,6 +25,24 @@ class SessionsSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == cpus.toString)
   }
 
+  test("withConf restores a key set before and leaves a key absent before absent, also on a throw") {
+    val (set, absent) = ("spark.graft.test.withConf.set", "spark.graft.test.withConf.absent")
+    spark.conf.set(set, "before")
+    try {
+      for (fail <- Seq(false, true)) {
+        val body = () => {
+          assert(spark.conf.get(set) == "inside" && spark.conf.get(absent) == "inside")
+          if (fail) throw new IllegalStateException("body failed")
+        }
+        if (fail) intercept[IllegalStateException](
+          Sessions.withConf(spark, set -> "inside", absent -> "inside")(body()))
+        else Sessions.withConf(spark, set -> "inside", absent -> "inside")(body())
+        assert(spark.conf.get(set) == "before", s"fail=$fail")
+        assert(!spark.conf.getAll.contains(absent), s"fail=$fail")
+      }
+    } finally spark.conf.unset(set)
+  }
+
   test("deleteRecursively deletes past a directory that is not empty when its delete runs") {
     val root = Files.createTempDirectory(Sessions.scratchRoot, "graft-delete-late")
     val late = Files.createDirectories(root.resolve("a/b"))

@@ -893,7 +893,7 @@ class TopKPerGroupSpec extends SparkSpec {
       ("b", 5L, 2.0)
     ).toDF("g", "id", "score")
     val out = Rankings.topKPerGroup(df, Seq("g"),
-        Seq(col("score").desc, col("id").asc), 2)
+        Seq(col("score").desc, col("id").asc), 2, "rnk")
       .select("g", "id", "rnk").as[(String, Long, Int)].collect().toSet
     // group a: 9.0 first, then the 5.0 tie broken by id asc
     assert(out == Set(("a", 3L, 1), ("a", 1L, 2), ("b", 5L, 1)))
@@ -902,8 +902,54 @@ class TopKPerGroupSpec extends SparkSpec {
   test("rank filter plans as WindowGroupLimit (partial top-k before shuffle)") {
     val df = (1 to 100).map(i => (i % 5, i.toLong, i * 1.1)).toDF("g", "id", "score")
     val plan = Rankings.topKPerGroup(df, Seq("g"),
-      Seq(col("score").desc, col("id").asc), 3).queryExecution.executedPlan.toString
+      Seq(col("score").desc, col("id").asc), 3, "rnk").queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), s"expected WindowGroupLimit in:\n$plan")
+  }
+
+  test("every per-group top-k plans as WindowGroupLimit and breaks an exact tie to the lower id") {
+    // query 1 = (1, 0); ids 2 and 3 mirror each other about it (equal
+    // cosine, equal L2 distance), the higher id first in the input; 4 is
+    // the far side
+    val emb = Seq((1L, Array(1f, 0f)), (3L, Array(1f, -1f)), (2L, Array(1f, 1f)),
+      (4L, Array(-1f, 0f))).toDF("vec_id", "embedding")
+    val q = emb.where(col("vec_id") === 1L)
+    val cents = Seq((0, Array(1.0, 0.0))).toDF("centroid_id", "centv")
+    val cb = Quantize.seededCodebook(emb, "vec_id", "embedding", nSub = 1, nCodes = 4)
+    val codes = Quantize.pqEncode(emb, "vec_id", "embedding", 1, cb)
+    val docs = Seq((3L, "spark tuning"), (2L, "spark tuning"), (4L, "other words"))
+      .toDF("doc_id", "text")
+    val terms = Seq((1L, "spark")).toDF("query_id", "term")
+    val cands = Seq((1L, 3L), (1L, 2L), (1L, 4L)).toDF("query_id", "doc_id")
+    val scored = Seq((1L, 3L, 1, 0.1), (1L, 2L, 1, 0.1), (1L, 4L, 2, 0.1))
+      .toDF("query_id", "doc_id", "bm25_rank", "cosine")
+    val keyed = Seq((1, 3L, 5.0), (1, 2L, 5.0), (1, 4L, 1.0)).toDF("k", "id", "score")
+    // capPerStratum ranks on the salted hash of the id itself, so distinct
+    // ids never tie: its kept row is the lowest (hash, id)
+    val strata = (2L to 9L).map(i => ("s", i)).toDF("stratum", "id")
+    val firstByHash = strata.orderBy(Sampling.hashUnit(col("id"), "cap"), col("id"))
+      .as[(String, Long)].first()._2
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame, String, Long)](
+      ("cosineTopK", Similarity.cosineTopK(q, emb, "vec_id", "embedding", 1), "neighbor_id", 2L),
+      ("l2TopK", Similarity.l2TopK(q, emb, "vec_id", "embedding", 1), "neighbor_id", 2L),
+      ("ivfTopKWith", Similarity.ivfTopKWith(q, emb, "vec_id", "embedding", 1, 1, cents),
+        "neighbor_id", 2L),
+      ("bm25TopK", Retrieval.bm25TopK(docs, "doc_id", "text", terms, "query_id", "term",
+        k = 1, maxDfFrac = 1.0), "doc_id", 2L),
+      ("denseRerank", Retrieval.denseRerank(cands, "query_id", "doc_id", emb, "vec_id",
+        "embedding", 1), "doc_id", 2L),
+      ("hardNegatives", Retrieval.hardNegatives(scored, "query_id", "doc_id", "bm25_rank",
+        0.5, 1), "doc_id", 2L),
+      ("capPerStratum", Sampling.capPerStratum(strata, "stratum", "id", 1, "cap"), "id",
+        firstByHash),
+      ("Dedup.oneByKey", Dedup.oneByKey(keyed, Seq("k"), Seq(col("score").desc, col("id").asc)),
+        "id", 2L),
+      ("adcTopK", Quantize.adcTopK(codes, "vec_id", "codes", q, "vec_id", "embedding", cb,
+        nSub = 1, nCodes = 4, k = 1, excludeSelf = true), "neighbor_id", 2L))
+    cases.foreach { case (op, out, idCol, kept) =>
+      val plan = out.queryExecution.executedPlan.toString
+      assert(plan.contains("WindowGroupLimit"), s"$op: expected WindowGroupLimit in:\n$plan")
+      assert(out.select(col(idCol)).as[Long].collect().toSeq == Seq(kept), op)
+    }
   }
 }
 

@@ -76,6 +76,19 @@ class StreamOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("sessionize keeps pre-1970 event times exact to the microsecond") {
+    // a stream's watermark starts at the epoch and drops earlier events as
+    // late, so the update function meets pre-1970 times over a batch Dataset
+    def at(ms: Long, nanos: Int) = { val t = new Timestamp(ms); t.setNanos(nanos); t }
+    val (first, second) = (at(-1750, 250123000), at(-1250, 750456000))
+    val events = Seq(StreamOps.Event(9L, second, 2.0), StreamOps.Event(9L, first, 1.0),
+      StreamOps.Event(9L, at(100000, 0), 4.0)).toDS() // >60s gap → closes the first two
+    val rows = StreamOps.sessionize(events, gapSeconds = 60)
+      .select("user_id", "session_start", "session_end", "n_events")
+      .as[(Long, Timestamp, Timestamp, Long)].collect().toSeq
+    assert(rows == Seq((9L, first, second, 2L)))
+  }
+
   test("enrichStream joins streaming facts against a static dimension") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Double)]

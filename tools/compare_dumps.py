@@ -10,6 +10,11 @@ with DuckDB that <changeOut> holds the same result:
   - EXCEPT ALL empty in both directions (equal as multisets of rows).
 Prints one line per query and exits 1 naming every query that differs
 (a query missing from either side differs).
+
+Apart from the rows, compares the <name>.plan files (the executed plan's
+node names, one per line, that Verify writes next to each result) and
+prints `plan moved: <name>` with the first differing line for each query
+whose plan shape changed. A moved plan does not change the exit code.
 """
 import os
 import sys
@@ -50,6 +55,20 @@ def differences(con, a, b):
     return problems
 
 
+def plan_move(parent, change, name):
+    """The first line where <name>.plan differs between the two dumps, or
+    None when both plans are equal or either side has none."""
+    paths = [os.path.join(d, f"{name}.plan") for d in (parent, change)]
+    if not all(os.path.exists(p) for p in paths):
+        return None
+    a, b = (open(p, encoding="utf-8").read().splitlines() for p in paths)
+    if a == b:
+        return None
+    i = next((i for i, (x, y) in enumerate(zip(a, b)) if x != y), min(len(a), len(b)))
+    at = lambda lines: lines[i] if i < len(lines) else "<end>"
+    return f"line {i + 1}: {at(a)} -> {at(b)}"
+
+
 def main(argv):
     if len(argv) < 2:
         sys.exit(__doc__)
@@ -66,6 +85,9 @@ def main(argv):
               + (f": {'; '.join(problems)}" if problems else ""))
         if problems:
             differing.append(name)
+        moved = plan_move(parent, change, name)
+        if moved:
+            print(f"plan moved: {name}: {moved}")
     print(f"{len(names) - len(differing)}/{len(names)} identical")
     if differing:
         print("differing: " + " ".join(differing))
