@@ -17,7 +17,7 @@ object HashFns {
     */
   def md5Long(c: Column, nHex: Int): Column = {
     require(nHex >= 1 && nHex <= 15, "md5Long supports 1..15 hex chars")
-    conv(substring(md5(c), 1, nHex), 16, 10).cast("bigint")
+    hexField(c, 1, nHex)
   }
 
   /** Hex substring of md5 decoded to long — the portable "decode a hex

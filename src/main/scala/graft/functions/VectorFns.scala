@@ -61,17 +61,19 @@ object VectorFns {
     }
   }
 
-  /** Driver-side mirror of `HashFns.md5Long(s, 1) % 2 == 0` — the first
-    * md5 hex char's parity, as a ±1.0 sign. Must stay value-identical to
-    * the column form: the srp sign matrix is built from it ONCE on the
-    * driver while the DuckDB oracle still re-derives every sign from
+  /** The ±1 sign matrix behind [[srpBucket]] and
+    * [[graft.operators.Projection]]: row j, column i is +1 iff the first
+    * hex char of md5("salt:j:i") is even. Built once on the driver; the
+    * parity is the driver-side mirror of `HashFns.md5Long(s, 1) % 2`,
+    * which the DuckDB oracles re-derive per sign from
     * `substr(md5(...), 1, 1)`.
     */
-  private def md5SignParity(s: String): Double = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    if (((d(0) >> 4) & 0xF) % 2 == 0) 1.0 else -1.0
-  }
+  def signMatrix(rows: Int, cols: Int, salt: String): Seq[Seq[Double]] =
+    (0 until rows).map(j => (0 until cols).map { i =>
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$salt:$j:$i".getBytes("UTF-8"))
+      if (((d(0) >> 4) & 1) == 0) 1.0 else -1.0
+    })
 
   /** Sign-random-projection bucket: `nBits`-bit signature from deterministic
     * ±1 projection vectors (seeded by md5, portable + reproducible). Groups
@@ -79,7 +81,7 @@ object VectorFns {
     * within buckets instead of an unbounded cross join — the 100 TB path.
     *
     * The sign matrix is a CONSTANT (`nBits` × `dim`) and is built ONCE as
-    * driver literals — the [[graft.operators.Projection]] construction.
+    * driver literals — [[signMatrix]].
     * The per-row form this replaced re-derived every sign with an md5 of
     * `"seed:b:i"` INSIDE the projection lambda: nBits·dim md5 string
     * digests per vector, which benchmarked the 4-bit bucket pass at 16×
@@ -93,8 +95,7 @@ object VectorFns {
     */
   def srpBucket(v: Column, nBits: Int, seed: String, dim: Int): Column = {
     require(dim >= 1, s"srpBucket needs dim >= 1, got $dim")
-    val bits = (0 until nBits).map { b =>
-      val signs = (0 until dim).map(i => md5SignParity(s"$seed:$b:$i"))
+    val bits = signMatrix(nBits, dim, seed).zipWithIndex.map { case (signs, b) =>
       val proj = aggregate(
         zip_with(v, slice(typedLit(signs), lit(1), size(v)), (x, s) => x * s),
         lit(0.0), (acc, x) => acc + x)

@@ -22,20 +22,15 @@ import org.apache.spark.sql.functions._
   * pairwise forms; no per-doc state exceeds the feature dimension.
   *
   * Determinism contract (SURVEY §5, the q75/q109/q116 trained-path
-  * construction): the gradient is an EXACT INTEGER sum — each doc's
-  * residual (p − y) is quantized to the 1e-6 grid and scaled to a long,
-  * so the per-bucket sum is associative and map-side combinable with no
-  * float-order dependence; weight updates are then a fixed double
-  * expression over those integers that any engine replays bit-for-bit.
-  * The per-doc margin is ALSO an exact-integer-grid sum (r10, the q104
-  * BM25 construction): each feature's contribution w·cnt quantizes to
-  * the 1e-6 grid as a long and the per-doc sum is order-free — the
-  * aggregate map-side combines as a `partial_sum` instead of buffering
-  * per-bucket structs in an array (the pre-r10 ordered fold). Margin
-  * drift vs the UNQUANTIZED model is ≤ 5e-7 per feature, ≤ 5e-7 ·
-  * (nBuckets + 1) per margin — a model constant, but NOT sub-output-
-  * cell: at nBuckets = 32 the worst case is ~1.65e-5 on z, up to ~4
-  * q6 cells on p through the sigmoid's ≤ 0.25 slope, and it grows
+  * construction): the per-doc margin Σ w·cnt and each bucket's gradient
+  * Σ (p − y)·cnt are exact-integer-grid sums
+  * ([[graft.functions.Portable.toGrid]]) — the margin over each feature's
+  * w·cnt, the gradient over each doc's residual p − y — so weight
+  * updates are a fixed double expression over order-free integers that
+  * any engine replays bit-for-bit. Margin drift vs the UNQUANTIZED model
+  * is ≤ 5e-7 · (nBuckets + 1) per margin — a model constant, but NOT
+  * sub-output-cell: at nBuckets = 32 the worst case is ~1.65e-5 on z, up
+  * to ~4 q6 cells on p through the sigmoid's ≤ 0.25 slope, and it grows
   * with nBuckets. Cross-engine determinism is unaffected (the oracle
   * replays the identical grid sum); the drift only matters to a reader
   * comparing scores against an unquantized trainer. `exp` runs on
@@ -70,47 +65,52 @@ object Classifier {
     }))
   }
 
-  /** The shared full-batch training loop over a prebuilt sparse feature
-    * frame `feat` (__id, __b, __cnt — bias as bucket −1) and a 0/1
-    * label frame `labels01` (__id, __y): `iters` gradient steps, then
-    * the final margins frame (__id, __y, __p). Extracted so the
-    * binary ([[logisticTrain]]) and one-vs-rest
-    * ([[logisticTrainOneVsRest]]) forms run the IDENTICAL
-    * grid-determinism construction the q124 oracle replays.
+  /** The full-batch training loop over a prebuilt sparse feature frame
+    * `feat` (__id, __b, __cnt — bias as bucket −1) and the held `labels`
+    * frame (__id and its label column): one model per 0/1 label column
+    * of `ys` (an expression over `labels`), all K trained BATCHED — each
+    * iteration is ONE margin aggregate and ONE gradient aggregate
+    * carrying K sum columns side by side, so corpus passes per iteration
+    * are O(1) in K. Per-model arithmetic does not depend on K: batching
+    * only co-locates the sums in one shuffle. Returns the K weight
+    * vectors and the final margins frame (`labels`' columns, then __p_k
+    * for each k).
     */
-  private def fit(feat: DataFrame, labels01: DataFrame, nBuckets: Int,
-                  iters: Int, lr: Double, n: Long): (Seq[Double], DataFrame) = {
-    // margin: exact-integer-grid sum (each w·cnt contribution quantized
-    // to the 1e-6 grid as a long, summed order-free — map-side
-    // combinable, no per-doc array buffer; see the class doc's bound)
-    def margins(wts: Array[Double]): DataFrame = {
-      val wcol = element_at(typedLit(wts.toSeq), col("__b") + 2)
-      feat.select(col("__id"),
-          floor((wcol * col("__cnt")) * lit(1000000.0) + lit(0.5))
-            .cast("long").as("__qt"))
+  private def fit(feat: DataFrame, labels: DataFrame, ys: Seq[Column], nBuckets: Int,
+                  iters: Int, lr: Double, n: Long): (Seq[Seq[Double]], DataFrame) = {
+    val ks = ys.indices
+    def margins(wts: Seq[Array[Double]]): DataFrame = {
+      val qts = ks.map { k =>
+        val wcol = element_at(typedLit(wts(k).toSeq), col("__b") + 2)
+        Portable.toGrid(wcol * col("__cnt"), 6).as(s"__qt_$k")
+      }
+      val sums = ks.map(k => sum(col(s"__qt_$k")).as(s"__qz_$k"))
+      feat.select(col("__id") +: qts: _*)
         .groupBy(col("__id"))
-        .agg(sum(col("__qt")).as("__qz"))
-        .join(labels01, Seq("__id"))
-        .withColumn("__p", Portable.q6(
-          lit(1.0) / (lit(1.0) +
-            exp(-(col("__qz").cast("double") / lit(1000000.0))))))
+        .agg(sums.head, sums.tail: _*)
+        .join(labels, Seq("__id"))
+        .select(labels.columns.toSeq.map(col) ++ ks.map(k =>
+          Portable.q6(lit(1.0) / (lit(1.0) + exp(-Portable.fromGrid(col(s"__qz_$k"), 6))))
+            .as(s"__p_$k")): _*)
     }
 
-    val weights = Array.fill(nBuckets + 1)(0.0)
+    val weights = ks.map(_ => Array.fill(nBuckets + 1)(0.0))
     for (_ <- 1 to iters) {
-      // residual on the exact 1e-6 grid → integer gradient (order-free)
-      val resid = margins(weights).select(col("__id"),
-        floor((col("__p") - col("__y")) * lit(1000000.0) + lit(0.5))
-          .cast("long").as("__e"))
+      val resid = margins(weights).select(col("__id") +: ks.map(k =>
+        Portable.toGrid(col(s"__p_$k") - ys(k), 6).as(s"__e_$k")): _*)
+      val gsums = ks.map(k => sum(col(s"__e_$k") * col("__cnt")).as(s"__g_$k"))
       val grads = feat.join(resid, Seq("__id"))
-        .groupBy(col("__b")).agg(sum(col("__e") * col("__cnt")).as("__g"))
-        .collect() // bounded: one row per feature bucket (+ bias)
+        .groupBy(col("__b")).agg(gsums.head, gsums.tail: _*)
+        .collect() // bounded: one row per feature bucket (+ bias), K longs each
       grads.foreach { r =>
-        val b = r.getInt(0); val g = r.getLong(1)
-        weights(b + 1) = weights(b + 1) - lr * (g.toDouble / 1000000.0 / n)
+        val b = r.getInt(0)
+        ks.foreach { k =>
+          val g = Portable.fromGrid(r.getLong(k + 1), 6)
+          weights(k)(b + 1) = weights(k)(b + 1) - lr * (g / n)
+        }
       }
     }
-    (weights.toSeq, margins(weights))
+    (weights.map(_.toSeq), margins(weights))
   }
 
   /** Train `iters` full-batch gradient steps of logistic regression on
@@ -135,10 +135,10 @@ object Classifier {
       val (labels, feat) = features(base, "__y", nBuckets, salt)
       val n = labels.count() // bounded scalar; also materializes the caches
 
-      val (weights, finalMargins) = fit(feat, labels, nBuckets, iters, lr, n)
-      TrainedLogistic(weights, finalMargins
+      val (weights, finalMargins) = fit(feat, labels, Seq(col("__y")), nBuckets, iters, lr, n)
+      TrainedLogistic(weights.head, finalMargins
         .select(col("__id").as(idCol), col("__y").as("label"),
-          col("__p").as("score"), (col("__p") >= 0.5).as("predicted")))
+          col("__p_0").as("score"), (col("__p_0") >= 0.5).as("predicted")))
     }
   }
 
@@ -166,19 +166,14 @@ object Classifier {
     * `row_number() OVER (ORDER BY p DESC, cls ASC)`).
     *
     * Scale shape: the feature build (the only corpus-sized pass) runs
-    * once and is cached; the K models train BATCHED — each iteration is
-    * the binary form's two keyed aggregations computing all K models'
-    * quantized sums side by side (K sum columns in one margin aggregate
-    * and one gradient aggregate), so corpus passes per iteration are
-    * O(1) in K, not O(K) — at language ID's real K (tens to ~a hundred)
-    * serial training would pay 2K corpus shuffles per iteration for
-    * work that is per-row independent across models. Per-model
-    * arithmetic is UNCHANGED by the batching (each class's margin and
-    * gradient are the same order-free integer-grid sums the binary
-    * [[fit]] runs, just materialized in one job — spec-pinned equal to
-    * the serial binary construction); driver state is K weight vectors
-    * (K × (nBuckets+1) doubles). The bounded `collect`s are the K-row
-    * class list and the (nBuckets+1)-row × K gradient frame.
+    * once and is cached; the K models train batched in [[fit]], so
+    * corpus passes per iteration are O(1) in K, not O(K) — at language
+    * ID's real K (tens to ~a hundred) serial training would pay 2K
+    * corpus shuffles per iteration. Each class's model is the one a
+    * binary fit on its 0/1 label gives (spec-pinned); driver state is K
+    * weight vectors (K × (nBuckets+1) doubles). The bounded `collect`s
+    * are the K-row class list and the (nBuckets+1)-row × K gradient
+    * frame.
     *
     * Output: (idCol, classCol, score_<cls> for each class sorted, score
     * — the winning probability — and predicted). Determinism: each
@@ -190,10 +185,10 @@ object Classifier {
     * where a null stratum has sampling semantics).
     *
     * Unlike the binary form, the labels/features frames stay held in
-    * the caller's scope ([[graft.Caches]]): the RETURNED plan reads the
-    * cached feature frame once per class (K margin aggregates), so
-    * releasing the caches here would make every downstream action pay K
-    * corpus-sized feature rebuilds.
+    * the caller's scope ([[graft.Caches]]): the RETURNED plan's margin
+    * aggregate reads the cached feature frame, so releasing the caches
+    * here would make every downstream action pay a corpus-sized feature
+    * rebuild.
     */
   def logisticTrainOneVsRest(docs: DataFrame, idCol: String, textCol: String,
                              classCol: String, nBuckets: Int, iters: Int,
@@ -214,52 +209,8 @@ object Classifier {
       "one-vs-rest requires non-null classes; filter or fill nulls first")
     val classes = rawClasses.sorted
     require(classes.length >= 2, s"one-vs-rest needs >= 2 classes, got ${classes.toSeq}")
-    val ks = classes.indices
-
-    // All K models' margin frames in ONE keyed aggregation: per feature
-    // row, K quantized contributions (each class's floor(w·cnt·1e6+.5)
-    // long — the binary fit's exact term); per doc, K order-free long
-    // sums. The per-model arithmetic is identical to K serial fits —
-    // batching only co-locates the sums in one shuffle.
-    def marginsAll(wts: Array[Array[Double]]): DataFrame = {
-      val qts = ks.map { k =>
-        val wcol = element_at(typedLit(wts(k).toSeq), col("__b") + 2)
-        floor((wcol * col("__cnt")) * lit(1000000.0) + lit(0.5))
-          .cast("long").as(s"__qt_$k")
-      }
-      val sums = ks.map(k => sum(col(s"__qt_$k")).as(s"__qz_$k"))
-      feat.select(col("__id") +: qts: _*)
-        .groupBy(col("__id"))
-        .agg(sums.head, sums.tail: _*)
-        .join(labels, Seq("__id"))
-        .select(col("__id") +: col("__cls") +: ks.map(k =>
-          Portable.q6(lit(1.0) / (lit(1.0) +
-              exp(-(col(s"__qz_$k").cast("double") / lit(1000000.0)))))
-            .as(s"__p_$k")): _*)
-    }
-
-    val weights = Array.fill(classes.length)(Array.fill(nBuckets + 1)(0.0))
-    for (_ <- 1 to iters) {
-      // K residuals on the exact 1e-6 grid, one frame; __y for class k
-      // is (__cls = class_k) — the binary fit's 0/1 label
-      val resid = marginsAll(weights).select(col("__id") +: ks.map { k =>
-        floor((col(s"__p_$k") -
-            (col("__cls") === classes(k)).cast("int")) * lit(1000000.0) +
-            lit(0.5))
-          .cast("long").as(s"__e_$k")
-      }: _*)
-      val gsums = ks.map(k => sum(col(s"__e_$k") * col("__cnt")).as(s"__g_$k"))
-      val grads = feat.join(resid, Seq("__id"))
-        .groupBy(col("__b")).agg(gsums.head, gsums.tail: _*)
-        .collect() // bounded: one row per feature bucket (+ bias), K longs each
-      grads.foreach { r =>
-        val b = r.getInt(0)
-        ks.foreach { k =>
-          val g = r.getLong(k + 1)
-          weights(k)(b + 1) = weights(k)(b + 1) - lr * (g.toDouble / 1000000.0 / n)
-        }
-      }
-    }
+    val (_, scored) = fit(feat, labels,
+      classes.toSeq.map(c => (col("__cls") === c).cast("int")), nBuckets, iters, lr, n)
 
     // argmax by (p desc, class asc): max over (p, −index, class)
     // structs — classes are sorted, so a larger −index IS the earlier
@@ -269,10 +220,10 @@ object Classifier {
     }: _*))
     // the caches stay held: the returned plan's single margin aggregate
     // reads `feat` (see the scaladoc)
-    marginsAll(weights)
+    scored
       .withColumn("__best", best)
       .select(col("__id").as(idCol) +: col("__cls").as(classCol) +:
-        ks.map(k => col(s"__p_$k").as(s"score_${classes(k)}")) :+
+        classes.indices.map(k => col(s"__p_$k").as(s"score_${classes(k)}")) :+
         col("__best.p").as("score") :+ col("__best.cls").as("predicted"): _*)
   }
 }

@@ -33,14 +33,11 @@ import org.apache.spark.sql.functions._
   * Determinism (SURVEY §5): counts are exact integers; probabilities
   * and the per-word terms are fixed double expressions (`ln` on
   * identical IEEE inputs — the q111 precedent); the per-group sum is
-  * the exact-integer-grid construction ([[Classifier.logisticTrain]]'s
-  * gradient move, adopted for q109 PageRank too): each word's term
-  * quantizes to the 1e-6 grid and scales to a long, so the sum is
-  * associative, order-free and MAP-SIDE COMBINABLE — no per-group
-  * array ever buffers the vocabulary (the pre-r08 ordered
-  * collect_list fold held one struct per corpus word per group in a
-  * single aggregation buffer: the web-vocabulary OOM). The final
-  * divergence quantizes to q6.
+  * the exact-integer-grid sum ([[graft.functions.Portable.toGrid]]) of
+  * the words' terms, so no per-group array ever buffers the vocabulary
+  * (the pre-r08 ordered collect_list fold held one struct per corpus
+  * word per group in a single aggregation buffer: the web-vocabulary
+  * OOM). The final divergence quantizes to q6.
   *
   * ACCURACY TRADE of the grid sum: each scored word's term rounds to
   * the 1e-6 grid before summing, so js_divergence carries up to
@@ -115,13 +112,11 @@ object Drift {
       q * log(q / m)
 
     val agg = grid.select(col(groupCol), col("__m"), col("__s"), col("__c"),
-        floor(term * lit(1000000.0) + lit(0.5)).cast("long").as("__qt"))
+        Portable.toGrid(term, 6).as("__qt"))
       .groupBy(col(groupCol))
       .agg(max(col("__m")).as("n_tokens"),
         sum(when(col("__s") === 0, 1).otherwise(0)).cast("int").as("n_words_absent"),
-        // exact-integer-grid sum: order-free, partial-aggregating
-        Portable.q6(lit(0.5) *
-          (sum(col("__qt")).cast("double") / lit(1000000.0))).as("js_divergence"),
+        Portable.q6(lit(0.5) * Portable.fromGrid(sum(col("__qt")), 6)).as("js_divergence"),
         sum(col("__c")).as("__cov"))
     if (topV.isDefined || candidateWords.isDefined)
       agg.crossJoin(broadcast(total))

@@ -19,13 +19,12 @@ import org.apache.spark.sql.functions._
   * means: the fixpoint drift stays bounded AND the whole trajectory is
   * cross-engine replayable, so a DuckDB oracle can re-run the SAME
   * unrolled iterations bit-for-bit. Within an iteration the per-node
-  * inbound sum is an EXACT INTEGER sum (the `Classifier.logisticTrain`
-  * gradient construction): each edge contribution rank·share quantizes
-  * to the 1e-6 grid and scales to a long, so the per-dst sum is
-  * associative, order-free, and MAP-SIDE COMBINABLE — the shuffle
-  * carries one partial long per (partition, dst), not one row per
-  * in-edge, and a power-law hub's aggregation state is a single counter
-  * rather than its whole in-neighborhood buffered as an array. (An
+  * inbound sum is the exact-integer-grid sum
+  * ([[graft.functions.Portable.toGrid]]) of the edge contributions
+  * rank·share, so the shuffle carries one partial long per (partition,
+  * dst), not one row per in-edge, and a power-law hub's aggregation
+  * state is a single counter rather than its whole in-neighborhood
+  * buffered as an array. (An
   * ordered collect_list fold — the pre-r08 form — kept the same
   * determinism but put a hub's entire inbound edge set in one task's
   * aggregation buffer: the 100-TB skew killer.) The long bound is
@@ -102,6 +101,7 @@ object Graph {
     // oracle must unroll with the identical constant.
     require(gridScale == 1e6 || gridScale == 1e12,
       s"gridScale must be 1e6 or 1e12 (oracle-mirrored constants), got $gridScale")
+    val gridDigits = if (gridScale == 1e6) 6 else 12
     // weight stays untouched: with integer weights the per-source sum is
     // exact, so share = w/outw is a bit-deterministic double in any
     // engine (a double weight would make `outw` depend on addition order)
@@ -146,12 +146,9 @@ object Graph {
     for (_ <- 1 to iters) {
       val contribs = ranks.join(shares, ranks("node") === shares("src"))
         .select(col("dst"), (col("rank") * col("share")).as("c"))
-      // exact-integer-grid mergeable sum: quantize each contribution to
-      // 1/gridScale, sum as longs (partial aggregation — map-side
-      // combine), rescale once; identical IEEE division in any engine
       val inbound = contribs.groupBy(col("dst"))
-        .agg((sum(floor(col("c") * lit(gridScale) + lit(0.5)).cast("long"))
-          .cast("double") / lit(gridScale)).as("in_mass"))
+        .agg(Portable.fromGrid(sum(Portable.toGrid(col("c"), gridDigits)), gridDigits)
+          .as("in_mass"))
       ranks = perIter(dangling match {
         case None =>
           nodes.join(inbound, nodes("node") === inbound("dst"), "left")
@@ -166,8 +163,8 @@ object Graph {
           // any engine), broadcast back as a 1-row scalar
           val dmass = ranks.join(dang, Seq("node"), "left_semi")
             .agg(coalesce(
-              sum(floor(col("rank") * lit(gridScale) + lit(0.5)).cast("long"))
-                .cast("double") / lit(gridScale), lit(0.0)).as("__dm"))
+              Portable.fromGrid(sum(Portable.toGrid(col("rank"), gridDigits)), gridDigits),
+              lit(0.0)).as("__dm"))
           nodes.join(inbound, nodes("node") === inbound("dst"), "left")
             .crossJoin(broadcast(n))
             .crossJoin(broadcast(dmass))

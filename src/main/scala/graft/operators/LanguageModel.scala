@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * template spam, shuffled tokens — sit in the high-entropy tail.
   *
   * Scale shape (100 TB corpus): every intermediate is either linear in
-  * corpus tokens (the bigram rows: one projection + posexplode, no join)
+  * corpus tokens (the bigram rows: one projection + explode, no join)
   * or vocabulary-sized (the count tables). Training is ONE map-side-
   * combined groupBy over the bigram rows; context counts derive from the
   * bigram counts (vocabulary-sized input, not a second corpus pass).
@@ -24,20 +24,14 @@ import org.apache.spark.sql.functions._
   * fold per-document. Nothing pairwise ever forms and no state exceeds
   * the vocabulary.
   *
-  * Determinism contract (SURVEY §5): counts and V are exact integers;
-  * each bigram's log-probability is computed independently (libm `ln` on
-  * identical IEEE inputs — the q104 BM25 idf precedent); each logp then
-  * quantizes to the 1e-6 grid as a LONG and the per-document sum is the
-  * order-free integer sum of those grid terms (the q104/q109/q126
-  * mergeable construction — replaced the r09 position-ordered
-  * collect_list fold in r10), so the aggregate map-side combines as a
-  * plain `partial_sum` (one long per (partition, doc)) instead of
-  * buffering a document's bigram structs in an ObjectHashAggregate
-  * array; the final score is quantized to 6 decimals.
+  * Determinism contract: counts and V are exact integers; each bigram's
+  * log-probability is computed independently (libm `ln` on identical
+  * IEEE inputs — the q104 BM25 idf precedent); the per-document sum is
+  * the exact-integer-grid sum ([[graft.functions.Portable.toGrid]]) of
+  * those logps, and the final score is quantized to 6 decimals.
   *
-  * Grid accuracy/overflow: per-bigram rounding is ≤ 5e-7, so the SUM
-  * drifts ≤ 5e-7 · n_bigrams — and cross_entropy divides by n_bigrams,
-  * so the score error stays ≤ 5e-7 regardless of document length.
+  * Grid accuracy/overflow: cross_entropy divides the grid sum by
+  * n_bigrams, so its error stays ≤ 5e-7 regardless of document length.
   * |logp| ≤ ln((C(w1·) + αV)/α) ≲ 50 even at 10¹⁰-token corpora, so
   * each grid term is < 5e7 and a document needs ~2e11 bigrams to
   * approach 2⁶³.
@@ -45,7 +39,8 @@ import org.apache.spark.sql.functions._
 object LanguageModel {
 
   /** Per-document bigram cross-entropy under a corpus-trained add-alpha
-    * bigram model.
+    * bigram model: [[crossEntropyUnder]] a [[trainBigram]] model of
+    * `docs` itself, where every bigram and context join matches.
     *
     * P(w2 | w1) = (C(w1 w2) + alpha) / (C(w1 ·) + alpha * V), where
     * C(w1 ·) counts w1 as a bigram CONTEXT and V is the corpus
@@ -59,80 +54,48 @@ object LanguageModel {
     * takes it as a parameter so the cut stays engine-replayable.
     */
   def bigramCrossEntropy(docs: DataFrame, idCol: String, textCol: String,
-                         alpha: Double = 0.5, tau: Double = 8.0): DataFrame = {
-    require(alpha > 0, "alpha must be > 0")
-    val id = col(idCol)
-    val base = docs.select(id, TextFns.words(col(textCol)).as("__w"))
+                         alpha: Double = 0.5, tau: Double = 8.0): DataFrame =
+    crossEntropyUnder(trainBigram(docs, textCol), docs, idCol, textCol, alpha)
+      .withColumn("flagged", col("cross_entropy") > lit(tau))
 
-    // (id, w1, w2) bigram rows: one zip_with + explode, no join.
-    val bigrams = base.where(size(col("__w")) >= 2)
-      .select(id, explode(zip_with(
-        slice(col("__w"), lit(1), size(col("__w")) - 1),
-        slice(col("__w"), lit(2), size(col("__w")) - 1),
-        (a: Column, b: Column) => struct(a.as("w1"), b.as("w2")))))
-      .select(id, col("col.w1").as("w1"), col("col.w2").as("w2"))
-
-    // Model: bigram counts (one corpus shuffle, map-side combined);
-    // context counts derive from them (vocabulary-sized input).
-    val c2 = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-    val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
-    val vocab = base.select(explode(col("__w")).as("word"))
-      .agg(countDistinct(col("word")).as("v"))
-
-    val scored = bigrams
-      .join(c2, Seq("w1", "w2"))
-      .join(c1, Seq("w1"))
-      .crossJoin(broadcast(vocab))
-      .withColumn("logp",
-        log((col("c2") + lit(alpha)) / (col("c1") + lit(alpha) * col("v"))))
-
-    // Exact-integer-grid sum (the q104 BM25 construction): longs sum
-    // order-free, so the per-doc aggregate map-side combines with no
-    // array buffer (see the class doc for the accuracy/overflow bound).
-    val folded = scored
-      .withColumn("__qt",
-        floor(col("logp") * lit(1000000.0) + lit(0.5)).cast("long"))
-      .groupBy(id)
-      .agg(sum(col("__qt")).as("__qsum"), count(lit(1)).as("n_bigrams"))
-      .withColumn("cross_entropy", Portable.q6(
-        -(col("__qsum").cast("double") / lit(1000000.0)) / col("n_bigrams")))
-
-    folded.select(id, col("n_bigrams"), col("cross_entropy"),
-      (col("cross_entropy") > lit(tau)).as("flagged"))
+  /** (`keep`, w1, w2): one row per adjacent token pair of the `__w`
+    * word array — one zip_with + explode, no join. Rows with fewer than
+    * two words yield none.
+    */
+  private def bigramRows(base: DataFrame, keep: Seq[Column]): DataFrame = {
+    val w = col("__w")
+    base.where(size(w) >= 2)
+      .select(keep :+ explode(zip_with(
+        slice(w, lit(1), size(w) - 1),
+        slice(w, lit(2), size(w) - 1),
+        (a: Column, b: Column) => struct(a.as("w1"), b.as("w2")))): _*)
+      .select(keep :+ col("col.w1").as("w1") :+ col("col.w2").as("w2"): _*)
   }
 
   /** A trained bigram model: bigram counts, context counts, and the
     * 1-row vocabulary size — everything [[crossEntropyUnder]] needs to
-    * score a DIFFERENT corpus than the one it was trained on.
+    * score a corpus, the training one or a different one.
     */
   final case class BigramModel(c2: DataFrame, c1: DataFrame, vocab: DataFrame)
 
-  /** Train the add-alpha bigram model alone (the [[bigramCrossEntropy]]
-    * training pass, factored): one map-side-combined corpus aggregation;
-    * every output is vocabulary-sized.
+  /** Train the add-alpha bigram model: bigram counts (one map-side-
+    * combined corpus shuffle); context counts derive from them
+    * (vocabulary-sized input, not a second corpus pass).
     */
   def trainBigram(docs: DataFrame, textCol: String): BigramModel = {
     val base = docs.select(TextFns.words(col(textCol)).as("__w"))
-    val bigrams = base.where(size(col("__w")) >= 2)
-      .select(posexplode(zip_with(
-        slice(col("__w"), lit(1), size(col("__w")) - 1),
-        slice(col("__w"), lit(2), size(col("__w")) - 1),
-        (a: Column, b: Column) => struct(a.as("w1"), b.as("w2")))))
-      .select(col("col.w1").as("w1"), col("col.w2").as("w2"))
-    val c2 = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
+    val c2 = bigramRows(base, Nil).groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
     val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     val vocab = base.select(explode(col("__w")).as("word"))
       .agg(countDistinct(col("word")).as("v"))
     BigramModel(c2, c1, vocab)
   }
 
-  /** Score `docs` under a model trained ELSEWHERE — the cross-domain
-    * form behind DSIR-style importance weighting: bigrams the model
+  /** Score `docs` under `model`. Trained ELSEWHERE — the cross-domain
+    * form behind DSIR-style importance weighting — bigrams the model
     * never saw take C(w1 w2) = 0 (and unseen contexts C(w1 ·) = 0), so
-    * add-alpha smoothing alone carries them — LEFT joins with exact
-    * integer zero fills, the same grid-sum and q6 contract as
-    * [[bigramCrossEntropy]] (which is this function over a same-corpus
-    * model, where every join matches).
+    * add-alpha smoothing alone carries them: LEFT joins with exact
+    * integer zero fills.
     *
     * Output: (idCol, n_bigrams, cross_entropy).
     */
@@ -140,14 +103,7 @@ object LanguageModel {
                         textCol: String, alpha: Double = 0.5): DataFrame = {
     require(alpha > 0, "alpha must be > 0")
     val id = col(idCol)
-    val base = docs.select(id, TextFns.words(col(textCol)).as("__w"))
-    val bigrams = base.where(size(col("__w")) >= 2)
-      .select(id, explode(zip_with(
-        slice(col("__w"), lit(1), size(col("__w")) - 1),
-        slice(col("__w"), lit(2), size(col("__w")) - 1),
-        (a: Column, b: Column) => struct(a.as("w1"), b.as("w2")))))
-      .select(id, col("col.w1").as("w1"), col("col.w2").as("w2"))
-    val scored = bigrams
+    val scored = bigramRows(docs.select(id, TextFns.words(col(textCol)).as("__w")), Seq(id))
       .join(model.c2, Seq("w1", "w2"), "left")
       .join(model.c1, Seq("w1"), "left")
       .crossJoin(broadcast(model.vocab))
@@ -155,12 +111,11 @@ object LanguageModel {
         log((coalesce(col("c2"), lit(0L)) + lit(alpha)) /
           (coalesce(col("c1"), lit(0L)) + lit(alpha) * col("v"))))
     scored
-      .withColumn("__qt",
-        floor(col("logp") * lit(1000000.0) + lit(0.5)).cast("long"))
+      .withColumn("__qt", Portable.toGrid(col("logp"), 6))
       .groupBy(id)
       .agg(sum(col("__qt")).as("__qsum"), count(lit(1)).as("n_bigrams"))
       .withColumn("cross_entropy", Portable.q6(
-        -(col("__qsum").cast("double") / lit(1000000.0)) / col("n_bigrams")))
+        -Portable.fromGrid(col("__qsum"), 6) / col("n_bigrams")))
       .select(id, col("n_bigrams"), col("cross_entropy"))
   }
 }

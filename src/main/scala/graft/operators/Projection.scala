@@ -27,19 +27,9 @@ import org.apache.spark.sql.functions._
   */
 object Projection {
 
-  /** Parity (0/1) of the first hex character of md5(s). */
-  private def md5FirstHexParity(s: String): Int = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    (d(0) >> 4) & 1
-  }
-
-  /** The ±1 projection matrix: row j, column i is +1 iff the first hex
-    * char of md5("salt:j:i") is even.
-    */
+  /** The ±1 projection matrix ([[VectorFns.signMatrix]]). */
   def signMatrix(outDim: Int, inDim: Int, salt: String): Seq[Seq[Double]] =
-    (0 until outDim).map(j => (0 until inDim).map(i =>
-      if (md5FirstHexParity(s"$salt:$j:$i") == 0) 1.0 else -1.0))
+    VectorFns.signMatrix(outDim, inDim, salt)
 
   /** Project every vector to `outDim` components; output exploded as
     * (idCol, out_pos, component) with component quantized to 6 decimals.

@@ -137,9 +137,8 @@ object Quantize {
       sequence(lit(0), lit(nSub - 1)),
       lit(0L),
       (acc: Column, j: Column) => acc +
-        floor(cell(j * nCodes + element_at(col("__codes"), j + 1))
-          * lit(1000000.0) + lit(0.5)).cast("long"))
-    Portable.q6(gridSum.cast("double") / lit(1000000.0))
+        Portable.toGrid(cell(j * nCodes + element_at(col("__codes"), j + 1)), 6))
+    Portable.q6(Portable.fromGrid(gridSum, 6))
   }
 
   /** The tail every ADC search shares: drop self-pairs if asked, drop
@@ -503,10 +502,9 @@ object Quantize {
         // semantics, so this (nSub-bounded) gather cannot be a sum
         array_sort(collect_list(struct(col("sub"), col("code")))).as("__picks"),
         // dist2 is q6-grid-valued, so the long sum is exact (class doc)
-        sum(floor(col("dist2") * lit(1000000.0) + lit(0.5)).cast("long"))
-          .as("__qerr"))
+        sum(Portable.toGrid(col("dist2"), 6)).as("__qerr"))
       .select(col(idCol),
         array_join(transform(col("__picks"),
           (x: Column) => x.getField("code").cast("string")), "_").as("codes"),
-        Portable.q6(col("__qerr").cast("double") / lit(1000000.0)).as("recon_err"))
+        Portable.q6(Portable.fromGrid(col("__qerr"), 6)).as("recon_err"))
 }

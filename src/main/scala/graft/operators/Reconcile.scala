@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.HashFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,10 +30,8 @@ object Reconcile {
   /** One row per partition: (partCol, n_rows, xor_a, xor_b, sum_a). */
   def partitionChecksums(df: DataFrame, partCol: String,
                          rowKey: Column): DataFrame = {
-    val hex = md5(rowKey)
-    val a = conv(substring(hex, 1, 8), 16, 10).cast("long")
-    val b = conv(substring(hex, 9, 8), 16, 10).cast("long")
-    df.select(col(partCol), a.as("__a"), b.as("__b"))
+    df.select(col(partCol), HashFns.hexField(rowKey, 1, 8).as("__a"),
+        HashFns.hexField(rowKey, 9, 8).as("__b"))
       .groupBy(col(partCol))
       .agg(count(lit(1)).as("n_rows"),
         expr("bit_xor(__a)").as("xor_a"),

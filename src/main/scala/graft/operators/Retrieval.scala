@@ -29,12 +29,11 @@ object Retrieval {
   /** BM25 top-k: for each query (rows of (queryIdCol, termCol)), the k
     * highest-scoring documents with deterministic doc-id tiebreaks.
     *
-    * Determinism contract (SURVEY §5): tf/df/dl are exact integers; each
-    * per-term contribution quantizes to the 1e-6 grid as a long and the
-    * per-(query, doc) score is the order-free integer sum of those grid
-    * terms (the q109/q126 mergeable construction — replaced the r08
-    * ordered collect_list fold in r09), quantized to 6 decimals before
-    * ranking. The oracle replays the identical per-term grid expression.
+    * Determinism contract (SURVEY §5): tf/df/dl are exact integers; the
+    * per-(query, doc) score is the exact-integer-grid sum
+    * ([[graft.functions.Portable.toGrid]]) of the per-term contributions,
+    * quantized to 6 decimals before ranking. The oracle replays the
+    * identical per-term grid expression.
     *
     * Output: (queryIdCol, docIdCol, score, n_terms, rank), rank 1..k.
     */
@@ -86,27 +85,21 @@ object Retrieval {
     val perTermDoc = postings
       .join(termStats, "term")
       .withColumn("__qt",
-        floor((idf * (col("tf") * lit(k1 + 1.0)) / lengthNorm) *
-          lit(1000000.0) + lit(0.5)).cast("long"))
+        Portable.toGrid(idf * (col("tf") * lit(k1 + 1.0)) / lengthNorm, 6))
       .select(col("term"), id, col("__qt"))
 
-    // Exact-integer-grid sum (the q109/q126 construction): each term's
-    // contribution quantizes to the 1e-6 grid as a LONG, and longs sum
-    // order-free — bit-identical across engines, partitionings and
-    // engine versions with NO ordered fold, so the aggregate map-side
-    // combines as a plain `partial_sum` (one long per (partition, query,
-    // doc)) instead of buffering matched-term structs in an
-    // ObjectHashAggregate array. Accuracy: ≤ 5e-7 · n_terms rounding,
-    // and n_terms is bounded by the QUERY's term count (a probe-shape
-    // constant), never the corpus. Overflow headroom: a contribution ≤
-    // idf_max · (k1+1) ≲ 60 even at N = 10¹⁰ docs, so each grid term is
-    // < 6e7 and a query needs ~10¹¹ matched terms to approach 2⁶³.
+    // Exact-integer-grid sum (Portable.toGrid) of the term
+    // contributions. Accuracy: ≤ 5e-7 · n_terms rounding, and n_terms is
+    // bounded by the QUERY's term count (a probe-shape constant), never
+    // the corpus. Overflow headroom: a contribution ≤ idf_max · (k1+1)
+    // ≲ 60 even at N = 10¹⁰ docs, so each grid term is < 6e7 and a
+    // query needs ~10¹¹ matched terms to approach 2⁶³.
     val folded = qTerms
       .join(perTermDoc, "term")
       .groupBy(col(queryIdCol), id)
       .agg(sum(col("__qt")).as("__qsum"), count(lit(1)).as("n_terms"))
       .withColumn("score",
-        Portable.q6(col("__qsum").cast("double") / lit(1000000.0)))
+        Portable.q6(Portable.fromGrid(col("__qsum"), 6)))
       .drop("__qsum")
 
     Rankings.topKPerGroup(folded, Seq(queryIdCol), Seq(col("score").desc, id.asc), k, "rank")

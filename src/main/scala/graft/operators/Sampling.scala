@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.{HashFns, Portable}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -30,8 +30,7 @@ object Sampling {
     * ([[hashUnit]], [[graft.operators.Packing]]).
     */
   def hashLong(id: Column, salt: String): Column =
-    conv(substring(md5(concat(id.cast("string"), lit("#" + salt))), 1, 8), 16, 10)
-      .cast("bigint")
+    HashFns.md5Long(concat(id.cast("string"), lit("#" + salt)), 8)
 
   /** Uniform [0, 1) hash of `id` under `salt` — the sampling coin. */
   def hashUnit(id: Column, salt: String): Column =

@@ -68,6 +68,12 @@ object StreamOps {
     * passes `last event + gapSeconds` — deterministic (no wall-clock
     * dependence), replayable, and state per key is a single running
     * session: O(1) per user regardless of history length.
+    *
+    * Over a STREAM, events at or before 1970-01-01T00:00:00Z are dropped
+    * as late and never open a session: the event-time watermark starts
+    * at 0 ms, and under `EventTimeTimeout` Spark filters out input rows
+    * at or behind the watermark before the update function sees them. A
+    * batch `Dataset` keeps those events (StreamOpsSpec pins both).
     */
   def sessionize(events: Dataset[Event], gapSeconds: Long,
                  watermarkDelay: String = "10 seconds"): Dataset[Session] = {
@@ -147,14 +153,8 @@ object StreamOps {
     */
   def intervalJoinStream(left: DataFrame, right: DataFrame,
                          keyCol: String, tsCol: String,
-                         horizonSeconds: Long, watermarkDelay: String): DataFrame = {
-    val l = left.withWatermark(tsCol, watermarkDelay).alias("l")
-    val r = right.withWatermark(tsCol, watermarkDelay).alias("r")
-    l.join(r,
-      col(s"l.$keyCol") === col(s"r.$keyCol") &&
-        col(s"r.$tsCol") > col(s"l.$tsCol") &&
-        col(s"r.$tsCol") <= col(s"l.$tsCol") + expr(s"INTERVAL $horizonSeconds SECONDS"))
-  }
+                         horizonSeconds: Long, watermarkDelay: String): DataFrame =
+    intervalJoin(left, right, keyCol, tsCol, horizonSeconds, watermarkDelay, "inner")
 
   /** LEFT OUTER form of [[intervalJoinStream]] — the "which views never
     * converted" variant (funnel drop-off, abandoned-cart, unanswered
@@ -171,14 +171,22 @@ object StreamOps {
     */
   def intervalJoinStreamLeftOuter(left: DataFrame, right: DataFrame,
                                   keyCol: String, tsCol: String,
-                                  horizonSeconds: Long, watermarkDelay: String): DataFrame = {
+                                  horizonSeconds: Long, watermarkDelay: String): DataFrame =
+    intervalJoin(left, right, keyCol, tsCol, horizonSeconds, watermarkDelay, "left_outer")
+
+  /** The body of both interval joins: `l` pairs with `r` rows of the
+    * same key in `(l.ts, l.ts + horizonSeconds]`, both sides watermarked.
+    */
+  private def intervalJoin(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
+                           horizonSeconds: Long, watermarkDelay: String,
+                           joinType: String): DataFrame = {
     val l = left.withWatermark(tsCol, watermarkDelay).alias("l")
     val r = right.withWatermark(tsCol, watermarkDelay).alias("r")
     l.join(r,
       col(s"l.$keyCol") === col(s"r.$keyCol") &&
         col(s"r.$tsCol") > col(s"l.$tsCol") &&
         col(s"r.$tsCol") <= col(s"l.$tsCol") + expr(s"INTERVAL $horizonSeconds SECONDS"),
-      "left_outer")
+      joinType)
   }
 
   final case class FunnelEvent(user_id: Long, ts: Timestamp, event_type: String)

@@ -78,4 +78,20 @@ class LanguageModelSpec extends graft.SparkSpec {
         (r.getAs[Double]("cross_entropy") > 2.0))
     }
   }
+
+  test("crossEntropyUnder: an unseen bigram and an unseen context take the add-alpha zero fill") {
+    // model of "a b a b" + "a b": C(a b) = 3, C(b a) = 1, C(a·) = 3,
+    // C(b·) = 1, V = 2. Scoring "a c b" meets the unseen bigram (a, c)
+    // and the unseen context c: P(c|a) = (0+0.5)/(3+0.5·2) = 0.125 and
+    // P(b|c) = (0+0.5)/(0+0.5·2) = 0.5.
+    val model = LanguageModel.trainBigram(
+      Seq((1L, "a b a b"), (2L, "a b")).toDF("doc_id", "text"), "text")
+    val out = LanguageModel.crossEntropyUnder(model,
+        Seq((7L, "a c b")).toDF("doc_id", "text"), "doc_id", "text", alpha = 0.5)
+      .as[(Long, Long, Double)].collect().toList
+    def gq(x: Double): Long = math.floor(x * 1e6 + 0.5).toLong
+    val expected = math.floor(
+      -((gq(math.log(0.125)) + gq(math.log(0.5))).toDouble / 1e6) / 2.0 * 1e6 + 0.5) / 1e6
+    assert(out == List((7L, 2L, expected)), s"$out vs $expected")
+  }
 }

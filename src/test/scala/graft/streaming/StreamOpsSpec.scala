@@ -89,6 +89,30 @@ class StreamOpsSpec extends SparkSpec {
     assert(rows == Seq((9L, first, second, 2L)))
   }
 
+  test("sessionize over a stream drops pre-1970 events as late") {
+    // the watermark starts at 0 ms, and EventTimeTimeout filters rows at
+    // or behind it: the pre-1970 user opens no session, the later one does
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[StreamOps.Event]
+    val q = StreamOps.sessionize(input.toDS(), gapSeconds = 60, watermarkDelay = "0 seconds")
+      .writeStream
+      .format("memory").queryName("sessions_epoch").outputMode(OutputMode.Append).start()
+    try {
+      input.addData(
+        StreamOps.Event(1L, new Timestamp(-60000L), 1.0), // 1969-12-31T23:59:00Z
+        StreamOps.Event(2L, ts("2024-01-01 10:00:00"), 2.0))
+      q.processAllAvailable()
+      // a much-later event times out every open session
+      input.addData(StreamOps.Event(3L, ts("2024-01-01 12:00:00"), 3.0))
+      q.processAllAvailable()
+      input.addData(StreamOps.Event(3L, ts("2024-01-01 12:00:10"), 3.0))
+      q.processAllAvailable()
+      val rows = spark.table("sessions_epoch").select("user_id", "n_events")
+        .as[(Long, Long)].collect().toSet
+      assert(rows == Set((2L, 1L)))
+    } finally q.stop()
+  }
+
   test("enrichStream joins streaming facts against a static dimension") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Double)]
