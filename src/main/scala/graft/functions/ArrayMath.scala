@@ -64,17 +64,4 @@ object ArrayMath {
   def dotNative(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProductDouble(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** Imperative SQL registration for an already-built session (the
-    * `spark.sql.extensions=graft.plans.GraftExtensions` config path covers
-    * sessions built from config).
-    */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => {
-        require(exprs.length == 2, "graft_dot(a, b) takes exactly 2 array<double> arguments")
-        DotProductDouble(exprs.head, exprs(1))
-      },
-      "built-in")
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.asof.AsOfJoinApi
 import graft.functions.Portable
 import org.apache.spark.sql.functions._
 
@@ -10,15 +11,23 @@ import org.apache.spark.sql.functions._
   * (`row_number() over (partition by buy… order by sell.date) = 1`,
   * update_etl.py:710).
   *
-  * Instead of the reference's O(buys × sells) range self-join, events of
-  * both sides are interleaved in one window ordered by time, and each buy
-  * reads the next sell timestamp from a following-rows frame — one shuffle
-  * on the key, no quadratic blowup; this is the formulation that survives
-  * 100 TB (the window state per key is O(1) here).
+  * Every query form goes through the one merge operator,
+  * `AsOfJoinApi.asOfJoin` (one shuffle+sort per side, a streaming
+  * two-pointer merge, O(1) state per key), instead of the reference's
+  * O(buys × sells) range self-join: [[matchNextNative]] (q09) is its
+  * inner form, [[matchNextLeft]] (q40) its outer form, and q48 calls it
+  * on a composite key.
   */
 object AsOf {
 
-  /** `events` must contain keyCol, tsCol, idCol, sideCol, valueCol.
+  /** The composed form of [[matchNextNative]]'s rule, kept as the
+    * reference the merge operator is compared against (PropertySpec,
+    * AsOfNativeSpec); no query calls it. Events of both sides are
+    * interleaved in one window ordered by (ts, id), each buy reads the
+    * next sell ts from a following-rows frame, and an equality join plus
+    * a min-sell-id dedup picks the sell.
+    *
+    * `events` must contain keyCol, tsCol, idCol, sideCol, valueCol.
     * Returns one row per buy that has a later sell:
     * (key, buy_event_id, buy_ts, buy_value, sell_event_id, sell_ts,
     *  sell_value, gain).
@@ -46,13 +55,13 @@ object AsOf {
         Portable.q4(col("sell_value") - col("buy_value")).as("gain"))
   }
 
-  /** Reference-parity variant of [[matchNext]] — the trade-ROI join as the
-    * reference actually writes it (update_etl.py:710): the sell bound is
-    * INCLUSIVE (`sell.date >= buy.date`, expressed here as a RANGE frame
-    * ordered by ts alone, so an equal-timestamp sell matches regardless of
-    * row order) and the join is LEFT OUTER — buys with no later sell are
-    * kept, their gain computed against `fallback` (the reference coalesces
-    * with the collection's current floor price; callers supply the
+  /** Reference-parity variant of [[matchNextNative]] — the trade-ROI join
+    * as the reference actually writes it (update_etl.py:710): the sell
+    * bound is INCLUSIVE (`sell.date >= buy.date`: the buy side passes a
+    * `Long.MinValue` tie, so an equal-timestamp sell matches regardless of
+    * id) and the join is LEFT OUTER — buys with no later sell are kept,
+    * their gain computed against `fallback` (the reference coalesces with
+    * the collection's current floor price; callers supply the
     * current-price frame as (key, fallback_value)).
     *
     * Output adds `matched`; sell columns are null for unmatched buys, and
@@ -62,53 +71,44 @@ object AsOf {
                     sideCol: String, buySide: String, sellSide: String,
                     valueCol: String, fallback: DataFrame,
                     fallbackKeyCol: String, fallbackValCol: String): DataFrame = {
-    val seq = events.where(col(sideCol).isin(buySide, sellSide))
-    // RANGE frame: peers (equal ts) are inside the frame, giving >= bounds
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol))
-      .rangeBetween(Window.currentRow, Window.unboundedFollowing)
-    val withNext = seq.withColumn("__next_sell_ts",
-      min(when(col(sideCol) === sellSide, col(tsCol))).over(w))
-    val buys = withNext.where(col(sideCol) === buySide)
-      .select(col(keyCol), col(idCol).as("buy_event_id"), col(tsCol).as("buy_ts"),
-        col(valueCol).as("buy_value"), col("__next_sell_ts"))
-    val sells = seq.where(col(sideCol) === sellSide)
-      .select(col(keyCol).as("__sk"), col(idCol).as("sell_event_id"),
-        col(tsCol).as("sell_ts"), col(valueCol).as("sell_value"))
-    val matched = buys.join(sells,
-      buys(keyCol) === sells("__sk") && col("__next_sell_ts") === col("sell_ts"), "left")
+    val (buys, sells) = legs(events, keyCol, tsCol, idCol, sideCol, buySide, sellSide, valueCol)
+    val matched = AsOfJoinApi.asOfJoin(buys.withColumn("__bound", lit(Long.MinValue)), sells,
+      Seq(keyCol), "buy_ts", "sell_ts", "__bound", "sell_event_id", outer = true)
     val fb = fallback.select(col(fallbackKeyCol).as("__fk"),
       col(fallbackValCol).as("__fallback_value"))
-    Dedup.oneByKey(matched, Seq("buy_event_id"), Seq(col("sell_event_id").asc_nulls_last))
-      .join(fb, col(keyCol) === col("__fk"), "left")
+    matched.join(fb, col(keyCol) === col("__fk"), "left")
       .select(col(keyCol), col("buy_event_id"), col("buy_ts"), col("buy_value"),
         col("sell_event_id"), col("sell_ts"), col("sell_value"),
         Portable.q4(coalesce(col("sell_value"), col("__fallback_value")) - col("buy_value")).as("gain"),
         col("sell_event_id").isNotNull.as("matched"))
   }
 
-  /** Native-operator form of [[matchNext]]: plans through the custom
-    * AsOfJoin LogicalPlan/SparkStrategy/SparkPlan (one shuffle+sort per
-    * side, streaming two-pointer merge, O(1) state per key) instead of
-    * window + join + dedup. Matching position is lexicographic on
-    * (ts, event id) — identical to [[matchNext]]'s following-rows window
-    * semantics, including sells sharing the buy's exact timestamp.
-    * Null keys/timestamps are excluded, matching SQL join semantics.
+  /** The trade-ROI match q09 runs: each buy with the first sell strictly
+    * after it on (ts, event id) — [[matchNext]]'s rule, equal timestamps
+    * included — through the inner [[AsOfJoinApi.asOfJoin]] (one
+    * shuffle+sort per side, streaming two-pointer merge, O(1) state per
+    * key) instead of window + join + dedup. Buys and sells with a null
+    * key, ts or id take no part, matching SQL join semantics.
     */
   def matchNextNative(events: DataFrame, keyCol: String, tsCol: String, idCol: String,
                       sideCol: String, buySide: String, sellSide: String,
                       valueCol: String): DataFrame = {
-    import org.apache.spark.sql.graft.asof.AsOfJoinApi
-    val nonNull = col(keyCol).isNotNull && col(tsCol).isNotNull && col(idCol).isNotNull
-    val buys = events.where(col(sideCol) === buySide && nonNull)
-      .select(col(keyCol), col(idCol).as("buy_event_id"), col(tsCol).as("buy_ts"),
-        col(valueCol).as("buy_value"))
-    val sells = events.where(col(sideCol) === sellSide && nonNull)
-      .select(col(keyCol).as("__sk"), col(idCol).as("sell_event_id"),
-        col(tsCol).as("sell_ts"), col(valueCol).as("sell_value"))
-    AsOfJoinApi.asOfJoin(buys, sells, keyCol, "__sk", "buy_ts", "sell_ts",
-        "buy_event_id", "sell_event_id")
+    val (buys, sells) = legs(events, keyCol, tsCol, idCol, sideCol, buySide, sellSide, valueCol)
+    AsOfJoinApi.asOfJoin(buys, sells, Seq(keyCol), "buy_ts", "sell_ts",
+        "buy_event_id", "sell_event_id", outer = false)
       .select(col(keyCol), col("buy_event_id"), col("buy_ts"), col("buy_value"),
         col("sell_event_id"), col("sell_ts"), col("sell_value"),
         Portable.q4(col("sell_value") - col("buy_value")).as("gain"))
+  }
+
+  /** The buy and sell legs of one event log: (key, <side>_event_id,
+    * <side>_ts, <side>_value) for side = buy, sell. */
+  private def legs(events: DataFrame, keyCol: String, tsCol: String, idCol: String,
+                   sideCol: String, buySide: String, sellSide: String,
+                   valueCol: String): (DataFrame, DataFrame) = {
+    def leg(side: String, as: String) = events.where(col(sideCol) === side)
+      .select(col(keyCol), col(idCol).as(s"${as}_event_id"), col(tsCol).as(s"${as}_ts"),
+        col(valueCol).as(s"${as}_value"))
+    (leg(buySide, "buy"), leg(sellSide, "sell"))
   }
 }

@@ -36,22 +36,15 @@ object Merge {
         col(s"s.$sourceKey").isNotNull.as("updated"): _*)
   }
 
-  /** Insert-missing (anti-join append): reference `insert … left join …
-    * where t.id is null` idiom (update_etl.py:441, :519).
-    */
-  def insertMissing(target: DataFrame, source: DataFrame, key: String): DataFrame =
-    target.unionByName(
-      source.join(target.select(col(key)), Seq(key), "left_anti"),
-      allowMissingColumns = false)
-
   /** CDC changelog application with tombstones — the missing DELETE leg
-    * of the SCD1 family ([[coalesceMerge]] upserts, [[insertMissing]]
-    * appends; neither can retract). `log` carries full row images plus an
-    * op column: 'D' is a tombstone, anything else an upsert. Per key the
-    * LATEST op wins ((tsCol desc, seqCol desc) — seq breaks same-
-    * timestamp ties, the upsert-sink convention); a terminal tombstone
-    * removes the key even if it only ever existed in the log. Keys the
-    * log never touches pass through from the snapshot.
+    * of the SCD1 family ([[coalesceMerge]] upserts, the anti-join insert
+    * `Incremental.firstTouchInsert` appends; neither can retract). `log`
+    * carries full row images plus an op column: 'D' is a tombstone,
+    * anything else an upsert. Per key the LATEST op wins ((tsCol desc,
+    * seqCol desc) — seq breaks same-timestamp ties, the upsert-sink
+    * convention); a terminal tombstone removes the key even if it only
+    * ever existed in the log. Keys the log never touches pass through
+    * from the snapshot.
     *
     * One shuffle on the key for the log dedup + one full-outer join
     * (broadcast when the compacted delta is small — the common

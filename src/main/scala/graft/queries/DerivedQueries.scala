@@ -5,6 +5,7 @@ import graft.sources.Tables
 import graft.functions.Portable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.asof.AsOfJoinApi
 
 /** Round-2 reference-derived surface (SURVEY.md §2, rows 34-40): the
   * derived tables the round-1 audit found unrepresented — per-group top-N
@@ -172,7 +173,9 @@ object DerivedQueries {
       // open positions mark to the latest market value of the token.
       // P/L is realized (exit) or unrealized (mark), relative to entry.
       // The cohort is an ordered-LIMIT top-20 (bounded k → broadcast-safe
-      // at every SF); the as-of match is the composite-key window form.
+      // at every SF). The match is the outer as-of merge join on the
+      // composite key; the Long.MaxValue bound puts every exit at the
+      // entry's own ts at or before it, so exit_ts > entry_ts.
       val ev = Tables(s, d).events
         .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
       val purch = ev.where(col("event_type") === "purchase" && col("value") > 0)
@@ -183,19 +186,13 @@ object DerivedQueries {
         .select(col("user_id"))
       val entries = purch.join(broadcast(cohort), Seq("user_id"))
         .select(col("user_id"), col("k"), col("event_id").as("entry_event_id"),
-          col("ts").as("entry_ts"), col("value").as("entry_value"))
+          col("ts").as("entry_ts"), col("value").as("entry_value"),
+          lit(Long.MaxValue).as("__bound"))
       val exits = ev.where(col("event_type") === "view")
         .select(col("user_id"), col("k"), col("ts").as("exit_ts"),
           col("event_id").as("exit_event_id"), col("value").as("exit_value"))
-      val pairs = entries.as("e")
-        .join(exits.as("x"),
-          col("e.user_id") === col("x.user_id") && col("e.k") === col("x.k") &&
-            col("x.exit_ts") > col("e.entry_ts"), "left")
-        .select(col("e.user_id"), col("e.k"), col("entry_event_id"),
-          col("entry_ts"), col("entry_value"),
-          col("exit_event_id"), col("exit_ts"), col("exit_value"))
-      val matched = Dedup.oneByKey(pairs, Seq("entry_event_id"),
-        Seq(col("exit_ts").asc_nulls_last, col("exit_event_id").asc_nulls_last))
+      val matched = AsOfJoinApi.asOfJoin(entries, exits, Seq("user_id", "k"),
+        "entry_ts", "exit_ts", "__bound", "exit_event_id", outer = true)
       val marks = Dedup.latestByKey(ev.where(col("event_type") === "view"),
           Seq("k"), "ts", "event_id")
         .select(col("k"), col("value").as("mark_value"))

@@ -1747,10 +1747,10 @@ object GateQueries {
     "q118_cdc_apply" -> { (s, d) =>
       // CDC changelog application with tombstones (Merge.applyChangeLog)
       // — the DELETE leg the SCD1 family lacked (coalesceMerge upserts,
-      // insertMissing appends; neither retracts). The customer base
-      // under 300 is the prior snapshot; the capped event log replays as
-      // full-image CDC (error = tombstone, everything else = upsert,
-      // latest (ts, event_id) op wins). The fixture exercises every
+      // the firstTouchInsert anti-join appends; neither retracts). The
+      // customer base under 300 is the prior snapshot; the capped event
+      // log replays as full-image CDC (error = tombstone, everything else
+      // = upsert, latest (ts, event_id) op wins). The fixture exercises every
       // path: updated keys, passthrough keys the log never touches,
       // log-only inserts, and ~30 users whose LATEST op is a tombstone
       // (require-pinned) — a merge that loses the delete leg, or applies

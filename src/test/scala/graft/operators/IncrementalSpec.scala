@@ -65,6 +65,15 @@ class IncrementalSpec extends SparkSpec {
     assert(inc.exists(_._3 == 201L), "delta tie must break on event_id")
     assert(inc.exists(_._3 == 101L) && inc.exists(_._3 == 301L) && inc.exists(_._3 == 401L))
   }
+
+  test("firstTouchInsert appends only unseen keys") {
+    // single key; the delta's duplicate of key 1 keeps the state row
+    val state = Seq((1L, "a")).toDF("k", "v")
+    val delta = Seq((1L, "dup"), (2L, "new")).toDF("k", "v")
+    val out = Incremental.firstTouchInsert(state, delta, Seq("k"))
+      .as[(Long, String)].collect().sortBy(_._1)
+    assert(out.toSeq == Seq((1L, "a"), (2L, "new")))
+  }
 }
 
 class ArrayMathSpec extends SparkSpec {
@@ -80,13 +89,6 @@ class ArrayMathSpec extends SparkSpec {
       .as[(Double, Double)].collect().head
     assert(nat == hof)
     assert(nat == 1.5 * 0.5 + -2.0 * 4.0 + 3.25 * -1.0)
-  }
-
-  test("graft_dot is callable from SQL after registration") {
-    org.apache.spark.sql.graft.ArrayMath.registerSql(spark)
-    val v = spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
-      .as[Double].collect().head
-    assert(v == 11.0)
   }
 
   test("md5Halves matches the portable conv(substring(md5)) construction") {

@@ -443,14 +443,6 @@ class MergeSpec extends SparkSpec {
       (2L, Some("bob"), 99.0, false, true),
       (3L, None, 30.0, true, true)))
   }
-
-  test("insertMissing appends only unseen keys") {
-    val target = Seq((1L, "a")).toDF("k", "v")
-    val source = Seq((1L, "dup"), (2L, "new")).toDF("k", "v")
-    val out = Merge.insertMissing(target, source, "k")
-      .as[(Long, String)].collect().sortBy(_._1)
-    assert(out.toSeq == Seq((1L, "a"), (2L, "new")))
-  }
 }
 
 class GapsSpec extends SparkSpec {
@@ -1115,6 +1107,22 @@ class AsOfLeftSpec extends SparkSpec {
       .select("buy_event_id", "sell_event_id", "gain")
       .as[(Long, Long, Double)].collect().toSet
     assert(left == strict && left.nonEmpty)
+  }
+
+  test("matchNextLeft keeps a buy with a null key or a null ts unmatched") {
+    val df = Seq(
+      (Some(1L), Some(ts("2024-01-01 10:00:00")), 1L, "buy", 100.0),
+      (None, Some(ts("2024-01-01 10:00:00")), 2L, "buy", 10.0),     // null key
+      (Some(1L), None, 3L, "buy", 20.0),                            // null ts
+      (None, Some(ts("2024-01-01 11:00:00")), 4L, "sell", 50.0),    // null-key sell
+      (Some(1L), Some(ts("2024-01-01 10:00:00")), 5L, "sell", 150.0) // same-ts sell
+    ).toDF("user_id", "ts", "event_id", "side", "value")
+    val fb = Seq.empty[(Long, Double)].toDF("fk", "fv")
+    val out = AsOf.matchNextLeft(df, "user_id", "ts", "event_id", "side",
+        "buy", "sell", "value", fb, "fk", "fv")
+      .select("buy_event_id", "sell_event_id", "matched")
+      .as[(Long, Option[Long], Boolean)].collect().sortBy(_._1).toSeq
+    assert(out == Seq((1L, Some(5L), true), (2L, None, false), (3L, None, false)))
   }
 }
 

@@ -2,7 +2,9 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import graft.SparkSpec
+import graft.{AsOfReference, SparkSpec}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.asof.AsOfJoinApi
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -43,6 +45,39 @@ class PropertySpec extends SparkSpec {
         .select(cols.head, cols.tail: _*).collect().map(_.toSeq).toSet
       assert(native == composed)
     }
+  }
+
+  test("property: asOfJoin = the nested-loop reference, every bound, inner and outer") {
+    // the 15 sets side by side: user u of set s is key (s, 10s + u), so the
+    // composite key takes the key-list path; event ids are unique overall
+    val events = samples(15).zipWithIndex.flatMap { case (evs, s) =>
+      evs.zipWithIndex.map { case ((u, off, side, v), i) =>
+        (s.toLong, 10L * s + u, off.toLong, 100L * s + i, side, v)
+      }
+    }
+    val df = events.map { case (s, u, off, id, side, v) =>
+      (s, u, new Timestamp(1700000000000L + off * 1000L), id, side, v)
+    }.toDF("set", "user_id", "ts", "event_id", "side", "value")
+    def legs(side: String) = events.collect { case (_, u, off, id, `side`, _) => (u, off, id) }
+    def leg(side: String) = df.where(col("side") === side).select(col("set"), col("user_id"),
+      col("ts").as(s"${side}_ts"), col("event_id").as(s"${side}_event_id"))
+    val bounds = Seq(("own id", AsOfReference.afterOnTsId, col("buy_event_id")),
+      ("Long.MinValue", AsOfReference.atOrAfterTs, lit(Long.MinValue)),
+      ("Long.MaxValue", AsOfReference.afterTs, lit(Long.MaxValue)))
+    for ((name, after, bound) <- bounds; outer <- Seq(false, true)) {
+      val got = AsOfJoinApi.asOfJoin(leg("buy").withColumn("__bound", bound), leg("sell"),
+          Seq("set", "user_id"), "buy_ts", "sell_ts", "__bound", "sell_event_id", outer)
+        .select("buy_event_id", "sell_event_id").as[(Long, Option[Long])].collect().toSeq.sorted
+      assert(got == AsOfReference.matches(legs("buy"), legs("sell"), after, outer),
+        s"bound $name, outer = $outer")
+    }
+    // q40's caller is the outer form under the Long.MinValue bound
+    val fb = Seq.empty[(Long, Double)].toDF("fk", "fv")
+    val left = AsOf.matchNextLeft(df, "user_id", "ts", "event_id", "side", "buy", "sell",
+        "value", fb, "fk", "fv")
+      .select("buy_event_id", "sell_event_id").as[(Long, Option[Long])].collect().toSeq.sorted
+    assert(left == AsOfReference.matches(legs("buy"), legs("sell"), AsOfReference.atOrAfterTs,
+      outer = true))
   }
 
   test("property: sessions partition the events exactly") {

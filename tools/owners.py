@@ -41,6 +41,12 @@ RULES = [
     ("the bigram zip_with(", r"\bzip_with\(", ["operators/LanguageModel.scala"], 1),
     ("the logistic training loop", r"for \(_ <- 1 to iters\)",
      ["operators/Classifier.scala"], 1),
+    # the as-of match: the merge operator, reached from AsOf and from q48;
+    # the one following-rows window is matchNext, the tests' reference
+    ("Window.unboundedFollowing", r"\bWindow\.unboundedFollowing\b",
+     ["operators/AsOf.scala:matchNext"], None),
+    ("AsOfJoinApi.asOfJoin(", r"\bAsOfJoinApi\.asOfJoin\(",
+     ["operators/AsOf.scala", "queries/DerivedQueries.scala"], None),
 ]
 
 DEF = re.compile(r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
